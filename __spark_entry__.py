@@ -722,7 +722,7 @@ def q_cardinality_siblings_shingles(spark, sf_dir):
     every flag."""
     from functools import partial as _p
 
-    from sketchlib.aggregate import build_sketch, build_sketches_multi
+    from sketchlib.aggregate import build_sketch, build_sketches
     from sketchlib.sketches.gadgets import HyperBitBit, ModSketch
     from sketchlib.sketches.pcsa import PCSA
     from sketchlib.sketches.setsketch import SetSketch
@@ -730,12 +730,12 @@ def q_cardinality_siblings_shingles(spark, sf_dir):
     sh = _shingle_stream(spark, sf_dir)
     keys = sh.select("kh").distinct().cache()
     exact = keys.count()
-    # the three mergeable gadgets share ONE scan (build_sketches_multi
-    # — the 100 TB shape: the scan dominates, pay it once for the
-    # whole panel); HyperBitBit is a single-stream gadget whose merge
-    # is a lossy heuristic (the reference defines none, hbb.h), so it
-    # runs as one sequential kernel where its factor band holds
-    sketches = build_sketches_multi(keys, "kh", {
+    # the three mergeable gadgets share ONE scan (build_sketches: the
+    # scan dominates, pay it once for the whole panel); HyperBitBit is
+    # a single-stream gadget whose merge is a lossy heuristic (the
+    # reference defines none, hbb.h), so it runs as one sequential
+    # kernel where its factor band holds
+    sketches = build_sketches(keys, "kh", {
         "pcsa": _p(PCSA, 256),
         "setsketch": _p(SetSketch, 12),
         "modsketch": _p(ModSketch, 64),

@@ -160,7 +160,7 @@ def main() -> int:
     from sketchlib.session import get_spark
     from sketchlib.sketches.cm import CMConfig, CountMin
     from sketchlib.synth import transcripts
-    from sketchlib.tokenize import balanced_repartition, transcript_tokens
+    from sketchlib.tokenize import transcript_tokens
 
     spark = get_spark("sketchlib-bench", cpus=cpus,
                       shuffle_partitions=max(cpus, 16))
@@ -185,10 +185,9 @@ def main() -> int:
              .select(F.xxhash64("event_type").alias("kh")))
     build_sketch(_tiny, "kh", partial(CountMin, CMConfig(8, 3, 1, True)),
                  pre_aggregate=True)
-    from sketchlib.aggregate import (build_grouped_sketches,
-                                     build_sketches_multi)
+    from sketchlib.aggregate import build_grouped_sketches, build_sketches
     from sketchlib.sketches.pcsa import PCSA
-    build_sketches_multi(_tiny, "kh", {"pcsa": partial(PCSA, 16)})
+    build_sketches(_tiny, "kh", {"pcsa": partial(PCSA, 16)})
     build_grouped_sketches(
         _tiny.withColumn("g", F.lit("w")), ["g"], "kh",
         partial(PCSA, 16), salt_buckets=2).count()

@@ -1,31 +1,27 @@
-"""Generic distributed sketch aggregation harness.
+"""Distributed sketch builds: the partial/final aggregate model the
+reference implies with its elementwise merges (reference:
+include/ccm.h:401-407 sum for CM, include/hll.h:957-991 max for HLL,
+include/bf.h:515-539 OR for Bloom), expressed Spark-natively.
 
-This is the library's "physical plan" for mergeable sketches — the
-partial/final aggregate model the reference library implies with its
-elementwise merges (reference: include/ccm.h:401-407 sum for CM,
-include/hll.h:957-991 max for HLL, include/bf.h:515-539 OR for Bloom),
-expressed Spark-natively:
+Every ungrouped build goes through :func:`build_sketches`, which makes
+one sketch per name over the same key column in one scan:
 
-    tokens DF ──mapInPandas──▶ one serialized partial per partition
-              ──repartition(w) + mapInPandas──▶ w tree-merged blobs
-              ──Arrow collect──▶ driver folds w blobs
+    keys DF ──mapInPandas──▶ one (name, blob) row per name per partition
+            ──repartition(tree_width) + mapInPandas──▶ folded blobs
+            ──Arrow collect──▶ driver folds them per name
 
-Design notes (these were measured, not guessed):
-- everything stays on the DataFrame/Arrow path; an earlier
-  ``df.rdd``+``treeReduce`` variant spent minutes pickling 60 MB blobs
-  through the Py4J row path — the Arrow collect is ~10x faster;
-- partial blobs serialize counters at the narrowest lossless integer
-  width (see cm._pack_u64), cutting merge traffic 2-8x;
-- the tree stage bounds driver fan-in for wide clusters: at 1000
-  executors the driver folds ``tree_width`` blobs, not 1000;
-- the per-partition kernel consumes Arrow batches and updates a numpy
-  sketch — no per-row Python;
-- merges are associative & commutative, so partition order never
-  matters (CM arrays are bit-exact under any partitioning).
+:func:`build_sketch` is its one-name case. ``pre_aggregate=True``
+first collapses the keys JVM-side to (key, count) rows and the kernel
+runs one ``update_weighted`` per partition; otherwise ``update`` runs
+once per Arrow batch. Grouped builds (one sketch per key group) go
+through :func:`build_grouped_sketches_multi`, with
+:func:`build_grouped_sketches` as its one-name case. Blobs are folded
+everywhere with :func:`sketchlib.sketches.base.fold_blobs`.
 
-``pyspark.sql.Aggregator`` (typed UDAF) is JVM/Scala-only; this harness
-is the Python-native equivalent and is the documented physical strategy
-(SURVEY.md §4).
+Everything stays on the DataFrame/Arrow path, and the fold hop bounds
+the driver's fan-in to ``tree_width`` blobs per name at any partition
+count. Merges are associative and commutative, so for order-independent
+sketches the result does not depend on the partitioning.
 """
 
 from __future__ import annotations
@@ -34,27 +30,111 @@ from typing import Callable, Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, functions as F
 
-from sketchlib.sketches.base import deserialize
+from sketchlib.hashing import to_u64
+from sketchlib.sketches.base import deserialize, fold_blobs
 
-
-def _as_u64(series: pd.Series) -> np.ndarray:
-    """Reinterpret an int64 Arrow column as uint64 (bit pattern kept)."""
-    arr = series.to_numpy()
-    if arr.dtype == np.int64:
-        return arr.view(np.uint64)
-    return arr.astype(np.uint64, copy=False)
+_NAMED = "name string, sketch binary"
 
 
-def _fold_blob_rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    acc = None
+def _counted(df: DataFrame, group_cols: list[str],
+             weight_col: str | None) -> DataFrame:
+    """``group_cols`` collapsed JVM-side to one row per distinct tuple
+    with its weight in ``__cnt``: ``COUNT(*)``, or ``SUM(weight_col)``
+    when given (integral weights)."""
+    if weight_col is None:
+        return (df.select(*group_cols).groupBy(*group_cols)
+                .agg(F.count("*").alias("__cnt")))
+    # NULL-weight rows contribute nothing: SUM over an all-NULL key
+    # would reach the numpy kernel as NaN
+    return (df.select(*group_cols, weight_col)
+            .filter(F.col(weight_col).isNotNull())
+            .groupBy(*group_cols)
+            .agg(F.sum(weight_col).cast("long").alias("__cnt")))
+
+
+def _fold_named(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """mapInPandas kernel: fold each name's blobs into one."""
+    accs: dict[str, object] = {}
     for pdf in batches:
-        for b in pdf["sketch"]:
-            sk = deserialize(bytes(b))
-            acc = sk if acc is None else acc.merge(sk)
-    if acc is not None:
-        yield pd.DataFrame({"sketch": [acc.to_bytes()]})
+        for name, blobs in pdf.groupby("name", sort=False)["sketch"]:
+            accs[name] = fold_blobs(blobs, accs.get(name))
+    if accs:
+        yield pd.DataFrame({"name": list(accs),
+                            "sketch": [s.to_bytes() for s in accs.values()]})
+
+
+def build_sketches(df: DataFrame, col: str,
+                   factories: dict[str, Callable[[], object]],
+                   tree_width: int = 8, as_u64: bool = True,
+                   pre_aggregate: bool = False,
+                   kernel_partitions: int | None = None,
+                   weight_col: str | None = None) -> dict[str, object]:
+    """Build one merged sketch per name over ``df[col]`` in one scan;
+    returns ``{name: sketch}`` on the driver (``factory()`` for every
+    name on empty input).
+
+    ``factories`` maps names to picklable zero-arg callables returning
+    a fresh sketch (e.g. ``partial(CountMin, cfg)``). ``as_u64`` feeds
+    the kernels :func:`sketchlib.hashing.to_u64` keys, else the raw
+    column (value sketches such as KLL).
+
+    ``pre_aggregate=True`` is the scale path for frequency sketches: a
+    JVM-side ``groupBy(col).count()`` collapses the stream to
+    |distinct| weighted rows before any Python runs, and each partition
+    makes ONE ``update_weighted(values, counts)`` call, so an
+    order-sensitive kernel (conservative CM) is a pure function of the
+    partition's multiset whatever the Arrow batch size. Every factory
+    must implement ``update_weighted``.
+
+    ``weight_col`` (pre_aggregate only) makes the build weighted:
+    per-key weight = ``SUM(weight_col)`` instead of ``COUNT(*)``, still
+    one hash aggregate (the hook for time-decayed frequency,
+    sketchlib/decay.py); weights must be integral.
+
+    ``kernel_partitions`` repartitions the kernel's input; when it is
+    at most ``tree_width`` the round-robin fold hop is skipped and the
+    driver folds the partials directly.
+    """
+    if weight_col is not None and not pre_aggregate:
+        raise ValueError("weight_col requires pre_aggregate=True")
+    names = sorted(factories)
+    src = _counted(df, [col], weight_col) if pre_aggregate else df.select(col)
+    if kernel_partitions is not None:
+        src = src.repartition(kernel_partitions)
+
+    def keys(pdf: pd.DataFrame) -> np.ndarray:
+        return to_u64(pdf[col]) if as_u64 else pdf[col].to_numpy()
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        batches = (pdf for pdf in batches if len(pdf))
+        if pre_aggregate:
+            frames = list(batches)
+            if not frames:
+                return
+            vals = np.concatenate([keys(pdf) for pdf in frames])
+            wts = np.concatenate([pdf["__cnt"].to_numpy() for pdf in frames])
+            sks = [factories[name]() for name in names]
+            for sk in sks:
+                sk.update_weighted(vals, wts)
+        else:
+            sks = [factories[name]() for name in names]
+            for pdf in batches:
+                vals = keys(pdf)
+                for sk in sks:
+                    sk.update(vals)
+        yield pd.DataFrame({"name": names,
+                            "sketch": [sk.to_bytes() for sk in sks]})
+
+    blobs = src.mapInPandas(kernel, schema=_NAMED)
+    if kernel_partitions is None or kernel_partitions > tree_width:
+        blobs = (blobs.repartition(tree_width)
+                 .mapInPandas(_fold_named, schema=_NAMED))
+    out = {name: fold_blobs(grp)
+           for name, grp in blobs.toPandas().groupby("name")["sketch"]}
+    return {name: out[name] if name in out else factories[name]()
+            for name in names}
 
 
 def build_sketch(df: DataFrame, col: str, factory: Callable[[], object],
@@ -62,107 +142,11 @@ def build_sketch(df: DataFrame, col: str, factory: Callable[[], object],
                  pre_aggregate: bool = False,
                  kernel_partitions: int | None = None,
                  weight_col: str | None = None):
-    """Build one merged sketch over ``df[col]``.
-
-    ``factory`` must be a picklable zero-arg callable returning a fresh
-    sketch (e.g. ``partial(CountMin, cfg)``). Returns the deserialized
-    merged sketch on the driver.
-
-    ``pre_aggregate=True`` is the scale path for frequency sketches:
-    a JVM-side ``groupBy(col).count()`` (Tungsten hash agg with
-    map-side combine) collapses the stream to |distinct| weighted rows
-    before any Python runs, and the kernel consumes
-    ``update_weighted(values, counts)``. The counting work happens in
-    whole-stage codegen; Python only sketches distinct keys. Requires
-    the sketch to implement ``update_weighted`` (CountMin /
-    OfflineCountMin do; HLL/Bloom don't need it — duplicates are
-    idempotent for them, so plain dedup would do instead).
-
-    ``weight_col`` (pre_aggregate only) makes the build WEIGHTED:
-    per-key weight = ``SUM(weight_col)`` instead of ``COUNT(*)`` —
-    still one Tungsten hash agg, still |distinct| Python rows. This is
-    the hook for time-decayed frequency (sketchlib/decay.py) and any
-    other per-row-weighted statistic; weights must be integral (CM
-    counters are int64).
-    """
-    from pyspark.sql import functions as F
-
-    if weight_col is not None and not pre_aggregate:
-        raise ValueError("weight_col requires pre_aggregate=True")
-    if pre_aggregate:
-        # kernel parallelism follows the cluster, not the merge fan-in:
-        # at 10^9 distinct keys the weighted-update kernel is the
-        # heavy stage and must use every core; the blob fold below
-        # then reduces the partial count to ``tree_width`` before the
-        # driver sees anything (bounded driver fan-in at any scale)
-        if weight_col is None:
-            grouped = (df.select(col).groupBy(col)
-                       .agg(F.count("*").alias("__cnt")))
-        else:
-            # NULL-weight rows contribute nothing (and a key whose
-            # rows are all NULL-weight drops out) — without the
-            # filter, SUM over an all-NULL key yields a NULL __cnt
-            # that reaches the numpy kernel as NaN and corrupts it
-            grouped = (df.select(col, weight_col)
-                       .filter(F.col(weight_col).isNotNull())
-                       .groupBy(col)
-                       .agg(F.sum(weight_col).cast("long")
-                            .alias("__cnt")))
-        if kernel_partitions is not None:
-            grouped = grouped.repartition(kernel_partitions)
-
-        def partial_build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            # one kernel call per partition (not per Arrow batch) so
-            # order-sensitive kernels (conservative CM) are a pure
-            # function of the partition's multiset — reproducible
-            # regardless of Arrow batch sizing
-            vs, ws = [], []
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                vs.append(_as_u64(pdf[col]) if as_u64
-                          else pdf[col].to_numpy())
-                ws.append(pdf["__cnt"].to_numpy())
-            if vs:
-                sk = factory()
-                sk.update_weighted(np.concatenate(vs), np.concatenate(ws))
-                yield pd.DataFrame({"sketch": [sk.to_bytes()]})
-
-        blobs = grouped.mapInPandas(partial_build, schema="sketch binary")
-        if kernel_partitions is None or kernel_partitions > tree_width:
-            blobs = (blobs.repartition(tree_width)
-                     .mapInPandas(_fold_blob_rows, schema="sketch binary"))
-        folded = blobs.toPandas()
-        acc = None
-        for b in folded["sketch"]:
-            sk = deserialize(bytes(b))
-            acc = sk if acc is None else acc.merge(sk)
-        return acc if acc is not None else factory()
-
-    def partial_build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        sk = factory()
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            vals = _as_u64(pdf[col]) if as_u64 else pdf[col].to_numpy()
-            sk.update(vals)
-        yield pd.DataFrame({"sketch": [sk.to_bytes()]})
-
-    src = df.select(col)
-    if kernel_partitions is not None:
-        src = src.repartition(kernel_partitions)
-    blobs = src.mapInPandas(partial_build, schema="sketch binary")
-    if kernel_partitions is None or kernel_partitions > tree_width:
-        blobs = (blobs.repartition(tree_width)
-                 .mapInPandas(_fold_blob_rows, schema="sketch binary"))
-    folded = blobs.toPandas()
-    acc = None
-    for b in folded["sketch"]:
-        sk = deserialize(bytes(b))
-        acc = sk if acc is None else acc.merge(sk)
-    if acc is None:
-        acc = factory()
-    return acc
+    """One merged sketch over ``df[col]``: the one-name case of
+    :func:`build_sketches`, which documents the options."""
+    return build_sketches(df, col, {"sketch": factory}, tree_width,
+                          as_u64, pre_aggregate, kernel_partitions,
+                          weight_col)["sketch"]
 
 
 def build_grouped_sketches(df: DataFrame, key_cols: list[str], col: str,
@@ -266,7 +250,7 @@ def pairwise_grouped(grouped: DataFrame,
     group counts callers must bound it with ``block_cols`` (compare
     only within a stratum, e.g. LSH bucket / estimator name) and/or
     ``pair_filter``; that is a semantic choice the helper can't make.
-    ``max_pairs`` enforces it (round-4 scale guard): when the
+    ``max_pairs`` enforces it: when the
     unfiltered per-stratum pair count exceeds it, the call FAILS with
     guidance unless a ``pair_filter`` brings the actual pair count
     back under the cap (verified by a keys-only count — no blob ever
@@ -280,15 +264,13 @@ def pairwise_grouped(grouped: DataFrame,
     hint is the caller's contract (a wrong huge-understating hint
     reintroduces the unbounded enumeration the guard exists to stop).
     """
-    from pyspark.sql import functions as F
-
     cols = grouped.columns
     if "sketch" not in cols:
         raise ValueError("grouped must have a 'sketch' binary column")
     # grouped feeds three legs below (keys projection + two blob
     # attaches); without a persist Catalyst re-runs the expensive
-    # applyInPandas grouped build up to 3x (round-3 ADVICE).  Bounded
-    # registry, so repeated calls don't accumulate cache forever.
+    # applyInPandas grouped build up to 3x. Bounded registry, so
+    # repeated calls don't accumulate cache forever.
     from sketchlib.cache import scoped_persist
     grouped = scoped_persist(grouped)
     block_cols = list(block_cols)
@@ -385,7 +367,7 @@ def build_grouped_sketches_multi(df: DataFrame, key_cols: list[str],
     """SEVERAL named sketches per key group in ONE scan:
     ``(key..., name string, sketch binary)`` DataFrame.
 
-    The grouped analog of :func:`build_sketches_multi` — a panel of
+    The grouped analog of :func:`build_sketches` — a panel of
     estimators over the same per-group key stream (e.g. HyperMinHash +
     b-bit MinHash per language) pays the shuffle once instead of once
     per estimator. Same hot-key salting as
@@ -394,7 +376,7 @@ def build_grouped_sketches_multi(df: DataFrame, key_cols: list[str],
     build_grouped_sketches calls for order-independent sketches
     (tested).
 
-    Scale paths (mirroring :func:`build_sketch`): ``pre_aggregate=True``
+    Scale paths (mirroring :func:`build_sketches`): ``pre_aggregate=True``
     collapses the stream JVM-side to ``groupBy(key..., col).count()``
     (Tungsten hash agg, map-side combine) and feeds the kernels
     ``update_weighted(values, counts)`` — Python input is bounded by
@@ -407,12 +389,10 @@ def build_grouped_sketches_multi(df: DataFrame, key_cols: list[str],
     sketches; pre-collapse happens BEFORE salting, so weighted rows
     are never split across salt buckets.
 
-    ``weight_col`` (pre_aggregate only, mirroring :func:`build_sketch`)
+    ``weight_col`` (pre_aggregate only, mirroring :func:`build_sketches`)
     makes the grouped build WEIGHTED: per-(key, value) weight =
     ``SUM(weight_col)`` instead of ``COUNT(*)`` — the hook for grouped
     time-decayed statistics; weights must be integral."""
-    from pyspark.sql import functions as F
-
     if pre_aggregate and pre_distinct:
         raise ValueError("pre_aggregate and pre_distinct are exclusive")
     if weight_col is not None and not pre_aggregate:
@@ -425,16 +405,7 @@ def build_grouped_sketches_multi(df: DataFrame, key_cols: list[str],
     out_schema = f"{key_schema}, name string, sketch binary"
 
     if pre_aggregate:
-        if weight_col is None:
-            df = (df.select(*key_cols, col).groupBy(*key_cols, col)
-                  .agg(F.count("*").alias("__cnt")))
-        else:
-            # NULL-weight rows contribute nothing (see build_sketch:
-            # an all-NULL key would otherwise reach the kernel as NaN)
-            df = (df.select(*key_cols, col, weight_col)
-                  .filter(F.col(weight_col).isNotNull())
-                  .groupBy(*key_cols, col)
-                  .agg(F.sum(weight_col).cast("long").alias("__cnt")))
+        df = _counted(df, [*key_cols, col], weight_col)
     elif pre_distinct:
         df = df.select(*key_cols, col).distinct()
     else:
@@ -442,7 +413,7 @@ def build_grouped_sketches_multi(df: DataFrame, key_cols: list[str],
 
     def _per_group(group_cols: list[str]):
         def per_group(pdf: pd.DataFrame) -> pd.DataFrame:
-            vals = _as_u64(pdf[col]) if as_u64 else pdf[col].to_numpy()
+            vals = to_u64(pdf[col]) if as_u64 else pdf[col].to_numpy()
             wts = pdf["__cnt"].to_numpy() if pre_aggregate else None
             head = pdf.iloc[:1][group_cols]
             out = (head.loc[head.index.repeat(len(names))]
@@ -464,15 +435,6 @@ def build_grouped_sketches_multi(df: DataFrame, key_cols: list[str],
         return (df.groupBy(*key_cols)
                   .applyInPandas(_per_group(key_cols), schema=out_schema))
 
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        acc = None
-        for b in pdf["sketch"]:
-            sk = deserialize(bytes(b))
-            acc = sk if acc is None else acc.merge(sk)
-        head = pdf.iloc[:1][key_cols + ["name"]].copy()
-        head["sketch"] = [acc.to_bytes()]
-        return head
-
     salted = df.withColumn("__salt",
                            F.pmod(F.xxhash64(col), F.lit(salt_buckets)))
     partials = (salted.groupBy(*key_cols, "__salt")
@@ -481,17 +443,16 @@ def build_grouped_sketches_multi(df: DataFrame, key_cols: list[str],
                                       "name string, sketch binary")
                 .drop("__salt"))
     return (partials.groupBy(*key_cols, "name")
-            .applyInPandas(merge_group, schema=out_schema))
+            .applyInPandas(merge_blob_group, schema=out_schema))
 
 
-def _merge_blob_group(pdf: pd.DataFrame) -> pd.DataFrame:
-    """applyInPandas kernel: fold one group's blobs into one."""
-    acc = None
-    for b in pdf["sketch"]:
-        sk = deserialize(bytes(b))
-        acc = sk if acc is None else acc.merge(sk)
+def merge_blob_group(pdf: pd.DataFrame) -> pd.DataFrame:
+    """applyInPandas kernel: fold one group's ``sketch`` blobs into one
+    row that keeps the group's other columns. A single-blob group
+    round-trips byte-identically (deserialize→to_bytes is stable for
+    every registered format)."""
     head = pdf.iloc[:1].drop(columns=["sketch"]).copy()
-    head["sketch"] = [acc.to_bytes()]
+    head["sketch"] = [fold_blobs(pdf["sketch"]).to_bytes()]
     return head
 
 
@@ -507,11 +468,13 @@ def _merge_to_level(grouped: DataFrame, keys: list[str],
         schema = ", ".join(f"{k} {key_fields[k]}" for k in keys) \
             + ", sketch binary"
         return (grouped.select(*keys, "sketch").groupBy(*keys)
-                .applyInPandas(_merge_blob_group, schema=schema))
-    return (grouped.select("sketch").repartition(tree_width)
-            .mapInPandas(_fold_blob_rows, schema="sketch binary")
+                .applyInPandas(merge_blob_group, schema=schema))
+    return (grouped.select(F.lit("").alias("name"), "sketch")
+            .repartition(tree_width)
+            .mapInPandas(_fold_named, schema=_NAMED)
             .repartition(1)
-            .mapInPandas(_fold_blob_rows, schema="sketch binary"))
+            .mapInPandas(_fold_named, schema=_NAMED)
+            .drop("name"))
 
 
 def rollup_grouped_sketches(grouped: DataFrame,
@@ -534,8 +497,6 @@ def rollup_grouped_sketches(grouped: DataFrame,
     oracle. The grand-total level folds through ``tree_width``
     partitions before the final single-task merge, so driver-free
     fan-in stays bounded at any group count."""
-    from pyspark.sql import functions as F
-
     key_fields = {f.name: f.dataType.simpleString()
                   for f in grouped.schema if f.name != "sketch"}
     assert list(key_fields) == key_cols, (list(key_fields), key_cols)
@@ -555,8 +516,6 @@ def rollup_grouped_sketches(grouped: DataFrame,
 def _pad_keys(df: DataFrame, present: list[str], key_cols: list[str],
               key_fields: dict[str, str]) -> DataFrame:
     """NULL-pad rolled-up key columns to the full key schema."""
-    from pyspark.sql import functions as F
-
     cols = [F.col(k) if k in present
             else F.lit(None).cast(key_fields[k]).alias(k)
             for k in key_cols]
@@ -585,90 +544,4 @@ def cube_grouped_sketches(grouped: DataFrame,
                                   tree_width)
             out = out.unionByName(
                 _pad_keys(lvl, list(keys), key_cols, key_fields))
-    return out
-
-
-def build_sketches_multi(df: DataFrame, col: str,
-                         factories: dict[str, Callable[[], object]],
-                         tree_width: int = 8, as_u64: bool = True,
-                         pre_aggregate: bool = False) -> dict[str, object]:
-    """Build SEVERAL named sketches over ``df[col]`` in ONE scan.
-
-    The 100 TB motivation: the scan is the expensive stage (BENCH/
-    BASELINE.md measures ~88% of build wall in scan/agg), and a user
-    who wants HLL + CM + Bloom + quantiles over the same key stream
-    should pay it once, not once per sketch. Each partition updates
-    every factory's partial from the same Arrow batches; partials
-    shuffle keyed by sketch name, so the fold stage is one task per
-    sketch and the driver folds ``tree_width`` blobs per name — the
-    same bounded fan-in as build_sketch, multiplied only by the number
-    of sketches.
-
-    ``pre_aggregate=True`` additionally collapses the stream to
-    (key, count) JVM-side first and requires every factory's sketch to
-    implement ``update_weighted`` (duplicate-sensitive counting
-    sketches); with ``False`` plain ``update`` is used (safe for any
-    sketch, required for multiplicity-insensitive ones only when fed
-    raw streams).
-
-    Returns {name: merged sketch}; for order-independent kernels
-    (every registered sketch except the strict conservative/offline
-    paths) results are bit-identical to independent build_sketch calls
-    per factory (tested).
-    """
-    from pyspark.sql import functions as F
-
-    names = sorted(factories)
-    if pre_aggregate:
-        src = (df.select(col).groupBy(col)
-               .agg(F.count("*").alias("__cnt")))
-    else:
-        src = df.select(col)
-
-    def partial_build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        vs, ws = [], []
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            vs.append(_as_u64(pdf[col]) if as_u64 else pdf[col].to_numpy())
-            if pre_aggregate:
-                ws.append(pdf["__cnt"].to_numpy())
-        if not vs:
-            return
-        vals = np.concatenate(vs)
-        wts = np.concatenate(ws) if pre_aggregate else None
-        out_names, out_blobs = [], []
-        for name in names:
-            sk = factories[name]()
-            if pre_aggregate:
-                sk.update_weighted(vals, wts)
-            else:
-                sk.update(vals)
-            out_names.append(name)
-            out_blobs.append(sk.to_bytes())
-        yield pd.DataFrame({"name": out_names, "sketch": out_blobs})
-
-    def fold_named(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        accs: dict[str, object] = {}
-        for pdf in batches:
-            for name, b in zip(pdf["name"], pdf["sketch"]):
-                sk = deserialize(bytes(b))
-                accs[name] = sk if name not in accs \
-                    else accs[name].merge(sk)
-        if accs:
-            yield pd.DataFrame({
-                "name": list(accs),
-                "sketch": [s.to_bytes() for s in accs.values()]})
-
-    blobs = src.mapInPandas(partial_build, schema="name string, sketch binary")
-    folded = (blobs.repartition(tree_width * len(names), "name")
-              .mapInPandas(fold_named, schema="name string, sketch binary")
-              .toPandas())
-    out: dict[str, object] = {}
-    for name, b in zip(folded["name"], folded["sketch"]):
-        sk = deserialize(bytes(b))
-        out[name] = sk if name not in out else out[name].merge(sk)
-    missing = set(names) - set(out)
-    for name in missing:  # empty input
-        out[name] = factories[name]()
     return out

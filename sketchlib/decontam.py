@@ -48,11 +48,8 @@ the exact-verify step making the approximate structure exact.
 
 from __future__ import annotations
 
-import uuid
 from functools import partial
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from sketchlib.dedup import shingles
@@ -111,26 +108,15 @@ def contamination(train: DataFrame, bench: DataFrame, n: int = 3,
 
     if method == "bloom":
         from sketchlib.aggregate import build_sketch
-        from sketchlib.queries import _cached_sketch
+        from sketchlib.queries import probe
         from sketchlib.sketches.bloom import BloomFilter
 
-        spark = train.sparkSession
         bf = build_sketch(bset, "sh64", partial(BloomFilter, bloom_p,
                                                 bloom_nh))
-        blob = spark.sparkContext.broadcast(bf.to_bytes())
-        cache_key = uuid.uuid4().hex
-
-        @F.pandas_udf("boolean")
-        def maybe(v: pd.Series) -> pd.Series:
-            sk = _cached_sketch(cache_key, blob.value)
-            vals = v.to_numpy()
-            vals = (vals.view(np.uint64) if vals.dtype == np.int64
-                    else vals.astype(np.uint64))
-            return pd.Series(sk.contains(vals))
-
+        maybe = probe(train.sparkSession, bf, "sh64", "contains", "boolean")
         # prefilter: candidate docs by MAYBE-hit count (superset of the
         # truth — no false negatives); clean docs exit before any join
-        cand = (tsh.withColumn("maybe", maybe(F.col("sh64")))
+        cand = (tsh.withColumn("maybe", maybe)
                    .groupBy(id_col)
                    .agg(F.sum(F.col("maybe").cast("int")).alias("m"))
                    .filter(F.col("m") >= min_overlap)

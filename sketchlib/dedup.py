@@ -15,7 +15,7 @@ single hash aggregation on a fingerprint column.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 TOKEN_SPLIT = r"\s+"
 
@@ -104,7 +104,7 @@ def minhash_signatures(df: DataFrame | None, n_perm: int = 64,
     import numpy as np
     import pandas as pd
 
-    from sketchlib.hashing import wang_hash_u64
+    from sketchlib.hashing import to_u64, wang_hash_u64
 
     sh = shingle_df if shingle_df is not None \
         else shingles(df, shingle_n, id_col, text_col)
@@ -126,9 +126,7 @@ def minhash_signatures(df: DataFrame | None, n_perm: int = 64,
             if len(pdf) == 0:
                 continue
             ids = pdf[id_col].to_numpy()
-            v = pdf["sh64"].to_numpy()
-            v = v.view(np.uint64) if v.dtype == np.int64 \
-                else v.astype(np.uint64)
+            v = to_u64(pdf["sh64"])
             h = wang_hash_u64(v[:, None] ^ seeds[None, :]).view(np.int64)
             uids, mins = _reduce(ids, h)
             acc_ids.append(uids)

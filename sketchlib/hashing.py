@@ -20,6 +20,16 @@ _U64 = np.uint64
 _MASK64 = (1 << 64) - 1
 
 
+def to_u64(vals) -> np.ndarray:
+    """Sketch keys as ``np.uint64``: an int64 column (Spark ``long``,
+    e.g. ``xxhash64``) is reinterpreted with its bit pattern kept, any
+    other numeric array or Series is cast."""
+    arr = np.asarray(vals)
+    if arr.dtype == np.int64:
+        return arr.view(_U64)
+    return arr.astype(_U64, copy=False)
+
+
 class MT19937_64:
     """Pure-Python Mersenne Twister mt19937_64, parameterized exactly as
     the C++ ``std::mt19937_64`` engine (w=64, n=312, m=156, r=31).

@@ -39,28 +39,15 @@ everywhere in the distributed regime (SURVEY.md §7.5).
 
 from __future__ import annotations
 
-from typing import Callable, Iterable
+from typing import Callable
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-from sketchlib.aggregate import build_grouped_sketches_multi
+from sketchlib.aggregate import build_grouped_sketches_multi, merge_blob_group
+from sketchlib.hashing import to_u64
 from sketchlib.iceberg import IcebergishCatalog
 from sketchlib.sketches.base import deserialize
-
-
-def _merge_blob_groups(pdf: pd.DataFrame) -> pd.DataFrame:
-    """applyInPandas kernel: fold all blobs of one (key..., name)
-    group into one. A group untouched by the delta has a single blob
-    and must round-trip byte-identically (deserialize→to_bytes is
-    stable for every registered format; pinned by test)."""
-    acc = None
-    for b in pdf["sketch"]:
-        sk = deserialize(bytes(b))
-        acc = sk if acc is None else acc.merge(sk)
-    head = pdf.iloc[:1].drop(columns=["sketch"]).copy()
-    head["sketch"] = [acc.to_bytes()]
-    return head
 
 
 def _merge_sketch_frames(existing: DataFrame, delta: DataFrame,
@@ -72,7 +59,7 @@ def _merge_sketch_frames(existing: DataFrame, delta: DataFrame,
     schema = ", ".join(f"{f.name} {f.dataType.simpleString()}"
                        for f in unioned.schema)
     return (unioned.groupBy(*key_cols, "name")
-            .applyInPandas(_merge_blob_groups, schema=schema))
+            .applyInPandas(merge_blob_group, schema=schema))
 
 
 def refresh_sketch_table(
@@ -177,11 +164,8 @@ def probe_grouped(probes: DataFrame, sketch_df: DataFrame,
             out[out_col] = np.array([], dtype=np.int64)
             return out
         sk = deserialize(bytes(right["sketch"].iloc[0]))
-        vals = left[hash_col].to_numpy()
-        vals = (vals.view(np.uint64) if vals.dtype == np.int64
-                else vals.astype(np.uint64))
         out = left[probe_names].copy()
-        out[out_col] = sk.estimate(vals).astype(np.int64)
+        out[out_col] = sk.estimate(to_u64(left[hash_col])).astype(np.int64)
         return out
 
     return (probes.groupBy(*key_cols)

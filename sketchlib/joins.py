@@ -21,9 +21,9 @@ two join problems a 100 TB engine actually has.
    that engines inject into shuffle joins.
 
 Both compose existing pieces: ``build_sketch`` partial+merge
-aggregation, the executor-resident blob cache from
-``sketchlib.queries``, and JVM-side xxhash64 so both relations hash
-the shared key domain identically.
+aggregation, the broadcast ``probe`` from ``sketchlib.queries``, and
+JVM-side xxhash64 so both relations hash the shared key domain
+identically.
 """
 
 from __future__ import annotations
@@ -31,12 +31,11 @@ from __future__ import annotations
 from functools import partial
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sketchlib.aggregate import build_sketch
-from sketchlib.queries import _cached_sketch
+from sketchlib.queries import probe
 
 __all__ = ["join_size_estimate", "bloom_semi_join", "bloom_anti_join",
            "asof_join", "range_join", "skew_split_join", "hot_keys"]
@@ -186,26 +185,13 @@ def bloom_semi_join(spark: SparkSession, fact: DataFrame, fact_key: str,
     row-identical to the plain semi-join (Bloom never drops a true
     member); the shuffle sees matches + fp·non-matches instead of the
     whole fact table."""
-    import uuid
-
     from sketchlib.sketches.bloom import BloomFilter
 
     bf = build_sketch(dim.select(F.xxhash64(dim_key).alias("kh")), "kh",
                       partial(BloomFilter, p, nh, seed))
-    blob = bf.to_bytes()
-    b = spark.sparkContext.broadcast(blob)
-    cache_key = uuid.uuid4().hex
-
-    @F.pandas_udf("boolean")
-    def maybe_member(v: pd.Series) -> pd.Series:
-        sk = _cached_sketch(cache_key, b.value)
-        vals = v.to_numpy()
-        vals = vals.view(np.uint64) if vals.dtype == np.int64 \
-            else vals.astype(np.uint64)
-        return pd.Series(sk.contains(vals))
-
-    prefiltered = fact.filter(
-        maybe_member(F.xxhash64(fact_key)))
+    maybe_member = probe(spark, bf, F.xxhash64(fact_key), "contains",
+                         "boolean")
+    prefiltered = fact.filter(maybe_member)
     return prefiltered.join(dim.select(F.col(dim_key).alias(fact_key))
                             .distinct(),
                             on=fact_key, how="leftsemi")
@@ -351,25 +337,13 @@ def bloom_anti_join(spark: SparkSession, fact: DataFrame, fact_key: str,
     both paths here preserve that — the definite-orphan branch keeps
     the row unless the constant happens to hit the filter, in which
     case the exact anti-join keeps it."""
-    import uuid
-
     from sketchlib.sketches.bloom import BloomFilter
 
     bf = build_sketch(dim.select(F.xxhash64(dim_key).alias("kh")), "kh",
                       partial(BloomFilter, p, nh, seed))
-    blob = bf.to_bytes()
-    b = spark.sparkContext.broadcast(blob)
-    cache_key = uuid.uuid4().hex
-
-    @F.pandas_udf("boolean")
-    def maybe_member(v: pd.Series) -> pd.Series:
-        sk = _cached_sketch(cache_key, b.value)
-        vals = v.to_numpy()
-        vals = vals.view(np.uint64) if vals.dtype == np.int64 \
-            else vals.astype(np.uint64)
-        return pd.Series(sk.contains(vals))
-
-    flagged = fact.withColumn("__maybe", maybe_member(F.xxhash64(fact_key)))
+    maybe_member = probe(spark, bf, F.xxhash64(fact_key), "contains",
+                         "boolean")
+    flagged = fact.withColumn("__maybe", maybe_member)
     definite = flagged.filter(~F.col("__maybe")).drop("__maybe")
     maybes = (flagged.filter(F.col("__maybe")).drop("__maybe")
               .join(dim.select(F.col(dim_key).alias(fact_key)).distinct(),

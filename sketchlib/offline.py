@@ -40,14 +40,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from sketchlib.checkpoint_io import CheckpointStore, Snapshot, sketch_fill_metrics
+from sketchlib.hashing import to_u64
 from sketchlib.sketches.cm import CMConfig, OfflineCountMin
-
-_U64 = np.uint64
-
-
-def _vals_u64(pdf: pd.Series) -> np.ndarray:
-    arr = pdf.to_numpy()
-    return arr.view(_U64) if arr.dtype == np.int64 else arr.astype(_U64)
 
 
 def _config_key(cfg: CMConfig, rounds: int) -> str:
@@ -91,7 +85,7 @@ def _run_pass(df: DataFrame, col: str, cfg: CMConfig, kind: str,
                     continue
                 rows += int(pdf["__cnt"].sum()) if weighted else len(pdf)
                 flags |= local.mark_collisions_batch(
-                    _vals_u64(pdf[col]), round_, b_core.value, coll)
+                    to_u64(pdf[col]), round_, b_core.value, coll)
             payload = np.packbits(flags.reshape(-1)).tobytes()
         elif kind == "count":
             for pdf in batches:
@@ -99,7 +93,7 @@ def _run_pass(df: DataFrame, col: str, cfg: CMConfig, kind: str,
                     continue
                 w = pdf["__cnt"].to_numpy() if weighted else None
                 rows += int(w.sum()) if weighted else len(pdf)
-                local.update_count_batch(_vals_u64(pdf[col]), weights=w)
+                local.update_count_batch(to_u64(pdf[col]), weights=w)
             payload = local.to_bytes()
         else:  # occm combined — conservative is batching-sensitive, so
             # process the partition as ONE batch: the result is then a
@@ -109,7 +103,7 @@ def _run_pass(df: DataFrame, col: str, cfg: CMConfig, kind: str,
             for pdf in batches:
                 if not len(pdf):
                     continue
-                vs.append(_vals_u64(pdf[col]))
+                vs.append(to_u64(pdf[col]))
                 if weighted:
                     ws.append(pdf["__cnt"].to_numpy())
             if vs:
@@ -198,7 +192,7 @@ def _build_local_weighted(pdf, col: str, cfg: CMConfig,
     table — identical batch kernels (they are order-independent over a
     batch), so the result is bit-identical to a one-partition
     distributed run, without 2n-1 Spark jobs + broadcasts."""
-    vals = _vals_u64(pdf[col])
+    vals = to_u64(pdf[col])
     weights = pdf["__cnt"].to_numpy()
     state = OfflineCountMin(cfg)
     for r in range(rounds):

@@ -1,24 +1,30 @@
 """Sketch-backed query operators (point frequency, heavy hitters,
 distinct, membership, quantiles) returning DataFrames.
 
-These are the engine's user-facing analogs of the reference's query
-mode (reference: main.cpp:92-133 — stream keys, annotate with sketch
-estimates): build the sketch distributed, broadcast the final blob,
-and annotate a key DataFrame with vectorized estimates inside one
-pandas UDF — a single stage, no shuffle on the probe side.
+These are the engine's analogs of the reference's query mode
+(reference: main.cpp:92-133 — stream keys, annotate each with its
+sketch estimate). A sketch is built with
+:func:`sketchlib.aggregate.build_sketch`, and every probe goes through
+:func:`probe`: the final blob is broadcast once and a Column annotates
+each key with one vectorized sketch method call inside a pandas UDF —
+a single stage, no shuffle on the probe side. The point-frequency
+operators share one hash → build → distinct → probe routine,
+:func:`point_estimates`.
 """
 
 from __future__ import annotations
 
+import uuid
 from functools import partial
 from typing import Callable
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from sketchlib.aggregate import build_sketch
-from sketchlib.sketches.base import deserialize
+from sketchlib.hashing import to_u64
+from sketchlib.sketches.base import deserialize, fold_blobs
 from sketchlib.sketches.cm import CMConfig, CountMin
 from sketchlib.offline import build_offline
 
@@ -29,6 +35,7 @@ from sketchlib.offline import build_offline
 # blob->numpy deserialization once per query, not once per Arrow batch.
 _SKETCH_CACHE: dict[str, object] = {}
 _SKETCH_CACHE_MAX = 4
+_OUT_DTYPES = {"long": np.int64, "double": np.float64, "boolean": np.bool_}
 
 
 def _cached_sketch(key: str, blob: bytes):
@@ -41,23 +48,54 @@ def _cached_sketch(key: str, blob: bytes):
     return sk
 
 
+def probe(spark: SparkSession, sketch, col: str | Column,
+          method: str = "estimate", out_type: str = "long") -> Column:
+    """Column of ``sketch.<method>(keys)`` over the key column ``col``
+    (``long`` hashes, read as uint64). The blob is broadcast once per
+    call; ``out_type`` is ``long``, ``double`` or ``boolean``."""
+    b = spark.sparkContext.broadcast(sketch.to_bytes())
+    cache_key = uuid.uuid4().hex
+    dtype = _OUT_DTYPES[out_type]
+
+    @F.pandas_udf(out_type)
+    def run(v: pd.Series) -> pd.Series:
+        sk = _cached_sketch(cache_key, b.value)
+        return pd.Series(np.asarray(getattr(sk, method)(to_u64(v)))
+                         .astype(dtype, copy=False))
+
+    return run(col)
+
+
 def _estimate_col(spark: SparkSession, sketch, keys: DataFrame,
                   key_hash_col: str, out_col: str = "est_count") -> DataFrame:
     """Annotate ``keys`` with sketch point estimates (broadcast probe)."""
-    import uuid
+    return keys.withColumn(out_col, probe(spark, sketch, key_hash_col))
 
-    blob = sketch.to_bytes()
-    b = spark.sparkContext.broadcast(blob)
-    cache_key = uuid.uuid4().hex
 
-    @F.pandas_udf("long")
-    def est(v: pd.Series) -> pd.Series:
-        sk = _cached_sketch(cache_key, b.value)
-        vals = v.to_numpy()
-        vals = vals.view(np.uint64) if vals.dtype == np.int64 else vals.astype(np.uint64)
-        return pd.Series(sk.estimate(vals).astype(np.int64))
+def _hashed(df: DataFrame, key_col: str) -> DataFrame:
+    """``(key, kh)``: the key and its JVM-side xxhash64."""
+    return df.select(F.col(key_col).alias("key"),
+                     F.xxhash64(key_col).alias("kh"))
 
-    return keys.withColumn(out_col, est(F.col(key_hash_col)))
+
+def point_estimates(spark: SparkSession, df: DataFrame, key_col: str,
+                    factory: Callable[[], object],
+                    post: Callable[[object], object] | None = None,
+                    method: str = "estimate", out_col: str = "est_count",
+                    out_type: str = "long") -> DataFrame:
+    """Distinct keys of ``df[key_col]`` annotated with a frequency
+    sketch's estimate: hash the keys with xxhash64 JVM-side, build
+    ``factory``'s sketch through the pre-aggregate path, apply
+    ``post`` to the built sketch if given, then probe the distinct
+    ``(key, kh)`` set with ``sketch.<method>``. Returns
+    ``(key, out_col)``."""
+    hashed = _hashed(df, key_col)
+    sk = build_sketch(hashed, "kh", factory, pre_aggregate=True)
+    if post is not None:
+        sk = post(sk)
+    return (hashed.distinct()
+            .withColumn(out_col, probe(spark, sk, "kh", method, out_type))
+            .select("key", out_col))
 
 
 def cm_point_frequency(spark: SparkSession, df: DataFrame, key_col: str,
@@ -68,16 +106,12 @@ def cm_point_frequency(spark: SparkSession, df: DataFrame, key_col: str,
     keys are hashed with xxhash64 JVM-side; the distinct-key probe set
     carries the original value for readability.
     """
-    hashed = df.select(F.col(key_col).alias("key"),
-                       F.xxhash64(key_col).alias("kh"))
-    if offline_rounds > 0:
-        sk = build_offline(hashed, "kh", cfg, offline_rounds,
-                           pre_aggregate=True)
-    else:
-        sk = build_sketch(hashed, "kh", partial(CountMin, cfg),
-                          pre_aggregate=True)
-    keys = hashed.distinct()
-    return _estimate_col(spark, sk, keys, "kh").select("key", "est_count")
+    if offline_rounds <= 0:
+        return point_estimates(spark, df, key_col, partial(CountMin, cfg))
+    hashed = _hashed(df, key_col)
+    sk = build_offline(hashed, "kh", cfg, offline_rounds, pre_aggregate=True)
+    return _estimate_col(spark, sk, hashed.distinct(), "kh") \
+        .select("key", "est_count")
 
 
 def cmm_point_frequency(spark: SparkSession, df: DataFrame, key_col: str,
@@ -88,27 +122,10 @@ def cmm_point_frequency(spark: SparkSession, df: DataFrame, key_col: str,
     (the estimator's noise model assumes every update hits every
     row exactly once) and probes with the median-of-corrected-rows
     estimator; output is a double column ``est_cmm``."""
-    import uuid
-
     cfg = CMConfig(cfg.np_bits, cfg.nh, cfg.seed, conservative=False)
-    hashed = df.select(F.col(key_col).alias("key"),
-                       F.xxhash64(key_col).alias("kh"))
-    sk = build_sketch(hashed, "kh", partial(CountMin, cfg),
-                      pre_aggregate=True)
-    blob = sk.to_bytes()
-    b = spark.sparkContext.broadcast(blob)
-    cache_key = uuid.uuid4().hex
-
-    @F.pandas_udf("double")
-    def est(v: pd.Series) -> pd.Series:
-        s = _cached_sketch(cache_key, b.value)
-        vals = v.to_numpy()
-        vals = vals.view(np.uint64) if vals.dtype == np.int64 else vals.astype(np.uint64)
-        return pd.Series(s.estimate_mean_min(vals))
-
-    return (hashed.distinct()
-            .withColumn("est_cmm", est(F.col("kh")))
-            .select("key", "est_cmm"))
+    return point_estimates(spark, df, key_col, partial(CountMin, cfg),
+                           method="estimate_mean_min", out_col="est_cmm",
+                           out_type="double")
 
 
 def countsketch_point_frequency(spark: SparkSession, df: DataFrame,
@@ -118,13 +135,8 @@ def countsketch_point_frequency(spark: SparkSession, df: DataFrame,
     point estimates for the distinct keys of ``df[key_col]``."""
     from sketchlib.sketches.countsketch import CountSketch
 
-    hashed = df.select(F.col(key_col).alias("key"),
-                       F.xxhash64(key_col).alias("kh"))
-    sk = build_sketch(hashed, "kh",
-                      partial(CountSketch, np_bits, nh, seed),
-                      pre_aggregate=True)
-    keys = hashed.distinct()
-    return _estimate_col(spark, sk, keys, "kh").select("key", "est_count")
+    return point_estimates(spark, df, key_col,
+                           partial(CountSketch, np_bits, nh, seed))
 
 
 def cm_packed_point_frequency(spark: SparkSession, df: DataFrame,
@@ -139,13 +151,8 @@ def cm_packed_point_frequency(spark: SparkSession, df: DataFrame,
     through the distributed build + merge + blob registry."""
     from sketchlib.sketches.packedcm import CountMinPacked
 
-    hashed = df.select(F.col(key_col).alias("key"),
-                       F.xxhash64(key_col).alias("kh"))
-    sk = build_sketch(hashed, "kh",
-                      partial(CountMinPacked, cfg, nbits),
-                      pre_aggregate=True)
-    keys = hashed.distinct()
-    return _estimate_col(spark, sk, keys, "kh").select("key", "est_count")
+    return point_estimates(spark, df, key_col,
+                           partial(CountMinPacked, cfg, nbits))
 
 
 def cs_fold_point_frequency(spark: SparkSession, df: DataFrame,
@@ -162,13 +169,9 @@ def cs_fold_point_frequency(spark: SparkSession, df: DataFrame,
     strict-gates the fold operator itself."""
     from sketchlib.sketches.countsketch import CountSketch
 
-    hashed = df.select(F.col(key_col).alias("key"),
-                       F.xxhash64(key_col).alias("kh"))
-    sk = build_sketch(hashed, "kh",
-                      partial(CountSketch, np_bits + fold_n, nh, seed),
-                      pre_aggregate=True).fold(fold_n)
-    keys = hashed.distinct()
-    return _estimate_col(spark, sk, keys, "kh").select("key", "est_count")
+    return point_estimates(
+        spark, df, key_col, partial(CountSketch, np_bits + fold_n, nh, seed),
+        post=lambda sk: sk.fold(fold_n))
 
 
 def cs4w_point_frequency(spark: SparkSession, df: DataFrame,
@@ -179,13 +182,8 @@ def cs4w_point_frequency(spark: SparkSession, df: DataFrame,
     collision-free width => exact-count oracle."""
     from sketchlib.sketches.cs4w import CountSketch4W
 
-    hashed = df.select(F.col(key_col).alias("key"),
-                       F.xxhash64(key_col).alias("kh"))
-    sk = build_sketch(hashed, "kh",
-                      partial(CountSketch4W, np_bits, nh, seed),
-                      pre_aggregate=True)
-    keys = hashed.distinct()
-    return _estimate_col(spark, sk, keys, "kh").select("key", "est_count")
+    return point_estimates(spark, df, key_col,
+                           partial(CountSketch4W, np_bits, nh, seed))
 
 
 def filterhll_repeated_distinct(spark: SparkSession, df: DataFrame,
@@ -258,19 +256,9 @@ def bloom_membership(spark: SparkSession, build_df: DataFrame,
     # Bloom inserts are idempotent => JVM-side dedup before the kernel
     hashed = build_df.select(F.xxhash64(build_col).alias("kh")).distinct()
     bf = build_sketch(hashed, "kh", partial(BloomFilter, p, nh))
-    b = spark.sparkContext.broadcast(bf.to_bytes())
-    import uuid
-    cache_key = uuid.uuid4().hex
-
-    @F.pandas_udf("boolean")
-    def member(v: pd.Series) -> pd.Series:
-        sk = _cached_sketch(cache_key, b.value)
-        vals = v.to_numpy()
-        vals = vals.view(np.uint64) if vals.dtype == np.int64 else vals.astype(np.uint64)
-        return pd.Series(sk.contains(vals))
-
-    return probe_df.withColumn("maybe_member",
-                               member(F.xxhash64(probe_col)))
+    return probe_df.withColumn(
+        "maybe_member",
+        probe(spark, bf, F.xxhash64(probe_col), "contains", "boolean"))
 
 
 def cm_intersect_frequency(spark: SparkSession, df_a: DataFrame,
@@ -280,10 +268,8 @@ def cm_intersect_frequency(spark: SparkSession, df_a: DataFrame,
     build one CM per input, elementwise-min them, probe the union of
     distinct keys. At collision-free width the estimate equals
     ``least(count_A(k), count_B(k))`` exactly — the strict oracle."""
-    ha = df_a.select(F.col(key_col).alias("key"),
-                     F.xxhash64(key_col).alias("kh"))
-    hb = df_b.select(F.col(key_col).alias("key"),
-                     F.xxhash64(key_col).alias("kh"))
+    ha = _hashed(df_a, key_col)
+    hb = _hashed(df_b, key_col)
     ska = build_sketch(ha, "kh", partial(CountMin, cfg), pre_aggregate=True)
     skb = build_sketch(hb, "kh", partial(CountMin, cfg), pre_aggregate=True)
     inter = ska.intersect(skb)
@@ -302,10 +288,8 @@ def cm_drift_frequency(spark: SparkSession, df_old: DataFrame,
     one-sided CM guarantee bounds each side's overestimate.  The two
     builds scan each snapshot once; the probe is a broadcast of two
     data-size-independent arrays."""
-    ho = df_old.select(F.col(key_col).alias("key"),
-                       F.xxhash64(key_col).alias("kh"))
-    hn = df_new.select(F.col(key_col).alias("key"),
-                       F.xxhash64(key_col).alias("kh"))
+    ho = _hashed(df_old, key_col)
+    hn = _hashed(df_new, key_col)
     sko = build_sketch(ho, "kh", partial(CountMin, cfg), pre_aggregate=True)
     skn = build_sketch(hn, "kh", partial(CountMin, cfg), pre_aggregate=True)
     keys = ho.unionByName(hn).distinct()
@@ -331,21 +315,10 @@ def bloom_xor_membership(spark: SparkSession, df_a: DataFrame, col_a: str,
                       "kh", partial(BloomFilter, p, nh, seed))
     fb = build_sketch(df_b.select(F.xxhash64(col_b).alias("kh")).distinct(),
                       "kh", partial(BloomFilter, p, nh, seed))
-    xf = fa.xor(fb)
-    b = spark.sparkContext.broadcast(xf.to_bytes())
-    import uuid
-    cache_key = uuid.uuid4().hex
-
-    @F.pandas_udf("boolean")
-    def member(v: pd.Series) -> pd.Series:
-        sk = _cached_sketch(cache_key, b.value)
-        vals = v.to_numpy()
-        vals = vals.view(np.uint64) if vals.dtype == np.int64 \
-            else vals.astype(np.uint64)
-        return pd.Series(sk.contains(vals))
-
-    return probe_df.withColumn("xor_member",
-                               member(F.xxhash64(probe_col)))
+    return probe_df.withColumn(
+        "xor_member",
+        probe(spark, fa.xor(fb), F.xxhash64(probe_col), "contains",
+              "boolean"))
 
 
 def cbf_point_frequency(spark: SparkSession, df: DataFrame, key_col: str,
@@ -358,13 +331,8 @@ def cbf_point_frequency(spark: SparkSession, df: DataFrame, key_col: str,
     oracle is strict."""
     from sketchlib.sketches.cbf import CountingBloom
 
-    hashed = df.select(F.col(key_col).alias("key"),
-                       F.xxhash64(key_col).alias("kh"))
-    sk = build_sketch(hashed, "kh",
-                      partial(CountingBloom, p, nh, n_layers, seed),
-                      pre_aggregate=True)
-    keys = hashed.distinct()
-    return _estimate_col(spark, sk, keys, "kh").select("key", "est_count")
+    return point_estimates(spark, df, key_col,
+                           partial(CountingBloom, p, nh, n_layers, seed))
 
 
 def cml_point_frequency(spark: SparkSession, df: DataFrame, key_col: str,
@@ -376,13 +344,8 @@ def cml_point_frequency(spark: SparkSession, df: DataFrame, key_col: str,
     the pre-aggregate path at collision-free width => strict oracle."""
     from sketchlib.sketches.cml import CountMinLog
 
-    hashed = df.select(F.col(key_col).alias("key"),
-                       F.xxhash64(key_col).alias("kh"))
-    sk = build_sketch(hashed, "kh",
-                      partial(CountMinLog, np_bits, nh, seed),
-                      pre_aggregate=True)
-    keys = hashed.distinct()
-    return _estimate_col(spark, sk, keys, "kh").select("key", "est_count")
+    return point_estimates(spark, df, key_col,
+                           partial(CountMinLog, np_bits, nh, seed))
 
 
 def heavy_hitters_hk(df: DataFrame, key_col: str, k: int,
@@ -404,8 +367,7 @@ def heavy_hitters_hk(df: DataFrame, key_col: str, k: int,
     from sketchlib.sketches.hk import HeavyKeeper
 
     m = cand_per_part or 4 * k
-    hashed = df.select(F.col(key_col).alias("key"),
-                       F.xxhash64(key_col).alias("kh"))
+    hashed = _hashed(df, key_col)
 
     def partial_build(batches):
         frames = []
@@ -417,7 +379,7 @@ def heavy_hitters_hk(df: DataFrame, key_col: str, k: int,
         allp = pd.concat(frames, ignore_index=True)
         counts = allp.groupby("kh", sort=False).agg(
             key=("key", "first"), cnt=("kh", "size")).reset_index()
-        kh = counts["kh"].to_numpy().view(np.uint64)
+        kh = to_u64(counts["kh"])
         w = counts["cnt"].to_numpy()
         hk = HeavyKeeper(np_bits, nh, seed)
         hk.update_weighted(kh, w)
@@ -436,10 +398,7 @@ def heavy_hitters_hk(df: DataFrame, key_col: str, k: int,
         partial_build, schema="sketch binary, key string, kh long")
     parts = parts.persist()
     blobs = parts.filter(F.col("sketch").isNotNull()).select("sketch")
-    merged = None
-    for b in blobs.toPandas()["sketch"]:
-        sk = deserialize(bytes(b))
-        merged = sk if merged is None else merged.merge(sk)
+    merged = fold_blobs(blobs.toPandas()["sketch"])
     if merged is None:
         merged = HeavyKeeper(np_bits, nh, seed)
     cands = (parts.filter(F.col("key").isNotNull())
@@ -510,13 +469,8 @@ def pcbf_point_frequency(spark: SparkSession, df: DataFrame, key_col: str,
     (tests/test_siblings_round2b.py)."""
     from sketchlib.sketches.pcbf import PCBF
 
-    hashed = df.select(F.col(key_col).alias("key"),
-                       F.xxhash64(key_col).alias("kh"))
-    sk = build_sketch(hashed, "kh",
-                      partial(PCBF, n_stages, bf_p, bf_nh, hll_p, seed),
-                      pre_aggregate=True)
-    keys = hashed.distinct()
-    return _estimate_col(spark, sk, keys, "kh").select("key", "est_count")
+    return point_estimates(spark, df, key_col,
+                           partial(PCBF, n_stages, bf_p, bf_nh, hll_p, seed))
 
 
 def vac_spectrum_frequency(spark: SparkSession, df: DataFrame, key_col: str,
@@ -527,12 +481,9 @@ def vac_spectrum_frequency(spark: SparkSession, df: DataFrame, key_col: str,
     sees the stream subsampled at rate 2^-i (deterministic weighted
     form: weight >> i), so at collision-free width layer i's estimate
     is exactly ``count >> i`` and the SQL oracle is strict."""
-    import uuid
-
     from sketchlib.sketches.vac import VACSketch
 
-    hashed = df.select(F.col(key_col).alias("key"),
-                       F.xxhash64(key_col).alias("kh"))
+    hashed = _hashed(df, key_col)
     sk = build_sketch(hashed, "kh",
                       partial(VACSketch, n_layers, np_bits, nh, seed),
                       pre_aggregate=True)
@@ -543,10 +494,7 @@ def vac_spectrum_frequency(spark: SparkSession, df: DataFrame, key_col: str,
     @F.pandas_udf("array<long>")
     def spectrum(v: pd.Series) -> pd.Series:
         vac = _cached_sketch(cache_key, b.value)
-        vals = v.to_numpy()
-        vals = (vals.view(np.uint64) if vals.dtype == np.int64
-                else vals.astype(np.uint64))
-        spec = vac.spectrum(vals)  # (n_layers, n)
+        spec = vac.spectrum(to_u64(v))  # (n_layers, n)
         return pd.Series(list(spec.T))
 
     keys = hashed.distinct()
@@ -582,9 +530,7 @@ def swcm_trailing_frequency(spark: SparkSession, df: DataFrame,
         sk = SlidingWindowCM(window, np_bits, nh, seed)
         seen: set[int] = set()
         for b in batches:
-            vals = b["kh"].to_numpy()
-            vals = (vals.view(np.uint64) if vals.dtype == np.int64
-                    else vals.astype(np.uint64))
+            vals = to_u64(b["kh"])
             sk.update(vals)
             seen.update(np.unique(vals).tolist())
         arr = np.array(sorted(seen), dtype=np.uint64)

@@ -33,10 +33,30 @@ def _ship_package(spark: SparkSession) -> None:
     spark.sparkContext.addPyFile(zpath)
 
 
+def _driver_mem() -> str:
+    """``SKETCHLIB_DRIVER_MEM`` if set, else 40% of MemAvailable capped
+    at 16 GiB: the heap is pre-touched, so a size the host cannot back
+    kills the JVM at start-up."""
+    mem = os.environ.get("SKETCHLIB_DRIVER_MEM")
+    if mem:
+        return mem
+    with open("/proc/meminfo") as fh:
+        avail_kb = next(int(line.split()[1]) for line in fh
+                        if line.startswith("MemAvailable:"))
+    return f"{min(16 << 10, avail_kb * 2 // 5 >> 10)}m"
+
+
+def _host_cpus() -> int:
+    if hasattr(os, "sched_getaffinity"):
+        return len(os.sched_getaffinity(0))
+    return os.cpu_count() or 1
+
+
 def get_spark(app: str = "sketchlib", cpus: int | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or _host_cpus())
+    mem = _driver_mem()
     if shuffle_partitions is None:
         shuffle_partitions = max(cpus, 8)
     spark = (
@@ -52,11 +72,9 @@ def get_spark(app: str = "sketchlib", cpus: int | None = None,
         # mid-job (measured in this sandbox); pre-touching moves that
         # cost to startup and removes the dominant source of run-to-run
         # variance
-        .config("spark.driver.memory",
-                os.environ.get("SKETCHLIB_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", mem)
         .config("spark.driver.extraJavaOptions",
-                "-XX:+AlwaysPreTouch -Xms"
-                + os.environ.get("SKETCHLIB_DRIVER_MEM", "16g"))
+                "-XX:+AlwaysPreTouch -Xms" + mem)
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")

@@ -2,120 +2,34 @@
 types with the merge registry (sketchlib.sketches.base)."""
 
 from sketchlib.sketches.base import register
+from sketchlib.sketches.bbmh import OnePermMinHash
+from sketchlib.sketches.bloom import BloomFilter
+from sketchlib.sketches.cbf import CountingBloom
 from sketchlib.sketches.cm import CMConfig, CountMin, OfflineCountMin
+from sketchlib.sketches.cml import CountMinLog
+from sketchlib.sketches.countsketch import CountSketch
+from sketchlib.sketches.cs4w import CountSketch4W
+from sketchlib.sketches.dd import DDSketch
+from sketchlib.sketches.fd import FrequentDirections
+from sketchlib.sketches.gadgets import FilterHLL, HyperBitBit, ModSketch
+from sketchlib.sketches.hk import HeavyKeeper
+from sketchlib.sketches.hll import HyperLogLog
+from sketchlib.sketches.hmh import HyperMinHash
+from sketchlib.sketches.kll import KLL
+from sketchlib.sketches.mg import MisraGries
+from sketchlib.sketches.mh import MinHashBottomK
+from sketchlib.sketches.packedcm import CountMinPacked
+from sketchlib.sketches.pcbf import PCBF
+from sketchlib.sketches.pcsa import PCSA
+from sketchlib.sketches.setsketch import SetSketch
+from sketchlib.sketches.tdigest import TDigest
+from sketchlib.sketches.vac import VACSketch
+from sketchlib.sketches.wmh import CountingMinHash
 
-register(CountMin)
-register(OfflineCountMin)
-
-try:  # registered as they land
-    from sketchlib.sketches.hll import HyperLogLog
-    register(HyperLogLog)
-except ImportError:
-    pass
-try:
-    from sketchlib.sketches.bloom import BloomFilter
-    register(BloomFilter)
-except ImportError:
-    pass
-try:
-    from sketchlib.sketches.tdigest import TDigest
-    register(TDigest)
-except ImportError:
-    pass
-try:
-    from sketchlib.sketches.kll import KLL
-    register(KLL)
-except ImportError:
-    pass
-try:
-    from sketchlib.sketches.countsketch import CountSketch
-    register(CountSketch)
-except ImportError:
-    pass
-try:
-    from sketchlib.sketches.pcsa import PCSA
-    register(PCSA)
-except ImportError:
-    pass
-try:
-    from sketchlib.sketches.mh import MinHashBottomK
-    register(MinHashBottomK)
-except ImportError:
-    pass
-try:
-    from sketchlib.sketches.hk import HeavyKeeper
-    register(HeavyKeeper)
-except ImportError:
-    pass
-try:
-    from sketchlib.sketches.cbf import CountingBloom
-    register(CountingBloom)
-except ImportError:
-    pass
-try:
-    from sketchlib.sketches.cml import CountMinLog
-    register(CountMinLog)
-except ImportError:
-    pass
-try:
-    from sketchlib.sketches.cs4w import CountSketch4W
-    register(CountSketch4W)
-except ImportError:
-    pass
-try:
-    from sketchlib.sketches.bbmh import OnePermMinHash
-    register(OnePermMinHash)
-except ImportError:
-    pass
-try:
-    from sketchlib.sketches.wmh import CountingMinHash
-    register(CountingMinHash)
-except ImportError:
-    pass
-try:
-    from sketchlib.sketches.gadgets import FilterHLL, HyperBitBit, ModSketch
-    register(FilterHLL)
-    register(HyperBitBit)
-    register(ModSketch)
-except ImportError:
-    pass
-try:
-    from sketchlib.sketches.pcbf import PCBF
-    register(PCBF)
-except ImportError:
-    pass
-try:
-    from sketchlib.sketches.vac import VACSketch
-    register(VACSketch)
-except ImportError:
-    pass
-try:
-    from sketchlib.sketches.hmh import HyperMinHash
-    register(HyperMinHash)
-except ImportError:
-    pass
-try:
-    from sketchlib.sketches.setsketch import SetSketch
-    register(SetSketch)
-except ImportError:
-    pass
-try:
-    from sketchlib.sketches.dd import DDSketch
-    register(DDSketch)
-except ImportError:
-    pass
-try:
-    from sketchlib.sketches.fd import FrequentDirections
-    register(FrequentDirections)
-except ImportError:
-    pass
-try:
-    from sketchlib.sketches.mg import MisraGries
-    register(MisraGries)
-except ImportError:
-    pass
-try:
-    from sketchlib.sketches.packedcm import CountMinPacked
-    register(CountMinPacked)
-except ImportError:
-    pass
+for _cls in (CountMin, OfflineCountMin, HyperLogLog, BloomFilter, TDigest,
+             KLL, CountSketch, PCSA, MinHashBottomK, HeavyKeeper,
+             CountingBloom, CountMinLog, CountSketch4W, OnePermMinHash,
+             CountingMinHash, FilterHLL, HyperBitBit, ModSketch, PCBF,
+             VACSketch, HyperMinHash, SetSketch, DDSketch,
+             FrequentDirections, MisraGries, CountMinPacked):
+    register(_cls)

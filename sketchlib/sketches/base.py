@@ -33,7 +33,11 @@ def deserialize(blob: bytes):
     return cls.from_bytes(blob)
 
 
-def merge_blobs(a: bytes, b: bytes) -> bytes:
-    sa = deserialize(a)
-    sb = deserialize(b)
-    return sa.merge(sb).to_bytes()
+def fold_blobs(blobs, acc=None):
+    """Merge serialized sketches, in order, into ``acc`` (default: the
+    first blob's sketch). Returns ``acc`` unchanged when ``blobs`` is
+    empty, so an empty fold with no ``acc`` returns ``None``."""
+    for b in blobs:
+        sk = deserialize(bytes(b))
+        acc = sk if acc is None else acc.merge(sk)
+    return acc

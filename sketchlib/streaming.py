@@ -22,7 +22,8 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, functions as F
 
-from sketchlib.sketches.base import deserialize
+from sketchlib.hashing import to_u64
+from sketchlib.sketches.base import deserialize, fold_blobs
 
 
 class WindowedSketchStore:
@@ -48,12 +49,7 @@ class WindowedSketchStore:
     def sketch(self, window_key):
         with self._lock:
             blobs = list(self._partials.get(window_key, {}).values())
-        if not blobs:
-            return None
-        acc = deserialize(blobs[0])
-        for b in blobs[1:]:
-            acc.merge(deserialize(b))
-        return acc
+        return fold_blobs(blobs)
 
 
 def windowed_sketch_sink(store: WindowedSketchStore,
@@ -69,7 +65,6 @@ def windowed_sketch_sink(store: WindowedSketchStore,
     column cast to double — the path for value-distribution sketches
     (KLL / t-digest / DDSketch) where the magnitude is the datum."""
 
-    import numpy as np
     import pandas as pd
 
     def per_batch(df: DataFrame, epoch_id: int) -> None:
@@ -83,11 +78,8 @@ def windowed_sketch_sink(store: WindowedSketchStore,
 
         def per_window(pdf: pd.DataFrame) -> pd.DataFrame:
             sk = factory()
-            vals = pdf["kh"].to_numpy()
-            if hash_values:
-                vals = (vals.view(np.uint64) if vals.dtype == np.int64
-                        else vals.astype(np.uint64))
-            sk.update(vals)
+            vals = pdf["kh"]
+            sk.update(to_u64(vals) if hash_values else vals.to_numpy())
             return pd.DataFrame({"ws": [pdf["ws"].iloc[0]],
                                  "blob": [sk.to_bytes()]})
 
@@ -207,7 +199,6 @@ def stateful_sketch_stream(stream_df: DataFrame, key_col: str,
     the checkpoint exactly like any stateful aggregation. The batch
     harness (aggregate.py) and this share the same Sketch protocol.
     """
-    import numpy as np
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -215,9 +206,7 @@ def stateful_sketch_stream(stream_df: DataFrame, key_col: str,
         sk = deserialize(bytes(state.get[1])) if state.exists else factory()
         n = state.get[0] if state.exists else 0
         for pdf in pdfs:
-            vals = pdf["vh"].to_numpy()
-            sk.update(vals.view(np.uint64) if vals.dtype == np.int64
-                      else vals.astype(np.uint64))
+            sk.update(to_u64(pdf["vh"]))
             n += len(pdf)
         blob = sk.to_bytes()
         state.update((int(n), bytearray(blob)))

@@ -6,7 +6,7 @@ import pytest
 @pytest.fixture(scope="session")
 def spark():
     from sketchlib.session import get_spark
-    s = get_spark("sketchlib-tests", cpus=8, shuffle_partitions=8)
+    s = get_spark("sketchlib-tests", shuffle_partitions=8)
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()

@@ -1,9 +1,9 @@
-"""Driver-contract queries added in round 2 for the long-tail sibling
-sketches (pcbf, VAC, sliding-window CM, PCSA/SetSketch/HyperBitBit/
-ModSketch, HyperMinHash/one-perm MinHash, CWS, RNLA): each is gated
-against its exact regime / bound flags at sf0.001, mirroring the
-driver's DuckDB comparison (the full cross-engine check lives in
-tools/compare_oracle.py and the round CORRECTNESS files).
+"""Driver-contract queries for the long-tail sibling sketches (pcbf,
+VAC, sliding-window CM, PCSA/SetSketch/HyperBitBit/ModSketch,
+HyperMinHash/one-perm MinHash, CWS, RNLA): each is gated against its
+exact regime / bound flags at sf0.001, mirroring the driver's DuckDB
+comparison (the full cross-engine check lives in
+tools/compare_oracle.py), plus the multi-sketch builder's bit-exactness.
 """
 
 from __future__ import annotations
@@ -134,27 +134,44 @@ def test_driver_contract_oracle_completeness():
 
 
 def test_multi_sketch_build_bit_exact(spark):
-    """build_sketches_multi (one scan, N sketches) must be
-    bit-identical to independent build_sketch calls, on both the
-    plain and pre-aggregate paths."""
+    """build_sketches (one scan, N named sketches) must be
+    bit-identical to independent build_sketch calls on the plain and
+    pre-aggregate paths, with and without the fold hop, for weighted
+    and order-sensitive (conservative CM) kernels; empty input yields
+    ``factory()`` for every name."""
     from functools import partial
 
-    from sketchlib.aggregate import build_sketch, build_sketches_multi
+    from sketchlib.aggregate import build_sketch, build_sketches
     from sketchlib.sketches.cm import CMConfig, CountMin
     from sketchlib.sketches.hll import HyperLogLog
     from sketchlib.sketches.pcsa import PCSA
 
     df = (spark.range(50_000)
           .select(F.xxhash64((F.col("id") % 7000).cast("string"))
-                  .alias("kh")).repartition(8))
+                  .alias("kh"), (F.col("id") % 5 + 1).alias("w"))
+          .repartition(8))
     plain = {"hll": partial(HyperLogLog, 12), "pcsa": partial(PCSA, 64)}
-    multi = build_sketches_multi(df, "kh", plain)
-    for name, fac in plain.items():
-        assert multi[name].to_bytes() == \
-            build_sketch(df, "kh", fac).to_bytes(), name
+    counting = {
+        "cm": partial(CountMin, CMConfig(14, 3, 7, conservative=False)),
+        "cons": partial(CountMin, CMConfig(10, 3, 7, conservative=True)),
+    }
+    cases = [
+        (plain, {}),
+        (plain, {"kernel_partitions": 4}),
+        (counting, {"pre_aggregate": True}),
+        (counting, {"pre_aggregate": True, "kernel_partitions": 12}),
+        (counting, {"pre_aggregate": True, "kernel_partitions": 3}),
+        (counting, {"pre_aggregate": True, "weight_col": "w"}),
+    ]
+    for factories, kw in cases:
+        multi = build_sketches(df, "kh", factories, **kw)
+        assert sorted(multi) == sorted(factories)
+        for name, fac in factories.items():
+            assert multi[name].to_bytes() == \
+                build_sketch(df, "kh", fac, **kw).to_bytes(), (name, kw)
 
-    cfg = CMConfig(np_bits=14, nh=3, seed=7, conservative=False)
-    counting = {"cm": partial(CountMin, cfg)}
-    multi_w = build_sketches_multi(df, "kh", counting, pre_aggregate=True)
-    assert multi_w["cm"].to_bytes() == build_sketch(
-        df, "kh", counting["cm"], pre_aggregate=True).to_bytes()
+    empty = df.filter(F.lit(False))
+    for factories, kw in cases:
+        got = build_sketches(empty, "kh", factories, **kw)
+        for name, fac in factories.items():
+            assert got[name].to_bytes() == fac().to_bytes(), (name, kw)

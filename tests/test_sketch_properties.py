@@ -12,7 +12,7 @@ from sketchlib.sketches.bloom import BloomFilter
 from sketchlib.sketches.hll import HyperLogLog
 from sketchlib.sketches.kll import KLL
 from sketchlib.sketches.tdigest import TDigest
-from sketchlib.sketches.base import deserialize, merge_blobs
+from sketchlib.sketches.base import deserialize, fold_blobs
 import sketchlib.sketches  # noqa: F401  (registers types)
 
 
@@ -207,7 +207,29 @@ def test_registry_merge_blobs_roundtrip():
     a, b = HyperLogLog(10), HyperLogLog(10)
     a.update(np.arange(1000, dtype=np.uint64))
     b.update(np.arange(500, 1500, dtype=np.uint64))
-    blob = merge_blobs(a.to_bytes(), b.to_bytes())
+    blob = fold_blobs([a.to_bytes(), b.to_bytes()]).to_bytes()
     merged = deserialize(blob)
     assert isinstance(merged, HyperLogLog)
     assert abs(merged.estimate() - 1500) / 1500 < 0.1
+
+
+def test_registry_holds_every_sketch_module_class():
+    """Every class in sketchlib/sketches/*.py that defines MAGIC is
+    registered under it, and the 26 magics are distinct."""
+    import importlib
+    import inspect
+    import pathlib
+
+    import sketchlib.sketches
+    from sketchlib.sketches.base import _REGISTRY
+
+    pkg = pathlib.Path(sketchlib.sketches.__file__).parent
+    magics = []
+    for path in sorted(pkg.glob("*.py")):
+        mod = importlib.import_module(f"sketchlib.sketches.{path.stem}")
+        for _, cls in inspect.getmembers(mod, inspect.isclass):
+            if cls.__module__ == mod.__name__ and "MAGIC" in vars(cls):
+                assert _REGISTRY.get(cls.MAGIC) is cls, cls
+                magics.append(cls.MAGIC)
+    assert len(magics) == 26
+    assert len(set(magics)) == len(magics)
