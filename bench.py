@@ -10,18 +10,14 @@ reference's single-thread build (BASELINE.md: ~2.5 M updates/s for the
 conservative CM count pass); ours is measured over the same kind of
 update stream but built distributed.
 
-Record gate (round-5 protocol): this sandbox is a shared VM whose
-effective CPU drifts 10-50% minute-to-minute without load-average
-evidence (BENCH/BASELINE.md); BENCH_r04.json was recorded in such a
-window and its numbers were 10-20% worse across the board than the
-same HEAD's clean-window runs. The harness therefore runs the
-tools/host_health.py probe BEFORE the suite (waiting for a clean
-window, bounded) and AFTER it; if the trailing probe says the window
-degraded mid-run, the query suite is re-run once and the better total
-kept. The probe verdicts ship inside the JSON so a reader can see
-whether the number is from a certified-clean window. Disable with
-SKETCHLIB_BENCH_GATE=0 (e.g. nested inside tools/round_gate.py which
-gates externally).
+Host window: this sandbox is a shared VM whose effective CPU can
+drift minute-to-minute without load-average evidence
+(BENCH/BASELINE.md). The harness runs the tools/host_health.py probe
+BEFORE the suite (waiting, bounded, for a clean window) and AFTER it,
+and ships both verdicts in the JSON so a reader can see whether the
+number comes from a clean window. Every timing is one run: nothing is
+retried or re-run to keep the better value. Disable the probe with
+SKETCHLIB_BENCH_GATE=0.
 """
 
 from __future__ import annotations
@@ -108,10 +104,7 @@ def _probe():
 
 
 def _query_suite(spark, sf_dir: str, qs) -> dict[str, float]:
-    """One timed pass over the headline queries, with the per-query
-    outlier re-run protocol (single-shot timings that land in a
-    degraded micro-window get one retry, keep the best — the same
-    interleave/best-of protocol tools/bench_scaling.py uses)."""
+    """One timed pass over the headline queries."""
     timings: dict[str, float] = {}
     for name in SUITE:
         t0 = time.time()
@@ -119,17 +112,6 @@ def _query_suite(spark, sf_dir: str, qs) -> dict[str, float]:
         timings[name] = round(time.time() - t0, 3)
         print(f"  {name}: {timings[name]}s ({n} rows)", file=sys.stderr)
         assert n >= 0
-
-    med = sorted(timings.values())[len(timings) // 2]
-    for name, t in sorted(timings.items(), key=lambda kv: -kv[1]):
-        if t > max(8.0, 4 * med):
-            t0 = time.time()
-            qs[name](spark, sf_dir).count()
-            rerun = round(time.time() - t0, 3)
-            if rerun < t:
-                print(f"  {name}: retry {rerun}s (was {t}s)",
-                      file=sys.stderr)
-                timings[name] = rerun
     return timings
 
 
@@ -193,21 +175,9 @@ def main() -> int:
         partial(PCSA, 16), salt_buckets=2).count()
 
     # ---- headline driver-contract queries, window-certified ----------
-    qs = E.queries()
-    timings = _query_suite(spark, sf_dir, qs)
+    timings = _query_suite(spark, sf_dir, E.queries())
     if gate:
-        after = _probe()
-        window["after"] = after
-        if after is not None and not after["clean"]:
-            # the window degraded mid-run: the suite numbers are not
-            # trustworthy — re-run once and keep the better total
-            print(f"  trailing window degraded (r1={after['r1']} "
-                  f"r8={after['r8']}): re-running query suite",
-                  file=sys.stderr)
-            second = _query_suite(spark, sf_dir, qs)
-            window["after_rerun"] = _probe()
-            if sum(second.values()) < sum(timings.values()):
-                timings = second
+        window["after"] = _probe()
 
     # ---- sketch-build throughput over synthetic transcripts ----------
     n_convs = int(os.environ.get("SKETCHLIB_BENCH_CONVS", "60000"))
@@ -218,16 +188,10 @@ def main() -> int:
     n_updates = toks.count()
 
     cfg = CMConfig(np_bits=20, nh=7, seed=137, conservative=True)
-    # best-of-2: this sandbox is a shared VM whose effective CPU drifts
-    # minute-to-minute (BENCH/BASELINE.md); the first rep also absorbs
-    # any codegen/worker warmup the query loop didn't cover
-    sk = None
-    dt = float("inf")
-    for _ in range(2):
-        t0 = time.time()
-        sk = build_sketch(toks, "token_u64", partial(CountMin, cfg),
-                          pre_aggregate=True)
-        dt = min(dt, time.time() - t0)
+    t0 = time.time()
+    sk = build_sketch(toks, "token_u64", partial(CountMin, cfg),
+                      pre_aggregate=True)
+    dt = time.time() - t0
     timings["cm_build_transcripts"] = round(dt, 3)
     throughput["turns_per_sec"] = round(n_turns / dt, 1)
     throughput["cm_updates_per_sec"] = round(n_updates / dt, 1)
@@ -275,9 +239,8 @@ def main() -> int:
     # distributed-path throughput (local_threshold=0 disables the
     # small-key-space driver-local shortcut so the number is the
     # per-pass distributed rate, comparable to the reference's)
-    dto = min(_timed(build_offline, toks, "token_u64", cfg, 3,
-                     pre_aggregate=True, local_threshold=0)
-              for _ in range(2))
+    dto = _timed(build_offline, toks, "token_u64", cfg, 3,
+                 pre_aggregate=True, local_threshold=0)
     timings["occm_build_transcripts_3r"] = round(dto, 3)
     throughput["occm_updates_per_sec_per_pass"] = round(
         3 * n_updates / dto, 1)

@@ -114,78 +114,6 @@ def cm_point_frequency(spark: SparkSession, df: DataFrame, key_col: str,
         .select("key", "est_count")
 
 
-def cmm_point_frequency(spark: SparkSession, df: DataFrame, key_col: str,
-                        cfg: CMConfig) -> DataFrame:
-    """Distinct keys annotated with count-mean-min estimates (L5,
-    reference include/ccm.h:822-837 — unfinished there, implemented
-    from the Deng & Rafiei 2007 paper). Builds a *plain* CM core
-    (the estimator's noise model assumes every update hits every
-    row exactly once) and probes with the median-of-corrected-rows
-    estimator; output is a double column ``est_cmm``."""
-    cfg = CMConfig(cfg.np_bits, cfg.nh, cfg.seed, conservative=False)
-    return point_estimates(spark, df, key_col, partial(CountMin, cfg),
-                           method="estimate_mean_min", out_col="est_cmm",
-                           out_type="double")
-
-
-def countsketch_point_frequency(spark: SparkSession, df: DataFrame,
-                                key_col: str, np_bits: int = 16,
-                                nh: int = 5, seed: int = 137) -> DataFrame:
-    """Count-sketch (signed, unbiased — reference include/ccm.h:412-588)
-    point estimates for the distinct keys of ``df[key_col]``."""
-    from sketchlib.sketches.countsketch import CountSketch
-
-    return point_estimates(spark, df, key_col,
-                           partial(CountSketch, np_bits, nh, seed))
-
-
-def cm_packed_point_frequency(spark: SparkSession, df: DataFrame,
-                              key_col: str, cfg: CMConfig,
-                              nbits: int = 32) -> DataFrame:
-    """Conservative CM over BIT-PACKED counters (reference
-    compact::vector storage, include/ccm.h:33-42 — counters are
-    ``nbits`` wide instead of 64, shrinking blob/merge traffic by
-    64/nbits). Packed and uint64 builds are bit-identical while no
-    counter overflows (property-tested), so at collision-free width the
-    exact-count oracle strict-gates the packed storage end-to-end
-    through the distributed build + merge + blob registry."""
-    from sketchlib.sketches.packedcm import CountMinPacked
-
-    return point_estimates(spark, df, key_col,
-                           partial(CountMinPacked, cfg, nbits))
-
-
-def cs_fold_point_frequency(spark: SparkSession, df: DataFrame,
-                            key_col: str, np_bits: int = 16,
-                            fold_n: int = 2, nh: int = 5,
-                            seed: int = 137) -> DataFrame:
-    """Count-sketch ``fold(n)`` width reduction (reference
-    include/ccm.h:576-588) through the distributed build: the sketch is
-    built at width ``2^(np_bits+fold_n)`` and folded down to
-    ``2^np_bits`` before querying. Fold is linear and the hash
-    construction is width-independent, so the folded sketch is
-    bit-identical to a direct build at the smaller width — at
-    collision-free ``np_bits`` the exact-count oracle therefore
-    strict-gates the fold operator itself."""
-    from sketchlib.sketches.countsketch import CountSketch
-
-    return point_estimates(
-        spark, df, key_col, partial(CountSketch, np_bits + fold_n, nh, seed),
-        post=lambda sk: sk.fold(fold_n))
-
-
-def cs4w_point_frequency(spark: SparkSession, df: DataFrame,
-                         key_col: str, np_bits: int = 16,
-                         nh: int = 5, seed: int = 137) -> DataFrame:
-    """4-wise-independent count-sketch (reference include/ccm.h:590-819
-    + hash.h:325-368 polynomial family) point estimates; exact at
-    collision-free width => exact-count oracle."""
-    from sketchlib.sketches.cs4w import CountSketch4W
-
-    return point_estimates(spark, df, key_col,
-                           partial(CountSketch4W, np_bits, nh, seed))
-
-
 def filterhll_repeated_distinct(spark: SparkSession, df: DataFrame,
                                 key_col: str, threshold: int = 2,
                                 p: int = 14) -> float:
@@ -321,33 +249,6 @@ def bloom_xor_membership(spark: SparkSession, df_a: DataFrame, col_a: str,
               "boolean"))
 
 
-def cbf_point_frequency(spark: SparkSession, df: DataFrame, key_col: str,
-                        p: int = 18, nh: int = 4, n_layers: int = 24,
-                        seed: int = 137) -> DataFrame:
-    """Counting-Bloom multiplicity (reference include/cbf.h): distinct
-    keys annotated with the power-of-two count estimate. Built through
-    the pre-aggregate path, the estimate is exactly
-    ``2^floor(log2(count))`` (collision-free widths), so the SQL
-    oracle is strict."""
-    from sketchlib.sketches.cbf import CountingBloom
-
-    return point_estimates(spark, df, key_col,
-                           partial(CountingBloom, p, nh, n_layers, seed))
-
-
-def cml_point_frequency(spark: SparkSession, df: DataFrame, key_col: str,
-                        np_bits: int = 16, nh: int = 5,
-                        seed: int = 137) -> DataFrame:
-    """Count-min-log multiplicity (reference include/update.h:35-83):
-    8-bit log-counter CM — 8x the memory efficiency of exact counters
-    at power-of-two resolution. Exactly 2^floor(log2(count)) through
-    the pre-aggregate path at collision-free width => strict oracle."""
-    from sketchlib.sketches.cml import CountMinLog
-
-    return point_estimates(spark, df, key_col,
-                           partial(CountMinLog, np_bits, nh, seed))
-
-
 def heavy_hitters_hk(df: DataFrame, key_col: str, k: int,
                      np_bits: int = 12, nh: int = 4, seed: int = 137,
                      cand_per_part: int | None = None) -> DataFrame:
@@ -455,22 +356,6 @@ def sketch_quantiles(spark: SparkSession, df: DataFrame, value_col: str,
         rows = [(float(q), float(sk.rank_quantile(q) if rank
                                  else sk.quantile(q))) for q in qs]
     return spark.createDataFrame(rows, "q double, value double")
-
-
-def pcbf_point_frequency(spark: SparkSession, df: DataFrame, key_col: str,
-                         n_stages: int = 12, bf_p: int = 18, bf_nh: int = 4,
-                         hll_p: int = 12, seed: int = 137) -> DataFrame:
-    """pcbf multiplicity (reference include/cbf.h:115-160): distinct
-    keys annotated with the counting-Bloom-cascade estimate. Stage i's
-    filter holds the keys with count >= 2^i, so through the
-    pre-aggregate path at collision-free widths the probe returns
-    exactly ``2^floor(log2(count))`` — same strict oracle as cbf/cml;
-    the pcbf-specific per-stage HLL cardinalities are property-tested
-    (tests/test_siblings_round2b.py)."""
-    from sketchlib.sketches.pcbf import PCBF
-
-    return point_estimates(spark, df, key_col,
-                           partial(PCBF, n_stages, bf_p, bf_nh, hll_p, seed))
 
 
 def vac_spectrum_frequency(spark: SparkSession, df: DataFrame, key_col: str,

@@ -20,7 +20,7 @@ SF = "/root/testdata/sf0.001"
 
 def test_pcbf_power_of_two_multiplicity(spark):
     got = {r["key"]: r["est_count"]
-           for r in E.q_pcbf_user_freq(spark, SF).collect()}
+           for r in E.queries()["pcbf_user_freq"](spark, SF).collect()}
     ev = spark.read.parquet(f"{SF}/events.parquet")
     exact = {r["user_id"]: r["cnt"]
              for r in ev.groupBy("user_id").agg(F.count("*").alias("cnt"))

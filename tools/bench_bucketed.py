@@ -5,8 +5,7 @@ shuffle exchanges (tests/test_storage.py proves the plan shape); this
 tool measures what that is worth in wall time at a size where the
 shuffle actually dominates.
 
-Protocol (same hazard as tools/bench_scaling.py: shared-VM load
-drift): variants interleave A,B,A,B,... within one JVM after warm-up,
+Protocol (shared-VM load drift, BENCH/BASELINE.md): variants interleave A,B,A,B,... within one JVM after warm-up,
 and each variant keeps its best round.
 
 Usage: python tools/bench_bucketed.py [n_rows] [rounds]
