@@ -22,7 +22,7 @@ from collections.abc import Callable
 from functools import partial
 from operator import methodcaller
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from sketchlib.aggregate import build_grouped_sketches, pairwise_grouped
 from sketchlib.sketches.cbf import CountingBloom
@@ -1073,10 +1073,7 @@ def q_ann_pq_topk(spark, sf_dir):
     books = A.pq_train(corpus, m=8, kcent=128, iters=2)
     codes = A.pq_encode(corpus, books)
     qs = corpus.filter(F.col("vec_id") < 8)
-    top = A.ann_topk_pq(codes, qs, books, k=5)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_sim").desc(), F.col("neighbor_id").asc())
-    return (top.withColumn("rank", F.row_number().over(w))
+    return (A.ann_topk_pq(codes, qs, books, k=5)
             .select("query_id", "neighbor_id",
                     (F.floor(F.col("adc_sim") * 1e6) / 1e6).alias("sim"),
                     "rank")
@@ -1098,27 +1095,13 @@ def q_ann_ivfpq_topk(spark, sf_dir):
     coarse train/assign, cell-probe routing, codes-only filtered
     scan, LUT/ADC, local cut, global window."""
     emb = _t(spark, sf_dir, "embeddings")
-    base = (emb.filter(F.col("vec_id") < 78)
-            .select("vec_id", F.col("embedding").cast("array<double>")
-                    .alias("embedding")))
-    qs = base.filter(F.col("vec_id") < 10)
-    copies = (qs.select("vec_id", "embedding",
-                        F.explode(F.array(*[F.lit(j) for j in range(1, 6)]))
-                        .alias("j"))
-              .select((F.lit(1_000_000) + F.col("vec_id") * 10
-                       + F.col("j")).alias("vec_id"),
-                      F.transform(
-                          "embedding",
-                          lambda x: x * F.pow(F.lit(2.0), F.col("j")))
-                      .alias("embedding")))
-    corpus = base.unionByName(copies)           # 78 + 50 = 128 = kcent
+    # 78 + 50 = 128 = kcent
+    corpus = _ann_lsh_corpus(emb.filter(F.col("vec_id") < 78))
+    qs = corpus.filter(F.col("vec_id") < 10)
     cents = A.ivf_train(corpus, nlist=8, iters=3)
     books = A.pq_train(corpus, m=8, kcent=128, iters=2)
     idx = A.ivfpq_index(corpus, cents, books)
-    top = A.ann_topk_ivfpq(idx, qs, cents, books, k=5, nprobe=1)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_sim").desc(), F.col("neighbor_id").asc())
-    return (top.withColumn("rank", F.row_number().over(w))
+    return (A.ann_topk_ivfpq(idx, qs, cents, books, k=5, nprobe=1)
             .select("query_id", "neighbor_id",
                     F.round(F.col("adc_sim"), 6).alias("sim"), "rank")
             .orderBy("query_id", "rank"))

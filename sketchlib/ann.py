@@ -1,15 +1,26 @@
 """Similarity search over embedding columns.
 
-Brute-force cosine top-k as the exact baseline and an LSH-bucketed
-(random hyperplane / SRP) variant as the scale path. Both stay
-JVM-side: dot products via ``aggregate(zip_with(...))``; the LSH
-variant turns the cross join into an equi-join on bucket signature.
+One exact baseline and three scale paths, each a top-k per query:
+
+- ``cosine_topk``: brute-force cosine, JVM-side (the correctness
+  baseline the other paths are tested against);
+- ``ann_topk_lsh`` / ``ann_topk_ivf``: SRP-LSH buckets or IVF coarse
+  cells turn the cross join into an equi-join on ids only, and
+  ``exact_rerank_topk`` scores the candidates;
+- ``ann_topk_pq`` / ``ann_topk_ivfpq``: Product Quantization codes
+  scanned by one ADC kernel; IVF-PQ is that scan restricted to each
+  query's probed cells.
+
+Vector math runs in Arrow-batched numpy kernels (pandas UDFs and
+``mapInPandas``). The IVF quantizer and the PQ codebooks are trained
+by one Lloyd pass.
 """
 
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+import pandas as pd
+from pyspark.sql import DataFrame, Window, functions as F
 
 
 def _norm(col):
@@ -23,20 +34,23 @@ def _dot(a, b):
                        F.lit(0.0), lambda acc, x: acc + x)
 
 
+def _stack(vs) -> np.ndarray:
+    """Stack an Arrow column of vectors into a (batch, dim) float64
+    matrix."""
+    return np.stack([np.asarray(v, dtype=np.float64) for v in vs])
+
+
 def with_norms(df: DataFrame, vec_col: str, out_col: str = "nv") -> DataFrame:
     """Attach the L2 norm of ``vec_col`` — computed ONCE per vector in
     a vectorized pandas UDF (one einsum per Arrow batch), so pair-scoring
     stages never recompute norms per pair. Catalyst higher-order-function
     lambdas (F.aggregate/zip_with) are interpreted, not codegen; the
     Arrow-batched numpy kernel is the fast path for vector math."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
+    @F.pandas_udf("double")
     def _n(vs):
-        import pandas as pd
         if len(vs) == 0:
             return pd.Series([], dtype=np.float64)
-        m = np.stack([np.asarray(v, dtype=np.float64) for v in vs])
+        m = _stack(vs)
         return pd.Series(np.sqrt(np.einsum("ij,ij->i", m, m)))
 
     return df.withColumn(out_col, _n(F.col(vec_col)))
@@ -47,19 +61,40 @@ def pair_cosine_udf():
     per Arrow batch (einsum over the stacked pair block), norms taken
     from the precomputed columns. ~10-100x the interpreted
     aggregate/zip_with expression path on wide vectors."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
+    @F.pandas_udf("double")
     def _cos(va, vb, na, nb):
-        import pandas as pd
         if len(va) == 0:
             return pd.Series([], dtype=np.float64)
-        a = np.stack([np.asarray(v, dtype=np.float64) for v in va])
-        b = np.stack([np.asarray(v, dtype=np.float64) for v in vb])
+        a, b = _stack(va), _stack(vb)
         dots = np.einsum("ij,ij->i", a, b)
         return pd.Series(dots / (na.to_numpy() * nb.to_numpy()))
 
     return _cos
+
+
+def _vectors(df: DataFrame, key: str, side: str, id_col: str,
+             vec_col: str) -> DataFrame:
+    """``(key, v<side>, n<side>)``: each id with its vector and its norm,
+    computed once per vector, ready to join onto id-only pairs."""
+    return with_norms(df.select(F.col(id_col).alias(key),
+                                F.col(vec_col).alias("v" + side)),
+                      "v" + side, "n" + side)
+
+
+def _cosine(pairs: DataFrame) -> DataFrame:
+    """Add ``sim``: the cosine of the ``va``/``vb`` vectors of each pair
+    from their precomputed norms ``na``/``nb``."""
+    return pairs.withColumn("sim", pair_cosine_udf()(
+        F.col("va"), F.col("vb"), F.col("na"), F.col("nb")))
+
+
+def _top_ranked(df: DataFrame, k: int, sim_col: str = "sim") -> DataFrame:
+    """Each query's k best rows by (``sim_col`` desc, neighbor_id asc),
+    numbered 1..k in ``rank`` — the one global top-k cut."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col(sim_col).desc(), F.col("neighbor_id").asc())
+    return (df.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k))
 
 
 def cosine_topk(df: DataFrame, queries: DataFrame, k: int,
@@ -82,14 +117,10 @@ def cosine_topk(df: DataFrame, queries: DataFrame, k: int,
                .filter(F.col("neighbor_id") != F.col("query_id"))
                .withColumn("sim", _dot(F.col("qv"), F.col("v"))
                            / (F.col("nq") * F.col("nv"))))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc())
-    return (joined.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= k)
-            .select("query_id", "neighbor_id",
-                    (F.floor(F.col("sim") * (10 ** sim_decimals))
-                     / (10 ** sim_decimals)).alias("sim"),
-                    F.col("rn").alias("rank")))
+    return _top_ranked(joined, k).select(
+        "query_id", "neighbor_id",
+        (F.floor(F.col("sim") * (10 ** sim_decimals))
+         / (10 ** sim_decimals)).alias("sim"), "rank")
 
 
 def srp_signatures(df: DataFrame, n_bits: int = 16, seed: int = 7,
@@ -109,19 +140,26 @@ def srp_signatures(df: DataFrame, n_bits: int = 16, seed: int = 7,
     planes = rng.standard_normal((dim, n_tables * n_bits))
     weights = (1 << np.arange(n_bits - 1, -1, -1, dtype=np.int64))
 
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("array<long>")
+    @F.pandas_udf("array<long>")
     def _sigs(vecs):
-        import pandas as pd
         if len(vecs) == 0:
             return pd.Series([], dtype=object)
-        m = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
+        m = _stack(vecs)
         bits = (m @ planes > 0).reshape(len(m), n_tables, n_bits)
         sigs = (bits * weights).sum(axis=2)
         return pd.Series(list(sigs))
 
     return df.withColumn("srp_sigs", _sigs(F.col(vec_col)))
+
+
+def _srp_buckets(df: DataFrame, key: str, n_bits: int, seed: int,
+                 dim: int, id_col: str, vec_col: str,
+                 n_tables: int) -> DataFrame:
+    """``(key, tbl, sig)``: one row per vector and SRP table — the
+    bucket side of every SRP equi-join, ids only."""
+    return (srp_signatures(df, n_bits, seed, dim, id_col, vec_col, n_tables)
+            .select(F.col(id_col).alias(key),
+                    F.posexplode("srp_sigs").alias("tbl", "sig")))
 
 
 def ann_topk_lsh(df: DataFrame, queries: DataFrame, k: int,
@@ -132,23 +170,15 @@ def ann_topk_lsh(df: DataFrame, queries: DataFrame, k: int,
     cosine re-rank inside the candidate set. The cross join of the
     brute-force baseline becomes an equi-join on (table, signature) —
     the scale path: candidate count ~ n / 2^n_bits per table instead
-    of n, and the join shuffles only (id, vec, sig) tuples."""
+    of n, and the join shuffles only (id, tbl, sig) tuples."""
     # candidates carry IDS ONLY through the bucket join + dedup — the
     # (n_tables x replicated) vector payloads never cross that shuffle;
     # vectors (with norms precomputed once each) are joined back to the
     # deduplicated candidate set, and cosine runs as one numpy einsum
     # per Arrow batch
-    base = (srp_signatures(df, n_bits, seed, dim, id_col, vec_col, n_tables)
-            .select(F.col(id_col).alias("neighbor_id"),
-                    F.posexplode("srp_sigs").alias("tbl", "sig")))
-    qs = (srp_signatures(queries, n_bits, seed, dim, id_col, vec_col,
-                         n_tables)
-          .select(F.col(id_col).alias("query_id"),
-                  F.posexplode("srp_sigs").alias("tbl", "sig")))
-    cand = (qs.join(base, ["tbl", "sig"])
-            .filter(F.col("neighbor_id") != F.col("query_id"))
-            .select("query_id", "neighbor_id")
-            .dropDuplicates(["query_id", "neighbor_id"]))
+    srp = (n_bits, seed, dim, id_col, vec_col, n_tables)
+    cand = (_srp_buckets(queries, "query_id", *srp)
+            .join(_srp_buckets(df, "neighbor_id", *srp), ["tbl", "sig"]))
     return exact_rerank_topk(cand, df, queries, k, id_col, vec_col)
 
 
@@ -156,30 +186,26 @@ def exact_rerank_topk(cand: DataFrame, df: DataFrame, queries: DataFrame,
                       k: int, id_col: str = "vec_id",
                       vec_col: str = "embedding") -> DataFrame:
     """Exact-cosine re-rank of a (query_id, neighbor_id) candidate set:
-    vectors (norms precomputed once each) joined back to the id-only
-    candidates, cosine as one numpy einsum per Arrow batch, bounded
-    top-k per query. Shared by every ANN blocking strategy (SRP-LSH,
-    IVF) — only the candidate-generation join differs."""
-    vecs = with_norms(df.select(F.col(id_col).alias("neighbor_id"),
-                                F.col(vec_col).alias("v")), "v", "nv")
-    qvecs = with_norms(queries.select(F.col(id_col).alias("query_id"),
-                                      F.col(vec_col).alias("qv")),
-                       "qv", "nq")
-    scored = (cand.join(F.broadcast(qvecs), "query_id")
-              .join(vecs, "neighbor_id")
-              .withColumn("sim", pair_cosine_udf()(
-                  F.col("qv"), F.col("v"), F.col("nq"), F.col("nv"))))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc())
+    self pairs and duplicates dropped on the ids alone, vectors (norms
+    precomputed once each) joined back, cosine as one numpy einsum per
+    Arrow batch, bounded top-k per query. Shared by every ANN blocking
+    strategy (SRP-LSH, IVF) — only the candidate-generation join
+    differs."""
+    cand = (cand.select("query_id", "neighbor_id")
+            .filter(F.col("neighbor_id") != F.col("query_id"))
+            .dropDuplicates(["query_id", "neighbor_id"]))
+    scored = _cosine(
+        cand.join(F.broadcast(_vectors(queries, "query_id", "a", id_col,
+                                       vec_col)), "query_id")
+        .join(_vectors(df, "neighbor_id", "b", id_col, vec_col),
+              "neighbor_id"))
     # round (not floor): engineered recall-guaranteed corpora put the
     # true neighbors at cosine exactly 1.0, where both engines land
     # within ~1e-15 of 1.0 from opposite sides — floor at the 1e-6
     # grid is discontinuous there, round is not
-    return (scored.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= k)
-            .select("query_id", "neighbor_id",
-                    F.round(F.col("sim"), 6).alias("sim"),
-                    F.col("rn").alias("rank")))
+    return _top_ranked(scored, k).select(
+        "query_id", "neighbor_id", F.round(F.col("sim"), 6).alias("sim"),
+        "rank")
 
 
 # --------------------------------------------------------------------
@@ -189,10 +215,42 @@ def exact_rerank_topk(cand: DataFrame, df: DataFrame, queries: DataFrame,
 def _unit_rows(vs) -> np.ndarray:
     """Stack an Arrow column of vectors into a (batch, dim) float64
     matrix with L2-normalized rows (zero vectors pass through)."""
-    m = np.stack([np.asarray(v, dtype=np.float64) for v in vs])
+    m = _stack(vs)
     n = np.linalg.norm(m, axis=1, keepdims=True)
     n[n == 0.0] = 1.0
     return m / n
+
+
+def _lloyd_sums(df: DataFrame, vec_col: str, assign) -> list:
+    """One Lloyd data pass, shared by IVF (m=1) and PQ training.
+    ``assign`` maps a batch of unit rows (n, dim) to (n, m) cluster
+    ids, one per subspace of width dim // m. ONE Spark job: each Arrow
+    batch emits its partial sums (at most m * kcent rows) and the
+    driver folds them per (sub, cluster) in partition order. Returns
+    ``[(sub, cluster, psum, n)]``."""
+    def part(batches):
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            X = _unit_rows(pdf[vec_col])
+            codes = assign(X)
+            dsub = X.shape[1] // codes.shape[1]
+            rows = []
+            for j in range(codes.shape[1]):
+                Xs, a = X[:, j * dsub:(j + 1) * dsub], codes[:, j]
+                for c in np.unique(a):
+                    sel = Xs[a == c]
+                    rows.append((j, int(c), sel.sum(axis=0).tolist(),
+                                 len(sel)))
+            yield pd.DataFrame(rows, columns=["sub", "cluster", "psum", "n"])
+
+    parts = (df.select(vec_col)
+             .mapInPandas(part, "sub int, cluster int, psum array<double>, "
+                                "n long")
+             .toPandas())
+    return [(j, c, np.sum(np.stack(grp["psum"].to_numpy()), axis=0),
+             grp["n"].sum())
+            for (j, c), grp in parts.groupby(["sub", "cluster"])]
 
 
 def ivf_train(df: DataFrame, nlist: int = 16, iters: int = 5,
@@ -203,11 +261,9 @@ def ivf_train(df: DataFrame, nlist: int = 16, iters: int = 5,
     centroids initialize from the ``nlist`` smallest-id vectors and
     every step is order-independent numpy float64.
 
-    Each Lloyd iteration is ONE Spark job: a ``mapInPandas`` pass emits
-    per-batch partial sums ``(cluster, psum, n)`` — at most
-    nlist rows per Arrow batch — and the driver folds them into new
-    centroids. Driver traffic is O(nlist * partitions * dim) per
-    iteration, independent of corpus size. At 100 TB, train on
+    Each Lloyd iteration is one :func:`_lloyd_sums` job (m=1), so
+    driver traffic is O(nlist * partitions * dim) per iteration,
+    independent of corpus size. At 100 TB, train on
     ``df.sample(...)``: a coarse quantizer needs ~10^3-10^4 points per
     centroid, not the corpus; assignment (below) still maps the full
     table."""
@@ -218,29 +274,13 @@ def ivf_train(df: DataFrame, nlist: int = 16, iters: int = 5,
         raise ValueError(f"need >= nlist={nlist} vectors to train")
 
     for _ in range(iters):
-        C = cents  # closure capture; broadcast with the task binary
-
-        def part(batches, C=C):
-            import pandas as pd
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                mn = _unit_rows(pdf[vec_col])
-                a = (mn @ C.T).argmax(axis=1)
-                rows = [(int(c), mn[a == c].sum(axis=0).tolist(),
-                         int((a == c).sum())) for c in np.unique(a)]
-                yield pd.DataFrame(rows, columns=["cluster", "psum", "n"])
-
-        parts = (df.select(vec_col)
-                 .mapInPandas(part, "cluster int, psum array<double>, n long")
-                 .toPandas())
+        sums = _lloyd_sums(
+            df, vec_col, lambda X, C=cents: (X @ C.T).argmax(axis=1)[:, None])
         new = cents.copy()
-        for c, grp in parts.groupby("cluster"):
-            s = np.sum(np.stack([np.asarray(p, dtype=np.float64)
-                                 for p in grp["psum"]]), axis=0)
+        for _sub, c, s, _n in sums:
             nrm = np.linalg.norm(s)
             if nrm > 0.0:  # empty/degenerate cluster keeps its centroid
-                new[int(c)] = s / nrm
+                new[c] = s / nrm
         cents = new
     return cents
 
@@ -254,12 +294,10 @@ def ivf_assign(df: DataFrame, centroids: np.ndarray,
     cluster index (numpy argmax), and cosine is scale-invariant, so
     positively-scaled copies of a vector land in ITS cell bit-exactly
     (normalization by a power-of-two norm is exact in IEEE754)."""
-    from pyspark.sql.functions import pandas_udf
     C = np.asarray(centroids, dtype=np.float64)
 
-    @pandas_udf("int")
+    @F.pandas_udf("int")
     def _a(vs):
-        import pandas as pd
         if len(vs) == 0:
             return pd.Series([], dtype="int32")
         return pd.Series((_unit_rows(vs) @ C.T).argmax(axis=1)
@@ -268,23 +306,28 @@ def ivf_assign(df: DataFrame, centroids: np.ndarray,
     return df.withColumn(out_col, _a(F.col(vec_col)))
 
 
+def _nearest_cells(U: np.ndarray, C: np.ndarray,
+                   nprobe: int) -> np.ndarray:
+    """The ``nprobe`` nearest coarse cells of each unit row of ``U`` by
+    cosine, nearest first: ``(len(U), min(nprobe, nlist))``. Stable
+    argsort, so ties break to the lowest cell index."""
+    return np.argsort(-(U @ C.T), axis=1,
+                      kind="stable")[:, :min(int(nprobe), len(C))]
+
+
 def ivf_probe(queries: DataFrame, centroids: np.ndarray, nprobe: int,
               vec_col: str = "embedding",
               out_col: str = "probe") -> DataFrame:
     """Attach each query's ``nprobe`` nearest coarse cells (stable
     argsort — ties break to the lowest cluster index)."""
-    from pyspark.sql.functions import pandas_udf
     C = np.asarray(centroids, dtype=np.float64)
-    np_ = int(min(nprobe, len(C)))
 
-    @pandas_udf("array<int>")
+    @F.pandas_udf("array<int>")
     def _p(vs):
-        import pandas as pd
         if len(vs) == 0:
             return pd.Series([], dtype=object)
-        s = _unit_rows(vs) @ C.T
-        top = np.argsort(-s, axis=1, kind="stable")[:, :np_]
-        return pd.Series([r.astype("int32").tolist() for r in top])
+        return pd.Series(list(_nearest_cells(_unit_rows(vs), C, nprobe)
+                              .astype("int32")))
 
     return queries.withColumn(out_col, _p(F.col(vec_col)))
 
@@ -313,11 +356,8 @@ def ann_topk_ivf(df: DataFrame, queries: DataFrame, k: int,
     qs = (ivf_probe(queries, centroids, nprobe, vec_col)
           .select(F.col(id_col).alias("query_id"),
                   F.explode("probe").alias("cluster")))
-    cand = (qs.join(base, "cluster")
-            .filter(F.col("neighbor_id") != F.col("query_id"))
-            .select("query_id", "neighbor_id")
-            .dropDuplicates(["query_id", "neighbor_id"]))
-    return exact_rerank_topk(cand, df, queries, k, id_col, vec_col)
+    return exact_rerank_topk(qs.join(base, "cluster"), df, queries, k,
+                             id_col, vec_col)
 
 
 # ----------------------------------------------------------------- PQ
@@ -338,6 +378,19 @@ def _pq_init_sample(df: DataFrame, kcent: int, id_col: str,
             .select(vec_col))
 
 
+def _pq_codes(X: np.ndarray, books: np.ndarray) -> np.ndarray:
+    """PQ codes ``(n, m)`` of unit rows ``X``: per subspace j, the
+    nearest codeword of ``books[j]`` (argmin ||x - c||^2 = argmax
+    2 x.c - ||c||^2; ties to the lowest index)."""
+    m, _, dsub = books.shape
+    codes = np.empty((len(X), m), dtype=np.int64)
+    for j in range(m):
+        B = books[j]
+        codes[:, j] = ((X[:, j * dsub:(j + 1) * dsub] @ B.T) * 2
+                       - np.einsum("kd,kd->k", B, B)[None, :]).argmax(axis=1)
+    return codes
+
+
 def pq_train(df: DataFrame, m: int = 8, kcent: int = 256,
              iters: int = 5, id_col: str = "vec_id",
              vec_col: str = "embedding") -> np.ndarray:
@@ -354,62 +407,28 @@ def pq_train(df: DataFrame, m: int = 8, kcent: int = 256,
     starves Lloyd of spread at PQ's much larger kcent). The selection
     compiles to TakeOrderedAndProject: per-partition local top-kcent
     merged on the driver — NO global sort, window, count job, or
-    shuffle exchange (the round-4 init used row_number over an
-    unpartitioned Window: a single-task sort of the training set;
-    plan-pinned gone in tests/test_plans.py). Every Lloyd step is
-    order-independent float64. Each iteration is ONE Spark job for
-    ALL subspaces: a mapInPandas pass emits per-batch partial sums
-    ``(sub, cluster, psum, n)`` — at most m*kcent rows per batch — and
-    the driver folds them. Driver traffic O(m * kcent * dsub *
-    partitions) per iteration, corpus-size-independent; at 100 TB
+    shuffle exchange (plan-pinned in tests/test_plans.py). Every Lloyd
+    step is order-independent float64, and each iteration is one
+    :func:`_lloyd_sums` job for ALL subspaces (mean update); at 100 TB
     train on ``df.sample(...)`` (a quantizer needs ~10^3 points per
     centroid, not the corpus)."""
-    import pandas as pd
-
-    probe = df.select(vec_col).limit(1).toPandas()
-    dim = len(probe[vec_col].iloc[0])
+    init = _pq_init_sample(df, kcent, id_col, vec_col).toPandas()
+    X0 = _unit_rows(init[vec_col])
+    dim = X0.shape[1]
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m}")
     dsub = dim // m
-
-    init = _pq_init_sample(df, kcent, id_col, vec_col).toPandas()
-    X0 = _unit_rows(init[vec_col])
     if len(X0) < kcent:
         raise ValueError(f"need >= kcent={kcent} vectors to train")
     books = np.stack([X0[:, j * dsub:(j + 1) * dsub]
                       for j in range(m)])            # (m, kcent, dsub)
 
     for _ in range(iters):
-        B = books
-
-        def part(batches, B=B):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                X = _unit_rows(pdf[vec_col])
-                rows = []
-                for j in range(B.shape[0]):
-                    Xs = X[:, j * dsub:(j + 1) * dsub]
-                    # argmin ||x - c||^2 = argmax (2 x.c - ||c||^2)
-                    d2 = (Xs @ B[j].T) * 2 - np.einsum(
-                        "kd,kd->k", B[j], B[j])[None, :]
-                    a = d2.argmax(axis=1)
-                    for c in np.unique(a):
-                        sel = Xs[a == c]
-                        rows.append((j, int(c), sel.sum(axis=0).tolist(),
-                                     int(len(sel))))
-                yield pd.DataFrame(
-                    rows, columns=["sub", "cluster", "psum", "n"])
-
-        parts = (df.select(vec_col).mapInPandas(
-            part, "sub int, cluster int, psum array<double>, n long")
-            .toPandas())
+        sums = _lloyd_sums(df, vec_col, lambda X, B=books: _pq_codes(X, B))
         new = books.copy()
-        for (j, c), grp in parts.groupby(["sub", "cluster"]):
-            n = grp["n"].sum()
+        for j, c, s, n in sums:
             if n:
-                new[j, c] = np.sum(np.stack(
-                    grp["psum"].to_numpy()), axis=0) / n
+                new[j, c] = s / n
         books = new
     return books
 
@@ -424,23 +443,13 @@ def pq_encode(df: DataFrame, codebooks: np.ndarray,
     memory). One mapInPandas pass; codebooks ride the task closure.
     ``keep_cols`` carries extra columns (e.g. the IVF cell) through the
     kernel, so index layouts like (id, cell, codes) need no join."""
-    import pandas as pd
-
-    m, kcent, dsub = codebooks.shape
-    B = codebooks
     keep = list(keep_cols or [])
 
     def enc(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
-            X = _unit_rows(pdf[vec_col])
-            codes = np.empty((len(X), m), dtype=np.int64)
-            for j in range(m):
-                Xs = X[:, j * dsub:(j + 1) * dsub]
-                d2 = (Xs @ B[j].T) * 2 - np.einsum(
-                    "kd,kd->k", B[j], B[j])[None, :]
-                codes[:, j] = d2.argmax(axis=1)
+            codes = _pq_codes(_unit_rows(pdf[vec_col]), codebooks)
             out = {"id": pdf[id_col], "codes": list(codes)}
             for c in keep:
                 out[c] = pdf[c]
@@ -453,34 +462,39 @@ def pq_encode(df: DataFrame, codebooks: np.ndarray,
             .withColumnsRenamed({"id": id_col}))
 
 
-def ann_topk_pq(codes_df: DataFrame, queries: DataFrame,
-                codebooks: np.ndarray, k: int,
-                id_col: str = "vec_id",
-                vec_col: str = "embedding") -> DataFrame:
-    """Approximate top-k by Asymmetric Distance Computation (ADC):
-    per query, a ``(m, kcent)`` look-up table of exact
-    query-subvector-to-centroid squared distances; a corpus CODES scan
-    (never the raw vectors) sums m table entries per neighbor. Scale
-    shape: LUTs ride the closure (nq * m * kcent doubles), each Arrow
-    batch emits only its LOCAL top-k per query, and the global cut is
-    a window rank over nq * k * n_batches rows — the corpus never
-    shuffles. Output (query_id, neighbor_id, adc_sim) where adc_sim =
-    1 - dist2/2 (the cosine a unit query would have with the
-    reconstruction), ranked (adc_sim desc, neighbor_id)."""
-    import pandas as pd
-
+def _adc_topk(codes_df: DataFrame, queries: DataFrame,
+              codebooks: np.ndarray, k: int, id_col: str, vec_col: str,
+              centroids: np.ndarray | None = None,
+              nprobe: int = 0) -> DataFrame:
+    """The one ADC scan behind :func:`ann_topk_pq` and
+    :func:`ann_topk_ivfpq`. Per query, a ``(m, kcent)`` look-up table
+    of exact subvector-to-codeword squared distances; each Arrow batch
+    of codes sums m entries per row and emits its LOCAL top-k per query
+    in the global window's own order (adc_sim desc, neighbor_id asc):
+    exact ADC ties are common, and any other local order would make
+    the top-k depend on partition layout. The query itself, and with
+    ``centroids`` every row outside the query's ``nprobe`` nearest
+    cells (an (nq, nlist) boolean table indexed by ``cell``), is
+    dropped before that cut. The corpus never shuffles."""
     m, kcent, dsub = codebooks.shape
     qp = queries.select(id_col, vec_col).toPandas()
     qids = qp[id_col].to_numpy()
     Q = _unit_rows(qp[vec_col])
+    probe = None
+    if centroids is not None:
+        C = np.asarray(centroids, dtype=np.float64)
+        cells = _nearest_cells(Q, C, nprobe)
+        probe = np.zeros((len(qids), len(C)), dtype=bool)
+        np.put_along_axis(probe, cells, True, axis=1)
+        codes_df = codes_df.filter(
+            F.col("cell").isin(np.unique(cells).tolist()))
     # LUT[q, j, c] = ||q_j - c_{j,c}||^2 (exact, float64)
-    B = codebooks
     lut = np.empty((len(qids), m, kcent))
     for j in range(m):
-        Qs = Q[:, j * dsub:(j + 1) * dsub]
+        Qs, B = Q[:, j * dsub:(j + 1) * dsub], codebooks[j]
         lut[:, j, :] = (np.einsum("id,id->i", Qs, Qs)[:, None]
-                        - 2 * (Qs @ B[j].T)
-                        + np.einsum("kd,kd->k", B[j], B[j])[None, :])
+                        - 2 * (Qs @ B.T)
+                        + np.einsum("kd,kd->k", B, B)[None, :])
 
     def scan(batches):
         for pdf in batches:
@@ -492,36 +506,34 @@ def ann_topk_pq(codes_df: DataFrame, queries: DataFrame,
             d2 = np.zeros((len(qids), len(ids)))
             for j in range(m):
                 d2 += lut[:, j, codes[:, j]]
-            out = []
-            for qi in range(len(qids)):
-                row = d2[qi]
-                # self-exclusion must happen BEFORE the local cut: if
-                # the query's own row wins a local top-k slot, the
-                # batch under-emits real candidates by one (visible
-                # when a query's whole neighborhood lives in one
-                # partition — e.g. cluster-aligned layouts)
-                mask = ids != qids[qi]
-                rm, im = row[mask], ids[mask]
-                # the local cut must use the SAME total order as the
-                # global window (adc_sim desc, neighbor_id asc): exact
-                # ADC ties are common (identical codes => identical
-                # sums) and a position-ordered argsort could drop the
-                # smaller-id tied neighbor, making top-k depend on
-                # partition layout. lexsort: last key primary.
-                keep = np.lexsort((im, rm))[:k]
-                out.append(pd.DataFrame({
-                    "query_id": qids[qi], "neighbor_id": im[keep],
-                    "adc_sim": 1.0 - rm[keep] / 2.0}))
-            yield pd.concat(out, ignore_index=True)
+            sim = 1.0 - d2 / 2.0
+            ok = ids[None, :] != qids[:, None]
+            if probe is not None:
+                ok &= probe[:, pdf["cell"].to_numpy()]
+            q, n = np.nonzero(ok)
+            order = np.lexsort((ids[n], -sim[q, n], q))   # last key primary
+            q, n = q[order], n[order]
+            top = np.arange(len(q)) - np.searchsorted(q, q) < k
+            q, n = q[top], n[top]
+            yield pd.DataFrame({"query_id": qids[q], "neighbor_id": ids[n],
+                                "adc_sim": sim[q, n]})
 
     local = codes_df.mapInPandas(
         scan, "query_id long, neighbor_id long, adc_sim double")
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_sim").desc(), F.col("neighbor_id"))
-    return (local.filter(F.col("neighbor_id") != F.col("query_id"))
-            .withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") <= k).drop("rk")
-            .orderBy("query_id", F.col("adc_sim").desc(), "neighbor_id"))
+    return _top_ranked(local, k, "adc_sim").orderBy("query_id", "rank")
+
+
+def ann_topk_pq(codes_df: DataFrame, queries: DataFrame,
+                codebooks: np.ndarray, k: int,
+                id_col: str = "vec_id",
+                vec_col: str = "embedding") -> DataFrame:
+    """Approximate top-k by Asymmetric Distance Computation (ADC): a
+    scan of the :func:`pq_encode` CODES, never the raw vectors, with
+    LUTs riding the closure (nq * m * kcent doubles; see
+    :func:`_adc_topk`). Output (query_id, neighbor_id, adc_sim, rank)
+    where adc_sim = 1 - dist2/2 (the cosine a unit query would have
+    with the reconstruction), ranked (adc_sim desc, neighbor_id)."""
+    return _adc_topk(codes_df, queries, codebooks, k, id_col, vec_col)
 
 
 def ivfpq_index(df: DataFrame, centroids: np.ndarray,
@@ -550,72 +562,10 @@ def ann_topk_ivfpq(codes_df: DataFrame, queries: DataFrame,
     the (id, cell, codes) table from :func:`ivfpq_index`; raw vectors
     are never touched at query time.
 
-    Scale shape: the probed-cell union becomes a Catalyst ``isin``
-    filter on the codes scan (partition-prunable when the index is
-    stored partitioned by cell); per-query LUTs and probe sets ride
-    the closure (nq * m * kcent doubles + nq * nprobe ints); each
-    Arrow batch emits its LOCAL top-k per query (ties broken by
-    neighbor id, the same total order as the global cut); the global
-    cut is a window rank over nq * k * n_batches rows. Nothing about
-    the corpus ever shuffles. Output (query_id, neighbor_id, adc_sim)
-    ranked (adc_sim desc, neighbor_id); ``nprobe >= nlist`` scans
-    every cell and equals :func:`ann_topk_pq` exactly (tested)."""
-    import pandas as pd
-
-    m, kcent, dsub = codebooks.shape
-    qp = queries.select(id_col, vec_col).toPandas()
-    qids = qp[id_col].to_numpy()
-    Q = _unit_rows(qp[vec_col])
-    C = np.asarray(centroids, dtype=np.float64)
-    np_ = int(min(nprobe, len(C)))
-    sims = Q @ C.T
-    probes = np.argsort(-sims, axis=1, kind="stable")[:, :np_]
-    probe_sets = [set(map(int, r)) for r in probes]
-    cells_union = sorted({c for s in probe_sets for c in s})
-
-    B = codebooks
-    lut = np.empty((len(qids), m, kcent))
-    for j in range(m):
-        Qs = Q[:, j * dsub:(j + 1) * dsub]
-        lut[:, j, :] = (np.einsum("id,id->i", Qs, Qs)[:, None]
-                        - 2 * (Qs @ B[j].T)
-                        + np.einsum("kd,kd->k", B[j], B[j])[None, :])
-
-    def scan(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            codes = np.stack(pdf["codes"].to_numpy())
-            ids = pdf[id_col].to_numpy()
-            cells = pdf["cell"].to_numpy()
-            d2 = np.zeros((len(qids), len(ids)))
-            for j in range(m):
-                d2 += lut[:, j, codes[:, j]]
-            out = []
-            for qi in range(len(qids)):
-                # probe restriction AND self-exclusion both before the
-                # local cut (see ann_topk_pq on why self-exclusion
-                # inside the kernel matters)
-                mask = np.fromiter((int(c) in probe_sets[qi]
-                                    for c in cells), bool, len(cells))
-                mask &= ids != qids[qi]
-                if not mask.any():
-                    continue
-                rm, im = d2[qi][mask], ids[mask]
-                keep = np.lexsort((im, rm))[:k]
-                out.append(pd.DataFrame({
-                    "query_id": qids[qi], "neighbor_id": im[keep],
-                    "adc_sim": 1.0 - rm[keep] / 2.0}))
-            if out:
-                yield pd.concat(out, ignore_index=True)
-
-    local = (codes_df
-             .filter(F.col("cell").isin(cells_union))
-             .mapInPandas(
-                 scan, "query_id long, neighbor_id long, adc_sim double"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_sim").desc(), F.col("neighbor_id"))
-    return (local.filter(F.col("neighbor_id") != F.col("query_id"))
-            .withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") <= k).drop("rk")
-            .orderBy("query_id", F.col("adc_sim").desc(), "neighbor_id"))
+    It is the :func:`ann_topk_pq` scan restricted to each query's
+    probed cells; the probed-cell union also becomes a Catalyst
+    ``isin`` filter on the codes scan (partition-prunable when the
+    index is stored partitioned by cell). ``nprobe >= nlist`` equals
+    :func:`ann_topk_pq` exactly (tested)."""
+    return _adc_topk(codes_df, queries, codebooks, k, id_col, vec_col,
+                     centroids, nprobe)

@@ -464,43 +464,30 @@ def embedding_near_dup_pairs(emb: DataFrame, threshold: float = 0.95,
     deduplicated candidates, and the cosine runs as one numpy einsum
     per Arrow batch instead of interpreted Catalyst lambdas.
     """
-    from sketchlib.ann import pair_cosine_udf, srp_signatures, with_norms
+    from sketchlib.ann import _cosine, _srp_buckets, _vectors
 
-    vecs = with_norms(emb.select(F.col(id_col).alias("id"),
-                                 F.col(vec_col).alias("v")), "v", "nv")
+    side_a = _vectors(emb, "id_a", "a", id_col, vec_col)
+    side_b = _vectors(emb, "id_b", "b", id_col, vec_col)
     if method == "lsh":
-        sig = srp_signatures(emb, n_bits, seed, dim, id_col, vec_col,
-                             n_tables)
-        blocks = sig.select(F.col(id_col).alias("id"),
-                            F.posexplode("srp_sigs").alias("tbl", "sig"))
+        blocks = _srp_buckets(emb, "id", n_bits, seed, dim, id_col, vec_col,
+                              n_tables)
         cand = (blocks.alias("a")
                 .join(blocks.alias("b"), ["tbl", "sig"])
                 .filter(F.col("a.id") < F.col("b.id"))
                 .select(F.col("a.id").alias("id_a"),
                         F.col("b.id").alias("id_b"))
                 .dropDuplicates(["id_a", "id_b"]))
-        pairs = (cand
-                 .join(vecs.select(F.col("id").alias("id_a"),
-                                   F.col("v").alias("va"),
-                                   F.col("nv").alias("na")), "id_a")
-                 .join(vecs.select(F.col("id").alias("id_b"),
-                                   F.col("v").alias("vb"),
-                                   F.col("nv").alias("nb")), "id_b"))
+        pairs = cand.join(side_a, "id_a").join(side_b, "id_b")
     else:
-        a = vecs.select(F.col("id").alias("id_a"), F.col("v").alias("va"),
-                        F.col("nv").alias("na"))
-        b = vecs.select(F.col("id").alias("id_b"), F.col("v").alias("vb"),
-                        F.col("nv").alias("nb"))
-        pairs = a.join(F.broadcast(b), F.col("id_a") < F.col("id_b"))
+        pairs = side_a.join(F.broadcast(side_b),
+                            F.col("id_a") < F.col("id_b"))
 
-    sim = pair_cosine_udf()(F.col("va"), F.col("vb"),
-                            F.col("na"), F.col("nb"))
     # round (not floor): surviving pairs sit within ~1e-12 of exact
     # cosine values, and floor at the 1e-6 grid is discontinuous there
-    return (pairs.withColumn("cos_sim", sim)
-            .filter(F.col("cos_sim") >= threshold)
+    return (_cosine(pairs)
+            .filter(F.col("sim") >= threshold)
             .select("id_a", "id_b",
-                    F.round(F.col("cos_sim"), 6).alias("cos_sim")))
+                    F.round(F.col("sim"), 6).alias("cos_sim")))
 
 
 def semantic_dup_pairs(emb: DataFrame, threshold: float = 0.95,

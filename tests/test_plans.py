@@ -9,6 +9,7 @@ queries scale must be visible in the optimized plan, not assumed.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 import __spark_entry__ as E
@@ -90,7 +91,8 @@ def test_ivf_candidates_carry_ids_only_and_broadcast_queries(spark):
     import re
     m = re.search(r"Keys \[\d+\]: \[([^\]]*query_id[^\]]*)\]", plan)
     assert m, plan[:800]
-    assert "embedding" not in m.group(1) and " v#" not in m.group(1)
+    assert "embedding" not in m.group(1)
+    assert not re.search(r"\bv[ab]#", m.group(1))
     assert "BroadcastHashJoin" in plan
 
 
@@ -313,6 +315,42 @@ def test_pq_init_sample_no_window_sort_or_exchange(spark):
     # no standalone Sort node (TakeOrderedAndProject's internal bounded
     # heap is not a Sort operator)
     assert not re.findall(r"\(\d+\) Sort\b", plan)
+
+
+def _subtree(plan: str, node: str) -> list[str]:
+    """The nodes under the first ``node`` of a formatted plan's tree,
+    one ``Name (step)`` string each."""
+    import re
+    tree = plan.split("\n\n")[0].splitlines()
+    indent = [len(re.match(r"[ :+\-]*", ln).group()) for ln in tree]
+    top = next(i for i, ln in enumerate(tree) if f" {node} (" in f" {ln}")
+    below = []
+    for ln, ind in zip(tree[top + 1:], indent[top + 1:]):
+        if ind <= indent[top]:
+            break
+        below.append(ln[ind:])
+    return below
+
+
+@pytest.mark.parametrize("name", ["ann_pq_topk", "ann_ivfpq_topk"])
+def test_adc_scan_never_shuffles_the_codes(spark, name):
+    """No Exchange between the codes scan and the ADC MapInPandas (the
+    first MapInPandas from the top): only the nq * k * n_batches local
+    top-k rows reach a shuffle. IVF-PQ also filters ``cell`` with an
+    In/InSet predicate below the kernel, so unprobed cells are never
+    sent to Python."""
+    import re
+    plan = _plan(E.queries()[name](spark, SF))
+    below = _subtree(plan, "MapInPandas")
+    assert any(n.startswith("Scan parquet") for n in below), below
+    assert not any("Exchange" in n for n in below), below
+    steps = [m.group(1) for m in
+             (re.match(r"Filter \((\d+)\)", n) for n in below) if m]
+    conds = [re.search(rf"\({s}\) Filter\n[^\n]*\nCondition : ([^\n]*)",
+                       plan).group(1) for s in steps]
+    has_cell_in = any(re.search(r"cell#\d+ (IN \(|INSET )", c)
+                      for c in conds)
+    assert has_cell_in == (name == "ann_ivfpq_topk"), conds
 
 
 def test_multimodal_jpeg_zero_exchange_pipeline(spark):

@@ -141,15 +141,17 @@ AUDITED = [
      "grouped sketch build, no driver funnel"),
     # round-5 additions
     ("ann_pq_topk",
-     "PQ/ADC: codebooks+LUTs ride the closure, corpus scan touches "
-     "CODES only, per-batch local top-k, window-rank global cut — "
-     "the corpus never shuffles; train init is TakeOrderedAndProject "
-     "(no global sort / window / count job)"),
+     "PQ/ADC: one ADC scan shared with IVF-PQ — LUTs ride the closure, "
+     "the corpus scan touches CODES only, per-batch local top-k in the "
+     "window's own order, window-rank global cut; no Exchange below the "
+     "scan kernel, so the corpus never shuffles; train init is "
+     "TakeOrderedAndProject (no global sort / window / count job)"),
     ("ann_ivfpq_topk",
-     "IVF-PQ: probed-cell union becomes a Catalyst isin filter on the "
-     "(id, cell, codes) scan (partition-prunable when the index is "
-     "stored partitioned by cell); LUTs + probe sets ride the "
-     "closure; per-batch local top-k; corpus never shuffles"),
+     "IVF-PQ: the same ADC scan with a per-query (nq, nlist) probe "
+     "table; the probed-cell union is a Catalyst In/InSet filter on "
+     "the (id, cell, codes) scan below the kernel (partition-prunable "
+     "when the index is stored partitioned by cell); corpus never "
+     "shuffles"),
     ("dedup_minhash_delta",
      "incremental LSH dedup: only the DELTA is shingled/signed; "
      "candidates = delta band self-join UNION band join against the "
