@@ -351,11 +351,13 @@ def minhash_dedup_delta(new_docs: DataFrame, band_index: DataFrame,
                              F.col(f"o.{id_col}")).alias("id_b")))
     cands = nn.unionByName(no).distinct()
     # stored shingles of ONLY the candidate-matched old docs ride into
-    # the verify join (ids not in the index — the new docs — just don't
-    # match the semi-join; their shingles come from sh_new)
+    # the verify join; a delta id's shingles come from sh_new alone,
+    # also when the id is already indexed (a re-ingest), so none counts
+    # twice
     need = (cands.select(F.explode(F.array("id_a", "id_b"))
                          .alias(id_col)).distinct())
-    old_sh = shingle_index.join(need, id_col, "left_semi")
+    old_sh = (shingle_index.join(need, id_col, "left_semi")
+              .join(new_docs.select(id_col).distinct(), id_col, "left_anti"))
     union_sh = sh_new.unionByName(old_sh)
     return jaccard_pairs(None, threshold, shingle_n, id_col, text_col,
                          candidates=cands, shingle_df=union_sh)

@@ -21,9 +21,11 @@ job over the token DataFrame, and per-round state moves via broadcast
   OCCM (conservative offline, main.cpp:63-90, effective semantics —
     the r>0 pre-pass is dead code, SURVEY.md O16):
     every round: one combined count+collision pass
-      (include/ocm.h:301-348); per-partition sequential-equivalent
-      batch kernel; merge core by sum, collision by max. Order-
-      dependent like conservative CM; keeps est >= true.
+      (include/ocm.h:301-348); per partition, the wave kernel
+      ``OfflineCountMin.update_count_collision_batch`` (sorted unique
+      keys applied in conflict-free waves, equal to their sequential
+      loop); merge core by sum, collision by max. Order-dependent like
+      conservative CM; keeps est >= true.
 
 Checkpoint/resume: after each completed pass the merged state is
 committed to a CheckpointStore snapshot with per-partition lineage;

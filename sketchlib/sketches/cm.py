@@ -14,11 +14,12 @@ for Spark's partial/final aggregation model:
   order-independent, so a distributed build (per-partition partials,
   elementwise-sum merge) is **bit-exact** vs any sequential order;
 - conservative update: +1 only on cells at the row-set minimum
-  (include/ocm.h:57-67) — order-dependent; the distributed build is
-  equivalent to *some* sequential order of the same multiset, so the
-  one-sided guarantee (est >= true) and the CM epsilon-delta bound hold;
-  ``strict_order=True`` reproduces the reference's stream order
-  bit-for-bit (used by the golden tests);
+  (include/ocm.h:57-67) — order-dependent; a batch is applied as its
+  sorted unique values in order, in conflict-free waves (:func:`_waves`),
+  and the distributed build is equivalent to *some* sequential order of
+  the same multiset, so the one-sided guarantee (est >= true) and the
+  CM epsilon-delta bound hold; ``strict_order=True`` reproduces the
+  reference's stream order bit-for-bit (used by the golden tests);
 - merge: elementwise sum, matching the vendored library's CM merge
   (reference: include/ccm.h:401-407, include/update.h:29-33) —
   associative and commutative.
@@ -74,6 +75,54 @@ def _combine_weighted(vals: np.ndarray, weights) -> tuple:
     csum = np.concatenate(([0], np.cumsum(sc)))
     counts = csum[np.append(starts[1:], sv.shape[0])] - csum[starts]
     return u, counts
+
+
+def _waves(flat: np.ndarray) -> list[np.ndarray]:
+    """Split the key columns of an ``(nh, U)`` flat cell-id matrix into
+    conflict-free waves, returned in the order they must be applied.
+
+    ``flat[r, t]`` is key ``t``'s cell in row ``r``, offset by row so
+    that no two rows share an id; column order is the sequential order
+    the batch kernels must reproduce. The rule:
+
+    - inside a wave no two keys share a cell, so one gather, one min
+      rule and one scatter apply the whole wave;
+    - across waves every cell sees its keys in column order: a key's
+      wave is one more than the latest wave among the keys before it
+      in any of its cells (wave 0 if it shares no cell with an earlier
+      key).
+
+    A key reads and writes only its own ``nh`` cells, and each cell
+    sees the same keys in the same order as in a per-key loop over the
+    columns, so every key reads the values it would read there: the
+    waves give that loop's state bit for bit.
+
+    Levels are found by peeling: sorting ``(cell, column)`` per row
+    links each entry to the next key in its cell; the keys with no
+    predecessor are wave 0, and each wave frees the keys whose last
+    remaining predecessor it held.
+    """
+    nh, u = flat.shape
+    if u == 0:
+        return []
+    bits = max(u - 1, 1).bit_length()
+    s = np.sort((flat << bits) | np.arange(u, dtype=np.int64), axis=1)
+    keys = s & ((1 << bits) - 1)
+    cell = s >> bits
+    r, i = np.nonzero(cell[:, 1:] == cell[:, :-1])
+    nxt = keys[r, i + 1]
+    succ = np.full((nh, u), -1, dtype=np.int64)    # next key per cell
+    succ[r, keys[r, i]] = nxt
+    preds = np.bincount(nxt, minlength=u)
+    wave = np.flatnonzero(preds == 0)
+    out = []
+    while wave.size:
+        out.append(wave)
+        nxt = succ[:, wave]
+        nxt = nxt[nxt >= 0]
+        np.subtract.at(preds, nxt, 1)
+        wave = np.unique(nxt[preds[nxt] == 0])
+    return out
 
 
 _NARROW = [(np.uint8, 0), (np.uint16, 1), (np.uint32, 2), (np.uint64, 3)]
@@ -201,40 +250,20 @@ class CountMin:
             i = j
 
     def _apply_conservative(self, u: np.ndarray, counts: np.ndarray) -> None:
-        """Vectorized conservative update of (unique value, count) pairs.
-
-        Equivalent to *some* sequential order of the multiset: values
-        whose cell sets are disjoint from every other value in the batch
-        commute, so they are applied simultaneously; the (rare at
-        realistic widths) cell-sharing values are applied sequentially
-        afterwards. c consecutive updates of one value raise its row-set
-        minimum by exactly c: new_v = max(v, min(v) + c).
+        """Conservative update of (unique value, count) pairs, applied
+        in column order as conflict-free waves (:func:`_waves`). c
+        consecutive updates of one value raise its row-set minimum by
+        exactly c: new_v = max(v, min(v) + c).
         """
-        cols = row_positions(u, self.seeds, self.config.np_bits)  # (nh, U)
-        nh = self.core.shape[0]
-        w = self.config.width
-        # global flat cell ids to detect cross-value cell sharing
-        flat = (cols + (np.arange(nh, dtype=_U64)[:, None] << _U64(self.config.np_bits)))
-        cells, cell_counts = np.unique(flat, return_counts=True)
-        shared = cells[cell_counts > 1]
-        if shared.size:
-            conflicted = np.isin(flat, shared).any(axis=0)
-        else:
-            conflicted = np.zeros(u.shape[0], dtype=bool)
+        flat = row_positions(u, self.seeds,
+                             self.config.np_bits).astype(np.int64)
+        flat += np.arange(flat.shape[0])[:, None] << self.config.np_bits
         core_flat = self.core.reshape(-1)
-
-        free = ~conflicted
-        if free.any():
-            P = flat[:, free].astype(np.int64)          # (nh, Uf)
-            V = core_flat[P]                             # gather
-            m = V.min(axis=0) + counts[free].astype(_U64)
-            core_flat[P] = np.maximum(V, m[None, :])
-        if conflicted.any():
-            idxs = np.flatnonzero(conflicted)
-            for t in idxs:
-                p = flat[:, t].astype(np.int64)
-                v = core_flat[p]
-                core_flat[p] = np.maximum(v, v.min() + _U64(counts[t]))
+        inc = counts.astype(_U64)
+        for wave in _waves(flat):
+            P = flat[:, wave]
+            V = core_flat[P]
+            core_flat[P] = np.maximum(V, V.min(axis=0) + inc[wave])
 
     # ------------------------------------------------------------ queries
     def estimate(self, vals: np.ndarray) -> np.ndarray:
@@ -486,17 +515,18 @@ class OfflineCountMin:
     def update_count_collision_batch(self, vals, round_: int,
                                      total_round: int,
                                      weights=None) -> None:
-        """OCCM conservative count with per-batch sorted-unique ordering
-        (equivalent to some sequential order of the batch).
+        """OCCM conservative count of the batch's sorted unique values
+        in order (one valid sequential order of the batch), applied as
+        conflict-free waves (:func:`_waves`); count and collision
+        tables share the flat cell index.
 
-        Vectorized like the conservative CM batch kernel: tokens whose
-        cell sets are disjoint from every other token in the batch
-        commute, so both OCCM branches apply to all of them at once;
-        the rare cell-sharing tokens fall back to a sequential loop.
-        For a run of c duplicates the count rule collapses to
-        new_v = max(v, min(v over branch set) + c), and the branch-2
-        collision marks are exactly the first iteration's (v > min)
-        cells — later iterations mark a subset.
+        Per value: branch 1 (min collision < round - 1) raises the
+        minimum of the min-collision cells; branch 2 raises the minimum
+        of all cells and, before the last round, marks the cells above
+        it with ``round_``. For a run of c duplicates the count rule
+        collapses to new_v = max(v, min(v over branch set) + c), and the
+        branch-2 collision marks are exactly the first iteration's
+        (v > min) cells — later iterations mark a subset.
         """
         vals = np.asarray(vals, dtype=_U64)
         if vals.size == 0:
@@ -505,61 +535,23 @@ class OfflineCountMin:
             u, counts = _sorted_unique(vals)
         else:
             u, counts = _combine_weighted(vals, weights)
-        nh = self.core.shape[0]
-        cols = self._positions(u)                       # (nh, U) int64
-        flat = cols + (np.arange(nh, dtype=np.int64)[:, None]
-                       << self.config.np_bits)
-        cells, cell_counts = np.unique(flat, return_counts=True)
-        shared = cells[cell_counts > 1]
-        conflicted = (np.isin(flat, shared).any(axis=0) if shared.size
-                      else np.zeros(u.shape[0], dtype=bool))
+        flat = self._positions(u)                        # (nh, U) int64
+        flat += np.arange(flat.shape[0])[:, None] << self.config.np_bits
         core_flat = self.core.reshape(-1)
         coll_flat = self.collision.reshape(-1)
-        rows = np.arange(nh)
-
-        free = ~conflicted
-        if free.any():
-            P = flat[:, free]                            # (nh, Uf)
-            C = coll_flat[P]                             # collisions
-            V = core_flat[P]                             # counts
-            cnt = counts[free].astype(_U64)
+        inc = counts.astype(_U64)
+        big = _U64(np.iinfo(np.uint64).max)
+        for wave in _waves(flat):
+            P = flat[:, wave]
+            C = coll_flat[P]
+            V = core_flat[P]
             mc = C.min(axis=0)
-            b1 = mc < round_ - 1
-            if b1.any():
-                selmask = (C == mc[None, :]) & b1[None, :]
-                big = np.iinfo(np.uint64).max
-                vmin = np.where(selmask, V, _U64(big)).min(axis=0)
-                target = np.where(selmask, vmin[None, :] + cnt[None, :],
-                                  _U64(0))
-                new = np.maximum(V, target)
-                core_flat[P[:, b1]] = new[:, b1]
-            b2 = ~b1
-            if b2.any():
-                P2 = P[:, b2]
-                V2 = V[:, b2]
-                mn = V2.min(axis=0)
-                if round_ < total_round:
-                    over = V2 > mn[None, :]
-                    coll_flat[P2[over]] = np.int32(round_)
-                core_flat[P2] = np.maximum(
-                    V2, mn[None, :] + counts[free][b2].astype(_U64))
-        if conflicted.any():
-            for t in np.flatnonzero(conflicted):
-                p = flat[:, t]
-                col = coll_flat[p]
-                mc = col.min()
-                c = _U64(counts[t])
-                if mc < round_ - 1:
-                    sel = col == mc
-                    v = core_flat[p[sel]]
-                    core_flat[p[sel]] = np.maximum(v, v.min() + c)
-                else:
-                    v = core_flat[p]
-                    mn = v.min()
-                    if round_ < total_round:
-                        over = v > mn
-                        coll_flat[p[over]] = np.int32(round_)
-                    core_flat[p] = np.maximum(v, mn + c)
+            b2 = mc >= round_ - 1
+            sel = b2 | (C == mc)                         # branch set
+            mn = np.where(sel, V, big).min(axis=0)
+            if round_ < total_round:
+                coll_flat[P[b2 & (V > mn)]] = np.int32(round_)
+            core_flat[P] = np.where(sel, np.maximum(V, mn + inc[wave]), V)
 
     # ------------------------------------------------------------ query
     def estimate(self, vals: np.ndarray) -> np.ndarray:

@@ -29,7 +29,8 @@ import struct
 import numpy as np
 
 from sketchlib.hashing import derive_seeds, row_positions
-from sketchlib.sketches.cm import CMConfig, CountMin, _combine_weighted
+from sketchlib.sketches.cm import (CMConfig, CountMin, _combine_weighted,
+                                  _waves)
 
 _U64 = np.uint64
 
@@ -145,22 +146,12 @@ class CountMinPacked:
                               minlength=self.ncells)
             self.pv.encode_all(full + add.astype(_U64))
             return
-        # conservative: same conflict split as CountMin._apply_conservative
-        cells, cell_counts = np.unique(flat, return_counts=True)
-        shared = cells[cell_counts > 1]
-        conflicted = (np.isin(flat, shared).any(axis=0) if shared.size
-                      else np.zeros(vals.shape[0], dtype=bool))
-        free = ~conflicted
-        if free.any():
-            P = flat[:, free]
+        # conservative: CountMin's rule, wave by wave (cm._waves)
+        inc = counts.astype(_U64)
+        for wave in _waves(flat):
+            P = flat[:, wave]
             V = self.pv.get(P)
-            m = V.min(axis=0) + np.asarray(counts)[free].astype(_U64)
-            self.pv.set(P, np.maximum(V, m[None, :]))
-        if conflicted.any():
-            for t in np.flatnonzero(conflicted):
-                p = flat[:, t]
-                v = self.pv.get(p)
-                self.pv.set(p, np.maximum(v, v.min() + _U64(counts[t])))
+            self.pv.set(P, np.maximum(V, V.min(axis=0) + inc[wave]))
 
     # ---------------------------------------------------------- queries
     def estimate(self, vals: np.ndarray) -> np.ndarray:

@@ -125,3 +125,21 @@ def test_two_day_loop_equals_full_recompute(spark):
     assert any(a == 1_000_000_000 and b == 3_000_000_000
                for a, b in {(r["id_a"], r["id_b"])
                             for r in p2.collect()})
+
+
+def test_reingested_ids_count_their_shingles_once(spark):
+    """Re-ingesting already-indexed documents under their own ids: the
+    stored shingles of a delta id must not ride into the verify join
+    beside the delta's own, or every Jaccard touching it is wrong."""
+    docs = spark.read.parquet(SF + "/documents.parquet")
+    again = docs.filter(F.col("doc_id") % 10 == 0)
+    sh_old = D.shingles(docs, hashed=True)
+    idx = D.minhash_band_index(shingle_df=sh_old)
+    delta = {(r["id_a"], r["id_b"], r["jaccard"]) for r in
+             D.minhash_dedup_delta(again, idx, sh_old, THR).collect()}
+
+    touches = (F.col("id_a") % 10 == 0) | (F.col("id_b") % 10 == 0)
+    want = {(r["id_a"], r["id_b"], r["jaccard"]) for r in
+            D.minhash_dedup_pairs(docs, THR).filter(touches).collect()}
+    assert delta == want
+    assert len(want) > 0
