@@ -328,13 +328,9 @@ def minhash_dedup_delta(new_docs: DataFrame, band_index: DataFrame,
 
     Returns (id_a, id_b, jaccard >= threshold), id_a < id_b, same
     contract as minhash_dedup_pairs."""
-    from pyspark import StorageLevel
-
-    sh_new = (shingles(new_docs, shingle_n, id_col, text_col, hashed=True)
-              .persist(StorageLevel.MEMORY_AND_DISK))
-    banded_new = (minhash_band_index(None, n_perm, bands, shingle_n,
-                                     id_col, text_col, shingle_df=sh_new)
-                  .persist(StorageLevel.MEMORY_AND_DISK))
+    sh_new = shingles(new_docs, shingle_n, id_col, text_col, hashed=True)
+    banded_new = minhash_band_index(None, n_perm, bands, shingle_n,
+                                    id_col, text_col, shingle_df=sh_new)
     a = banded_new.alias("a")
     b = banded_new.alias("b")
     nn = (a.join(b, ["band", "key"])

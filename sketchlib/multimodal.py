@@ -1,15 +1,46 @@
-"""Multimodal column plumbing: opaque binary payloads with typed
-metadata, processed by Arrow-batched kernels.
+"""Multimodal columns: opaque binary payloads with typed metadata,
+processed by Arrow-batched kernels.
 
-The image/audio decode libraries are not in this container, so the
-decode step is STUBBED behind ``decoder=`` hooks (a deterministic fake
-by default, clearly marked); everything Spark-side — schema, batch
-iteration, partitioning, output shape — is real and tested. Swapping in
-a real decoder (PIL / torchaudio / pyav) changes one function.
+Every codec is an encode/decode pair behind two shared Spark calls:
+
+- ``_media_table(spark, n, partitions, encode)`` is the one media
+  generator: row ``i`` of ``spark.range(n)`` becomes one
+  :data:`MEDIA_SCHEMA` row whose fields come from ``encode(i)``;
+- :func:`decode_stats` is the one media operator: it decodes every
+  payload and reduces it with a stats function that carries its own
+  output schema.
+
+==========  ==================  =====================  ============
+codec       encode(i, seed)     decode(bytes)          stats
+==========  ==================  =====================  ============
+WAV         ``_wav_encode``     ``_wav_decode``        amplitude
+BMP         ``_bmp_encode``     ``_bmp_decode``        RGB
+PNG         ``_png_encode``     ``_png_decode``        RGB
+GIF         ``_gif_encode``     ``_gif_decode``        RGB + ypos
+JPEG        ``_jpeg_encode``    ``_jpeg_decode_gray``  gray
+FLAC        ``_flac_encode``    ``_flac_decode``       amplitude
+==========  ==================  =====================  ============
+
+The public ``synthetic_*_media`` and ``*_stats`` names are thin
+wrappers over these two calls. Each encoder writes genuine media bytes
+whose decoded samples or pixels follow a closed arithmetic form, so a
+DuckDB oracle re-derives every statistic and strict-gates the decode;
+the stats are integers for that reason. Everything is stdlib + numpy.
+
+``synthetic_media`` is one more encoder: arithmetic stub bytes for the
+stubbed feature extractor (:func:`extract_features`), since PIL / pyav
+/ torchaudio are not available.
 """
 
 from __future__ import annotations
 
+import hashlib
+import io
+import re
+import struct
+import wave
+import zlib
+from functools import partial
 from typing import Callable, Iterator
 
 import numpy as np
@@ -27,206 +58,258 @@ MEDIA_SCHEMA = T.StructType([
 ])
 
 
-def synthetic_media(spark: SparkSession, n: int, seed: int = 42,
-                    partitions: int = 8) -> DataFrame:
-    """Deterministic fake media table. Payload bytes follow a closed
-    arithmetic form — ``byte[k] = (id*131 + k*17 + seed) % 256`` over a
-    length of ``256 + (id*37) % 256`` — so an independent engine
-    (the DuckDB oracle) can reproduce the exact bytes/feature sums and
-    strict-equality-gate the whole mapInPandas pipeline, which an RNG
-    payload cannot. The plumbing (binary column built per Arrow batch,
-    nullable typed metadata) is unchanged from a real media table."""
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["id"].to_numpy()
-            rows = []
-            for i in ids:
-                i = int(i)
-                kind = ["image", "audio", "video"][i % 3]
-                length = 256 + (i * 37) % 256
-                payload = bytes(((i * 131 + np.arange(length) * 17 + seed)
-                                 % 256).astype(np.uint8))
-                rows.append({
-                    "media_id": i,
-                    "kind": kind,
-                    "payload": payload,
-                    "mime": {"image": "image/png", "audio": "audio/wav",
-                             "video": "video/mp4"}[kind],
-                    "width": 64 + (i * 13) % 1856 if kind != "audio" else None,
-                    "height": 64 + (i * 11) % 1016 if kind != "audio" else None,
-                    "duration_ms": (500 + (i * 197) % 59500
-                                    if kind != "image" else None),
-                })
-            yield pd.DataFrame(rows)
-
-    return spark.range(0, n, 1, partitions).mapInPandas(gen, MEDIA_SCHEMA)
-
-
-def synthetic_wav_media(spark: SparkSession, n: int, seed: int = 42,
-                        sample_rate: int = 8000,
-                        partitions: int = 8) -> DataFrame:
-    """REAL RIFF/WAVE payloads (PCM16 mono), built with the stdlib
-    ``wave`` writer — unlike :func:`synthetic_media` these are genuine
-    decodable media bytes, no decode library required. Samples follow a
-    closed arithmetic form so an independent engine can reproduce the
-    decoded amplitude stats exactly:
-
-        n_samples(i) = 64 + (i * 31) % 192
-        sample(i, k) = ((i * 7919 + k * 104729 + seed) % 65536) - 32768
-    """
-    import io
-    import wave
-
+def _media_table(spark: SparkSession, n: int, partitions: int,
+                 encode: Callable[[int], dict]) -> DataFrame:
+    """Media ids ``0..n-1`` over ``partitions`` range partitions, with
+    the fields of row ``i`` from ``encode(i)``; fields it omits are
+    null."""
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
             for i in pdf["id"].to_numpy():
-                i = int(i)
-                ns = 64 + (i * 31) % 192
-                k = np.arange(ns, dtype=np.int64)
-                samples = ((i * 7919 + k * 104729 + seed) % 65536
-                           - 32768).astype("<i2")
-                buf = io.BytesIO()
-                with wave.open(buf, "wb") as w:
-                    w.setnchannels(1)
-                    w.setsampwidth(2)
-                    w.setframerate(sample_rate)
-                    w.writeframes(samples.tobytes())
-                rows.append({"media_id": i, "kind": "audio",
-                             "payload": buf.getvalue(),
-                             "mime": "audio/wav", "width": None,
-                             "height": None,
-                             "duration_ms": ns * 1000 // sample_rate})
+                row = dict.fromkeys(MEDIA_SCHEMA.names)
+                row.update(media_id=int(i), **encode(int(i)))
+                rows.append(row)
             yield pd.DataFrame(rows)
 
     return spark.range(0, n, 1, partitions).mapInPandas(gen, MEDIA_SCHEMA)
 
 
-def wav_amplitude_stats(df: DataFrame) -> DataFrame:
-    """REAL decode of WAV payloads (stdlib ``wave`` — no external
-    decode libs) to integer amplitude statistics, one mapInPandas pass:
-    ``(media_id, n_samples, sample_rate, sum_abs, max_abs, sum_sq)``.
-    Integer outputs on purpose: they strict-gate against a DuckDB
-    oracle that re-derives the samples arithmetically — a float RMS
-    would only bound-gate."""
-    import io
-    import wave
-
+def decode_stats(df: DataFrame, decode: Callable[[bytes], object],
+                 stats: Callable[[object], dict]) -> DataFrame:
+    """One mapInPandas pass over a media table: ``(media_id, *stats)``
+    with ``stats(decode(payload))`` per row. ``stats.schema`` is the
+    DDL of the columns ``stats`` returns, in order."""
     def per_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                with wave.open(io.BytesIO(bytes(payload))) as w:
-                    if w.getsampwidth() != 2 or w.getnchannels() != 1:
-                        raise NotImplementedError(
-                            "only PCM16 mono decoded here")
-                    sr = w.getframerate()
-                    raw = w.readframes(w.getnframes())
-                s = np.frombuffer(raw, dtype="<i2").astype(np.int64)
-                a = np.abs(s)
-                out.append({"media_id": int(mid),
-                            "n_samples": int(s.size),
-                            "sample_rate": int(sr),
-                            "sum_abs": int(a.sum()),
-                            "max_abs": int(a.max()) if s.size else 0,
-                            "sum_sq": int((s * s).sum())})
-            yield pd.DataFrame(out)
+            yield pd.DataFrame([
+                {"media_id": int(mid), **stats(decode(bytes(payload)))}
+                for mid, payload in zip(pdf["media_id"], pdf["payload"])])
 
-    return df.mapInPandas(
-        per_batch,
-        schema="media_id long, n_samples long, sample_rate long, "
-               "sum_abs long, max_abs long, sum_sq long")
+    return df.mapInPandas(per_batch, schema="media_id long, " + stats.schema)
 
 
-def synthetic_bmp_media(spark: SparkSession, n: int, seed: int = 42,
-                        partitions: int = 8) -> DataFrame:
-    """REAL BMP payloads (uncompressed BITMAPINFOHEADER, 24-bit BGR,
-    bottom-up, 4-byte-aligned rows) built with stdlib struct + numpy —
-    genuine decodable image bytes, no imaging library required. Pixels
-    follow a closed arithmetic form so an independent engine can
-    reproduce the decoded channel sums exactly:
+# ----------------------------------------------------------------- stats
+
+def _amplitude_stats(decoded: tuple[int, np.ndarray]) -> dict:
+    sr, s = decoded
+    a = np.abs(s)
+    return {"n_samples": int(s.size), "sample_rate": int(sr),
+            "sum_abs": int(a.sum()), "max_abs": int(a.max()) if s.size else 0,
+            "sum_sq": int((s * s).sum())}
+
+
+_amplitude_stats.schema = ("n_samples long, sample_rate long, "
+                           "sum_abs long, max_abs long, sum_sq long")
+
+
+def _luma(rgb: np.ndarray) -> np.ndarray:
+    """Integer luma proxy 30R + 59G + 11B (Rec.601 x100)."""
+    return 30 * rgb[..., 0] + 59 * rgb[..., 1] + 11 * rgb[..., 2]
+
+
+def _rgb_stats(rgb: np.ndarray) -> dict:
+    h, w, _ = rgb.shape
+    return {"width": w, "height": h, "sum_r": int(rgb[..., 0].sum()),
+            "sum_g": int(rgb[..., 1].sum()), "sum_b": int(rgb[..., 2].sum()),
+            "max_luma_x100": int(_luma(rgb).max())}
+
+
+_rgb_stats.schema = ("width long, height long, sum_r long, sum_g long, "
+                     "sum_b long, max_luma_x100 long")
+
+
+def _rgb_ypos_stats(rgb: np.ndarray) -> dict:
+    """RGB stats plus the row-position-weighted luma: channel sums and
+    maxima are invariant under row permutation, so only ``ypos_luma``
+    puts a decoder's row order (GIF deinterlacing) inside the gate."""
+    ypos = (_luma(rgb).sum(axis=1) * np.arange(rgb.shape[0])).sum()
+    return {**_rgb_stats(rgb), "ypos_luma": int(ypos)}
+
+
+_rgb_ypos_stats.schema = _rgb_stats.schema + ", ypos_luma long"
+
+
+def _gray_stats(img: np.ndarray) -> dict:
+    h, w = img.shape
+    return {"width": w, "height": h, "sum_v": int(img.sum()),
+            "max_v": int(img.max()),
+            "ypos_v": int((img.sum(axis=1) * np.arange(h)).sum())}
+
+
+_gray_stats.schema = ("width long, height long, sum_v long, max_v long, "
+                      "ypos_v long")
+
+
+# ------------------------------------------------------- bits and CRCs
+
+class _MsbWriter:
+    """MSB-first bit packer (JPEG entropy segments, FLAC frames)."""
+    __slots__ = ("buf", "acc", "nbits")
+
+    def __init__(self):
+        self.buf = bytearray()
+        self.acc = 0
+        self.nbits = 0
+
+    def put(self, val: int, n: int) -> None:
+        self.acc = (self.acc << n) | (val & ((1 << n) - 1))
+        self.nbits += n
+        while self.nbits >= 8:
+            self.buf.append((self.acc >> (self.nbits - 8)) & 0xFF)
+            self.nbits -= 8
+
+    def align(self) -> None:
+        self.put(0, -self.nbits % 8)
+
+    def bytes(self) -> bytes:
+        return bytes(self.buf)
+
+
+class _MsbReader:
+    """MSB-first bit reader over ``data`` from bit ``bitpos``."""
+    __slots__ = ("data", "bitpos")
+
+    def __init__(self, data: bytes, bitpos: int = 0):
+        self.data = data
+        self.bitpos = bitpos
+
+    def bits(self, n: int) -> int:
+        end = self.bitpos + n
+        if end > 8 * len(self.data):
+            raise ValueError("truncated bitstream")
+        lo, hi = self.bitpos >> 3, (end + 7) >> 3
+        v = int.from_bytes(self.data[lo:hi], "big") >> (8 * hi - end)
+        self.bitpos = end
+        return v & ((1 << n) - 1)
+
+    def unary(self) -> int:
+        """FLAC unary: count 0 bits up to the terminating 1."""
+        q = 0
+        while True:
+            if self.bits(1):
+                return q
+            q += 1
+            if q > 1 << 20:
+                raise ValueError("runaway unary code")
+
+    def align(self) -> None:
+        self.bitpos = (self.bitpos + 7) & ~7
+
+
+def _crc(data: bytes, poly: int, width: int) -> int:
+    """MSB-first CRC, zero init, no final xor (FLAC's CRC-8 with poly
+    0x07 and CRC-16 with poly 0x8005)."""
+    top, mask = 1 << (width - 1), (1 << width) - 1
+    crc = 0
+    for b in data:
+        crc ^= b << (width - 8)
+        for _ in range(8):
+            crc = ((crc << 1) ^ poly if crc & top else crc << 1) & mask
+    return crc
+
+
+# ------------------------------------------------------------------ stub
+
+def _stub_encode(i: int, seed: int) -> dict:
+    """Stub media for :func:`extract_features`: kind cycles
+    image/audio/video and ``byte[k] = (id*131 + k*17 + seed) % 256``
+    over ``256 + (id*37) % 256`` bytes, so the oracle reproduces the
+    exact bytes and feature sums of the mapInPandas pipeline."""
+    kind = ["image", "audio", "video"][i % 3]
+    length = 256 + (i * 37) % 256
+    payload = bytes(((i * 131 + np.arange(length) * 17 + seed)
+                     % 256).astype(np.uint8))
+    return {"kind": kind, "payload": payload,
+            "mime": {"image": "image/png", "audio": "audio/wav",
+                     "video": "video/mp4"}[kind],
+            "width": 64 + (i * 13) % 1856 if kind != "audio" else None,
+            "height": 64 + (i * 11) % 1016 if kind != "audio" else None,
+            "duration_ms": (500 + (i * 197) % 59500
+                            if kind != "image" else None)}
+
+
+# ------------------------------------------------------------------- WAV
+
+def _wav_encode(i: int, seed: int, sample_rate: int) -> dict:
+    """RIFF/WAVE PCM16 mono through the stdlib ``wave`` writer:
+
+        n_samples(i) = 64 + (i * 31) % 192
+        sample(i, k) = ((i * 7919 + k * 104729 + seed) % 65536) - 32768
+
+    The decoder reads the frames back with ``wave``; other sample
+    widths and channel counts raise."""
+    ns = 64 + (i * 31) % 192
+    k = np.arange(ns, dtype=np.int64)
+    samples = ((i * 7919 + k * 104729 + seed) % 65536
+               - 32768).astype("<i2")
+    buf = io.BytesIO()
+    with wave.open(buf, "wb") as w:
+        w.setnchannels(1)
+        w.setsampwidth(2)
+        w.setframerate(sample_rate)
+        w.writeframes(samples.tobytes())
+    return {"kind": "audio", "payload": buf.getvalue(), "mime": "audio/wav",
+            "duration_ms": ns * 1000 // sample_rate}
+
+
+def _wav_decode(raw: bytes) -> tuple[int, np.ndarray]:
+    with wave.open(io.BytesIO(raw)) as w:
+        if w.getsampwidth() != 2 or w.getnchannels() != 1:
+            raise NotImplementedError("only PCM16 mono decoded here")
+        sr = w.getframerate()
+        pcm = w.readframes(w.getnframes())
+    return sr, np.frombuffer(pcm, dtype="<i2").astype(np.int64)
+
+
+# ------------------------------------------------------------------- BMP
+
+def _bmp_encode(i: int, seed: int) -> dict:
+    """Uncompressed BITMAPINFOHEADER BMP, 24-bit BGR, bottom-up,
+    4-byte-aligned rows:
 
         w(i) = 4 + (i * 3) % 29          (odd widths exercise padding)
         h(i) = 2 + (i * 5) % 17
         channel c of pixel (x, y) of image i =
             (i * 31 + y * 7 + x * 13 + c * 101 + seed) % 256
-    """
-    import struct as _struct
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"].to_numpy():
-                i = int(i)
-                w = 4 + (i * 3) % 29
-                h = 2 + (i * 5) % 17
-                y, x, c = np.meshgrid(np.arange(h), np.arange(w),
-                                      np.arange(3), indexing="ij")
-                # pixel array is RGB by c; BMP stores BGR => reverse c
-                px = ((i * 31 + y * 7 + x * 13 + c * 101 + seed)
-                      % 256).astype(np.uint8)
-                bgr = px[:, :, ::-1]
-                stride = (w * 3 + 3) & ~3
-                rowbytes = np.zeros((h, stride), dtype=np.uint8)
-                rowbytes[:, :w * 3] = bgr.reshape(h, w * 3)
-                # bottom-up scanline order
-                data = rowbytes[::-1].tobytes()
-                header = _struct.pack(
-                    "<2sIHHI", b"BM", 14 + 40 + len(data), 0, 0, 54)
-                info = _struct.pack(
-                    "<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(data),
-                    2835, 2835, 0, 0)
-                rows.append({"media_id": i, "kind": "image",
-                             "payload": header + info + data,
-                             "mime": "image/bmp", "width": w,
-                             "height": h, "duration_ms": None})
-            yield pd.DataFrame(rows)
-
-    return spark.range(0, n, 1, partitions).mapInPandas(gen, MEDIA_SCHEMA)
+    The decoder handles 24-bit uncompressed BMP only."""
+    w = 4 + (i * 3) % 29
+    h = 2 + (i * 5) % 17
+    y, x, c = np.meshgrid(np.arange(h), np.arange(w),
+                          np.arange(3), indexing="ij")
+    # pixel array is RGB by c; BMP stores BGR => reverse c
+    px = ((i * 31 + y * 7 + x * 13 + c * 101 + seed)
+          % 256).astype(np.uint8)
+    bgr = px[:, :, ::-1]
+    stride = (w * 3 + 3) & ~3
+    rowbytes = np.zeros((h, stride), dtype=np.uint8)
+    rowbytes[:, :w * 3] = bgr.reshape(h, w * 3)
+    # bottom-up scanline order
+    data = rowbytes[::-1].tobytes()
+    header = struct.pack("<2sIHHI", b"BM", 14 + 40 + len(data), 0, 0, 54)
+    info = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(data),
+                       2835, 2835, 0, 0)
+    return {"kind": "image", "payload": header + info + data,
+            "mime": "image/bmp", "width": w, "height": h}
 
 
-def bmp_pixel_stats(df: DataFrame) -> DataFrame:
-    """REAL decode of 24-bit uncompressed BMP payloads (stdlib struct +
-    numpy — no imaging libs) to integer per-channel statistics in one
-    mapInPandas pass: ``(media_id, width, height, sum_r, sum_g, sum_b,
-    max_luma_x100)``. Integer outputs strict-gate against a DuckDB
-    oracle that re-derives every pixel arithmetically."""
-    import struct as _struct
+def _bmp_decode(raw: bytes) -> np.ndarray:
+    if raw[:2] != b"BM":
+        raise ValueError("not a BMP payload")
+    off = struct.unpack_from("<I", raw, 10)[0]
+    _hsz, w, h, _pl, bpp, comp = struct.unpack_from("<IiiHHI", raw, 14)
+    if bpp != 24 or comp != 0:
+        raise NotImplementedError(
+            "only 24-bit uncompressed BMP decoded here")
+    stride = (w * 3 + 3) & ~3
+    arr = np.frombuffer(raw, dtype=np.uint8, offset=off,
+                        count=h * stride).reshape(h, stride)
+    bgr = arr[::-1, :w * 3].reshape(h, w, 3)
+    return bgr[:, :, ::-1].astype(np.int64)
 
-    def per_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                raw = bytes(payload)
-                if raw[:2] != b"BM":
-                    raise ValueError("not a BMP payload")
-                off = _struct.unpack_from("<I", raw, 10)[0]
-                hsz, w, h, _pl, bpp, comp = _struct.unpack_from(
-                    "<IiiHHI", raw, 14)
-                if bpp != 24 or comp != 0:
-                    raise NotImplementedError(
-                        "only 24-bit uncompressed BMP decoded here")
-                stride = (w * 3 + 3) & ~3
-                arr = np.frombuffer(raw, dtype=np.uint8, offset=off,
-                                    count=h * stride).reshape(h, stride)
-                bgr = arr[::-1, :w * 3].reshape(h, w, 3)
-                rgb = bgr[:, :, ::-1].astype(np.int64)
-                # integer luma proxy: 30R + 59G + 11B (x100 Rec.601)
-                luma = (30 * rgb[..., 0] + 59 * rgb[..., 1]
-                        + 11 * rgb[..., 2])
-                out.append({"media_id": int(mid), "width": int(w),
-                            "height": int(h),
-                            "sum_r": int(rgb[..., 0].sum()),
-                            "sum_g": int(rgb[..., 1].sum()),
-                            "sum_b": int(rgb[..., 2].sum()),
-                            "max_luma_x100": int(luma.max())})
-            yield pd.DataFrame(out)
 
-    return df.mapInPandas(
-        per_batch,
-        schema="media_id long, width long, height long, sum_r long, "
-               "sum_g long, sum_b long, max_luma_x100 long")
-
+# ------------------------------------------------------------------- PNG
 
 def _paeth(a: np.ndarray, b: np.ndarray, c: np.ndarray) -> np.ndarray:
     """PNG Paeth predictor (RFC 2083 §6.6), vectorized over channels."""
@@ -236,170 +319,124 @@ def _paeth(a: np.ndarray, b: np.ndarray, c: np.ndarray) -> np.ndarray:
                     np.where(pb <= pc, b, c)).astype(np.int64)
 
 
-def synthetic_png_media(spark: SparkSession, n: int, seed: int = 42,
-                        partitions: int = 8) -> DataFrame:
-    """REAL PNG payloads (8-bit truecolor RGB, zlib-compressed IDAT,
-    CRC-correct chunks) built with stdlib struct + zlib + numpy — the
-    compressed-format sibling of :func:`synthetic_bmp_media` (round-4
-    codec-gap closure: PNG's DEFLATE stream is the one compressed
-    format decodable with the stdlib alone). Scanline filters CYCLE
-    through all five PNG filter types (``filter(i, y) = (i + y) % 5``)
-    so the decoder's unfilter logic — not just the zlib call — is
-    genuinely exercised. Pixels follow a closed arithmetic form so an
-    independent engine reproduces the decoded channel sums exactly:
+def _png_chunk(tag: bytes, data: bytes) -> bytes:
+    return (struct.pack(">I", len(data)) + tag + data
+            + struct.pack(">I", zlib.crc32(tag + data)))
+
+
+def _png_encode(i: int, seed: int) -> dict:
+    """8-bit truecolor PNG: zlib-compressed IDAT, CRC-correct chunks,
+    scanline filters cycling through all five filter types
+    (``filter(i, y) = (i + y) % 5``):
 
         w(i) = 4 + (i * 7) % 29
         h(i) = 2 + (i * 5) % 17
         channel c of pixel (x, y) of image i =
             (i * 29 + y * 11 + x * 19 + c * 73 + seed) % 256
-    """
-    import struct as _struct
-    import zlib as _zlib
 
-    def chunk(tag: bytes, data: bytes) -> bytes:
-        return (_struct.pack(">I", len(data)) + tag + data
-                + _struct.pack(">I", _zlib.crc32(tag + data)))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"].to_numpy():
-                i = int(i)
-                w = 4 + (i * 7) % 29
-                h = 2 + (i * 5) % 17
-                y, x, c = np.meshgrid(np.arange(h), np.arange(w),
-                                      np.arange(3), indexing="ij")
-                px = ((i * 29 + y * 11 + x * 19 + c * 73 + seed)
-                      % 256).astype(np.int64)
-                raw = px.reshape(h, w * 3)
-                prior = np.zeros(w * 3, dtype=np.int64)
-                out = bytearray()
-                for r in range(h):
-                    row = raw[r]
-                    left = np.concatenate([[0, 0, 0], row[:-3]])
-                    ul = np.concatenate([[0, 0, 0], prior[:-3]])
-                    f = (i + r) % 5
-                    if f == 0:
-                        filt = row
-                    elif f == 1:
-                        filt = row - left
-                    elif f == 2:
-                        filt = row - prior
-                    elif f == 3:
-                        filt = row - (left + prior) // 2
-                    else:
-                        filt = row - _paeth(left, prior, ul)
-                    out.append(f)
-                    out.extend((filt % 256).astype(np.uint8).tobytes())
-                    prior = row
-                ihdr = _struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
-                payload = (b"\x89PNG\r\n\x1a\n"
-                           + chunk(b"IHDR", ihdr)
-                           + chunk(b"IDAT", _zlib.compress(bytes(out), 6))
-                           + chunk(b"IEND", b""))
-                rows.append({"media_id": i, "kind": "image",
-                             "payload": payload, "mime": "image/png",
-                             "width": w, "height": h, "duration_ms": None})
-            yield pd.DataFrame(rows)
-
-    return spark.range(0, n, 1, partitions).mapInPandas(gen, MEDIA_SCHEMA)
+    The decoder verifies every chunk CRC, inflates the IDAT stream and
+    unfilters None / Sub / Up / Average / Paeth (RFC 2083 §6), so the
+    zlib round trip and the unfilter math are both inside the gate.
+    Other bit depths, colour types and interlacing raise."""
+    w = 4 + (i * 7) % 29
+    h = 2 + (i * 5) % 17
+    y, x, c = np.meshgrid(np.arange(h), np.arange(w),
+                          np.arange(3), indexing="ij")
+    px = ((i * 29 + y * 11 + x * 19 + c * 73 + seed)
+          % 256).astype(np.int64)
+    raw = px.reshape(h, w * 3)
+    prior = np.zeros(w * 3, dtype=np.int64)
+    out = bytearray()
+    for r in range(h):
+        row = raw[r]
+        left = np.concatenate([[0, 0, 0], row[:-3]])
+        ul = np.concatenate([[0, 0, 0], prior[:-3]])
+        f = (i + r) % 5
+        if f == 0:
+            filt = row
+        elif f == 1:
+            filt = row - left
+        elif f == 2:
+            filt = row - prior
+        elif f == 3:
+            filt = row - (left + prior) // 2
+        else:
+            filt = row - _paeth(left, prior, ul)
+        out.append(f)
+        out.extend((filt % 256).astype(np.uint8).tobytes())
+        prior = row
+    ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
+    payload = (b"\x89PNG\r\n\x1a\n"
+               + _png_chunk(b"IHDR", ihdr)
+               + _png_chunk(b"IDAT", zlib.compress(bytes(out), 6))
+               + _png_chunk(b"IEND", b""))
+    return {"kind": "image", "payload": payload, "mime": "image/png",
+            "width": w, "height": h}
 
 
-def png_pixel_stats(df: DataFrame) -> DataFrame:
-    """REAL decode of 8-bit truecolor PNG payloads — stdlib zlib +
-    struct + numpy, no imaging library: chunk walk with CRC
-    verification, DEFLATE inflate of the IDAT stream, and full
-    scanline UNFILTERING for all five PNG filter types (None / Sub /
-    Up / Average / Paeth, RFC 2083 §6) — in one mapInPandas pass to
-    integer per-channel statistics ``(media_id, width, height, sum_r,
-    sum_g, sum_b, max_luma_x100)``. Integer outputs strict-gate
-    against a DuckDB oracle that re-derives every pixel
-    arithmetically, so the zlib round-trip AND the unfilter math are
-    both inside the gate."""
-    import struct as _struct
-    import zlib as _zlib
+def _png_decode(raw: bytes) -> np.ndarray:
+    if raw[:8] != b"\x89PNG\r\n\x1a\n":
+        raise ValueError("not a PNG payload")
+    pos, w = 8, None
+    idat = bytearray()
+    while pos < len(raw):
+        (ln,) = struct.unpack_from(">I", raw, pos)
+        tag = raw[pos + 4:pos + 8]
+        data = raw[pos + 8:pos + 8 + ln]
+        (crc,) = struct.unpack_from(">I", raw, pos + 8 + ln)
+        if zlib.crc32(tag + data) != crc:
+            raise ValueError(f"bad CRC in {tag!r} chunk")
+        if tag == b"IHDR":
+            w, h, depth, ctype, comp, filt, ilace = struct.unpack(
+                ">IIBBBBB", data)
+            if (depth, ctype, comp, filt, ilace) != (8, 2, 0, 0, 0):
+                raise NotImplementedError(
+                    "only 8-bit truecolor non-interlaced PNG here")
+        elif tag == b"IDAT":
+            idat.extend(data)
+        elif tag == b"IEND":
+            break
+        pos += 12 + ln
+    if w is None:
+        raise ValueError("missing IHDR")
+    flat = np.frombuffer(zlib.decompress(bytes(idat)),
+                         dtype=np.uint8).astype(np.int64)
+    stride = w * 3
+    if flat.size != h * (stride + 1):
+        raise ValueError("IDAT size mismatch")
+    lines = flat.reshape(h, stride + 1)
+    out = np.zeros((h, stride), dtype=np.int64)
+    prior = np.zeros(stride, dtype=np.int64)
+    for r in range(h):
+        f, filt = int(lines[r, 0]), lines[r, 1:]
+        if f == 0:
+            row = filt.copy()
+        elif f == 2:
+            row = (filt + prior) % 256
+        else:
+            # Sub/Average/Paeth depend on the decoded left pixel:
+            # sequential over pixels, vectorized over channels
+            row = np.zeros(stride, dtype=np.int64)
+            for k in range(0, stride, 3):
+                a = row[k - 3:k] if k else np.zeros(3, dtype=np.int64)
+                b = prior[k:k + 3]
+                c = (prior[k - 3:k] if k
+                     else np.zeros(3, dtype=np.int64))
+                if f == 1:
+                    pred = a
+                elif f == 3:
+                    pred = (a + b) // 2
+                elif f == 4:
+                    pred = _paeth(a, b, c)
+                else:
+                    raise ValueError(f"bad filter type {f}")
+                row[k:k + 3] = (filt[k:k + 3] + pred) % 256
+        out[r] = row
+        prior = row
+    return out.reshape(h, w, 3)
 
-    def decode(raw: bytes) -> tuple[int, int, np.ndarray]:
-        if raw[:8] != b"\x89PNG\r\n\x1a\n":
-            raise ValueError("not a PNG payload")
-        pos, w = 8, None
-        idat = bytearray()
-        while pos < len(raw):
-            (ln,) = _struct.unpack_from(">I", raw, pos)
-            tag = raw[pos + 4:pos + 8]
-            data = raw[pos + 8:pos + 8 + ln]
-            (crc,) = _struct.unpack_from(">I", raw, pos + 8 + ln)
-            if _zlib.crc32(tag + data) != crc:
-                raise ValueError(f"bad CRC in {tag!r} chunk")
-            if tag == b"IHDR":
-                w, h, depth, ctype, comp, filt, ilace = _struct.unpack(
-                    ">IIBBBBB", data)
-                if (depth, ctype, comp, filt, ilace) != (8, 2, 0, 0, 0):
-                    raise NotImplementedError(
-                        "only 8-bit truecolor non-interlaced PNG here")
-            elif tag == b"IDAT":
-                idat.extend(data)
-            elif tag == b"IEND":
-                break
-            pos += 12 + ln
-        if w is None:
-            raise ValueError("missing IHDR")
-        flat = np.frombuffer(_zlib.decompress(bytes(idat)),
-                             dtype=np.uint8).astype(np.int64)
-        stride = w * 3
-        if flat.size != h * (stride + 1):
-            raise ValueError("IDAT size mismatch")
-        lines = flat.reshape(h, stride + 1)
-        out = np.zeros((h, stride), dtype=np.int64)
-        prior = np.zeros(stride, dtype=np.int64)
-        for r in range(h):
-            f, filt = int(lines[r, 0]), lines[r, 1:]
-            if f == 0:
-                row = filt.copy()
-            elif f == 2:
-                row = (filt + prior) % 256
-            else:
-                # Sub/Average/Paeth depend on the decoded left pixel:
-                # sequential over pixels, vectorized over channels
-                row = np.zeros(stride, dtype=np.int64)
-                for k in range(0, stride, 3):
-                    a = row[k - 3:k] if k else np.zeros(3, dtype=np.int64)
-                    b = prior[k:k + 3]
-                    c = (prior[k - 3:k] if k
-                         else np.zeros(3, dtype=np.int64))
-                    if f == 1:
-                        pred = a
-                    elif f == 3:
-                        pred = (a + b) // 2
-                    elif f == 4:
-                        pred = _paeth(a, b, c)
-                    else:
-                        raise ValueError(f"bad filter type {f}")
-                    row[k:k + 3] = (filt[k:k + 3] + pred) % 256
-            out[r] = row
-            prior = row
-        return w, h, out.reshape(h, w, 3)
 
-    def per_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                w, h, rgb = decode(bytes(payload))
-                luma = (30 * rgb[..., 0] + 59 * rgb[..., 1]
-                        + 11 * rgb[..., 2])
-                out.append({"media_id": int(mid), "width": int(w),
-                            "height": int(h),
-                            "sum_r": int(rgb[..., 0].sum()),
-                            "sum_g": int(rgb[..., 1].sum()),
-                            "sum_b": int(rgb[..., 2].sum()),
-                            "max_luma_x100": int(luma.max())})
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(
-        per_batch,
-        schema="media_id long, width long, height long, sum_r long, "
-               "sum_g long, sum_b long, max_luma_x100 long")
-
+# ------------------------------------------------------------------- GIF
 
 def _lzw_encode(indices: np.ndarray, min_code_size: int) -> bytes:
     """GIF-variant LZW compression (GIF89a spec appendix F): dictionary
@@ -519,242 +556,104 @@ def _gif_palette() -> np.ndarray:
                     axis=1).astype(np.uint8)
 
 
-def synthetic_gif_media(spark: SparkSession, n: int, seed: int = 42,
-                        partitions: int = 8,
-                        interlace_every: int | None = 3) -> DataFrame:
-    """REAL GIF87a payloads — hand-rolled GIF-variant LZW compression
-    (dictionary growth to 12-bit codes, CLEAR-code table resets,
-    LSB-first packing, 255-byte sub-block framing) over an 8-bit
-    global color table, stdlib + numpy only (round-4 second
-    compressed codec after PNG; GIF's LZW needs no external lib).
-    Pixel INDICES follow a closed arithmetic form so an independent
-    engine reproduces the decoded RGB sums exactly through the same
-    arithmetic palette:
+def _gif_encode(i: int, seed: int, interlace_every: int | None) -> dict:
+    """GIF87a with hand-rolled GIF-variant LZW (dictionary growth to
+    12-bit codes, CLEAR resets, LSB-first packing, 255-byte sub-blocks)
+    over the arithmetic 8-bit global colour table:
 
         w(i) = 6 + (i * 5) % 27
         h(i) = 3 + (i * 7) % 13
         index of pixel (x, y) of image i =
             (i * 17 + y * 23 + x * 29 + seed) % 256
 
-    Every ``interlace_every``-th image (i % interlace_every == 0;
-    None disables) is stored INTERLACED — rows written in the GIF
-    4-pass schedule with the descriptor interlace flag set — so the
-    strict oracle gate covers the deinterlace path on real fixtures
-    (round-5; interlacing permutes row storage only, pixel content
-    and therefore the arithmetic oracle are unchanged).
-    """
-    import struct as _struct
-
-    pal = _gif_palette().tobytes()
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"].to_numpy():
-                i = int(i)
-                w = 6 + (i * 5) % 27
-                h = 3 + (i * 7) % 13
-                y, x = np.meshgrid(np.arange(h), np.arange(w),
-                                   indexing="ij")
-                idx2d = ((i * 17 + y * 23 + x * 29 + seed)
-                         % 256).astype(np.uint8)
-                interlaced = bool(interlace_every
-                                  and i % interlace_every == 0)
-                if interlaced:
-                    idx2d = idx2d[_gif_interlace_order(h)]
-                idx = idx2d.reshape(-1)
-                lzw = _lzw_encode(idx, 8)
-                blocks = bytearray()
-                for off in range(0, len(lzw), 255):
-                    chunk = lzw[off:off + 255]
-                    blocks.append(len(chunk))
-                    blocks.extend(chunk)
-                blocks.append(0)  # block terminator
-                payload = (b"GIF87a"
-                           + _struct.pack("<HHBBB", w, h,
-                                          0xF7, 0, 0)  # GCT, 256 colors
-                           + pal
-                           + b"\x2C" + _struct.pack(
-                               "<HHHHB", 0, 0, w, h,
-                               0x40 if interlaced else 0)
-                           + bytes([8])  # LZW min code size
-                           + bytes(blocks)
-                           + b"\x3B")
-                rows.append({"media_id": i, "kind": "image",
-                             "payload": payload, "mime": "image/gif",
-                             "width": w, "height": h,
-                             "duration_ms": None})
-            yield pd.DataFrame(rows)
-
-    return spark.range(0, n, 1, partitions).mapInPandas(gen, MEDIA_SCHEMA)
+    Every ``interlace_every``-th image (``i % interlace_every == 0``;
+    None disables) is stored interlaced, so the gate covers the
+    deinterlace path through ``ypos_luma``. The decoder parses header
+    and descriptor, reassembles sub-blocks, decompresses LZW (growing
+    widths, CLEAR, KwKwK), deinterlaces and maps the palette; GIF89a
+    extensions are skipped, so stats are over stored palette colours
+    (transparency is a rendering concern, not a storage one)."""
+    w = 6 + (i * 5) % 27
+    h = 3 + (i * 7) % 13
+    y, x = np.meshgrid(np.arange(h), np.arange(w), indexing="ij")
+    idx2d = ((i * 17 + y * 23 + x * 29 + seed) % 256).astype(np.uint8)
+    interlaced = bool(interlace_every and i % interlace_every == 0)
+    if interlaced:
+        idx2d = idx2d[_gif_interlace_order(h)]
+    lzw = _lzw_encode(idx2d.reshape(-1), 8)
+    blocks = bytearray()
+    for off in range(0, len(lzw), 255):
+        chunk = lzw[off:off + 255]
+        blocks.append(len(chunk))
+        blocks.extend(chunk)
+    blocks.append(0)  # block terminator
+    payload = (b"GIF87a"
+               + struct.pack("<HHBBB", w, h, 0xF7, 0, 0)  # GCT, 256 colors
+               + _gif_palette().tobytes()
+               + b"\x2C" + struct.pack("<HHHHB", 0, 0, w, h,
+                                       0x40 if interlaced else 0)
+               + bytes([8])  # LZW min code size
+               + bytes(blocks)
+               + b"\x3B")
+    return {"kind": "image", "payload": payload, "mime": "image/gif",
+            "width": w, "height": h}
 
 
-def gif_pixel_stats(df: DataFrame) -> DataFrame:
-    """REAL decode of GIF87a payloads — header/descriptor parse,
-    sub-block reassembly, full GIF-LZW decompression (growing code
-    widths, CLEAR resets, KwKwK), 4-pass DEINTERLACING (round 5),
-    palette mapping — stdlib + numpy only, one mapInPandas pass to
-    integer per-channel statistics. Strict-gated against a DuckDB
-    oracle that re-derives every pixel index and palette entry
-    arithmetically, so the LZW round-trip is inside the gate; the
-    row-position-weighted ``ypos_luma`` column is what gates the
-    deinterlace path (channel sums are permutation-invariant).
-    GIF89a extensions (incl. the transparency GCE) are parsed and
-    skipped: stats are over stored palette colors — transparency is a
-    rendering concern, not a storage one."""
-    import struct as _struct
-
-    def decode(raw: bytes) -> tuple[int, int, np.ndarray]:
-        if raw[:6] not in (b"GIF87a", b"GIF89a"):
-            raise ValueError("not a GIF payload")
-        w, h, flags, _bg, _ar = _struct.unpack_from("<HHBBB", raw, 6)
-        pos = 13
-        gct = None
-        if flags & 0x80:
-            ncol = 2 << (flags & 7)
-            gct = np.frombuffer(raw, dtype=np.uint8, offset=pos,
+def _gif_decode(raw: bytes) -> np.ndarray:
+    if raw[:6] not in (b"GIF87a", b"GIF89a"):
+        raise ValueError("not a GIF payload")
+    _w, _h, flags, _bg, _ar = struct.unpack_from("<HHBBB", raw, 6)
+    pos = 13
+    gct = None
+    if flags & 0x80:
+        ncol = 2 << (flags & 7)
+        gct = np.frombuffer(raw, dtype=np.uint8, offset=pos,
+                            count=ncol * 3).reshape(ncol, 3)
+        pos += ncol * 3
+    while pos < len(raw):
+        b0 = raw[pos]
+        if b0 == 0x3B:
+            break
+        if b0 == 0x21:            # extension: skip sub-blocks
+            pos += 2
+            while raw[pos]:
+                pos += 1 + raw[pos]
+            pos += 1
+            continue
+        if b0 != 0x2C:
+            raise ValueError(f"unexpected GIF block 0x{b0:02x}")
+        _l, _t, iw, ih, iflags = struct.unpack_from("<HHHHB", raw, pos + 1)
+        pos += 10
+        pal = gct
+        if iflags & 0x80:
+            ncol = 2 << (iflags & 7)
+            pal = np.frombuffer(raw, dtype=np.uint8, offset=pos,
                                 count=ncol * 3).reshape(ncol, 3)
             pos += ncol * 3
-        while pos < len(raw):
-            b0 = raw[pos]
-            if b0 == 0x3B:
-                break
-            if b0 == 0x21:            # extension: skip sub-blocks
-                pos += 2
-                while raw[pos]:
-                    pos += 1 + raw[pos]
-                pos += 1
-                continue
-            if b0 != 0x2C:
-                raise ValueError(f"unexpected GIF block 0x{b0:02x}")
-            _l, _t, iw, ih, iflags = _struct.unpack_from("<HHHHB",
-                                                         raw, pos + 1)
-            pos += 10
-            pal = gct
-            if iflags & 0x80:
-                ncol = 2 << (iflags & 7)
-                pal = np.frombuffer(raw, dtype=np.uint8, offset=pos,
-                                    count=ncol * 3).reshape(ncol, 3)
-                pos += ncol * 3
-            mcs = raw[pos]
-            pos += 1
-            lzw = bytearray()
-            while raw[pos]:
-                ln = raw[pos]
-                lzw.extend(raw[pos + 1:pos + 1 + ln])
-                pos += 1 + ln
-            pos += 1
-            idx = _lzw_decode(bytes(lzw), mcs)
-            if idx.size != iw * ih:
-                raise ValueError("LZW output size mismatch")
-            if pal is None:
-                raise ValueError("no color table")
-            idx2d = idx.reshape(ih, iw)
-            if iflags & 0x40:
-                # deinterlace: stored row k is image row order[k]
-                out = np.empty_like(idx2d)
-                out[_gif_interlace_order(ih)] = idx2d
-                idx2d = out
-            rgb = pal[idx2d].astype(np.int64)
-            return iw, ih, rgb
-        raise ValueError("no image descriptor in GIF")
-
-    def per_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                w, h, rgb = decode(bytes(payload))
-                luma = (30 * rgb[..., 0] + 59 * rgb[..., 1]
-                        + 11 * rgb[..., 2])
-                # row-position-weighted luma: channel sums and maxima
-                # are invariant under row permutation, so only THIS
-                # statistic puts the deinterlace path inside the
-                # strict gate (a wrong row order changes it)
-                ypos = int((luma.sum(axis=1)
-                            * np.arange(h, dtype=np.int64)).sum())
-                out.append({"media_id": int(mid), "width": int(w),
-                            "height": int(h),
-                            "sum_r": int(rgb[..., 0].sum()),
-                            "sum_g": int(rgb[..., 1].sum()),
-                            "sum_b": int(rgb[..., 2].sum()),
-                            "max_luma_x100": int(luma.max()),
-                            "ypos_luma": ypos})
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(
-        per_batch,
-        schema="media_id long, width long, height long, sum_r long, "
-               "sum_g long, sum_b long, max_luma_x100 long, "
-               "ypos_luma long")
-
-
-def fake_decode_features(payload: bytes, dim: int = 16) -> np.ndarray:
-    """STUB decoder: deterministic pseudo-features — feature j is the
-    sum of payload bytes at positions ``k ≡ j (mod dim)`` (a strided
-    byte histogram; every value is an integer exactly representable in
-    float32). A real deployment replaces this with actual decode +
-    model inference; the Spark plumbing (Arrow batches in, fixed-dim
-    float vectors out) is identical.
-    """
-    raw = np.frombuffer(payload, dtype=np.uint8).astype(np.int64)
-    out = np.zeros(dim, dtype=np.int64)
-    np.add.at(out, np.arange(raw.size) % dim, raw)
-    return out.astype(np.float32)
-
-
-def _unsupported_decode(payload: bytes, dim: int = 16) -> np.ndarray:
-    raise NotImplementedError(
-        "real media decoding requires PIL/pyav/torchaudio — not present "
-        "in this environment; pass decoder=fake_decode_features or a "
-        "real decoder")
-
-
-def extract_features(df: DataFrame, dim: int = 16,
-                     decoder: Callable[[bytes, int], np.ndarray]
-                     = fake_decode_features) -> DataFrame:
-    """(media_id, kind, feature array<float>) via mapInPandas — one
-    Arrow batch per call, features vectorized per batch."""
-
-    def per_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [decoder(bytes(p), dim).tolist()
-                     for p in pdf["payload"]]
-            yield pd.DataFrame({"media_id": pdf["media_id"],
-                                "kind": pdf["kind"],
-                                "feature": feats})
-
-    return df.mapInPandas(
-        per_batch, schema="media_id long, kind string, feature array<float>")
-
-
-def frame_sample_plan(df: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame-sampling *plan*: one row per frame to decode
-    (media_id, frame_idx, ts_ms). The decode itself is the stubbed
-    step; the explode is the real distributed work distribution."""
-    vids = df.filter(F.col("kind") == "video")
-    return vids.select(
-        "media_id",
-        F.posexplode(F.sequence(
-            F.lit(0), (F.col("duration_ms") / every_ms).cast("int")))
-        .alias("frame_idx", "ts_s"),
-    ).select("media_id", "frame_idx",
-             (F.col("frame_idx") * every_ms).alias("ts_ms"))
+        mcs = raw[pos]
+        pos += 1
+        lzw = bytearray()
+        while raw[pos]:
+            ln = raw[pos]
+            lzw.extend(raw[pos + 1:pos + 1 + ln])
+            pos += 1 + ln
+        pos += 1
+        idx = _lzw_decode(bytes(lzw), mcs)
+        if idx.size != iw * ih:
+            raise ValueError("LZW output size mismatch")
+        if pal is None:
+            raise ValueError("no color table")
+        idx2d = idx.reshape(ih, iw)
+        if iflags & 0x40:
+            # deinterlace: stored row k is image row order[k]
+            out = np.empty_like(idx2d)
+            out[_gif_interlace_order(ih)] = idx2d
+            idx2d = out
+        return pal[idx2d].astype(np.int64)
+    raise ValueError("no image descriptor in GIF")
 
 
 # ------------------------------------------------------------------ JPEG
-# Round 5: the third REAL compressed codec (after PNG's DEFLATE and
-# GIF's LZW) — baseline JFIF grayscale, stdlib + numpy only. The
-# decoder is a genuine baseline decoder (marker walk, DHT canonical
-# Huffman, DC prediction, zigzag + dequant, full 2D float64 IDCT,
-# level shift, edge crop); the synthetic generator emits DC-ONLY
-# images (every 8x8 block constant, quantizer 8 so DCq == the level-
-# shifted value exactly), for which the whole lossy pipeline is
-# EXACTLY integral — that puts Huffman + dequant + IDCT inside a
-# strict integer DuckDB oracle, the same exact-regime pattern as the
-# PNG/GIF gates. The AC run-length path (RRRRSSSS, ZRL, EOB) is
-# exercised by tests/test_multimodal_jpeg.py against an independent
-# dequant+IDCT reference. Restart markers / progressive SOF2 /
-# chroma subsampling are out of scope and raise.
 
 _JPEG_ZIGZAG = np.array([
     0, 1, 8, 16, 9, 2, 3, 10, 17, 24, 32, 25, 18, 11, 4, 5,
@@ -772,6 +671,11 @@ _JPEG_AC_VALS = ([0x00, 0xF0]
                  + [(r << 4) | s for r in range(16) for s in range(1, 11)])
 _JPEG_AC_BITS = [0] * 7 + [len(_JPEG_AC_VALS)] + [0] * 8
 
+# IDCT basis: row u, column x = C(u)/2 * cos((2x + 1) u pi / 16)
+_IDCT_M = 0.5 * np.cos((2 * np.arange(8).reshape(1, 8) + 1)
+                       * np.arange(8).reshape(8, 1) * np.pi / 16)
+_IDCT_M[0] /= np.sqrt(2.0)
+
 
 def _jpeg_canon_codes(bits, vals):
     """Canonical Huffman assignment (JPEG F.2.2.3): {val: (code, len)}."""
@@ -783,30 +687,6 @@ def _jpeg_canon_codes(bits, vals):
             k += 1
         code <<= 1
     return out
-
-
-class _BitWriter:
-    __slots__ = ("buf", "acc", "nbits")
-
-    def __init__(self):
-        self.buf = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def put(self, code: int, n: int) -> None:
-        self.acc = (self.acc << n) | (code & ((1 << n) - 1))
-        self.nbits += n
-        while self.nbits >= 8:
-            b = (self.acc >> (self.nbits - 8)) & 0xFF
-            self.buf.append(b)
-            if b == 0xFF:          # byte stuffing
-                self.buf.append(0x00)
-            self.nbits -= 8
-
-    def done(self) -> bytes:
-        if self.nbits:             # pad with 1s per spec
-            self.put(0xFF, 8 - self.nbits)
-        return bytes(self.buf)
 
 
 def _jpeg_magnitude(v: int) -> tuple[int, int]:
@@ -821,11 +701,9 @@ def _jpeg_encode_gray(coef_blocks: np.ndarray, qtab: np.ndarray,
     coefficient blocks (n_blocks, 64) in zigzag order (raster block
     order, ceil(w/8)*ceil(h/8) blocks). General entropy coder: DC
     delta + category bits, AC run-length with ZRL and EOB."""
-    import struct as _struct
-
     dc_codes = _jpeg_canon_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
     ac_codes = _jpeg_canon_codes(_JPEG_AC_BITS, _JPEG_AC_VALS)
-    bw = _BitWriter()
+    bw = _MsbWriter()
     pred = 0
     for blk in coef_blocks:
         diff = int(blk[0]) - pred
@@ -855,97 +733,55 @@ def _jpeg_encode_gray(coef_blocks: np.ndarray, qtab: np.ndarray,
         if last < 63:
             c, ln = ac_codes[0x00]
             bw.put(c, ln)
+    bw.put(0xFF, -bw.nbits % 8)    # pad with 1s per spec
+    scan = bw.bytes().replace(b"\xFF", b"\xFF\x00")   # byte stuffing
 
     def seg(marker: int, payload: bytes) -> bytes:
-        return bytes([0xFF, marker]) + _struct.pack(
+        return bytes([0xFF, marker]) + struct.pack(
             ">H", len(payload) + 2) + payload
 
     # DQT stores the table in zigzag order
     dqt = seg(0xDB, bytes([0]) + bytes(
         int(qtab.reshape(-1)[_JPEG_ZIGZAG[k]]) for k in range(64)))
-    sof = seg(0xC0, _struct.pack(">BHHB", 8, h, w, 1)
-              + bytes([1, 0x11, 0]))
+    sof = seg(0xC0, struct.pack(">BHHB", 8, h, w, 1) + bytes([1, 0x11, 0]))
     dht = (seg(0xC4, bytes([0x00]) + bytes(_JPEG_DC_BITS[:16])
                + bytes(_JPEG_DC_VALS))
            + seg(0xC4, bytes([0x10]) + bytes(_JPEG_AC_BITS[:16])
                  + bytes(_JPEG_AC_VALS)))
     sos = seg(0xDA, bytes([1, 1, 0x00, 0, 63, 0]))
     app0 = seg(0xE0, b"JFIF\x00\x01\x01\x00" + bytes([0, 1, 0, 1, 0, 0]))
-    return (b"\xFF\xD8" + app0 + dqt + sof + dht + sos
-            + bw.done() + b"\xFF\xD9")
+    return b"\xFF\xD8" + app0 + dqt + sof + dht + sos + scan + b"\xFF\xD9"
 
 
-def synthetic_jpeg_media(spark: SparkSession, n: int, seed: int = 42,
-                         partitions: int = 8) -> DataFrame:
-    """REAL baseline-JFIF grayscale payloads in the DC-ONLY exact
-    regime: every 8x8 block is constant, the quantizer is 8, so the
-    quantized DC equals the level-shifted block value exactly and the
-    decode (Huffman -> dequant -> IDCT -> +128) reproduces every pixel
-    as an exact integer. Pixel values follow a closed form so an
-    independent engine reproduces the decoded stats:
+def _jpeg_encode(i: int, seed: int) -> dict:
+    """Baseline JFIF grayscale in the DC-only exact regime: every 8x8
+    block is constant and the quantizer is 8, so the quantized DC
+    equals the level-shifted block value and Huffman -> dequant ->
+    float64 IDCT -> +128 reproduces every pixel as an exact integer:
 
         w(i) = 8 + (i * 5) % 33
         h(i) = 8 + (i * 7) % 17
         pixel (x, y) of image i =
             (i * 19 + (y // 8) * 31 + (x // 8) * 37 + seed) % 256
-    """
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qtab = np.full((8, 8), 8, dtype=np.int64)
-        qtab[0, 0] = 8
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"].to_numpy():
-                i = int(i)
-                w = 8 + (i * 5) % 33
-                h = 8 + (i * 7) % 17
-                bx = -(-w // 8)
-                by = -(-h // 8)
-                yb, xb = np.meshgrid(np.arange(by), np.arange(bx),
-                                     indexing="ij")
-                v = (i * 19 + yb * 31 + xb * 37 + seed) % 256
-                coef = np.zeros((by * bx, 64), dtype=np.int64)
-                # DC-only: DCq = 8*(v-128)/q = v - 128 exactly (q=8)
-                coef[:, 0] = (v - 128).reshape(-1)
-                payload = _jpeg_encode_gray(coef, qtab, w, h)
-                rows.append({"media_id": i, "kind": "image",
-                             "payload": payload, "mime": "image/jpeg",
-                             "width": w, "height": h,
-                             "duration_ms": None})
-            yield pd.DataFrame(rows)
 
-    return spark.range(0, n, 1, partitions).mapInPandas(gen, MEDIA_SCHEMA)
-
-
-class _BitReader:
-    __slots__ = ("data", "pos", "acc", "nbits")
-
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0
-        self.acc = 0
-        self.nbits = 0
-
-    def bit(self) -> int:
-        if not self.nbits:
-            if self.pos >= len(self.data):
-                raise ValueError("truncated entropy stream")
-            b = self.data[self.pos]
-            self.pos += 1
-            if b == 0xFF:
-                if self.pos >= len(self.data) \
-                        or self.data[self.pos] != 0x00:
-                    raise ValueError("unexpected marker in scan")
-                self.pos += 1    # unstuff
-            self.acc = b
-            self.nbits = 8
-        self.nbits -= 1
-        return (self.acc >> self.nbits) & 1
-
-    def bits(self, n: int) -> int:
-        v = 0
-        for _ in range(n):
-            v = (v << 1) | self.bit()
-        return v
+    The decoder is a general baseline decoder: marker walk, DHT
+    canonical Huffman, DC prediction, AC run-length (RRRRSSSS / ZRL /
+    EOB), zigzag + dequantization, 2D IDCT over all blocks, level
+    shift, clip and edge crop; tests/test_multimodal_jpeg.py covers the
+    AC path against an independent IDCT. Progressive SOF2, restart
+    intervals and multi-component or subsampled scans raise."""
+    w = 8 + (i * 5) % 33
+    h = 8 + (i * 7) % 17
+    bx = -(-w // 8)
+    by = -(-h // 8)
+    yb, xb = np.meshgrid(np.arange(by), np.arange(bx), indexing="ij")
+    v = (i * 19 + yb * 31 + xb * 37 + seed) % 256
+    coef = np.zeros((by * bx, 64), dtype=np.int64)
+    # DC-only: DCq = 8*(v-128)/q = v - 128 exactly (q=8)
+    coef[:, 0] = (v - 128).reshape(-1)
+    payload = _jpeg_encode_gray(coef, np.full((8, 8), 8), w, h)
+    return {"kind": "image", "payload": payload, "mime": "image/jpeg",
+            "width": w, "height": h}
 
 
 def _jpeg_extend(v: int, t: int) -> int:
@@ -954,255 +790,118 @@ def _jpeg_extend(v: int, t: int) -> int:
     return v if v >= (1 << (t - 1)) else v - (1 << t) + 1
 
 
-_IDCT_M = None
-
-
-def _jpeg_idct_mat() -> np.ndarray:
-    global _IDCT_M
-    if _IDCT_M is None:
-        u = np.arange(8).reshape(8, 1)
-        x = np.arange(8).reshape(1, 8)
-        m = 0.5 * np.cos((2 * x + 1) * u * np.pi / 16)
-        m[0] /= np.sqrt(2.0)
-        _IDCT_M = m
-    return _IDCT_M
-
-
-def jpeg_pixel_stats(df: DataFrame) -> DataFrame:
-    """REAL decode of baseline JFIF grayscale payloads — marker walk,
-    DHT canonical-Huffman tables, DC prediction, AC run-length
-    (RRRRSSSS / ZRL / EOB), zigzag + dequantization, full 2D float64
-    IDCT vectorized over all blocks, level shift, clip, edge crop —
-    stdlib + numpy only, one mapInPandas pass to integer statistics.
-    On the DC-only synthetic fixtures the full pipeline is exactly
-    integral, so the DuckDB closed-form oracle is a strict gate over
-    the compression round trip; the AC path is covered in
-    tests/test_multimodal_jpeg.py vs an independent IDCT reference.
-    Progressive (SOF2), restart intervals, and multi-component scans
-    raise NotImplementedError."""
-    def per_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                w, h, img = _jpeg_decode_gray(bytes(payload))
-                out.append({"media_id": int(mid), "width": int(w),
-                            "height": int(h),
-                            "sum_v": int(img.sum()),
-                            "max_v": int(img.max()),
-                            "ypos_v": int((img.sum(axis=1)
-                                           * np.arange(h)).sum())})
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(
-        per_batch,
-        schema="media_id long, width long, height long, sum_v long, "
-               "max_v long, ypos_v long")
-
-
 def _jpeg_decode_gray(raw: bytes) -> tuple[int, int, np.ndarray]:
-    """Baseline JFIF grayscale decode to (w, h, int64 image) — the
-    kernel behind jpeg_pixel_stats, module-level so the AC-path tests
-    drive it directly."""
-    import struct as _struct
+    if raw[:2] != b"\xFF\xD8":
+        raise ValueError("not a JPEG payload")
+    pos = 2
+    qtabs: dict[int, np.ndarray] = {}
+    huff: dict[tuple[int, int], dict] = {}
+    w = h = None
+    qsel = 0
+    while pos < len(raw):
+        if raw[pos] != 0xFF:
+            raise ValueError(f"bad marker byte at {pos}")
+        m = raw[pos + 1]
+        if m == 0xD9:
+            raise ValueError("EOI before SOS")
+        seglen = struct.unpack_from(">H", raw, pos + 2)[0]
+        body = raw[pos + 4:pos + 2 + seglen]
+        pos += 2 + seglen
+        if m == 0xDB:
+            off = 0
+            while off < len(body):
+                pq, tq = body[off] >> 4, body[off] & 15
+                if pq:
+                    raise NotImplementedError("16-bit quant table")
+                z = np.frombuffer(body, np.uint8, 64, off + 1)
+                tab = np.zeros(64, np.int64)
+                tab[_JPEG_ZIGZAG] = z
+                qtabs[tq] = tab
+                off += 65
+        elif m in (0xC1, 0xC2, 0xC3):
+            raise NotImplementedError(
+                "only baseline sequential SOF0 decoded here")
+        elif m == 0xC0:
+            prec, h, w, ncomp = struct.unpack_from(">BHHB", body, 0)
+            if prec != 8 or ncomp != 1:
+                raise NotImplementedError("8-bit grayscale only")
+            # per-component triple starts at body[6]: id, HV, Tq
+            if body[7] != 0x11:
+                raise NotImplementedError("no subsampling support")
+            qsel = body[8]
+        elif m == 0xC4:
+            off = 0
+            while off < len(body):
+                tc, th = body[off] >> 4, body[off] & 15
+                bits = list(body[off + 1:off + 17])
+                nv = sum(bits)
+                vals = list(body[off + 17:off + 17 + nv])
+                codes = _jpeg_canon_codes(bits, vals)
+                # invert to (len, code) -> val for bit-serial read
+                huff[(tc, th)] = {(ln, c): v
+                                  for v, (c, ln) in codes.items()}
+                off += 17 + nv
+        elif m == 0xDD:
+            raise NotImplementedError("restart intervals")
+        elif m == 0xDA:
+            if w is None or qsel not in qtabs:
+                raise ValueError("SOS before SOF/DQT")
+            td, ta = body[2] >> 4, body[2] & 15
+            dct, act = huff[(0, td)], huff[(1, ta)]
+            # the entropy segment ends at the first marker; unstuff it
+            end = re.search(rb"\xFF(?!\x00)", raw[pos:])
+            scan = raw[pos:pos + end.start()] if end else raw[pos:]
+            br = _MsbReader(scan.replace(b"\xFF\x00", b"\xFF"))
 
-    if True:
-        if raw[:2] != b"\xFF\xD8":
-            raise ValueError("not a JPEG payload")
-        pos = 2
-        qtabs: dict[int, np.ndarray] = {}
-        huff: dict[tuple[int, int], dict] = {}
-        w = h = None
-        qsel = 0
-        while pos < len(raw):
-            if raw[pos] != 0xFF:
-                raise ValueError(f"bad marker byte at {pos}")
-            m = raw[pos + 1]
-            if m == 0xD9:
-                raise ValueError("EOI before SOS")
-            seglen = _struct.unpack_from(">H", raw, pos + 2)[0]
-            body = raw[pos + 4:pos + 2 + seglen]
-            pos += 2 + seglen
-            if m == 0xDB:
-                off = 0
-                while off < len(body):
-                    pq, tq = body[off] >> 4, body[off] & 15
-                    if pq:
-                        raise NotImplementedError("16-bit quant table")
-                    z = np.frombuffer(body, np.uint8, 64, off + 1)
-                    tab = np.zeros(64, np.int64)
-                    tab[_JPEG_ZIGZAG] = z
-                    qtabs[tq] = tab
-                    off += 65
-            elif m in (0xC1, 0xC2, 0xC3):
-                raise NotImplementedError(
-                    "only baseline sequential SOF0 decoded here")
-            elif m == 0xC0:
-                prec, h, w, ncomp = _struct.unpack_from(">BHHB", body, 0)
-                if prec != 8 or ncomp != 1:
-                    raise NotImplementedError("8-bit grayscale only")
-                # per-component triple starts at body[6]: id, HV, Tq
-                if body[7] != 0x11:
-                    raise NotImplementedError("no subsampling support")
-                qsel = body[8]
-            elif m == 0xC4:
-                off = 0
-                while off < len(body):
-                    tc, th = body[off] >> 4, body[off] & 15
-                    bits = list(body[off + 1:off + 17])
-                    nv = sum(bits)
-                    vals = list(body[off + 17:off + 17 + nv])
-                    codes = _jpeg_canon_codes(bits, vals)
-                    # invert to (len, code) -> val for bit-serial read
-                    huff[(tc, th)] = {(ln, c): v
-                                      for v, (c, ln) in codes.items()}
-                    off += 17 + nv
-            elif m == 0xDD:
-                raise NotImplementedError("restart intervals")
-            elif m == 0xDA:
-                if w is None or qsel not in qtabs:
-                    raise ValueError("SOS before SOF/DQT")
-                td, ta = body[2] >> 4, body[2] & 15
-                dct, act = huff[(0, td)], huff[(1, ta)]
-                br = _BitReader(raw[pos:])
+            def sym(tab):
+                code, ln = 0, 0
+                while ln < 16:
+                    code = (code << 1) | br.bits(1)
+                    ln += 1
+                    v = tab.get((ln, code))
+                    if v is not None:
+                        return v
+                raise ValueError("bad Huffman code")
 
-                def sym(tab):
-                    code, ln = 0, 0
-                    while ln < 16:
-                        code = (code << 1) | br.bit()
-                        ln += 1
-                        v = tab.get((ln, code))
-                        if v is not None:
-                            return v
-                    raise ValueError("bad Huffman code")
-
-                bx, by = -(-w // 8), -(-h // 8)
-                coef = np.zeros((by * bx, 64), np.int64)
-                pred = 0
-                for b in range(by * bx):
-                    t = sym(dct)
-                    if t:
-                        pred += _jpeg_extend(br.bits(t), t)
-                    coef[b, 0] = pred
-                    k = 1
-                    while k < 64:
-                        rs = sym(act)
-                        if rs == 0x00:
-                            break
-                        if rs == 0xF0:
-                            k += 16
-                            continue
-                        k += rs >> 4
-                        t = rs & 15
-                        if k > 63:
-                            raise ValueError("AC index overflow")
-                        coef[b, k] = _jpeg_extend(br.bits(t), t)
-                        k += 1
-                deq = np.zeros((by * bx, 64))
-                deq[:, _JPEG_ZIGZAG] = coef * qtabs[qsel][_JPEG_ZIGZAG]
-                F8 = deq.reshape(-1, 8, 8)
-                M = _jpeg_idct_mat()
-                px = np.einsum("ux,nuv,vy->nxy", M, F8, M)
-                px = np.clip(np.round(px) + 128, 0, 255).astype(np.int64)
-                img = (px.reshape(by, bx, 8, 8)
-                       .transpose(0, 2, 1, 3)
-                       .reshape(by * 8, bx * 8))
-                return w, h, img[:h, :w]
-            elif m == 0xE0 or (0xE0 < m <= 0xEF) or m == 0xFE:
-                pass                      # APPn / COM: skip
-            else:
-                raise ValueError(f"unexpected JPEG marker 0x{m:02x}")
-        raise ValueError("no SOS in JPEG")
+            bx, by = -(-w // 8), -(-h // 8)
+            coef = np.zeros((by * bx, 64), np.int64)
+            pred = 0
+            for b in range(by * bx):
+                t = sym(dct)
+                if t:
+                    pred += _jpeg_extend(br.bits(t), t)
+                coef[b, 0] = pred
+                k = 1
+                while k < 64:
+                    rs = sym(act)
+                    if rs == 0x00:
+                        break
+                    if rs == 0xF0:
+                        k += 16
+                        continue
+                    k += rs >> 4
+                    t = rs & 15
+                    if k > 63:
+                        raise ValueError("AC index overflow")
+                    coef[b, k] = _jpeg_extend(br.bits(t), t)
+                    k += 1
+            deq = np.zeros((by * bx, 64))
+            deq[:, _JPEG_ZIGZAG] = coef * qtabs[qsel][_JPEG_ZIGZAG]
+            px = np.einsum("ux,nuv,vy->nxy", _IDCT_M,
+                           deq.reshape(-1, 8, 8), _IDCT_M)
+            px = np.clip(np.round(px) + 128, 0, 255).astype(np.int64)
+            img = (px.reshape(by, bx, 8, 8)
+                   .transpose(0, 2, 1, 3)
+                   .reshape(by * 8, bx * 8))
+            return w, h, img[:h, :w]
+        elif m == 0xE0 or (0xE0 < m <= 0xEF) or m == 0xFE:
+            pass                      # APPn / COM: skip
+        else:
+            raise ValueError(f"unexpected JPEG marker 0x{m:02x}")
+    raise ValueError("no SOS in JPEG")
 
 
 # ------------------------------------------------------------------ FLAC
-# Round 5: the fourth REAL compressed codec and the first compressed
-# AUDIO format — native FLAC (lossless: fixed linear prediction +
-# Rice-coded residuals), stdlib + numpy only. Unlike JPEG there is no
-# exactness trick needed: FLAC is lossless by construction, so EVERY
-# fixture decodes to bit-exact samples and the closed-form DuckDB
-# oracle strict-gates the whole pipeline — frame sync, CRC-8/CRC-16
-# verification, subframe decode (CONSTANT / VERBATIM / FIXED orders
-# 0-4), Rice/unary decode, fixed-predictor reconstruction, and the
-# STREAMINFO MD5 of the decoded PCM. LPC subframes and stereo
-# decorrelation are out of scope and raise.
-
-_FLAC_CRC8_POLY = 0x07     # x^8 + x^2 + x + 1 (frame header)
-_FLAC_CRC16_POLY = 0x8005  # x^16 + x^15 + x^2 + 1 (whole frame)
-
-
-def _flac_crc8(data: bytes) -> int:
-    crc = 0
-    for b in data:
-        crc ^= b
-        for _ in range(8):
-            crc = ((crc << 1) ^ _FLAC_CRC8_POLY if crc & 0x80
-                   else crc << 1) & 0xFF
-    return crc
-
-
-def _flac_crc16(data: bytes) -> int:
-    crc = 0
-    for b in data:
-        crc ^= b << 8
-        for _ in range(8):
-            crc = ((crc << 1) ^ _FLAC_CRC16_POLY if crc & 0x8000
-                   else crc << 1) & 0xFFFF
-    return crc
-
-
-class _MsbWriter:
-    """MSB-first bit packer (no byte stuffing — FLAC is a plain
-    bitstream, unlike JPEG's entropy segment)."""
-    __slots__ = ("buf", "acc", "nbits")
-
-    def __init__(self):
-        self.buf = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def put(self, val: int, n: int) -> None:
-        self.acc = (self.acc << n) | (val & ((1 << n) - 1))
-        self.nbits += n
-        while self.nbits >= 8:
-            self.buf.append((self.acc >> (self.nbits - 8)) & 0xFF)
-            self.nbits -= 8
-
-    def align(self) -> None:
-        if self.nbits:
-            self.put(0, 8 - self.nbits)
-
-    def bytes(self) -> bytes:
-        return bytes(self.buf)
-
-
-class _MsbReader:
-    __slots__ = ("data", "bitpos")
-
-    def __init__(self, data: bytes, bitpos: int = 0):
-        self.data = data
-        self.bitpos = bitpos
-
-    def bits(self, n: int) -> int:
-        v = 0
-        for _ in range(n):
-            byte = self.data[self.bitpos >> 3]
-            v = (v << 1) | ((byte >> (7 - (self.bitpos & 7))) & 1)
-            self.bitpos += 1
-        return v
-
-    def unary(self) -> int:
-        """FLAC unary: count 0 bits up to the terminating 1."""
-        q = 0
-        while True:
-            if self.bits(1):
-                return q
-            q += 1
-            if q > 1 << 20:
-                raise ValueError("runaway unary code")
-
-    def align(self) -> None:
-        self.bitpos = (self.bitpos + 7) & ~7
-
 
 def _rice_zigzag(r: np.ndarray) -> np.ndarray:
     return np.where(r >= 0, 2 * r, -2 * r - 1)
@@ -1228,7 +927,7 @@ def _flac_encode_frame(samples: np.ndarray, blocksize: int,
     w.put(blocksize - 1, 16)
     hdr = w.bytes()
     assert w.nbits == 0
-    w.put(_flac_crc8(hdr), 8)
+    w.put(_crc(hdr, 0x07, 8), 8)
 
     s = samples.astype(np.int64)
     # subframe header: 0, 6-bit type, wasted-bits flag 0
@@ -1270,72 +969,50 @@ def _flac_encode_frame(samples: np.ndarray, blocksize: int,
         raise ValueError(sub_type)
     w.align()
     frame = w.bytes()
-    return frame + _flac_crc16(frame).to_bytes(2, "big")
+    return frame + _crc(frame, 0x8005, 16).to_bytes(2, "big")
 
 
-def synthetic_flac_media(spark: SparkSession, n: int, seed: int = 42,
-                         sample_rate: int = 8000,
-                         partitions: int = 8) -> DataFrame:
-    """REAL native-FLAC payloads (mono PCM16, one fixed-blocksize
-    frame): fLaC marker + STREAMINFO (with the REAL MD5 of the
-    decoded PCM — the decoder verifies it) + a frame whose subframe
-    cycles through the three shapes: i%3==0 CONSTANT, i%3==1 FIXED
-    order 1, i%3==2 FIXED order 2. FLAC is lossless, so samples follow
-    a closed arithmetic form the oracle reproduces exactly:
+def _flac_encode(i: int, seed: int, sample_rate: int) -> dict:
+    """Native FLAC, mono PCM16, one fixed-blocksize frame: ``fLaC`` +
+    STREAMINFO (with the MD5 of the PCM) + a frame whose subframe
+    cycles i%3==0 CONSTANT, i%3==1 FIXED order 1, i%3==2 FIXED order
+    2. FLAC is lossless, so every fixture decodes exactly:
 
         n_samples(i) = 64 + (i * 37) % 192
         sample(i, k) = ((i*6151 + kk*92821 + seed) % 65536) - 32768
           with kk = 0 for the constant payloads (i % 3 == 0), else k
-    """
-    import hashlib
-    import struct as _struct
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"].to_numpy():
-                i = int(i)
-                ns = 64 + (i * 37) % 192
-                k = np.arange(ns, dtype=np.int64)
-                kk = np.zeros(ns, dtype=np.int64) if i % 3 == 0 else k
-                s = ((i * 6151 + kk * 92821 + seed) % 65536 - 32768)
-                md5 = hashlib.md5(
-                    s.astype("<i2").tobytes()).digest()
-                shape = ["constant", "fixed", "fixed"][i % 3]
-                order = [0, 1, 2][i % 3]
-                frame = _flac_encode_frame(s, ns, shape, order)
-                si = _MsbWriter()
-                si.put(1, 1)          # last metadata block
-                si.put(0, 7)          # STREAMINFO
-                si.put(34, 24)
-                si.put(ns, 16)        # min blocksize
-                si.put(ns, 16)        # max blocksize
-                si.put(0, 24)         # min framesize unknown
-                si.put(0, 24)         # max framesize unknown
-                si.put(sample_rate, 20)
-                si.put(0, 3)          # channels - 1
-                si.put(15, 5)         # bps - 1
-                si.put(ns, 36)        # total samples
-                payload = (b"fLaC" + si.bytes() + md5 + frame)
-                rows.append({"media_id": i, "kind": "audio",
-                             "payload": payload, "mime": "audio/flac",
-                             "width": None, "height": None,
-                             "duration_ms": ns * 1000 // sample_rate})
-            yield pd.DataFrame(rows)
-
-    return spark.range(0, n, 1, partitions).mapInPandas(gen, MEDIA_SCHEMA)
+    The decoder walks the metadata blocks, syncs each frame, verifies
+    CRC-8 and CRC-16, decodes CONSTANT / VERBATIM / FIXED order 0-4
+    subframes with Rice residuals (escape code included), reconstructs
+    the fixed predictor and checks the STREAMINFO MD5 of the decoded
+    PCM. LPC subframes, stereo decorrelation and the rice2 residual
+    method raise."""
+    ns = 64 + (i * 37) % 192
+    k = np.arange(ns, dtype=np.int64)
+    kk = np.zeros(ns, dtype=np.int64) if i % 3 == 0 else k
+    s = ((i * 6151 + kk * 92821 + seed) % 65536 - 32768)
+    md5 = hashlib.md5(s.astype("<i2").tobytes()).digest()
+    shape = ["constant", "fixed", "fixed"][i % 3]
+    order = [0, 1, 2][i % 3]
+    frame = _flac_encode_frame(s, ns, shape, order)
+    si = _MsbWriter()
+    si.put(1, 1)          # last metadata block
+    si.put(0, 7)          # STREAMINFO
+    si.put(34, 24)
+    si.put(ns, 16)        # min blocksize
+    si.put(ns, 16)        # max blocksize
+    si.put(0, 24)         # min framesize unknown
+    si.put(0, 24)         # max framesize unknown
+    si.put(sample_rate, 20)
+    si.put(0, 3)          # channels - 1
+    si.put(15, 5)         # bps - 1
+    si.put(ns, 36)        # total samples
+    return {"kind": "audio", "payload": b"fLaC" + si.bytes() + md5 + frame,
+            "mime": "audio/flac", "duration_ms": ns * 1000 // sample_rate}
 
 
 def _flac_decode(raw: bytes) -> tuple[int, np.ndarray]:
-    """Native-FLAC decode to (sample_rate, int64 samples) — marker +
-    STREAMINFO parse, metadata-block walk, frame sync, CRC-8 and
-    CRC-16 VERIFICATION, subframe decode (CONSTANT / VERBATIM / FIXED
-    orders 0-4 with Rice residuals incl. the escape code), fixed-
-    predictor reconstruction, and STREAMINFO-MD5 verification of the
-    decoded PCM. Mono 16-bit; LPC subframes, stereo decorrelation,
-    and rice2 (5-bit) residual method raise NotImplementedError."""
-    import hashlib
-
     if raw[:4] != b"fLaC":
         raise ValueError("not a FLAC payload")
     pos = 4
@@ -1406,7 +1083,7 @@ def _flac_decode(raw: bytes) -> tuple[int, np.ndarray]:
         if hdr_end_bits % 8:
             raise ValueError("misaligned frame header")
         crc8 = r.bits(8)
-        if _flac_crc8(raw[pos:hdr_end_bits // 8]) != crc8:
+        if _crc(raw[pos:hdr_end_bits // 8], 0x07, 8) != crc8:
             raise ValueError("frame header CRC-8 mismatch")
 
         # one mono subframe
@@ -1477,7 +1154,7 @@ def _flac_decode(raw: bytes) -> tuple[int, np.ndarray]:
         r.align()
         frame_end = r.bitpos // 8
         crc16 = int.from_bytes(raw[frame_end:frame_end + 2], "big")
-        if _flac_crc16(raw[pos:frame_end]) != crc16:
+        if _crc(raw[pos:frame_end], 0x8005, 16) != crc16:
             raise ValueError("frame CRC-16 mismatch")
         pos = frame_end + 2
         out.append(s)
@@ -1491,28 +1168,129 @@ def _flac_decode(raw: bytes) -> tuple[int, np.ndarray]:
     return sr, samples
 
 
+# ------------------------------------------------------ public wrappers
+
+def synthetic_media(spark: SparkSession, n: int, seed: int = 42,
+                    partitions: int = 8) -> DataFrame:
+    return _media_table(spark, n, partitions,
+                        partial(_stub_encode, seed=seed))
+
+
+def synthetic_wav_media(spark: SparkSession, n: int, seed: int = 42,
+                        sample_rate: int = 8000,
+                        partitions: int = 8) -> DataFrame:
+    return _media_table(spark, n, partitions,
+                        partial(_wav_encode, seed=seed,
+                                sample_rate=sample_rate))
+
+
+def synthetic_bmp_media(spark: SparkSession, n: int, seed: int = 42,
+                        partitions: int = 8) -> DataFrame:
+    return _media_table(spark, n, partitions, partial(_bmp_encode, seed=seed))
+
+
+def synthetic_png_media(spark: SparkSession, n: int, seed: int = 42,
+                        partitions: int = 8) -> DataFrame:
+    return _media_table(spark, n, partitions, partial(_png_encode, seed=seed))
+
+
+def synthetic_gif_media(spark: SparkSession, n: int, seed: int = 42,
+                        partitions: int = 8,
+                        interlace_every: int | None = 3) -> DataFrame:
+    return _media_table(spark, n, partitions,
+                        partial(_gif_encode, seed=seed,
+                                interlace_every=interlace_every))
+
+
+def synthetic_jpeg_media(spark: SparkSession, n: int, seed: int = 42,
+                         partitions: int = 8) -> DataFrame:
+    return _media_table(spark, n, partitions,
+                        partial(_jpeg_encode, seed=seed))
+
+
+def synthetic_flac_media(spark: SparkSession, n: int, seed: int = 42,
+                         sample_rate: int = 8000,
+                         partitions: int = 8) -> DataFrame:
+    return _media_table(spark, n, partitions,
+                        partial(_flac_encode, seed=seed,
+                                sample_rate=sample_rate))
+
+
+def wav_amplitude_stats(df: DataFrame) -> DataFrame:
+    return decode_stats(df, _wav_decode, _amplitude_stats)
+
+
 def flac_amplitude_stats(df: DataFrame) -> DataFrame:
-    """REAL decode of native-FLAC payloads to the same integer
-    amplitude statistics as the WAV path — one mapInPandas pass; the
-    DuckDB oracle re-derives every sample arithmetically, so frame
-    sync, both CRCs, Rice/unary decode, fixed-predictor
-    reconstruction, AND the PCM MD5 check are all inside the strict
-    gate (a lossless codec needs no exactness trick)."""
+    return decode_stats(df, _flac_decode, _amplitude_stats)
+
+
+def bmp_pixel_stats(df: DataFrame) -> DataFrame:
+    return decode_stats(df, _bmp_decode, _rgb_stats)
+
+
+def png_pixel_stats(df: DataFrame) -> DataFrame:
+    return decode_stats(df, _png_decode, _rgb_stats)
+
+
+def gif_pixel_stats(df: DataFrame) -> DataFrame:
+    return decode_stats(df, _gif_decode, _rgb_ypos_stats)
+
+
+def jpeg_pixel_stats(df: DataFrame) -> DataFrame:
+    return decode_stats(df, lambda raw: _jpeg_decode_gray(raw)[2],
+                        _gray_stats)
+
+
+# ------------------------------------------------- stubbed feature decode
+
+def fake_decode_features(payload: bytes, dim: int = 16) -> np.ndarray:
+    """STUB decoder: deterministic pseudo-features — feature j is the
+    sum of payload bytes at positions ``k ≡ j (mod dim)`` (a strided
+    byte histogram; every value is an integer exactly representable in
+    float32). A real deployment replaces this with actual decode +
+    model inference; the Spark plumbing (Arrow batches in, fixed-dim
+    float vectors out) is identical.
+    """
+    raw = np.frombuffer(payload, dtype=np.uint8).astype(np.int64)
+    out = np.zeros(dim, dtype=np.int64)
+    np.add.at(out, np.arange(raw.size) % dim, raw)
+    return out.astype(np.float32)
+
+
+def _unsupported_decode(payload: bytes, dim: int = 16) -> np.ndarray:
+    raise NotImplementedError(
+        "real media decoding requires PIL/pyav/torchaudio — not present "
+        "in this environment; pass decoder=fake_decode_features or a "
+        "real decoder")
+
+
+def extract_features(df: DataFrame, dim: int = 16,
+                     decoder: Callable[[bytes, int], np.ndarray]
+                     = fake_decode_features) -> DataFrame:
+    """(media_id, kind, feature array<float>) via mapInPandas — one
+    Arrow batch per call, features vectorized per batch."""
+
     def per_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                sr, s = _flac_decode(bytes(payload))
-                a = np.abs(s)
-                out.append({"media_id": int(mid),
-                            "n_samples": int(s.size),
-                            "sample_rate": int(sr),
-                            "sum_abs": int(a.sum()),
-                            "max_abs": int(a.max()) if s.size else 0,
-                            "sum_sq": int((s * s).sum())})
-            yield pd.DataFrame(out)
+            feats = [decoder(bytes(p), dim).tolist()
+                     for p in pdf["payload"]]
+            yield pd.DataFrame({"media_id": pdf["media_id"],
+                                "kind": pdf["kind"],
+                                "feature": feats})
 
     return df.mapInPandas(
-        per_batch,
-        schema="media_id long, n_samples long, sample_rate long, "
-               "sum_abs long, max_abs long, sum_sq long")
+        per_batch, schema="media_id long, kind string, feature array<float>")
+
+
+def frame_sample_plan(df: DataFrame, every_ms: int = 1000) -> DataFrame:
+    """Video frame-sampling *plan*: one row per frame to decode
+    (media_id, frame_idx, ts_ms). The decode itself is the stubbed
+    step; the explode is the real distributed work distribution."""
+    vids = df.filter(F.col("kind") == "video")
+    return vids.select(
+        "media_id",
+        F.posexplode(F.sequence(
+            F.lit(0), (F.col("duration_ms") / every_ms).cast("int")))
+        .alias("frame_idx", "ts_s"),
+    ).select("media_id", "frame_idx",
+             (F.col("frame_idx") * every_ms).alias("ts_ms"))

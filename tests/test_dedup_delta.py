@@ -143,3 +143,17 @@ def test_reingested_ids_count_their_shingles_once(spark):
             D.minhash_dedup_pairs(docs, THR).filter(touches).collect()}
     assert delta == want
     assert len(want) > 0
+
+
+def test_delta_leaves_no_cached_frames(spark):
+    """The delta runs once per streaming micro-batch, so it must not
+    persist anything it cannot release: the session's persistent RDD
+    count is unchanged after two runs."""
+    docs, new = _split(spark)
+    sh_old = D.shingles(docs, hashed=True)
+    idx = D.minhash_band_index(shingle_df=sh_old)
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    for k in (10, 20):
+        D.minhash_dedup_delta(new.limit(k), idx, sh_old, THR).collect()
+    assert jsc.getPersistentRDDs().size() == before

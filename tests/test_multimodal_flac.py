@@ -1,7 +1,6 @@
-"""Native FLAC codec (round 5, fourth real compressed codec and the
-first compressed AUDIO format): synthetic_flac_media emits genuine
-FLAC payloads (STREAMINFO with real PCM MD5, CRC-8/CRC-16-protected
-frames, CONSTANT / FIXED subframes with Rice residuals), and
+"""Native FLAC codec: synthetic_flac_media emits genuine FLAC payloads
+(STREAMINFO with real PCM MD5, CRC-8/CRC-16-protected frames,
+CONSTANT / FIXED subframes with Rice residuals), and
 flac_amplitude_stats decodes them back with full verification —
 stdlib + numpy only, inside mapInPandas.
 """

@@ -1,8 +1,7 @@
-"""Real LZW-compressed image decode (round-4, second compressed codec
-after PNG): synthetic_gif_media emits genuine GIF87a payloads with
-hand-rolled GIF-variant LZW (dictionary growth to 12-bit codes, CLEAR
-resets, sub-block framing), and gif_pixel_stats decodes them back —
-stdlib + numpy only, inside mapInPandas.
+"""Real LZW-compressed image decode: synthetic_gif_media emits genuine
+GIF87a payloads with hand-rolled GIF-variant LZW (dictionary growth to
+12-bit codes, CLEAR resets, sub-block framing), and gif_pixel_stats
+decodes them back — stdlib + numpy only, inside mapInPandas.
 """
 
 from __future__ import annotations

@@ -1,9 +1,9 @@
-"""Baseline JFIF grayscale codec (round 5, third real compressed codec
-after PNG/GIF): synthetic_jpeg_media emits genuine DC-only-exact JPEG
-payloads (marker segments, canonical DHT Huffman, byte stuffing), and
-jpeg_pixel_stats decodes them back with a REAL baseline decoder
-(Huffman, DC prediction, AC run-length, zigzag, dequant, float64 IDCT,
-crop) — stdlib + numpy only, inside mapInPandas.
+"""Baseline JFIF grayscale codec: synthetic_jpeg_media emits genuine
+DC-only-exact JPEG payloads (marker segments, canonical DHT Huffman,
+byte stuffing), and jpeg_pixel_stats decodes them back with a REAL
+baseline decoder (Huffman, DC prediction, AC run-length, zigzag,
+dequant, float64 IDCT, crop) — stdlib + numpy only, inside
+mapInPandas.
 """
 
 from __future__ import annotations

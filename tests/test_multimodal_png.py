@@ -1,8 +1,8 @@
-"""Real compressed-image decode (round-4 codec-gap closure):
-synthetic_png_media emits genuine zlib-compressed truecolor PNGs with
-scanline filters cycling through ALL FIVE PNG filter types, and
-png_pixel_stats decodes them back — chunk walk + CRC verify + DEFLATE
-inflate + full unfilter — with the stdlib only, inside mapInPandas.
+"""Real compressed-image decode: synthetic_png_media emits genuine
+zlib-compressed truecolor PNGs with scanline filters cycling through
+ALL FIVE PNG filter types, and png_pixel_stats decodes them back —
+chunk walk + CRC verify + DEFLATE inflate + full unfilter — with the
+stdlib only, inside mapInPandas.
 """
 
 from __future__ import annotations

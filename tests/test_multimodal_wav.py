@@ -1,7 +1,7 @@
-"""Real WAV decode (round-3 upgrade of the multimodal decode stub):
-synthetic_wav_media emits genuine RIFF/WAVE PCM16 payloads and
-wav_amplitude_stats decodes them with the stdlib wave reader inside
-mapInPandas — real bytes in, real decode out, no external libs.
+"""Real WAV decode: synthetic_wav_media emits genuine RIFF/WAVE PCM16
+payloads and wav_amplitude_stats decodes them with the stdlib wave
+reader inside mapInPandas — real bytes in, real decode out, no
+external libs.
 """
 
 from __future__ import annotations

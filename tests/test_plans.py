@@ -229,24 +229,6 @@ def test_event_transitions_single_key_exchange_before_window(spark):
     assert m is not None
 
 
-def test_multimodal_wav_zero_exchange_pipeline(spark):
-    """Round 3: WAV generate + decode are two chained mapInPandas over
-    the range scan — a narrow 0-exchange pipeline (the orderBy at the
-    driver contract's tail is the only sort and costs one exchange at
-    most; the decode itself must not shuffle)."""
-    from sketchlib.multimodal import synthetic_wav_media, wav_amplitude_stats
-    df = wav_amplitude_stats(synthetic_wav_media(spark, 16, partitions=4))
-    plan = _plan(df)
-    assert "Exchange" not in plan
-
-
-def test_multimodal_bmp_zero_exchange_pipeline(spark):
-    from sketchlib.multimodal import bmp_pixel_stats, synthetic_bmp_media
-    df = bmp_pixel_stats(synthetic_bmp_media(spark, 16, partitions=4))
-    plan = _plan(df)
-    assert "Exchange" not in plan
-
-
 def test_bm25_single_corpus_scan(spark):
     """Round 3: the pivoted BM25 plan reads the documents table ONCE
     for scoring plus once for the (cached) per-doc stats reduction —
@@ -257,16 +239,6 @@ def test_bm25_single_corpus_scan(spark):
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
     assert "TakeOrderedAndProject" in plan
     assert len(re.findall(r"\(\d+\) Exchange", plan)) == 2
-
-
-def test_multimodal_png_zero_exchange_pipeline(spark):
-    """Round 4: PNG generate + decode are chained mapInPandas over the
-    range scan — same narrow 0-exchange shape as the WAV/BMP paths;
-    the zlib inflate/unfilter must not introduce any shuffle."""
-    from sketchlib.multimodal import png_pixel_stats, synthetic_png_media
-    df = png_pixel_stats(synthetic_png_media(spark, 16, partitions=4))
-    plan = _plan(df)
-    assert "Exchange" not in plan
 
 
 def test_psi_drift_grouped_build_single_events_scan(spark):
@@ -289,13 +261,6 @@ def test_psi_drift_grouped_build_single_events_scan(spark):
     plan = _plan(grouped)
     # count detail-section scan nodes, not tree-diagram lines
     assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1
-
-
-def test_multimodal_gif_zero_exchange_pipeline(spark):
-    from sketchlib.multimodal import gif_pixel_stats, synthetic_gif_media
-    df = gif_pixel_stats(synthetic_gif_media(spark, 16, partitions=4))
-    plan = _plan(df)
-    assert "Exchange" not in plan
 
 
 def test_pq_init_sample_no_window_sort_or_exchange(spark):
@@ -353,17 +318,14 @@ def test_adc_scan_never_shuffles_the_codes(spark, name):
     assert has_cell_in == (name == "ann_ivfpq_topk"), conds
 
 
-def test_multimodal_jpeg_zero_exchange_pipeline(spark):
-    from sketchlib.multimodal import jpeg_pixel_stats, synthetic_jpeg_media
-    df = jpeg_pixel_stats(synthetic_jpeg_media(spark, 16, partitions=4))
-    plan = _plan(df)
-    assert "Exchange" not in plan
-
-
-def test_multimodal_flac_zero_exchange_pipeline(spark):
-    from sketchlib.multimodal import (flac_amplitude_stats,
-                                      synthetic_flac_media)
-    df = flac_amplitude_stats(synthetic_flac_media(spark, 12,
-                                                   partitions=4))
-    plan = _plan(df)
+@pytest.mark.parametrize("codec, stats", [
+    ("wav", "wav_amplitude_stats"), ("bmp", "bmp_pixel_stats"),
+    ("png", "png_pixel_stats"), ("gif", "gif_pixel_stats"),
+    ("jpeg", "jpeg_pixel_stats"), ("flac", "flac_amplitude_stats")])
+def test_multimodal_codec_zero_exchange_pipeline(spark, codec, stats):
+    """Generate + decode are two chained mapInPandas over the range
+    scan: the decode itself must not shuffle, whatever the codec."""
+    from sketchlib import multimodal as M
+    media = getattr(M, f"synthetic_{codec}_media")(spark, 16, partitions=4)
+    plan = _plan(getattr(M, stats)(media))
     assert "Exchange" not in plan
