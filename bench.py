@@ -236,9 +236,9 @@ def main() -> int:
     timings["conv_stats_transcripts"] = round(time.time() - t0, 3)
     assert n_convs_out == n_convs
 
-    # distributed-path throughput (local_threshold=0 disables the
-    # small-key-space driver-local shortcut so the number is the
-    # per-pass distributed rate, comparable to the reference's)
+    # Spark-path throughput (local_threshold=0 disables the
+    # small-key-space driver-local shortcut, so the rounds run in Spark
+    # tasks: one task for all rounds when the key table fits one task)
     dto = _timed(build_offline, toks, "token_u64", cfg, 3,
                  pre_aggregate=True, local_threshold=0)
     timings["occm_build_transcripts_3r"] = round(dto, 3)

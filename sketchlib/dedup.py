@@ -255,13 +255,9 @@ def minhash_dedup_pairs(df: DataFrame, threshold: float = 0.8,
     """MinHash LSH candidates verified by exact Jaccard — the standard
     near-dup pipeline (signature scan -> band join -> verify).
 
-    The shingle table is computed once and persisted
-    (MEMORY_AND_DISK) — both the signature kernel and the verify join
-    read it, so the corpus is shingled a single time."""
-    from pyspark import StorageLevel
-
-    sh = (shingles(df, shingle_n, id_col, text_col, hashed=True)
-          .persist(StorageLevel.MEMORY_AND_DISK))
+    Returns a lazy frame and persists nothing: the caller runs it after
+    this returns, so a cache made here could never be released."""
+    sh = shingles(df, shingle_n, id_col, text_col, hashed=True)
     sigs = minhash_signatures(None, n_perm, shingle_n, id_col, text_col,
                               shingle_df=sh, bands=bands)
     cands = lsh_candidate_pairs(sigs, bands, id_col, n_perm=n_perm)

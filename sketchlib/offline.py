@@ -1,19 +1,14 @@
 """Offline (multi-round) CM orchestrator — the reference's flagship.
 
 Re-expresses the reference driver loop (reference: main.cpp:35-90) for
-Spark: the driver holds the small round state, each pass is one Spark
-job over the token DataFrame, and per-round state moves via broadcast
-(driver -> executors) and treeReduce (executors -> driver):
+Spark. Each round is one pass over the input (OCM: two from round 1):
 
   OCM (plain offline, main.cpp:35-62):
-    round r>0: collision pass — broadcast previous round's (core,
-      collision); executors compute order-independent collision flags
-      against that *frozen* state (include/ocm.h:350-377 semantics with
-      the in-pass mutation removed — documented variant, SURVEY.md
-      §7.5); flags OR-merge via treeReduce; driver applies
-      collision = max(collision, flag * (r-1)).
-    every round: count pass — broadcast frozen collision table;
-      executors run the plain offline count (include/ocm.h:283-299),
+    round r>0: collision marking against the previous round's *frozen*
+      (core, collision) (include/ocm.h:350-377 semantics with the
+      in-pass mutation removed — documented variant, SURVEY.md §7.5);
+      flags OR-merge, then collision = max(collision, flag * (r-1)).
+    every round: the plain offline count (include/ocm.h:283-299),
       which is order-independent given frozen collisions, so partials
       sum-merge EXACTLY like plain CM (distributed == sequential
       bit-exact for this variant).
@@ -21,15 +16,32 @@ job over the token DataFrame, and per-round state moves via broadcast
   OCCM (conservative offline, main.cpp:63-90, effective semantics —
     the r>0 pre-pass is dead code, SURVEY.md O16):
     every round: one combined count+collision pass
-      (include/ocm.h:301-348); per partition, the wave kernel
-      ``OfflineCountMin.update_count_collision_batch`` (sorted unique
-      keys applied in conflict-free waves, equal to their sequential
-      loop); merge core by sum, collision by max. Order-dependent like
+      (include/ocm.h:301-348) through the wave kernel
+      ``OfflineCountMin.apply_count_collision`` (sorted unique keys
+      applied in conflict-free waves, equal to their sequential loop);
+      partials merge core by sum, collision by max. Order-dependent like
       conservative CM; keeps est >= true.
 
-Checkpoint/resume: after each completed pass the merged state is
-committed to a CheckpointStore snapshot with per-partition lineage;
-a rerun resumes from the latest committed pass.
+A build runs in one of three ways:
+
+  driver-local: a pre-aggregated (key, count) table of at most
+    ``local_threshold`` rows is collected and the round loop
+    (:func:`_build_local_weighted`) runs on the driver;
+  one task: a larger pre-aggregated table whose capped task count is
+    one runs that same round loop inside one ``mapInPandas`` task and
+    returns the final state as one blob, so all rounds are one Spark
+    job;
+  per-pass jobs: everything else (raw token input, more than one
+    capped task, a checkpointed build) runs each pass as one Spark job.
+    The driver broadcasts the round state, every partition builds a
+    partial, and the partials fold through ``fold_blobs`` (collision
+    flags by OR). With a checkpoint store every completed pass commits
+    a snapshot with per-partition lineage, and a rerun resumes from the
+    latest committed pass.
+
+The round loop hashes and wave-schedules its keys once
+(``OfflineCountMin.plan``) and applies that plan every round. On a
+one-partition input all three give the same bytes.
 """
 
 from __future__ import annotations
@@ -43,6 +55,7 @@ from pyspark.sql import DataFrame
 
 from sketchlib.checkpoint_io import CheckpointStore, Snapshot, sketch_fill_metrics
 from sketchlib.hashing import to_u64
+from sketchlib.sketches.base import fold_blobs
 from sketchlib.sketches.cm import CMConfig, OfflineCountMin
 
 
@@ -50,75 +63,69 @@ def _config_key(cfg: CMConfig, rounds: int) -> str:
     return f"np{cfg.np_bits}_nh{cfg.nh}_s{cfg.seed}_{'occm' if cfg.conservative else 'ocm'}_n{rounds}"
 
 
-class _PassResult:
-    def __init__(self, state: OfflineCountMin, lineage: list[dict]):
-        self.state = state
-        self.lineage = lineage
+def _concat(pdfs, col: str, weighted: bool):
+    """Arrow batches as one batch: uint64 keys and, for a (key, __cnt)
+    table, int64 weights (else ``None``)."""
+    pdfs = list(pdfs)
+    vals = np.concatenate([to_u64(p[col]) for p in pdfs]
+                          + [np.empty(0, np.uint64)])
+    if not weighted:
+        return vals, None
+    return vals, np.concatenate([p["__cnt"].to_numpy() for p in pdfs]
+                                + [np.empty(0, np.int64)])
+
+
+def _merge_payloads(kind: str, payloads):
+    """Merge a pass's partial payloads: packed collision flags by OR,
+    sketch blobs through ``fold_blobs``. ``None`` when there are none."""
+    if kind != "collision":
+        return fold_blobs(payloads)
+    acc = None
+    for p in payloads:
+        bits = np.frombuffer(bytes(p), dtype=np.uint8)
+        acc = bits if acc is None else acc | bits
+    return acc
 
 
 def _run_pass(df: DataFrame, col: str, cfg: CMConfig, kind: str,
               round_: int, total_round: int,
               state: OfflineCountMin, tree_width: int = 8,
-              weighted: bool = False) -> _PassResult:
+              weighted: bool = False) -> tuple[OfflineCountMin, list]:
     """One full-input Spark job; kind in {'count', 'collision', 'occm'}.
+    Returns the new state and the per-partition lineage.
 
     ``weighted`` means ``df`` is pre-grouped (col, __cnt) pairs — the
     scale path where the JVM hash aggregate did the counting."""
     sc = df.sparkSession.sparkContext
     # round 0's collision table is all zeros — don't ship 4B/cell of
     # zeros to every executor; the kernel re-creates it locally
-    coll_shape = state.collision.shape
     b_coll = sc.broadcast(state.collision if state.collision.any()
                           else None)
     b_core = sc.broadcast(state.core if kind == "collision" else None)
 
     def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        # the partition is ONE batch, so a conservative partial is a
+        # pure function of the partition's multiset (Arrow batch size
+        # does not matter; driver-local == one partition)
         from pyspark import TaskContext
-        pid = TaskContext.get().partitionId()
+        vals, w = _concat(batches, col, weighted)
         local = OfflineCountMin(cfg)
-        coll = (b_coll.value.copy() if b_coll.value is not None
-                else np.zeros(coll_shape, dtype=np.int32))
-        local.collision = coll
-        rows = 0
+        if b_coll.value is not None:
+            local.collision = b_coll.value.copy()
+        plan = local.plan(vals, w)
         if kind == "collision":
-            flags = np.zeros_like(local.collision, dtype=bool)
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                rows += int(pdf["__cnt"].sum()) if weighted else len(pdf)
-                flags |= local.mark_collisions_batch(
-                    to_u64(pdf[col]), round_, b_core.value, coll)
+            flags = local.apply_collisions(plan, round_, b_core.value,
+                                           local.collision)
             payload = np.packbits(flags.reshape(-1)).tobytes()
-        elif kind == "count":
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                w = pdf["__cnt"].to_numpy() if weighted else None
-                rows += int(w.sum()) if weighted else len(pdf)
-                local.update_count_batch(to_u64(pdf[col]), weights=w)
+        else:
+            if kind == "count":
+                local.apply_count(plan)
+            else:
+                local.apply_count_collision(plan, round_, total_round)
             payload = local.to_bytes()
-        else:  # occm combined — conservative is batching-sensitive, so
-            # process the partition as ONE batch: the result is then a
-            # pure function of the partition's multiset (Arrow batch
-            # size no longer matters; driver-local == one-partition)
-            vs, ws = [], []
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                vs.append(to_u64(pdf[col]))
-                if weighted:
-                    ws.append(pdf["__cnt"].to_numpy())
-            if vs:
-                v = np.concatenate(vs)
-                w = np.concatenate(ws) if weighted else None
-                rows += int(w.sum()) if weighted else len(v)
-                local.update_count_collision_batch(v, round_, total_round,
-                                                   weights=w)
-            # ship only deltas implied by kernel type: core (sum-merge)
-            # and collision (max-merge)
-            payload = local.to_bytes()
-        yield pd.DataFrame({"lineage": [json.dumps(
-                                [{"partition_id": pid, "rows": rows}])],
+        lineage = [{"partition_id": TaskContext.get().partitionId(),
+                    "rows": int(w.sum()) if weighted else len(vals)}]
+        yield pd.DataFrame({"lineage": [json.dumps(lineage)],
                             "payload": [payload]})
 
     cols = [col, "__cnt"] if weighted else [col]
@@ -129,17 +136,12 @@ def _run_pass(df: DataFrame, col: str, cfg: CMConfig, kind: str,
     # rides along as JSON so no second job is needed
     def fold(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         lin: list = []
-        acc = None
-        for pdf in batches:
-            for lg, pl in zip(pdf["lineage"], pdf["payload"]):
-                lin.extend(json.loads(lg))
-                pl = bytes(pl)
-                if kind == "collision":
-                    arr = np.frombuffer(pl, dtype=np.uint8)
-                    acc = arr.copy() if acc is None else np.bitwise_or(acc, arr)
-                else:
-                    sk = OfflineCountMin.from_bytes(pl)
-                    acc = sk if acc is None else acc.merge(sk)
+
+        def payloads():
+            for pdf in batches:
+                lin.extend(e for lg in pdf["lineage"] for e in json.loads(lg))
+                yield from pdf["payload"]
+        acc = _merge_payloads(kind, payloads())
         if acc is not None:
             out = acc.tobytes() if kind == "collision" else acc.to_bytes()
             yield pd.DataFrame({"lineage": [json.dumps(lin)],
@@ -155,63 +157,59 @@ def _run_pass(df: DataFrame, col: str, cfg: CMConfig, kind: str,
                        .mapInPandas(fold,
                                     schema="lineage string, payload binary")
                        .toPandas())
-    lineage: list = []
-    payload = None
-    for lg, pl in zip(folded["lineage"], folded["payload"]):
-        lineage.extend(json.loads(lg))
-        pl = bytes(pl)
-        if payload is None:
-            payload = pl
-        elif kind == "collision":
-            payload = bytes(np.bitwise_or(np.frombuffer(payload, np.uint8),
-                                          np.frombuffer(pl, np.uint8)))
-        else:
-            sk = OfflineCountMin.from_bytes(payload)
-            payload = sk.merge(OfflineCountMin.from_bytes(pl)).to_bytes()
-
-    if kind == "collision":
-        nbits = state.collision.size
-        flags = np.unpackbits(
-            np.frombuffer(payload, dtype=np.uint8))[:nbits].astype(bool)
-        flags = flags.reshape(state.collision.shape)
-        state.collision = np.maximum(
-            state.collision,
-            np.where(flags, np.int32(round_ - 1), np.int32(0)))
-        new_state = state
-    else:
-        agg = OfflineCountMin.from_bytes(payload)
+    lineage = [e for lg in folded["lineage"] for e in json.loads(lg)]
+    acc = _merge_payloads(kind, folded["payload"])
+    if kind != "collision":
         # partials each started from the broadcast collision table; the
         # max-merge keeps it plus any new marks (occm); core summed.
-        new_state = agg
+        state = acc
+    else:
+        flags = np.unpackbits(acc)[:state.collision.size].astype(bool)
+        state.collision = np.maximum(
+            state.collision,
+            np.where(flags.reshape(state.collision.shape),
+                     np.int32(round_ - 1), np.int32(0)))
     b_coll.destroy()
     b_core.destroy()
-    return _PassResult(new_state, lineage)
+    return state, lineage
 
 
-def _build_local_weighted(pdf, col: str, cfg: CMConfig,
+def _build_local_weighted(pdfs, col: str, cfg: CMConfig,
                           rounds: int) -> OfflineCountMin:
-    """Driver-local round loop over a small pre-aggregated (key, count)
-    table — identical batch kernels (they are order-independent over a
-    batch), so the result is bit-identical to a one-partition
-    distributed run, without 2n-1 Spark jobs + broadcasts."""
-    vals = to_u64(pdf[col])
-    weights = pdf["__cnt"].to_numpy()
+    """The round loop over a pre-aggregated (key, count) table given as
+    pandas frames. The keys are hashed and wave-scheduled once and that
+    plan is applied every round. The batch kernels are order-independent
+    over a batch, so the result is bit-identical to a one-partition
+    per-pass build."""
     state = OfflineCountMin(cfg)
+    plan = state.plan(*_concat(pdfs, col, True))
     for r in range(rounds):
-        if not cfg.conservative:
-            if r > 0:
-                flags = state.mark_collisions_batch(
-                    vals, r, state.core, state.collision)
-                state.collision = np.maximum(
-                    state.collision,
-                    np.where(flags, np.int32(r - 1), np.int32(0)))
-            state.clear_core()
-            state.update_count_batch(vals, weights=weights)
+        if not cfg.conservative and r > 0:
+            flags = state.apply_collisions(plan, r, state.core,
+                                           state.collision)
+            state.collision = np.maximum(
+                state.collision,
+                np.where(flags, np.int32(r - 1), np.int32(0)))
+        state.clear_core()  # main.cpp:49/76: zero counters, keep marks
+        if cfg.conservative:
+            state.apply_count_collision(plan, r, rounds)
         else:
-            state.clear_core()
-            state.update_count_collision_batch(vals, r, rounds,
-                                               weights=weights)
+            state.apply_count(plan)
     return state
+
+
+def _build_one_task(df: DataFrame, col: str, cfg: CMConfig,
+                    rounds: int) -> OfflineCountMin:
+    """:func:`_build_local_weighted` inside one ``mapInPandas`` task
+    over a one-partition (key, count) table: one Spark job whose one
+    row is the final state."""
+    def task(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        sk = _build_local_weighted(batches, col, cfg, rounds)
+        yield pd.DataFrame({"payload": [sk.to_bytes()]})
+
+    blobs = df.mapInPandas(task, schema="payload binary").toPandas()
+    # an empty table can have no partition, so no task and no row
+    return fold_blobs(blobs["payload"]) or OfflineCountMin(cfg)
 
 
 def build_offline(df: DataFrame, col: str, cfg: CMConfig, rounds: int,
@@ -224,17 +222,16 @@ def build_offline(df: DataFrame, col: str, cfg: CMConfig, rounds: int,
 
     With ``checkpoint_dir``, each completed pass commits a snapshot and
     a rerun resumes from the last committed pass (bit-identical result
-    to an uninterrupted run — tested).
+    to an uninterrupted run — tested). A checkpointed build always runs
+    per-pass jobs, because it must commit after every pass.
 
     ``pre_aggregate=True`` is the scale path: the (token, count) table
-    is computed ONCE by a JVM hash aggregate and persisted, so each of
-    the 2n-1 passes re-reads |distinct| weighted rows instead of
-    re-scanning the raw stream — the offline algorithm's multi-pass
-    cost collapses to one scan plus n cheap sketch passes. When the
-    distinct-key table is tiny (≤ ``local_threshold`` rows, no
-    checkpointing), the round loop runs driver-local instead — the
-    broadcast-threshold analog: 2n-1 Spark jobs + state broadcasts
-    would cost more than the kernels themselves.
+    is computed ONCE by a JVM hash aggregate and persisted, so no round
+    re-scans the raw stream. Without a checkpoint the round loop then
+    runs where it is cheapest: on the driver when the table has at
+    most ``local_threshold`` rows (the broadcast-threshold analog),
+    else inside one Spark task when the capped task count is one, else
+    as one Spark job per pass.
     """
     store = CheckpointStore(checkpoint_dir) if checkpoint_dir else None
     key = _config_key(cfg, rounds)
@@ -269,13 +266,6 @@ def build_offline(df: DataFrame, col: str, cfg: CMConfig, rounds: int,
             return persisted.coalesce(k)
         return persisted
 
-    if pre_aggregate and store is None:
-        df = materialize(df)
-        if local_threshold > 0 and n_distinct <= local_threshold:
-            pdf = persisted.toPandas()
-            persisted.unpersist()
-            return _build_local_weighted(pdf, col, cfg, rounds)
-
     def passes():
         for r in range(rounds):
             if not cfg.conservative:
@@ -286,6 +276,13 @@ def build_offline(df: DataFrame, col: str, cfg: CMConfig, rounds: int,
                 yield r, "occm"
 
     try:
+        if pre_aggregate and store is None:
+            df = materialize(df)
+            if local_threshold > 0 and n_distinct <= local_threshold:
+                return _build_local_weighted([persisted.toPandas()], col,
+                                             cfg, rounds)
+            if df.rdd.getNumPartitions() <= 1:
+                return _build_one_task(df, col, cfg, rounds)
         for r, kind in passes():
             snap_id = f"{key}_r{r}_{kind}"
             if store is not None:
@@ -310,16 +307,15 @@ def build_offline(df: DataFrame, col: str, cfg: CMConfig, rounds: int,
             if kind in ("count", "occm"):
                 state.clear_core()  # main.cpp:49/76: zero counters,
                 # keep marks
-            res = _run_pass(df, col, cfg, kind, r, rounds, state,
-                            tree_width, weighted=weighted)
-            state = res.state
+            state, lineage = _run_pass(df, col, cfg, kind, r, rounds,
+                                       state, tree_width, weighted=weighted)
             if store is not None:
                 store.commit(
                     Snapshot(snapshot_id=snap_id,
                              config={**json.loads(json.dumps(cfg.__dict__)),
                                      "input_snapshot": input_snapshot},
                              round_=r, pass_name=kind, blob_file="",
-                             lineage=res.lineage,
+                             lineage=lineage,
                              metrics=sketch_fill_metrics(state.core)),
                     state.to_bytes())
     finally:

@@ -34,6 +34,7 @@ from __future__ import annotations
 import io
 import struct
 from dataclasses import dataclass
+from functools import cached_property
 
 import numpy as np
 
@@ -123,6 +124,25 @@ def _waves(flat: np.ndarray) -> list[np.ndarray]:
         np.subtract.at(preds, nxt, 1)
         wave = np.unique(nxt[preds[nxt] == 0])
     return out
+
+
+class KeyPlan:
+    """A batch hashed once for the offline batch kernels.
+
+    ``counts[t]`` is the summed weight (uint64) of the batch's ``t``-th
+    sorted unique key and ``flat[:, t]`` its ``nh`` cells as ids into
+    the flattened tables (row ``r``'s cell offset by ``r << np_bits``).
+    The conflict-free :func:`_waves` are scheduled on first use and
+    kept: like the cells, they depend on the keys alone.
+    """
+
+    def __init__(self, counts: np.ndarray, flat: np.ndarray):
+        self.counts = counts
+        self.flat = flat
+
+    @cached_property
+    def waves(self) -> list[np.ndarray]:
+        return _waves(self.flat)
 
 
 _NARROW = [(np.uint8, 0), (np.uint16, 1), (np.uint32, 2), (np.uint64, 3)]
@@ -470,57 +490,51 @@ class OfflineCountMin:
                 self.core[rows[at], p[at]] = mn + _U64(1)
 
     # ---------------------------------------------------- batch kernels
-    def update_count_batch(self, vals, weights=None) -> None:
-        """OCM plain offline count with the collision table frozen for
-        the pass: per value, +count on cells at min collision. Given a
-        frozen collision table this is order-independent, so partials
-        sum-merge exactly like plain CM."""
-        vals = np.asarray(vals, dtype=_U64)
-        if vals.size == 0:
-            return
+    # Each batch kernel is a plan step (hash the batch's sorted unique
+    # keys once) and an apply step; a multi-round build plans once and
+    # applies the same plan every round.
+    def plan(self, vals, weights=None) -> KeyPlan:
+        """Sort the batch into unique keys, sum each key's weight
+        (1 per occurrence without ``weights``) and hash the keys'
+        cells."""
         if weights is None:
             u, counts = _sorted_unique(vals)
         else:
             u, counts = _combine_weighted(vals, weights)
-        cols = self._positions(u)                          # (nh, U)
-        rows = np.arange(self.core.shape[0])[:, None]
-        col = self.collision[rows, cols]                   # (nh, U)
-        sel = col == col.min(axis=0)[None, :]
-        add = np.where(sel, counts[None, :], 0).astype(_U64)
-        np.add.at(self.core, (rows.repeat(cols.shape[1], 1), cols), add)
+        flat = self._positions(u)                        # (nh, U) int64
+        flat += np.arange(flat.shape[0])[:, None] << self.config.np_bits
+        return KeyPlan(counts.astype(_U64), flat)
 
-    def mark_collisions_batch(self, vals, round_: int,
-                              prev_core: np.ndarray,
-                              prev_collision: np.ndarray) -> np.ndarray:
+    def apply_count(self, plan: KeyPlan) -> None:
+        """OCM plain offline count with the collision table frozen for
+        the pass: per key, +count on cells at min collision. Given a
+        frozen collision table this is order-independent, so partials
+        sum-merge exactly like plain CM."""
+        col = self.collision.reshape(-1)[plan.flat]
+        sel = col == col.min(axis=0)
+        np.add.at(self.core.reshape(-1), plan.flat[sel],
+                  np.broadcast_to(plan.counts, sel.shape)[sel])
+
+    def apply_collisions(self, plan: KeyPlan, round_: int,
+                         prev_core: np.ndarray,
+                         prev_collision: np.ndarray) -> np.ndarray:
         """Order-independent collision marking against *frozen* previous
         round state; returns a boolean flag array to max-merge."""
-        vals = np.asarray(vals, dtype=_U64)
-        flags = np.zeros_like(self.collision, dtype=bool)
-        if vals.size == 0:
-            return flags
-        u, _ = _sorted_unique(vals)
-        cols = self._positions(u)
-        rows = np.arange(self.core.shape[0])[:, None]
-        col = prev_collision[rows, cols]
-        eligible = col.min(axis=0) >= round_ - 2
-        if not eligible.any():
-            return flags
-        cols_e = cols[:, eligible]
-        v = prev_core[rows, cols_e]
-        over = v > v.min(axis=0)[None, :]
-        r_idx = np.broadcast_to(rows, cols_e.shape)[over]
-        flags[r_idx, cols_e[over]] = True
-        return flags
+        flags = np.zeros(self.collision.size, dtype=bool)
+        col = prev_collision.reshape(-1)[plan.flat]
+        flat = plan.flat[:, col.min(axis=0) >= round_ - 2]
+        v = prev_core.reshape(-1)[flat]
+        flags[flat[v > v.min(axis=0)]] = True
+        return flags.reshape(self.collision.shape)
 
-    def update_count_collision_batch(self, vals, round_: int,
-                                     total_round: int,
-                                     weights=None) -> None:
-        """OCCM conservative count of the batch's sorted unique values
-        in order (one valid sequential order of the batch), applied as
+    def apply_count_collision(self, plan: KeyPlan, round_: int,
+                              total_round: int) -> None:
+        """OCCM conservative count of the plan's sorted unique keys in
+        order (one valid sequential order of the batch), applied as
         conflict-free waves (:func:`_waves`); count and collision
         tables share the flat cell index.
 
-        Per value: branch 1 (min collision < round - 1) raises the
+        Per key: branch 1 (min collision < round - 1) raises the
         minimum of the min-collision cells; branch 2 raises the minimum
         of all cells and, before the last round, marks the cells above
         it with ``round_``. For a run of c duplicates the count rule
@@ -528,20 +542,11 @@ class OfflineCountMin:
         branch-2 collision marks are exactly the first iteration's
         (v > min) cells — later iterations mark a subset.
         """
-        vals = np.asarray(vals, dtype=_U64)
-        if vals.size == 0:
-            return
-        if weights is None:
-            u, counts = _sorted_unique(vals)
-        else:
-            u, counts = _combine_weighted(vals, weights)
-        flat = self._positions(u)                        # (nh, U) int64
-        flat += np.arange(flat.shape[0])[:, None] << self.config.np_bits
         core_flat = self.core.reshape(-1)
         coll_flat = self.collision.reshape(-1)
-        inc = counts.astype(_U64)
+        flat, inc = plan.flat, plan.counts
         big = _U64(np.iinfo(np.uint64).max)
-        for wave in _waves(flat):
+        for wave in plan.waves:
             P = flat[:, wave]
             C = coll_flat[P]
             V = core_flat[P]
@@ -552,6 +557,24 @@ class OfflineCountMin:
             if round_ < total_round:
                 coll_flat[P[b2 & (V > mn)]] = np.int32(round_)
             core_flat[P] = np.where(sel, np.maximum(V, mn + inc[wave]), V)
+
+    def update_count_batch(self, vals, weights=None) -> None:
+        """:meth:`apply_count` of one batch."""
+        self.apply_count(self.plan(vals, weights))
+
+    def mark_collisions_batch(self, vals, round_: int,
+                              prev_core: np.ndarray,
+                              prev_collision: np.ndarray) -> np.ndarray:
+        """:meth:`apply_collisions` of one batch."""
+        return self.apply_collisions(self.plan(vals), round_, prev_core,
+                                     prev_collision)
+
+    def update_count_collision_batch(self, vals, round_: int,
+                                     total_round: int,
+                                     weights=None) -> None:
+        """:meth:`apply_count_collision` of one batch."""
+        self.apply_count_collision(self.plan(vals, weights), round_,
+                                   total_round)
 
     # ------------------------------------------------------------ query
     def estimate(self, vals: np.ndarray) -> np.ndarray:

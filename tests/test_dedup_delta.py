@@ -157,3 +157,15 @@ def test_delta_leaves_no_cached_frames(spark):
     for k in (10, 20):
         D.minhash_dedup_delta(new.limit(k), idx, sh_old, THR).collect()
     assert jsc.getPersistentRDDs().size() == before
+
+
+def test_pairs_leave_no_cached_frames(spark):
+    """The batch dedup returns a lazy frame, so it must not persist
+    anything: the session's persistent RDD count is unchanged after
+    two runs."""
+    docs, _ = _split(spark)
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    for _ in range(2):
+        D.minhash_dedup_pairs(docs, THR).collect()
+    assert jsc.getPersistentRDDs().size() == before

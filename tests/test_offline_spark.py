@@ -124,3 +124,52 @@ def test_local_fastpath_bitexact_vs_distributed(spark, tokens):
                   pre_aggregate=True, local_threshold=0)
         assert (local.core == dist.core).all(), conservative
         assert (local.collision == dist.collision).all(), conservative
+
+
+def _jobs_in_group(spark, group: str, build) -> int:
+    """Spark jobs that ``build()`` runs under job group ``group``."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("conservative", [False, True])
+def test_pre_aggregated_build_jobs_do_not_grow_with_rounds(spark, tokens,
+                                                           conservative):
+    """A one-task pre-aggregated build runs every round in one Spark
+    job, so its job count does not depend on the number of rounds."""
+    cfg = CMConfig(10, 3, 7, conservative)
+    jobs = [_jobs_in_group(
+                spark, f"offline-jobs-{conservative}-{rounds}",
+                lambda: build_offline(tokens, "token_u64", cfg, rounds,
+                                      pre_aggregate=True, local_threshold=0))
+            for rounds in (1, 4)]
+    assert jobs[0] == jobs[1] > 0, jobs
+
+
+@pytest.mark.parametrize("conservative", [False, True])
+def test_one_task_build_equals_per_pass_build(tokens, tmp_path, conservative):
+    """The round loop in one task gives the bytes of one Spark job per
+    pass (a checkpointed build always runs per-pass jobs)."""
+    cfg = CMConfig(10, 3, 7, conservative)
+    one = build_offline(tokens, "token_u64", cfg, ROUNDS,
+                        pre_aggregate=True, local_threshold=0)
+    per_pass = build_offline(tokens, "token_u64", cfg, ROUNDS,
+                             pre_aggregate=True, local_threshold=0,
+                             checkpoint_dir=str(tmp_path))
+    assert np.array_equal(one.core, per_pass.core)
+    assert np.array_equal(one.collision, per_pass.collision)
+
+
+@pytest.mark.parametrize("conservative", [False, True])
+def test_one_task_build_of_empty_input_is_zero(tokens, conservative):
+    cfg = CMConfig(8, 3, 7, conservative)
+    sk = build_offline(tokens.filter(F.lit(False)), "token_u64", cfg,
+                       ROUNDS, pre_aggregate=True, local_threshold=0)
+    assert sk.core.shape == (cfg.nh_odd, cfg.width)
+    assert not sk.core.any() and not sk.collision.any()
