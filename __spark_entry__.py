@@ -7,7 +7,8 @@ A query is declared in one of two ways:
 - a ``def q_<name>(spark, sf_dir)`` function plus its ``oracle_sql()``
   entry under ``<name>``; or
 - one row of a family table (``_POINT_FREQ``, ``_CODEC_STATS``,
-  ``_LANG_PAIRWISE``), which gives the query and its oracle together.
+  ``_LANG_PAIRWISE``, ``_GROUPING_SETS``, ``_FACT_JOINS``), which gives
+  the query and its oracle together.
 
 ``queries()`` collects both, so no name list is kept by hand. Sketch
 queries run in their exact regimes (collision-free CM width,
@@ -24,12 +25,15 @@ from operator import methodcaller
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from sketchlib.aggregate import build_grouped_sketches, pairwise_grouped
+from sketchlib.aggregate import (build_grouped_sketches,
+                                 cube_grouped_sketches, finalize_grouped,
+                                 pairwise_grouped, rollup_grouped_sketches)
 from sketchlib.sketches.cbf import CountingBloom
 from sketchlib.sketches.cm import CMConfig, CountMin
 from sketchlib.sketches.cml import CountMinLog
 from sketchlib.sketches.countsketch import CountSketch
 from sketchlib.sketches.cs4w import CountSketch4W
+from sketchlib.sketches.hll import HyperLogLog
 from sketchlib.sketches.mh import MinHashBottomK
 from sketchlib.sketches.packedcm import CountMinPacked
 from sketchlib.sketches.pcbf import PCBF
@@ -39,6 +43,7 @@ from sketchlib import dedup as D
 from sketchlib import textstats as TS
 from sketchlib import ann as A
 from sketchlib import graph as G
+from sketchlib import joins as J
 from sketchlib import decontam as DC
 from sketchlib import multimodal as M
 from sketchlib import spans as SP
@@ -164,9 +169,6 @@ def q_hll_distinct_per_lang(spark, sf_dir):
     never funnel through the driver, so the same plan holds at 10^5
     groups). Strict gate: exact per-group count + 6-sigma bound flag."""
     from functools import partial as _p
-
-    from sketchlib.aggregate import build_grouped_sketches, finalize_grouped
-    from sketchlib.sketches.hll import HyperLogLog
 
     docs = _t(spark, sf_dir, "documents")
     toks = D.normalized_tokens(docs.select("doc_id", "lang", "text"))
@@ -295,7 +297,6 @@ def q_mg_top_tokens_per_lang(spark, sf_dir):
 
     from pyspark.sql import Window
 
-    from sketchlib.aggregate import build_grouped_sketches, finalize_grouped
     from sketchlib.sketches.mg import MisraGries
 
     wl = _lang_tokens(spark, sf_dir)
@@ -475,7 +476,6 @@ def q_hll_setops_langs(spark, sf_dir):
     from functools import partial as _p
 
     from sketchlib.aggregate import build_grouped_sketches, pairwise_grouped
-    from sketchlib.sketches.hll import HyperLogLog
 
     with_lang = _lang_tokens(spark, sf_dir)
     grouped = build_grouped_sketches(with_lang, ["lang"], "kh",
@@ -505,7 +505,6 @@ def q_kll_quantiles_per_lang(spark, sf_dir):
     regime (capacity >= group size)."""
     from functools import partial as _p
 
-    from sketchlib.aggregate import build_grouped_sketches, finalize_grouped
     from sketchlib.sketches.kll import KLL
 
     docs = _t(spark, sf_dir, "documents")
@@ -639,12 +638,13 @@ def q_setsim_siblings_langs(spark, sf_dir):
     from sketchlib.sketches.bbmh import OnePermMinHash
     from sketchlib.sketches.hmh import HyperMinHash
 
-    # one shingle+join scan feeds both estimators and the exact gate;
-    # the estimator panel shares ONE grouped pass (the 100 TB shape:
+    # one shingle+join frame feeds both estimators and the exact gate,
+    # uncached: the query returns lazily, so a cache could never be
+    # released; the estimator panel shares ONE grouped pass (the 100 TB shape:
     # the shuffle is paid once for every estimator over the stream);
     # pairwise compare is distributed, stratified by estimator name
     # (block_cols) so pairs only form within an estimator
-    with_lang = _lang_shingles(spark, sf_dir).cache()
+    with_lang = _lang_shingles(spark, sf_dir)
     factories = {"hyperminhash": _p(HyperMinHash, 12, 10),
                  "onepermminhash": _p(OnePermMinHash, 10)}
     grouped = build_grouped_sketches_multi(with_lang, ["lang"], "kh",
@@ -1315,8 +1315,6 @@ def q_fd_gram_per_label(spark, sf_dir):
     both outputs exact integer sums (order-independent)."""
     from functools import partial as _partial
 
-    from sketchlib.aggregate import (build_grouped_sketches,
-                                     finalize_grouped)
     from sketchlib.sketches.fd import FrequentDirections, fd_trace_g01
 
     emb = _t(spark, sf_dir, "embeddings")
@@ -1559,26 +1557,6 @@ def q_join_size_countsketch(spark, sf_dir):
         "n_join long, within_bound boolean")
 
 
-def q_bloom_semijoin_lineitem(spark, sf_dir):
-    """Bloom-prefiltered semi-join (sketchlib/joins.py): lineitem
-    rows whose order is status-'F', pre-filtered by a broadcast Bloom
-    blob BEFORE the exchange (matches + fp·non-matches shuffle
-    instead of the whole fact side), exact semi-join on the
-    survivors. Row-identical to the plain semi-join — the gate
-    aggregates the full result so every surviving/dropped row
-    counts."""
-    from sketchlib.joins import bloom_semi_join
-
-    li = _t(spark, sf_dir, "lineitem")
-    dim = _t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
-    got = bloom_semi_join(spark, li, "l_orderkey", dim, "o_orderkey",
-                          p=20)
-    return (got.groupBy("l_returnflag")
-            .agg(F.count("*").alias("n_rows"),
-                 F.sum("l_quantity").alias("sum_qty"))
-            .orderBy("l_returnflag"))
-
-
 def q_cm_decayed_user_freq(spark, sf_dir):
     """Forward-decay weighted CM (sketchlib/decay.py, Cormode et al.
     ICDE'09 model with piecewise-halving integer weights): per-user
@@ -1620,7 +1598,6 @@ def q_decayed_top_users_per_type(spark, sf_dir):
 
     from pyspark.sql import Window
 
-    from sketchlib.aggregate import build_grouped_sketches, finalize_grouped
     from sketchlib.decay import decay_weight_col
     from sketchlib.sketches.mg import MisraGries
 
@@ -1768,25 +1745,6 @@ def q_range_buckets_price(spark, sf_dir):
             .orderBy("bucket"))
 
 
-def q_bloom_antijoin_lineitem(spark, sf_dir):
-    """Bloom-short-circuited ANTI join (sketchlib/joins.py
-    bloom_anti_join): lineitems of NON-'F' orders found as orphans vs
-    the 'F'-order key set. The Bloom dual: a filter NO is definite, so
-    most orphans bypass the join with zero shuffle; only maybes (true
-    members + fp) take the exact anti-join. Row-identical to the plain
-    anti-join — gate aggregates the full result."""
-    from sketchlib.joins import bloom_anti_join
-
-    li = _t(spark, sf_dir, "lineitem")
-    dim = _t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
-    got = bloom_anti_join(spark, li, "l_orderkey", dim, "o_orderkey",
-                          p=20)
-    return (got.groupBy("l_returnflag")
-            .agg(F.count("*").alias("n_rows"),
-                 F.sum("l_quantity").alias("sum_qty"))
-            .orderBy("l_returnflag"))
-
-
 def q_range_buckets_per_type(spark, sf_dir):
     """PER-GROUP equi-depth partitioning grid
     (sketchlib/partitioning.py grouped_range_bucket_counts): one KLL
@@ -1803,29 +1761,6 @@ def q_range_buckets_per_type(spark, sf_dir):
                                         k=_nrows(sf_dir, "events") + 1,
                                         salt_buckets=4)
             .orderBy("event_type", "bucket"))
-
-
-def q_skew_join_priority(spark, sf_dir):
-    """Skew-resistant split join (sketchlib/joins.py:skew_split_join):
-    lineitem x orders where the keys the library's own Misra-Gries
-    summary flags as hot take a broadcast hash join (the skewed mass
-    never shuffles) and the cold remainder takes the ordinary shuffle
-    join — the north rule's hot-conversation mitigation applied to
-    joins. Row-identical to the plain join for ANY hot set (the split
-    is a pure partition of the key space); the strict gate aggregates
-    the full joined result so every row counts."""
-    from sketchlib.joins import skew_split_join
-
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_quantity")
-    od = _t(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderpriority")
-    j = skew_split_join(li, od, "l_orderkey", "o_orderkey",
-                        top_k=16, summary_k=1024)
-    return (j.groupBy("o_orderpriority")
-            .agg(F.count("*").alias("n_rows"),
-                 F.sum("l_quantity").alias("sum_qty"))
-            .orderBy("o_orderpriority"))
 
 
 def q_range_join_ship_window(spark, sf_dir):
@@ -1880,76 +1815,6 @@ def q_asof_join_error_click(spark, sf_dir):
                          "timestampdiff(MICROSECOND, asof_ts, ts)")),
                      F.lit(0)).alias("sum_gap_us"))
             .orderBy("user_id"))
-
-
-def q_hll_rollup_docs(spark, sf_dir):
-    """Hypertable rollup (sketchlib/aggregate.py:
-    rollup_grouped_sketches): per-(lang, source) HLLs of distinct doc
-    texts built in ONE scan, then lang-level and grand-total sketches
-    derived by MERGING the child blobs — never rescanning the corpus.
-    Finalized distributed. Strict gate: exact GROUP BY ROLLUP distinct
-    counts (SQL-reproducible) + the 6-sigma within_bound flag on the
-    real HLL estimates at every level."""
-    from functools import partial as _p
-
-    from sketchlib.aggregate import (build_grouped_sketches,
-                                     finalize_grouped,
-                                     rollup_grouped_sketches)
-    from sketchlib.sketches.hll import HyperLogLog
-
-    docs = _t(spark, sf_dir, "documents")
-    keyed = docs.select("lang", "source",
-                        F.xxhash64("text").alias("kh"))
-    grouped = build_grouped_sketches(keyed, ["lang", "source"], "kh",
-                                     _p(HyperLogLog, _HLL_P),
-                                     pre_distinct=True)
-    rolled = rollup_grouped_sketches(grouped, ["lang", "source"])
-    est = finalize_grouped(rolled, Q.hll_estimate, "n_est", "double")
-    exact = (docs.rollup("lang", "source")
-             .agg(F.countDistinct("text").alias("n_distinct")))
-    cond = (est["lang"].eqNullSafe(exact["lang"])
-            & est["source"].eqNullSafe(exact["source"]))
-    return (est.join(exact, cond)
-            .select(est["lang"], est["source"], exact["n_distinct"],
-                    (F.abs(F.col("n_est") - F.col("n_distinct"))
-                     <= F.lit(_HLL_BOUND) * F.col("n_distinct"))
-                    .alias("within_bound"))
-            .orderBy(F.asc_nulls_first("lang"),
-                     F.asc_nulls_first("source")))
-
-
-def q_hll_cube_docs(spark, sf_dir):
-    """GROUP BY CUBE analog (sketchlib/aggregate.py:
-    cube_grouped_sketches): all 2^2 grouping sets of (lang, source)
-    HLLs, every coarser set merged from the finest blobs — one corpus
-    scan. Strict gate like hll_rollup_docs: exact CUBE distinct counts
-    + 6-sigma bound flags."""
-    from functools import partial as _p
-
-    from sketchlib.aggregate import (build_grouped_sketches,
-                                     cube_grouped_sketches,
-                                     finalize_grouped)
-    from sketchlib.sketches.hll import HyperLogLog
-
-    docs = _t(spark, sf_dir, "documents")
-    keyed = docs.select("lang", "source",
-                        F.xxhash64("text").alias("kh"))
-    grouped = build_grouped_sketches(keyed, ["lang", "source"], "kh",
-                                     _p(HyperLogLog, _HLL_P),
-                                     pre_distinct=True)
-    cubed = cube_grouped_sketches(grouped, ["lang", "source"])
-    est = finalize_grouped(cubed, Q.hll_estimate, "n_est", "double")
-    exact = (docs.cube("lang", "source")
-             .agg(F.countDistinct("text").alias("n_distinct")))
-    cond = (est["lang"].eqNullSafe(exact["lang"])
-            & est["source"].eqNullSafe(exact["source"]))
-    return (est.join(exact, cond)
-            .select(est["lang"], est["source"], exact["n_distinct"],
-                    (F.abs(F.col("n_est") - F.col("n_distinct"))
-                     <= F.lit(_HLL_BOUND) * F.col("n_distinct"))
-                    .alias("within_bound"))
-            .orderBy(F.asc_nulls_first("lang"),
-                     F.asc_nulls_first("source")))
 
 
 def _two_refresh_cm_table(spark, sf_dir, prefix: str):
@@ -2326,7 +2191,98 @@ _LANG_PAIRWISE = {
             f"CAST(p.nb - {_N_INTER} AS BIGINT) AS n_only_b")),
 }
 
-_ROWS = {**_POINT_FREQ, **_CODEC_STATS, **_LANG_PAIRWISE}
+
+def _grouping_sets(shape: str, sets):
+    """``(query, oracle)`` for ``GROUP BY {shape} (lang, source)`` over
+    HLLs of distinct doc texts: the (lang, source) sketches come from
+    ONE corpus scan, ``sets`` merges every coarser set from their blobs
+    and the estimates are finalized distributed. Strict gate: exact
+    distinct counts plus the 6-sigma ``within_bound`` flag."""
+    def q(spark, sf_dir):
+        docs = _t(spark, sf_dir, "documents")
+        keys = ["lang", "source"]
+        grouped = build_grouped_sketches(
+            docs.select(*keys, F.xxhash64("text").alias("kh")), keys, "kh",
+            partial(HyperLogLog, _HLL_P), pre_distinct=True)
+        est = finalize_grouped(sets(grouped, keys), Q.hll_estimate,
+                               "n_est", "double")
+        exact = (getattr(docs, shape.lower())(*keys)
+                 .agg(F.countDistinct("text").alias("n_distinct")))
+        return (est.join(exact, [est[k].eqNullSafe(exact[k]) for k in keys])
+                .select(*(est[k] for k in keys), exact["n_distinct"],
+                        (F.abs(F.col("n_est") - F.col("n_distinct"))
+                         <= F.lit(_HLL_BOUND) * F.col("n_distinct"))
+                        .alias("within_bound"))
+                .orderBy(*map(F.asc_nulls_first, keys)))
+    return q, f"""
+SELECT lang, source,
+       CAST(COUNT(DISTINCT text) AS BIGINT) AS n_distinct,
+       TRUE AS within_bound
+FROM documents GROUP BY {shape} (lang, source)
+ORDER BY lang NULLS FIRST, source NULLS FIRST"""
+
+
+# merging child blobs, never rescanning the corpus, is valid because
+# the HLL merge (register max) is order-independent
+_GROUPING_SETS = {
+    # hypertable rollup: lang level and grand total from the finest blobs
+    "hll_rollup_docs": _grouping_sets("ROLLUP", rollup_grouped_sketches),
+    # all 2^2 grouping sets, each merged from the finest blobs
+    "hll_cube_docs": _grouping_sets("CUBE", cube_grouped_sketches),
+}
+
+
+def _fact_join(key: str, join, rows: str):
+    """``(query, oracle)``: ``join(spark, lineitem, orders)`` aggregated
+    to ``(key, n_rows, sum_qty)``, so every kept or dropped row counts.
+    Each join is row-identical to the plain SQL join whose rows the
+    DuckDB FROM clause ``rows`` gives."""
+    def q(spark, sf_dir):
+        j = join(spark, _t(spark, sf_dir, "lineitem"),
+                 _t(spark, sf_dir, "orders"))
+        return (j.groupBy(key)
+                .agg(F.count("*").alias("n_rows"),
+                     F.sum("l_quantity").alias("sum_qty"))
+                .orderBy(key))
+    return q, (f"SELECT {key}, CAST(COUNT(*) AS BIGINT) AS n_rows, "
+               f"SUM(l_quantity) AS sum_qty FROM {rows} "
+               f"GROUP BY {key} ORDER BY {key}")
+
+
+def _with_f_orders(bloom_join):
+    """``bloom_join`` of lineitem with the keys of status-'F' orders."""
+    return lambda spark, li, od: bloom_join(
+        spark, li, "l_orderkey", od.filter(F.col("o_orderstatus") == "F"),
+        "o_orderkey", p=20)
+
+
+_F_KEYS = "(SELECT o_orderkey FROM orders WHERE o_orderstatus = 'F')"
+_FACT_JOINS = {
+    # a broadcast Bloom blob drops non-members BEFORE the exchange
+    # (matches + fp·non-matches shuffle, not the whole fact side); the
+    # exact semi-join on the survivors removes the false positives
+    "bloom_semijoin_lineitem": _fact_join(
+        "l_returnflag", _with_f_orders(J.bloom_semi_join),
+        f"lineitem WHERE l_orderkey IN {_F_KEYS}"),
+    # the Bloom dual (orphans): a filter NO is definite, so most orphans
+    # bypass the join with zero shuffle; only maybes (true members +
+    # fp) take the exact anti-join
+    "bloom_antijoin_lineitem": _fact_join(
+        "l_returnflag", _with_f_orders(J.bloom_anti_join),
+        f"lineitem WHERE l_orderkey NOT IN {_F_KEYS}"),
+    # keys the library's Misra-Gries summary flags as hot take a
+    # broadcast hash join (the skewed mass never shuffles), the rest the
+    # shuffle join; any hot set is a pure partition of the key space
+    "skew_join_priority": _fact_join(
+        "o_orderpriority", lambda spark, li, od: J.skew_split_join(
+            li.select("l_orderkey", "l_quantity"),
+            od.select("o_orderkey", "o_orderpriority"),
+            "l_orderkey", "o_orderkey", top_k=16, summary_k=1024),
+        "lineitem JOIN orders ON l_orderkey = o_orderkey"),
+}
+
+_ROWS = {**_POINT_FREQ, **_CODEC_STATS, **_LANG_PAIRWISE, **_GROUPING_SETS,
+         **_FACT_JOINS}
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -2805,13 +2761,6 @@ WHERE rn <= 50 ORDER BY event_type, event_id"""),
             "SELECT CAST(COUNT(*) AS BIGINT) AS n_join, "
             "TRUE AS within_bound FROM orders "
             "JOIN events ON o_custkey = user_id"),
-        "bloom_semijoin_lineitem": ("""
-SELECT l_returnflag, CAST(COUNT(*) AS BIGINT) AS n_rows,
-       SUM(l_quantity) AS sum_qty
-FROM lineitem
-WHERE l_orderkey IN (SELECT o_orderkey FROM orders
-                     WHERE o_orderstatus = 'F')
-GROUP BY l_returnflag ORDER BY l_returnflag"""),
         "decayed_quantiles_value": (f"""
 WITH lm AS (SELECT MAX(ts) AS m FROM events),
 base AS (SELECT CAST(value AS DOUBLE) AS v,
@@ -2920,18 +2869,6 @@ FROM (SELECT CAST((SELECT COUNT(*) FROM bounds WHERE t.v > b) AS BIGINT)
                AS bucket
       FROM (SELECT l_extendedprice AS v FROM lineitem) t)
 GROUP BY bucket ORDER BY bucket"""),
-        "bloom_antijoin_lineitem": ("""
-SELECT l_returnflag, CAST(COUNT(*) AS BIGINT) AS n_rows,
-       SUM(l_quantity) AS sum_qty
-FROM lineitem
-WHERE l_orderkey NOT IN (SELECT o_orderkey FROM orders
-                         WHERE o_orderstatus = 'F')
-GROUP BY l_returnflag ORDER BY l_returnflag"""),
-        "skew_join_priority": ("""
-SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS n_rows,
-       SUM(l_quantity) AS sum_qty
-FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-GROUP BY o_orderpriority ORDER BY o_orderpriority"""),
         "range_join_ship_window": ("""
 SELECT o_orderpriority,
        CAST(COUNT(*) AS BIGINT) AS n_pairs,
@@ -2952,18 +2889,6 @@ ASOF LEFT JOIN
      (SELECT user_id, ts FROM events WHERE event_type = 'click') c
   ON e.user_id = c.user_id AND e.ts >= c.ts
 GROUP BY e.user_id ORDER BY e.user_id"""),
-        "hll_rollup_docs": ("""
-SELECT lang, source,
-       CAST(COUNT(DISTINCT text) AS BIGINT) AS n_distinct,
-       TRUE AS within_bound
-FROM documents GROUP BY ROLLUP (lang, source)
-ORDER BY lang NULLS FIRST, source NULLS FIRST"""),
-        "hll_cube_docs": ("""
-SELECT lang, source,
-       CAST(COUNT(DISTINCT text) AS BIGINT) AS n_distinct,
-       TRUE AS within_bound
-FROM documents GROUP BY CUBE (lang, source)
-ORDER BY lang NULLS FIRST, source NULLS FIRST"""),
         "incremental_cm_user_freq": (
             "SELECT event_type, user_id, COUNT(*) AS est_count "
             "FROM events GROUP BY 1, 2 ORDER BY 1, 2"),

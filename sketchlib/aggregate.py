@@ -15,7 +15,10 @@ first collapses the keys JVM-side to (key, count) rows and the kernel
 runs one ``update_weighted`` per partition; otherwise ``update`` runs
 once per Arrow batch. Grouped builds (one sketch per key group) go
 through :func:`build_grouped_sketches_multi`, with
-:func:`build_grouped_sketches` as its one-name case. Blobs are folded
+:func:`build_grouped_sketches` as its one-name case. ROLLUP and CUBE
+over a grouped table (:func:`rollup_grouped_sketches`,
+:func:`cube_grouped_sketches`) are one grouping-sets builder: every
+coarser set is merged from the finest level's blobs. Blobs are folded
 everywhere with :func:`sketchlib.sketches.base.fold_blobs`.
 
 Everything stays on the DataFrame/Arrow path, and the fold hop bounds
@@ -26,6 +29,7 @@ sketches the result does not depend on the partitioning.
 
 from __future__ import annotations
 
+from itertools import combinations
 from typing import Callable, Iterator
 
 import numpy as np
@@ -477,13 +481,29 @@ def _merge_to_level(grouped: DataFrame, keys: list[str],
             .drop("name"))
 
 
+def _grouping_sets(grouped: DataFrame, key_cols: list[str],
+                   sets: list[list[str]], tree_width: int) -> DataFrame:
+    """The finest level plus each coarser grouping set in ``sets``,
+    every one merged from the finest level's blobs and NULL-padded to
+    the full key schema."""
+    key_fields = {f.name: f.dataType.simpleString()
+                  for f in grouped.schema if f.name != "sketch"}
+    assert list(key_fields) == key_cols, (list(key_fields), key_cols)
+
+    out = _pad_keys(grouped, key_cols, key_cols, key_fields)
+    for keys in sets:
+        lvl = _merge_to_level(grouped, keys, key_fields, tree_width)
+        out = out.unionByName(_pad_keys(lvl, keys, key_cols, key_fields))
+    return out
+
+
 def rollup_grouped_sketches(grouped: DataFrame,
                             key_cols: list[str],
                             tree_width: int = 8) -> DataFrame:
     """SQL ``ROLLUP`` over an already-built grouped sketch table —
-    the hypertable-rollup pattern: level *i* is produced by MERGING
-    level *i+1*'s blobs (never by rescanning the base data), so a
-    full (k1..kn), (k1..kn-1), …, () hierarchy costs ONE base scan
+    the hypertable-rollup pattern: every coarser level (k1..kn-1), …,
+    (k1), () is produced by MERGING the finest level's blobs (never by
+    rescanning the base data), so a full hierarchy costs ONE base scan
     plus n tiny blob-count shuffles. Requires an order-independent
     merge (HLL max / Bloom OR / CM sum / MinHash trim — every
     registered sketch except the strict sequential kernels), for which
@@ -497,20 +517,8 @@ def rollup_grouped_sketches(grouped: DataFrame,
     oracle. The grand-total level folds through ``tree_width``
     partitions before the final single-task merge, so driver-free
     fan-in stays bounded at any group count."""
-    key_fields = {f.name: f.dataType.simpleString()
-                  for f in grouped.schema if f.name != "sketch"}
-    assert list(key_fields) == key_cols, (list(key_fields), key_cols)
-
-    levels = [_pad_keys(grouped, key_cols, key_cols, key_fields)]
-    cur = grouped
-    for i in range(len(key_cols) - 1, -1, -1):
-        keys = key_cols[:i]
-        cur = _merge_to_level(cur, keys, key_fields, tree_width)
-        levels.append(_pad_keys(cur, keys, key_cols, key_fields))
-    out = levels[0]
-    for lv in levels[1:]:
-        out = out.unionByName(lv)
-    return out
+    sets = [key_cols[:i] for i in range(len(key_cols) - 1, -1, -1)]
+    return _grouping_sets(grouped, key_cols, sets, tree_width)
 
 
 def _pad_keys(df: DataFrame, present: list[str], key_cols: list[str],
@@ -531,17 +539,6 @@ def cube_grouped_sketches(grouped: DataFrame,
     scan; each subset costs one shuffle over |group| blobs, not a
     rescan. Same order-independence requirement and bit-exactness
     guarantee as rollup."""
-    from itertools import combinations
-
-    key_fields = {f.name: f.dataType.simpleString()
-                  for f in grouped.schema if f.name != "sketch"}
-    assert list(key_fields) == key_cols, (list(key_fields), key_cols)
-
-    out = _pad_keys(grouped, key_cols, key_cols, key_fields)
-    for r in range(len(key_cols) - 1, -1, -1):
-        for keys in combinations(key_cols, r):
-            lvl = _merge_to_level(grouped, list(keys), key_fields,
-                                  tree_width)
-            out = out.unionByName(
-                _pad_keys(lvl, list(keys), key_cols, key_fields))
-    return out
+    sets = [list(keys) for r in range(len(key_cols) - 1, -1, -1)
+            for keys in combinations(key_cols, r)]
+    return _grouping_sets(grouped, key_cols, sets, tree_width)

@@ -173,27 +173,13 @@ def minhash_signatures(df: DataFrame | None, n_perm: int = 64,
 
 
 def lsh_candidate_pairs(sigs: DataFrame, bands: int = 16,
-                        id_col: str = "doc_id",
-                        n_perm: int = 64) -> DataFrame:
+                        id_col: str = "doc_id") -> DataFrame:
     """Equi-join matching band buckets: returns distinct
     (id_a, id_b), id_a < id_b. Band keys come precomputed from the
-    signature kernel (``bands`` array column) when available —
-    posexplode + join, no wide hash expressions; otherwise they are
-    derived from the signature array JVM-side."""
-    if "bands" in sigs.columns:
-        banded = sigs.select(id_col,
-                             F.posexplode("bands").alias("band", "key"))
-    else:
-        rows = n_perm // bands
-        band_cols = []
-        for b in range(bands):
-            cols = [F.element_at("sig", b * rows + r + 1)
-                    for r in range(rows)]
-            band_cols.append(F.struct(F.lit(b).alias("band"),
-                                      F.xxhash64(*cols).alias("key")))
-        banded = (sigs.select(id_col,
-                              F.explode(F.array(*band_cols)).alias("bk"))
-                  .select(id_col, "bk.band", "bk.key"))
+    signature kernel (the ``bands`` array column of
+    :func:`minhash_signatures` built with ``bands`` bands) —
+    posexplode + join, no wide hash expressions."""
+    banded = sigs.select(id_col, F.posexplode("bands").alias("band", "key"))
     a = banded.alias("a")
     b = banded.alias("b")
     return (a.join(b, ["band", "key"])
@@ -260,7 +246,7 @@ def minhash_dedup_pairs(df: DataFrame, threshold: float = 0.8,
     sh = shingles(df, shingle_n, id_col, text_col, hashed=True)
     sigs = minhash_signatures(None, n_perm, shingle_n, id_col, text_col,
                               shingle_df=sh, bands=bands)
-    cands = lsh_candidate_pairs(sigs, bands, id_col, n_perm=n_perm)
+    cands = lsh_candidate_pairs(sigs, bands, id_col)
     return jaccard_pairs(df, threshold, shingle_n, id_col, text_col,
                          candidates=cands, shingle_df=sh)
 
@@ -325,14 +311,11 @@ def minhash_dedup_delta(new_docs: DataFrame, band_index: DataFrame,
     Returns (id_a, id_b, jaccard >= threshold), id_a < id_b, same
     contract as minhash_dedup_pairs."""
     sh_new = shingles(new_docs, shingle_n, id_col, text_col, hashed=True)
-    banded_new = minhash_band_index(None, n_perm, bands, shingle_n,
-                                    id_col, text_col, shingle_df=sh_new)
-    a = banded_new.alias("a")
-    b = banded_new.alias("b")
-    nn = (a.join(b, ["band", "key"])
-          .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-          .select(F.col(f"a.{id_col}").alias("id_a"),
-                  F.col(f"b.{id_col}").alias("id_b")))
+    sigs_new = minhash_signatures(None, n_perm, shingle_n, id_col, text_col,
+                                  shingle_df=sh_new, bands=bands)
+    nn = lsh_candidate_pairs(sigs_new, bands, id_col)
+    banded_new = sigs_new.select(id_col,
+                                 F.posexplode("bands").alias("band", "key"))
     n = banded_new.alias("n")
     o = band_index.alias("o")
     no = (n.join(o, ["band", "key"])

@@ -31,15 +31,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
-
-def _parquet_rows(file_dir: str) -> int:
-    total = 0
-    for name in os.listdir(file_dir):
-        if name.endswith(".parquet"):
-            import pyarrow.parquet as pq
-            total += pq.ParquetFile(
-                os.path.join(file_dir, name)).metadata.num_rows
-    return total
+from sketchlib.storage import parquet_num_rows
 
 
 class IcebergishCatalog:
@@ -85,7 +77,7 @@ class IcebergishCatalog:
         df.write.mode("overwrite").parquet(file_dir)
         # row count from the parquet footers (Iceberg gets this from
         # write metrics) — not a second Spark scan of what was written
-        n_rows = _parquet_rows(file_dir)
+        n_rows = parquet_num_rows(file_dir)
 
         # Commit under an exclusive file lock: Iceberg's catalog commit
         # is compare-and-swap on the expected current snapshot; without

@@ -18,7 +18,8 @@ two join problems a 100 TB engine actually has.
    false positives, so the result equals the plain semi-join row for
    row (no false negatives by Bloom construction) — strict oracle.
    This is the sketch-library form of the runtime row-level filtering
-   that engines inject into shuffle joins.
+   that engines inject into shuffle joins. Its dual,
+   :func:`bloom_anti_join`, shares the same pre-filter.
 
 Both compose existing pieces: ``build_sketch`` partial+merge
 aggregation, the broadcast ``probe`` from ``sketchlib.queries``, and
@@ -31,7 +32,7 @@ from __future__ import annotations
 from functools import partial
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sketchlib.aggregate import build_sketch
@@ -185,16 +186,26 @@ def bloom_semi_join(spark: SparkSession, fact: DataFrame, fact_key: str,
     row-identical to the plain semi-join (Bloom never drops a true
     member); the shuffle sees matches + fp·non-matches instead of the
     whole fact table."""
+    maybe_member, dim_keys = _bloom_prefilter(spark, fact_key, dim, dim_key,
+                                              p, nh, seed)
+    return fact.filter(maybe_member).join(dim_keys, on=fact_key,
+                                          how="leftsemi")
+
+
+def _bloom_prefilter(spark: SparkSession, fact_key: str, dim: DataFrame,
+                     dim_key: str, p: int, nh: int, seed: int
+                     ) -> tuple[Column, DataFrame]:
+    """The Bloom pre-filter both Bloom joins share: a boolean probe of
+    ``xxhash64(fact_key)`` against one broadcast Bloom blob built over
+    ``xxhash64(dim_key)`` (false means definitely not in ``dim``), and
+    the distinct dim keys renamed to ``fact_key`` for the exact join
+    that removes the false positives."""
     from sketchlib.sketches.bloom import BloomFilter
 
     bf = build_sketch(dim.select(F.xxhash64(dim_key).alias("kh")), "kh",
                       partial(BloomFilter, p, nh, seed))
-    maybe_member = probe(spark, bf, F.xxhash64(fact_key), "contains",
-                         "boolean")
-    prefiltered = fact.filter(maybe_member)
-    return prefiltered.join(dim.select(F.col(dim_key).alias(fact_key))
-                            .distinct(),
-                            on=fact_key, how="leftsemi")
+    return (probe(spark, bf, F.xxhash64(fact_key), "contains", "boolean"),
+            dim.select(F.col(dim_key).alias(fact_key)).distinct())
 
 
 def hot_keys(df: DataFrame, key_col: str, top_k: int = 32,
@@ -337,15 +348,10 @@ def bloom_anti_join(spark: SparkSession, fact: DataFrame, fact_key: str,
     both paths here preserve that — the definite-orphan branch keeps
     the row unless the constant happens to hit the filter, in which
     case the exact anti-join keeps it."""
-    from sketchlib.sketches.bloom import BloomFilter
-
-    bf = build_sketch(dim.select(F.xxhash64(dim_key).alias("kh")), "kh",
-                      partial(BloomFilter, p, nh, seed))
-    maybe_member = probe(spark, bf, F.xxhash64(fact_key), "contains",
-                         "boolean")
+    maybe_member, dim_keys = _bloom_prefilter(spark, fact_key, dim, dim_key,
+                                              p, nh, seed)
     flagged = fact.withColumn("__maybe", maybe_member)
     definite = flagged.filter(~F.col("__maybe")).drop("__maybe")
     maybes = (flagged.filter(F.col("__maybe")).drop("__maybe")
-              .join(dim.select(F.col(dim_key).alias(fact_key)).distinct(),
-                    on=fact_key, how="left_anti"))
+              .join(dim_keys, on=fact_key, how="left_anti"))
     return definite.unionByName(maybes)

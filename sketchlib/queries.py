@@ -297,7 +297,8 @@ def heavy_hitters_hk(df: DataFrame, key_col: str, k: int,
 
     parts = hashed.mapInPandas(
         partial_build, schema="sketch binary, key string, kh long")
-    parts = parts.persist()
+    # not persisted: the frame returned is lazy, so a cache made here
+    # could never be released; the candidate pass reruns the kernel
     blobs = parts.filter(F.col("sketch").isNotNull()).select("sketch")
     merged = fold_blobs(blobs.toPandas()["sketch"])
     if merged is None:

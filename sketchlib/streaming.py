@@ -7,9 +7,10 @@ include/ccm.h:840-869) is the stream-window gadget this module maps to
 Spark semantics:
 
 - mergeable sketches make streaming trivial: each micro-batch produces
-  per-window partial sketches (the same applyInPandas kernel as batch),
-  and ``foreachBatch`` merges them into a window-keyed store. Late data
-  within the watermark just merges into its window — no special case.
+  per-window partial sketches (the batch grouped builder,
+  ``aggregate.build_grouped_sketches``), and ``foreachBatch`` merges
+  them into a window-keyed store. Late data within the watermark just
+  merges into its window — no special case.
 - exactly-once: the store commit is keyed by (window, epoch); replayed
   epochs overwrite their own partials before the merge, so recovery
   after failure never double-counts.
@@ -22,6 +23,7 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, functions as F
 
+from sketchlib.aggregate import build_grouped_sketches
 from sketchlib.hashing import to_u64
 from sketchlib.sketches.base import deserialize, fold_blobs
 
@@ -65,8 +67,6 @@ def windowed_sketch_sink(store: WindowedSketchStore,
     column cast to double — the path for value-distribution sketches
     (KLL / t-digest / DDSketch) where the magnitude is the datum."""
 
-    import pandas as pd
-
     def per_batch(df: DataFrame, epoch_id: int) -> None:
         datum = (F.xxhash64(key_col) if hash_values
                  else F.col(key_col).cast("double"))
@@ -75,19 +75,10 @@ def windowed_sketch_sink(store: WindowedSketchStore,
             datum.alias("kh")
         ).select(F.date_format("w.start", "yyyy-MM-dd HH:mm:ss")
                   .alias("ws"), "kh")
-
-        def per_window(pdf: pd.DataFrame) -> pd.DataFrame:
-            sk = factory()
-            vals = pdf["kh"]
-            sk.update(to_u64(vals) if hash_values else vals.to_numpy())
-            return pd.DataFrame({"ws": [pdf["ws"].iloc[0]],
-                                 "blob": [sk.to_bytes()]})
-
-        rows = (hashed.groupBy("ws")
-                .applyInPandas(per_window, schema="ws string, blob binary")
-                .collect())
+        rows = build_grouped_sketches(hashed, ["ws"], "kh", factory,
+                                      as_u64=hash_values).collect()
         for r in rows:
-            store.commit(str(r.ws), int(epoch_id), bytes(r.blob))
+            store.commit(str(r.ws), int(epoch_id), bytes(r.sketch))
 
     return per_batch
 

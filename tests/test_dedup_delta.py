@@ -5,7 +5,10 @@ Gates:
 - delta run == full recompute restricted to pairs touching the delta
   (the semantic contract that makes the incremental path trustworthy);
 - with a parquet-backed index, the delta plan never scans the
-  historical corpus file — only the delta and the index tables.
+  historical corpus file — only the delta and the index tables;
+- neither dedup path, nor the other operators that return a lazy frame
+  (``heavy_hitters_hk``, the ``setsim_siblings_langs`` query), leaves
+  a cached frame behind.
 """
 
 from __future__ import annotations
@@ -168,4 +171,36 @@ def test_pairs_leave_no_cached_frames(spark):
     before = jsc.getPersistentRDDs().size()
     for _ in range(2):
         D.minhash_dedup_pairs(docs, THR).collect()
+    assert jsc.getPersistentRDDs().size() == before
+
+
+def test_heavy_hitters_hk_leaves_no_cached_frames(spark):
+    """``heavy_hitters_hk`` also returns a lazy frame: two runs leave
+    the session's persistent RDD count unchanged."""
+    from sketchlib import queries as Q
+
+    ev = spark.read.parquet(SF + "/events.parquet")
+    keyed = ev.select(F.floor(F.sqrt("event_id")).cast("long")
+                      .cast("string").alias("hkey"))
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    for _ in range(2):
+        Q.heavy_hitters_hk(keyed, "hkey", 5, np_bits=8, nh=3).collect()
+    assert jsc.getPersistentRDDs().size() == before
+
+
+def test_setsim_query_leaves_no_cached_frames(spark):
+    """The driver query ``setsim_siblings_langs`` returns a lazy frame:
+    two runs leave the session's persistent RDD count unchanged once
+    ``release_caches`` drops the bounded scoped persist that
+    ``pairwise_grouped`` registers."""
+    import __spark_entry__ as E
+    from sketchlib.cache import release_caches
+
+    jsc = spark.sparkContext._jsc
+    release_caches()
+    before = jsc.getPersistentRDDs().size()
+    for _ in range(2):
+        E.queries()["setsim_siblings_langs"](spark, SF).collect()
+    release_caches()
     assert jsc.getPersistentRDDs().size() == before

@@ -2,19 +2,26 @@
 __spark_entry__ query at a given sf and compare with its DuckDB oracle
 (row count, column names sorted, order-insensitive values).
 
+Every query that runs also prints a ``[SHA256   ]`` line with a short
+digest of its normalized frame, so two checkouts' outputs can be
+compared for frame identity with one ``diff`` of those lines.
+
 Usage: python tools/compare_oracle.py [sf_dir] [query ...]
 """
 
 from __future__ import annotations
 
+import hashlib
 import sys
 import time
+from pathlib import Path
 
 import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+# import the checkout this file is in, so a second clone runs its own code
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
@@ -27,6 +34,13 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
             df[c] = df[c].astype(str)
     rows = df.sort_values(list(df.columns)).reset_index(drop=True)
     return rows
+
+
+def digest(df: pd.DataFrame) -> str:
+    """Short sha256 of the normalized frame as CSV text: its column
+    names and every value, independent of row and column order."""
+    csv = normalize(df).to_csv(index=False).encode()
+    return hashlib.sha256(csv).hexdigest()[:16]
 
 
 def compare(a: pd.DataFrame, b: pd.DataFrame) -> list[str]:
@@ -57,7 +71,7 @@ def main():
 
     import __spark_entry__ as E
     from sketchlib.session import get_spark
-    spark = get_spark("oracle-compare", cpus=16, shuffle_partitions=16)
+    spark = get_spark("oracle-compare", shuffle_partitions=16)
     spark.sparkContext.setLogLevel("ERROR")
 
     con = duckdb.connect()
@@ -79,6 +93,7 @@ def main():
             print(f"[FAIL-RUN ] {name}: {type(ex).__name__}: {ex}")
             continue
         dt = time.time() - t0
+        print(f"[SHA256   ] {name} {digest(got)}")
         sql = oracles.get(name)
         if sql is None:
             print(f"[ROWS-ONLY] {name}: {len(got)} rows  ({dt:.1f}s)")
