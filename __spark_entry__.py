@@ -26,8 +26,10 @@ from operator import methodcaller
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from sketchlib.aggregate import (build_grouped_sketches,
-                                 cube_grouped_sketches, finalize_grouped,
-                                 pairwise_grouped, rollup_grouped_sketches)
+                                 build_grouped_sketches_multi, build_sketch,
+                                 build_sketches, cube_grouped_sketches,
+                                 finalize_grouped, pairwise_grouped,
+                                 rollup_grouped_sketches)
 from sketchlib.sketches.cbf import CountingBloom
 from sketchlib.sketches.cm import CMConfig, CountMin
 from sketchlib.sketches.cml import CountMinLog
@@ -168,15 +170,13 @@ def q_hll_distinct_per_lang(spark, sf_dir):
     finalized DISTRIBUTED (mapInPandas over the grouped blobs — results
     never funnel through the driver, so the same plan holds at 10^5
     groups). Strict gate: exact per-group count + 6-sigma bound flag."""
-    from functools import partial as _p
-
     docs = _t(spark, sf_dir, "documents")
     toks = D.normalized_tokens(docs.select("doc_id", "lang", "text"))
     with_lang = (toks.join(docs.select("doc_id", "lang"), "doc_id")
                  .select("lang", "token", F.xxhash64("token").alias("kh")))
     grouped = build_grouped_sketches(with_lang, ["lang"], "kh",
-                                     _p(HyperLogLog, _HLL_P), salt_buckets=8,
-                                     pre_distinct=True)
+                                     partial(HyperLogLog, _HLL_P),
+                                     salt_buckets=8, pre_distinct=True)
     est = finalize_grouped(grouped, Q.hll_estimate, "n_est", "double")
     exact = (with_lang.groupBy("lang")
              .agg(F.countDistinct("token").alias("n_distinct")))
@@ -293,15 +293,13 @@ def q_mg_top_tokens_per_lang(spark, sf_dir):
     with distributed finalize.  Exact regime (k >= per-language
     distinct => no trim ever fires => every count exact) gives the
     strict window-rank oracle with (count desc, token) tie-break."""
-    from functools import partial as _p
-
     from pyspark.sql import Window
 
     from sketchlib.sketches.mg import MisraGries
 
     wl = _lang_tokens(spark, sf_dir)
     grouped = build_grouped_sketches(wl, ["lang"], "kh",
-                                     _p(MisraGries, 1 << 17),
+                                     partial(MisraGries, 1 << 17),
                                      salt_buckets=8, pre_aggregate=True)
     pairs = finalize_grouped(grouped, _mg_pairs, "pairs",
                              "array<array<bigint>>")
@@ -343,15 +341,12 @@ def q_kll_ks_drift_langs(spark, sf_dir):
     pairs touching the baseline group ('en') via pair_filter — the
     pair set is pruned BEFORE any blob moves (KS is symmetric, so
     either orientation of the pair gives the same statistic)."""
-    from functools import partial as _p
-
-    from sketchlib.aggregate import build_grouped_sketches, pairwise_grouped
     from sketchlib.sketches.kll import KLL
 
     docs = _t(spark, sf_dir, "documents")
     vals = docs.select("lang", F.length("text").cast("double").alias("v"))
     grouped = build_grouped_sketches(vals, ["lang"], "v",
-                                     _p(KLL, 1 << 15), as_u64=False,
+                                     partial(KLL, 1 << 15), as_u64=False,
                                      salt_buckets=4)
     pf = (F.col("key_a") == "en") | (F.col("key_b") == "en")
     pw = pairwise_grouped(grouped, _cmp_ks, "ks double", key_col="lang",
@@ -377,9 +372,6 @@ def q_psi_value_drift(spark, sf_dir):
     blobs — the same bounded fan-in every build path has.  KLL merge
     in the exact regime concatenates buffers and quantile/bucket_counts
     sort, so the result is bit-identical to the two-scan plan."""
-    from functools import partial as _p
-
-    from sketchlib.aggregate import build_grouped_sketches
     from sketchlib.sketches.kll import KLL
     from sketchlib.sketches.base import deserialize
 
@@ -397,7 +389,7 @@ def q_psi_value_drift(spark, sf_dir):
     vals = (ev.filter(F.col("ts").isNotNull())
             .select((F.dayofmonth("ts") <= 15).alias("old"),
                     F.col("value").cast("double").alias("v")))
-    grouped = build_grouped_sketches(vals, ["old"], "v", _p(KLL, k),
+    grouped = build_grouped_sketches(vals, ["old"], "v", partial(KLL, k),
                                      as_u64=False, salt_buckets=4)
     blobs = {bool(r["old"]): bytes(r["sketch"])
              for r in grouped.collect()}
@@ -473,14 +465,10 @@ def q_hll_setops_langs(spark, sf_dir):
     """HLL set algebra (hll.h:1124-1140 union, :636-689 joint MLE):
     pairwise union/intersection estimates over per-language token HLLs,
     gated by exact counts + 6-sigma-of-union bound flags."""
-    from functools import partial as _p
-
-    from sketchlib.aggregate import build_grouped_sketches, pairwise_grouped
-
     with_lang = _lang_tokens(spark, sf_dir)
     grouped = build_grouped_sketches(with_lang, ["lang"], "kh",
-                                     _p(HyperLogLog, _HLL_P), salt_buckets=8,
-                                     pre_distinct=True)
+                                     partial(HyperLogLog, _HLL_P),
+                                     salt_buckets=8, pre_distinct=True)
     # pairwise set ops computed distributed (pairwise_grouped): the
     # union/joint-MLE runs on executors per pair, no blob collect
     est = (pairwise_grouped(grouped, _cmp_hll_setops,
@@ -503,16 +491,14 @@ def q_kll_quantiles_per_lang(spark, sf_dir):
     """Grouped quantiles through the salted grouped-sketch path +
     distributed finalize: one KLL per language over length(text), exact
     regime (capacity >= group size)."""
-    from functools import partial as _p
-
     from sketchlib.sketches.kll import KLL
 
     docs = _t(spark, sf_dir, "documents")
     vals = docs.select("lang", F.length("text").cast("double").alias("v"))
     grouped = build_grouped_sketches(vals, ["lang"], "v",
-                                     _p(KLL, 1 << 15), as_u64=False,
+                                     partial(KLL, 1 << 15), as_u64=False,
                                      salt_buckets=4)
-    est = finalize_grouped(grouped, _p(Q.quantiles_list, _QS),
+    est = finalize_grouped(grouped, partial(Q.quantiles_list, _QS),
                            "qvals", "array<double>")
     qarr = F.array(*[F.lit(float(q)) for q in _QS])
     return (est.select("lang", F.posexplode("qvals").alias("i", "value"))
@@ -570,9 +556,6 @@ def q_cardinality_siblings_shingles(spark, sf_dir):
     deduped key stream (JVM-side distinct, |distinct| kernel rows).
     Output (estimator, n_distinct, within_bound); the oracle asserts
     every flag."""
-    from functools import partial as _p
-
-    from sketchlib.aggregate import build_sketch, build_sketches
     from sketchlib.sketches.gadgets import HyperBitBit, ModSketch
     from sketchlib.sketches.pcsa import PCSA
     from sketchlib.sketches.setsketch import SetSketch
@@ -586,9 +569,9 @@ def q_cardinality_siblings_shingles(spark, sf_dir):
     # reference defines none, hbb.h), so it runs as one sequential
     # kernel where its factor band holds
     sketches = build_sketches(keys, "kh", {
-        "pcsa": _p(PCSA, 256),
-        "setsketch": _p(SetSketch, 12),
-        "modsketch": _p(ModSketch, 64),
+        "pcsa": partial(PCSA, 256),
+        "setsketch": partial(SetSketch, 12),
+        "modsketch": partial(ModSketch, 64),
     })
     sketches["hyperbitbit"] = build_sketch(keys, "kh", HyperBitBit,
                                            kernel_partitions=1)
@@ -631,10 +614,6 @@ def q_setsim_siblings_langs(spark, sf_dir):
     (bbmh.h): pairwise Jaccard between per-language shingle sets,
     gated by the exact (n_inter, n_union) pair counts + per-estimator
     6-sigma bound flags."""
-    from functools import partial as _p
-
-    from sketchlib.aggregate import (build_grouped_sketches_multi,
-                                     pairwise_grouped)
     from sketchlib.sketches.bbmh import OnePermMinHash
     from sketchlib.sketches.hmh import HyperMinHash
 
@@ -645,8 +624,8 @@ def q_setsim_siblings_langs(spark, sf_dir):
     # pairwise compare is distributed, stratified by estimator name
     # (block_cols) so pairs only form within an estimator
     with_lang = _lang_shingles(spark, sf_dir)
-    factories = {"hyperminhash": _p(HyperMinHash, 12, 10),
-                 "onepermminhash": _p(OnePermMinHash, 10)}
+    factories = {"hyperminhash": partial(HyperMinHash, 12, 10),
+                 "onepermminhash": partial(OnePermMinHash, 10)}
     grouped = build_grouped_sketches_multi(with_lang, ["lang"], "kh",
                                            factories, salt_buckets=8,
                                            pre_distinct=True)
@@ -676,7 +655,6 @@ def q_cws_weighted_sim_langs(spark, sf_dir):
     import numpy as _np
     import pandas as _pd
 
-    from sketchlib.aggregate import pairwise_grouped
     from sketchlib.sketches.cws import CWSSignature
 
     with_lang = _lang_tokens(spark, sf_dir)
@@ -1286,9 +1264,6 @@ def q_fd_gram_embeddings(spark, sf_dir):
     bit-for-bit (the KLL delta>=n pattern). The lossy-regime bound
     ||A^T A - B^T B||_2 <= ||A||_F^2/ell is property-tested
     (tests/test_fd.py). Returns the upper triangle (i, j, g)."""
-    from functools import partial as _partial
-
-    from sketchlib.aggregate import build_sketch
     from sketchlib.sketches.fd import FrequentDirections
 
     emb = _t(spark, sf_dir, "embeddings")
@@ -1296,7 +1271,7 @@ def q_fd_gram_embeddings(spark, sf_dir):
     q = emb.select(F.transform(F.col("embedding").cast("array<double>"),
                                lambda x: F.floor(x * 1000)
                                .cast("double")).alias("qv"))
-    fd = build_sketch(q, "qv", _partial(FrequentDirections, n, 64),
+    fd = build_sketch(q, "qv", partial(FrequentDirections, n, 64),
                       as_u64=False)
     G = fd.gram()
     rows = [(i, j, float(G[i, j]))
@@ -1313,8 +1288,6 @@ def q_fd_gram_per_label(spark, sf_dir):
     gram entry. STRICT gate: ell is sized so no per-group shrink
     fires at the gating scale, and the floor-quantized entries make
     both outputs exact integer sums (order-independent)."""
-    from functools import partial as _partial
-
     from sketchlib.sketches.fd import FrequentDirections, fd_trace_g01
 
     emb = _t(spark, sf_dir, "embeddings")
@@ -1323,7 +1296,7 @@ def q_fd_gram_per_label(spark, sf_dir):
                                lambda x: F.floor(x * 1000)
                                .cast("double")).alias("qv"))
     g = build_grouped_sketches(q, ["label"], "qv",
-                               _partial(FrequentDirections, 256, 64),
+                               partial(FrequentDirections, 256, 64),
                                as_u64=False)
     out = finalize_grouped(g, fd_trace_g01, "tg", "array<double>")
     return (out.select("label",
@@ -1594,8 +1567,6 @@ def q_decayed_top_users_per_type(spark, sf_dir):
     one shuffle bounded by |distinct (type, user)|, MG summaries merged
     across salt buckets, DISTRIBUTED finalize. Exact regime + integral
     weights => strict window-rank oracle."""
-    from functools import partial as _p
-
     from pyspark.sql import Window
 
     from sketchlib.decay import decay_weight_col
@@ -1607,7 +1578,7 @@ def q_decayed_top_users_per_type(spark, sf_dir):
     src = ev.select("event_type", "user_id",
                     F.xxhash64("user_id").alias("kh"), w.alias("__w"))
     grouped = build_grouped_sketches(src, ["event_type"], "kh",
-                                     _p(MisraGries, 1 << 14),
+                                     partial(MisraGries, 1 << 14),
                                      salt_buckets=8, pre_aggregate=True,
                                      weight_col="__w")
     pairs = finalize_grouped(grouped, _mg_pairs, "pairs",
@@ -1642,12 +1613,10 @@ def q_decayed_quantiles_value(spark, sf_dir):
     over |distinct values|) exists FOR THE GATE; the production
     answer at 10^12 rows is the DD estimate alone — blob-sized state,
     pre-aggregated build, no global sort."""
-    from functools import partial as _p
     import math
 
     from pyspark.sql import Window
 
-    from sketchlib.aggregate import build_sketch
     from sketchlib.decay import decay_weight_col
     from sketchlib.sketches.dd import DDSketch
 
@@ -1659,7 +1628,7 @@ def q_decayed_quantiles_value(spark, sf_dir):
 
     alpha = 0.01
     dd = build_sketch(base.select("v", "w"), "v",
-                      _p(DDSketch, alpha, 4096),
+                      partial(DDSketch, alpha, 4096),
                       as_u64=False, pre_aggregate=True, weight_col="w")
 
     agg = base.groupBy("v").agg(F.sum("w").alias("w"))

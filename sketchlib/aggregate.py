@@ -7,7 +7,8 @@ Every ungrouped build goes through :func:`build_sketches`, which makes
 one sketch per name over the same key column in one scan:
 
     keys DF ──mapInPandas──▶ one (name, blob) row per name per partition
-            ──repartition(tree_width) + mapInPandas──▶ folded blobs
+            [──repartition(tree_width) + mapInPandas──▶ folded blobs,
+             only when there can be more than tree_width partitions]
             ──Arrow collect──▶ driver folds them per name
 
 :func:`build_sketch` is its one-name case. ``pre_aggregate=True``
@@ -21,10 +22,11 @@ over a grouped table (:func:`rollup_grouped_sketches`,
 coarser set is merged from the finest level's blobs. Blobs are folded
 everywhere with :func:`sketchlib.sketches.base.fold_blobs`.
 
-Everything stays on the DataFrame/Arrow path, and the fold hop bounds
-the driver's fan-in to ``tree_width`` blobs per name at any partition
-count. Merges are associative and commutative, so for order-independent
-sketches the result does not depend on the partitioning.
+Everything stays on the DataFrame/Arrow path, and the driver folds at
+most ``tree_width`` blobs per name wherever the kernel's partition
+count is known (see :func:`build_sketches`). Merges are associative
+and commutative, so for order-independent sketches the result does not
+depend on the partitioning.
 """
 
 from __future__ import annotations
@@ -97,9 +99,18 @@ def build_sketches(df: DataFrame, col: str,
     one hash aggregate (the hook for time-decayed frequency,
     sketchlib/decay.py); weights must be integral.
 
-    ``kernel_partitions`` repartitions the kernel's input; when it is
-    at most ``tree_width`` the round-robin fold hop is skipped and the
-    driver folds the partials directly.
+    The kernel emits one blob per name per partition. They pass
+    through a ``repartition(tree_width)`` fold stage only when there can
+    be more than ``tree_width`` of them; otherwise the driver folds them
+    directly. The bound is ``kernel_partitions`` (which repartitions the
+    kernel's input) when given, else with ``pre_aggregate`` the
+    aggregate's exchange width: AQE's initial partition number when
+    set, else ``spark.sql.shuffle.partitions`` (AQE only coalesces
+    below it). A raw build over a scan keeps the fold stage. Catalyst
+    adds no exchange when ``df`` is already hash- or range-partitioned
+    on ``col``, so the kernel keeps ``df``'s own partition count; pass
+    ``kernel_partitions`` as the bound there, or the driver folds one
+    blob per input partition.
     """
     if weight_col is not None and not pre_aggregate:
         raise ValueError("weight_col requires pre_aggregate=True")
@@ -132,7 +143,12 @@ def build_sketches(df: DataFrame, col: str,
                             "sketch": [sk.to_bytes() for sk in sks]})
 
     blobs = src.mapInPandas(kernel, schema=_NAMED)
-    if kernel_partitions is None or kernel_partitions > tree_width:
+    bound = kernel_partitions
+    if bound is None and pre_aggregate:
+        # Spark's own width rule for the aggregate's exchange
+        bound = (df.sparkSession._jsparkSession.sessionState().conf()
+                 .numShufflePartitions())
+    if bound is None or bound > tree_width:
         blobs = (blobs.repartition(tree_width)
                  .mapInPandas(_fold_named, schema=_NAMED))
     out = {name: fold_blobs(grp)

@@ -172,8 +172,7 @@ def minhash_signatures(df: DataFrame | None, n_perm: int = 64,
             .mapInPandas(merge_partition, schema=schema))
 
 
-def lsh_candidate_pairs(sigs: DataFrame, bands: int = 16,
-                        id_col: str = "doc_id") -> DataFrame:
+def lsh_candidate_pairs(sigs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Equi-join matching band buckets: returns distinct
     (id_a, id_b), id_a < id_b. Band keys come precomputed from the
     signature kernel (the ``bands`` array column of
@@ -246,7 +245,7 @@ def minhash_dedup_pairs(df: DataFrame, threshold: float = 0.8,
     sh = shingles(df, shingle_n, id_col, text_col, hashed=True)
     sigs = minhash_signatures(None, n_perm, shingle_n, id_col, text_col,
                               shingle_df=sh, bands=bands)
-    cands = lsh_candidate_pairs(sigs, bands, id_col)
+    cands = lsh_candidate_pairs(sigs, id_col)
     return jaccard_pairs(df, threshold, shingle_n, id_col, text_col,
                          candidates=cands, shingle_df=sh)
 
@@ -313,7 +312,7 @@ def minhash_dedup_delta(new_docs: DataFrame, band_index: DataFrame,
     sh_new = shingles(new_docs, shingle_n, id_col, text_col, hashed=True)
     sigs_new = minhash_signatures(None, n_perm, shingle_n, id_col, text_col,
                                   shingle_df=sh_new, bands=bands)
-    nn = lsh_candidate_pairs(sigs_new, bands, id_col)
+    nn = lsh_candidate_pairs(sigs_new, id_col)
     banded_new = sigs_new.select(id_col,
                                  F.posexplode("bands").alias("band", "key"))
     n = banded_new.alias("n")

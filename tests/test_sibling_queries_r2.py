@@ -175,3 +175,61 @@ def test_multi_sketch_build_bit_exact(spark):
         got = build_sketches(empty, "kh", factories, **kw)
         for name, fac in factories.items():
             assert got[name].to_bytes() == fac().to_bytes(), (name, kw)
+
+
+def test_pre_aggregated_build_skips_fold_stage_within_tree_width(
+        spark, monkeypatch):
+    """A pre-aggregated build whose aggregate exchange has at most
+    ``tree_width`` partitions hands the kernel's blobs straight to the
+    driver: one stage fewer than with a wider exchange, the driver
+    still folds at most ``tree_width`` blobs per name either way, and
+    the (order-free) plain CM bytes do not depend on the route."""
+    from functools import partial
+
+    import sketchlib.aggregate as agg
+    from sketchlib.sketches.cm import CMConfig, CountMin
+
+    df = (spark.range(50_000)
+          .select(F.xxhash64((F.col("id") % 7000).cast("string"))
+                  .alias("kh"))
+          .repartition(8))
+    factory = partial(CountMin, CMConfig(14, 3, 7, conservative=False))
+    fanin: list[int] = []
+    real_fold = agg.fold_blobs
+
+    def spy(blobs, acc=None):
+        fanin.append(len(blobs))
+        return real_fold(blobs, acc)
+
+    monkeypatch.setattr(agg, "fold_blobs", spy)
+    sc = spark.sparkContext
+
+    def build(group: str) -> tuple[bytes, int]:
+        fanin.clear()
+        sc.setJobGroup(group, group)
+        try:
+            blob = agg.build_sketch(df, "kh", factory,
+                                    pre_aggregate=True).to_bytes()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+        # each AQE job re-lists its parent stages as skipped ones under
+        # new ids, so count only the stages that ran tasks
+        tracker = sc.statusTracker()
+        ran = sum(1 for j in tracker.getJobIdsForGroup(group)
+                  for s in tracker.getJobInfo(j).stageIds
+                  if tracker.getStageInfo(s).numCompletedTasks)
+        assert fanin and max(fanin) <= 8, (group, fanin)
+        return blob, ran
+
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
+    narrow, narrow_stages = build("fold-hop-8")
+    spark.conf.set("spark.sql.shuffle.partitions", "32")
+    try:
+        wide, wide_stages = build("fold-hop-32")
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", "8")
+    one_task = agg.build_sketch(df, "kh", factory, pre_aggregate=True,
+                                kernel_partitions=1).to_bytes()
+    assert narrow == wide == one_task
+    assert narrow_stages == wide_stages - 1, (narrow_stages, wide_stages)
