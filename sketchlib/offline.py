@@ -22,26 +22,30 @@ Spark. Each round is one pass over the input (OCM: two from round 1):
       partials merge core by sum, collision by max. Order-dependent like
       conservative CM; keeps est >= true.
 
-A build runs in one of three ways:
+A pre-aggregated build without a checkpoint first runs one bounded
+Spark job over its (key, count) table. The job's one task reads at
+most one row more than it may take, and the table's size picks the
+rung:
 
-  driver-local: a pre-aggregated (key, count) table of at most
-    ``local_threshold`` rows is collected and the round loop
-    (:func:`_build_local_weighted`) runs on the driver;
-  one task: a larger pre-aggregated table whose capped task count is
-    one runs that same round loop inside one ``mapInPandas`` task and
-    returns the final state as one blob, so all rounds are one Spark
-    job;
-  per-pass jobs: everything else (raw token input, more than one
-    capped task, a checkpointed build) runs each pass as one Spark job.
-    The driver broadcasts the round state, every partition builds a
-    partial, and the partials fold through ``fold_blobs`` (collision
-    flags by OR). With a checkpoint store every completed pass commits
-    a snapshot with per-partition lineage, and a rerun resumes from the
-    latest committed pass.
+  driver: a table of at most ``local_threshold`` rows comes back as
+    keys and counts, and the round loop (:func:`_build_local_weighted`)
+    runs on the driver;
+  one task: a table of at most one task's row cap runs that same
+    round loop inside the task, which returns the final state as one
+    blob. Either way the build is the aggregate's map stage plus this
+    one task, and counts nothing up front;
+  per-pass jobs: a table past both, a raw token input and a
+    checkpointed build run each pass as one Spark job. The driver
+    broadcasts the round state, every partition builds a partial, and
+    the partials fold through ``fold_blobs`` (collision flags by OR).
+    With a checkpoint store every completed pass commits a snapshot
+    with per-partition lineage, and a rerun resumes from the latest
+    committed pass.
 
 The round loop hashes and wave-schedules its keys once
-(``OfflineCountMin.plan``) and applies that plan every round. On a
-one-partition input all three give the same bytes.
+(``OfflineCountMin.plan``) and applies that plan every round, to the
+touched cells only while the keys are sparse in the tables. On a
+one-partition input all three rungs give the same bytes.
 """
 
 from __future__ import annotations
@@ -56,7 +60,7 @@ from pyspark.sql import DataFrame
 from sketchlib.checkpoint_io import CheckpointStore, Snapshot, sketch_fill_metrics
 from sketchlib.hashing import to_u64
 from sketchlib.sketches.base import fold_blobs
-from sketchlib.sketches.cm import CMConfig, OfflineCountMin
+from sketchlib.sketches.cm import CMConfig, KeyPlan, OfflineCountMin
 
 
 def _config_key(cfg: CMConfig, rounds: int) -> str:
@@ -174,15 +178,33 @@ def _run_pass(df: DataFrame, col: str, cfg: CMConfig, kind: str,
     return state, lineage
 
 
-def _build_local_weighted(pdfs, col: str, cfg: CMConfig,
-                          rounds: int) -> OfflineCountMin:
-    """The round loop over a pre-aggregated (key, count) table given as
-    pandas frames. The keys are hashed and wave-scheduled once and that
+def _build_local_weighted(vals: np.ndarray, weights: np.ndarray,
+                          cfg: CMConfig, rounds: int) -> OfflineCountMin:
+    """The round loop over a pre-aggregated table's uint64 keys and
+    int64 counts. The keys are hashed and wave-scheduled once and that
     plan is applied every round. The batch kernels are order-independent
     over a batch, so the result is bit-identical to a one-partition
-    per-pass build."""
-    state = OfflineCountMin(cfg)
-    plan = state.plan(*_concat(pdfs, col, True))
+    per-pass build.
+
+    While there are at most a third as many keys as a row has cells
+    (so they touch about 28% of the cells or fewer), the rounds run on
+    compact tables of the touched cells: every kernel indexes the
+    tables only through ``plan.flat`` and the waves depend only on
+    which cells are equal, so renumbering the touched cells gives the
+    same values, scattered into the full state once at the end. With
+    more keys the renumbering costs more than the smaller tables save
+    (BENCH/BASELINE.md)."""
+    full = state = OfflineCountMin(cfg)
+    plan = full.plan(vals, weights)
+    if plan.counts.size <= cfg.width // 3:
+        touched = np.zeros(full.core.size, bool)
+        touched[plan.flat] = True
+        cells = np.flatnonzero(touched)
+        ids = np.empty(full.core.size, np.int32)
+        ids[cells] = np.arange(cells.size, dtype=np.int32)
+        state = OfflineCountMin(cfg, np.zeros((1, cells.size), np.uint64),
+                                np.zeros((1, cells.size), np.int32))
+        plan = KeyPlan(plan.counts, ids[plan.flat].astype(np.int64))
     for r in range(rounds):
         if not cfg.conservative and r > 0:
             flags = state.apply_collisions(plan, r, state.core,
@@ -195,21 +217,69 @@ def _build_local_weighted(pdfs, col: str, cfg: CMConfig,
             state.apply_count_collision(plan, r, rounds)
         else:
             state.apply_count(plan)
-    return state
+    if state is not full:
+        full.core.reshape(-1)[cells] = state.core.reshape(-1)
+        full.collision.reshape(-1)[cells] = state.collision.reshape(-1)
+    return full
 
 
-def _build_one_task(df: DataFrame, col: str, cfg: CMConfig,
-                    rounds: int) -> OfflineCountMin:
-    """:func:`_build_local_weighted` inside one ``mapInPandas`` task
-    over a one-partition (key, count) table: one Spark job whose one
-    row is the final state."""
+# a task's row cap never falls below this, however small the sketch
+_TASK_ROWS_FLOOR = 500_000
+
+
+def _rows_per_task(cfg: CMConfig) -> int:
+    """Rows per task that keep a task's kernel work comparable to the
+    one full sketch blob it ships (8B core + 4B collision per cell)."""
+    return max(_TASK_ROWS_FLOOR, (cfg.nh << cfg.np_bits) // 4)
+
+
+def _build_bounded(grouped: DataFrame, col: str, cfg: CMConfig,
+                   rounds: int,
+                   local_threshold: int) -> OfflineCountMin | None:
+    """Build from the whole (key, count) table in one Spark job, or
+    return ``None`` when the table has more rows than both
+    ``local_threshold`` and one task's row cap (:func:`_rows_per_task`;
+    no cap on a one-core session, where per-pass jobs would run one
+    task anyway).
+
+    The job's one task sees at most one row past that bound
+    (``limit``); AQE drops the limit at runtime once the aggregate's
+    map stage has counted fewer rows, and ``coalesce(1)`` keeps the
+    task single when it does. A table of at most ``local_threshold``
+    rows comes back as keys and counts and the round loop runs on the
+    driver; a larger one runs it inside the task, which returns the
+    final state as one blob."""
+    sc = grouped.sparkSession.sparkContext
+    cap = None if sc.defaultParallelism <= 1 else _rows_per_task(cfg)
+
     def task(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        sk = _build_local_weighted(batches, col, cfg, rounds)
-        yield pd.DataFrame({"payload": [sk.to_bytes()]})
+        # read the input to its end even when it does not fit: a task
+        # that returns early costs its Python worker
+        vals, w = _concat(batches, col, True)
+        if vals.size <= local_threshold:
+            payload = vals.tobytes() + w.tobytes()
+        elif cap is None or vals.size <= cap:
+            payload = _build_local_weighted(vals, w, cfg, rounds).to_bytes()
+        else:
+            payload = None  # did not fit
+        yield pd.DataFrame({"rows": [vals.size], "payload": [payload]})
 
-    blobs = df.mapInPandas(task, schema="payload binary").toPandas()
+    if cap is not None:
+        grouped = grouped.limit(max(cap, local_threshold) + 1)
+    out = (grouped.coalesce(1)
+                  .mapInPandas(task, schema="rows long, payload binary")
+                  .toPandas())
     # an empty table can have no partition, so no task and no row
-    return fold_blobs(blobs["payload"]) or OfflineCountMin(cfg)
+    if out.empty:
+        return OfflineCountMin(cfg)
+    n, payload = int(out["rows"][0]), out["payload"][0]
+    if payload is None:
+        return None
+    if n <= local_threshold:
+        kw = np.frombuffer(payload, np.uint64).reshape(2, n)
+        return _build_local_weighted(kw[0], kw[1].view(np.int64), cfg,
+                                     rounds)
+    return OfflineCountMin.from_bytes(payload)
 
 
 def build_offline(df: DataFrame, col: str, cfg: CMConfig, rounds: int,
@@ -225,20 +295,20 @@ def build_offline(df: DataFrame, col: str, cfg: CMConfig, rounds: int,
     to an uninterrupted run — tested). A checkpointed build always runs
     per-pass jobs, because it must commit after every pass.
 
-    ``pre_aggregate=True`` is the scale path: the (token, count) table
-    is computed ONCE by a JVM hash aggregate and persisted, so no round
-    re-scans the raw stream. Without a checkpoint the round loop then
-    runs where it is cheapest: on the driver when the table has at
-    most ``local_threshold`` rows (the broadcast-threshold analog),
-    else inside one Spark task when the capped task count is one, else
-    as one Spark job per pass.
+    ``pre_aggregate=True`` is the scale path: a JVM hash aggregate
+    computes the (token, count) table, so no round re-scans the raw
+    stream. Without a checkpoint one bounded Spark job reads the table
+    and the round loop runs where it is cheapest: on the driver when
+    the table has at most ``local_threshold`` rows (the
+    broadcast-threshold analog; ``0`` skips this rung), else inside
+    that job's one task when it has at most one task's row cap, else
+    as one Spark job per pass over the persisted table.
     """
     store = CheckpointStore(checkpoint_dir) if checkpoint_dir else None
     key = _config_key(cfg, rounds)
     state = OfflineCountMin(cfg)
     weighted = False
     persisted = None
-    n_distinct = None
     if pre_aggregate:
         from pyspark.sql import functions as F
         df = (df.select(col).groupBy(col)
@@ -246,22 +316,19 @@ def build_offline(df: DataFrame, col: str, cfg: CMConfig, rounds: int,
         weighted = True
 
     def materialize(grouped):
-        # persist the weighted key table and cap the per-pass task
-        # count. Partial-blob economics: every map task ships ONE full
-        # sketch blob (8B core + 4B collision per cell) through the
-        # fold, and AQE cannot re-coalesce a cached plan's partitions
-        # (canChangeCachedPlanOutputPartitioning=false), so the
-        # weighted table keeps all shuffle partitions — measured at
-        # sf0.1 that is 32 tasks x 84MB of payload per pass for
-        # microseconds of kernel work. Cap tasks so per-task kernel
-        # work (~rows) stays comparable to the blob each task adds.
-        nonlocal persisted, n_distinct
+        # persist the weighted key table for the per-pass jobs and cap
+        # their task count. Partial-blob economics: every map task ships
+        # ONE full sketch blob through the fold, and AQE cannot
+        # re-coalesce a cached plan's partitions
+        # (canChangeCachedPlanOutputPartitioning=false), so the weighted
+        # table keeps all shuffle partitions — measured at sf0.1 that is
+        # 32 tasks x 84MB of payload per pass for microseconds of kernel
+        # work. Cap tasks at _rows_per_task rows each.
+        nonlocal persisted
         persisted = grouped.persist()
         n_distinct = persisted.count()  # materializes the persist
-        blob_cells = cfg.nh << cfg.np_bits
-        rows_per_task = max(500_000, blob_cells // 4)
         k = min(int(grouped.sparkSession.sparkContext.defaultParallelism),
-                max(1, -(-n_distinct // rows_per_task)))
+                max(1, -(-n_distinct // _rows_per_task(cfg))))
         if k < persisted.rdd.getNumPartitions():
             return persisted.coalesce(k)
         return persisted
@@ -277,12 +344,9 @@ def build_offline(df: DataFrame, col: str, cfg: CMConfig, rounds: int,
 
     try:
         if pre_aggregate and store is None:
-            df = materialize(df)
-            if local_threshold > 0 and n_distinct <= local_threshold:
-                return _build_local_weighted([persisted.toPandas()], col,
-                                             cfg, rounds)
-            if df.rdd.getNumPartitions() <= 1:
-                return _build_one_task(df, col, cfg, rounds)
+            sk = _build_bounded(df, col, cfg, rounds, local_threshold)
+            if sk is not None:
+                return sk
         for r, kind in passes():
             snap_id = f"{key}_r{r}_{kind}"
             if store is not None:

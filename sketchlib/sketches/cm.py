@@ -151,7 +151,7 @@ _SPARSE_BIT = 0x80
 
 
 def _pack_u64(arr: np.ndarray) -> tuple[int, bytes]:
-    """Serialize a uint64-semantics array compactly.
+    """Serialize a nonnegative integer array (uint64 or int32) compactly.
 
     Two layers, both measured to matter for merge traffic:
     - narrowest lossless integer width (partial counters are tiny);
@@ -169,14 +169,14 @@ def _pack_u64(arr: np.ndarray) -> tuple[int, bytes]:
     sparse_bytes = nz.size * (8 + np.dtype(dt).itemsize) + 8
     if sparse_bytes < dense_bytes:
         payload = (struct.pack("<Q", nz.size) + nz.tobytes()
-                   + flat[nz].astype(dt).tobytes())
+                   + flat[nz].astype(dt, copy=False).tobytes())
         return code | _SPARSE_BIT, payload
-    return code, flat.astype(dt).tobytes()
+    return code, flat.astype(dt, copy=False).tobytes()
 
 
 def _unpack_u64(code: int, data: bytes, offset: int, count: int,
-                shape) -> tuple[np.ndarray, int]:
-    """Returns (array, bytes consumed)."""
+                shape, dtype=_U64) -> tuple[np.ndarray, int]:
+    """Returns (array of ``dtype``, bytes consumed)."""
     dt = _CODE_DTYPE[code & 0x03]
     if code & _SPARSE_BIT:
         (nnz,) = struct.unpack_from("<Q", data, offset)
@@ -184,12 +184,12 @@ def _unpack_u64(code: int, data: bytes, offset: int, count: int,
                             count=nnz)
         vals = np.frombuffer(data, dtype=dt,
                              offset=offset + 8 + nnz * 8, count=nnz)
-        out = np.zeros(count, dtype=_U64)
+        out = np.zeros(count, dtype=dtype)
         out[idx] = vals
         used = 8 + nnz * (8 + np.dtype(dt).itemsize)
         return out.reshape(shape), used
     arr = np.frombuffer(data, dtype=dt, offset=offset, count=count)
-    return arr.astype(_U64).reshape(shape), count * np.dtype(dt).itemsize
+    return arr.astype(dtype).reshape(shape), count * np.dtype(dt).itemsize
 
 
 class CountMin:
@@ -606,7 +606,7 @@ class OfflineCountMin:
         code, payload = _pack_u64(self.core)
         # collision values are round numbers (tiny, mostly zero early)
         assert self.collision.min() >= 0
-        ccode, cpayload = _pack_u64(self.collision.astype(_U64))
+        ccode, cpayload = _pack_u64(self.collision)
         buf.write(self.MAGIC)
         buf.write(struct.pack("<BIIQBBB", 3, c.np_bits, c.nh, c.seed,
                               1 if c.conservative else 0, code, ccode))
@@ -624,8 +624,9 @@ class OfflineCountMin:
         nh_o, w = cfg.nh_odd, cfg.width
         core, used = _unpack_u64(code, data, off, nh_o * w, (nh_o, w))
         off += used
-        collision, _ = _unpack_u64(ccode, data, off, nh_o * w, (nh_o, w))
-        return cls(cfg, core, collision.astype(np.int32))
+        collision, _ = _unpack_u64(ccode, data, off, nh_o * w, (nh_o, w),
+                                   np.int32)
+        return cls(cfg, core, collision)
 
     # ------------------------------------------- reference interchange IO
     def save_reference(self, path: str) -> None:
@@ -647,4 +648,4 @@ class OfflineCountMin:
         cfg = CMConfig(np_bits, nh, seed, conservative)
         w = 1 << np_bits
         return cls(cfg, core.astype(_U64).reshape(nh, w),
-                   collision.astype(np.int32).reshape(nh, w))
+                   collision.reshape(nh, w))

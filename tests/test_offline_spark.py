@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
 
@@ -9,7 +10,8 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from sketchlib.offline import build_offline
+from sketchlib import offline
+from sketchlib.offline import _build_local_weighted, build_offline
 from sketchlib.sketches.cm import CMConfig, OfflineCountMin
 from sketchlib.synth import transcripts
 from sketchlib.tokenize import transcript_tokens
@@ -173,3 +175,96 @@ def test_one_task_build_of_empty_input_is_zero(tokens, conservative):
                        ROUNDS, pre_aggregate=True, local_threshold=0)
     assert sk.core.shape == (cfg.nh_odd, cfg.width)
     assert not sk.core.any() and not sk.collision.any()
+
+
+@pytest.mark.parametrize("local_threshold", [0, 1_000, 10_000_000])
+def test_fitting_build_runs_the_map_stage_and_one_task(spark, tokens,
+                                                       local_threshold):
+    """A pre-aggregated build that fits one task counts nothing up
+    front: the aggregate's map stage and the bounded job's one task are
+    its only Spark jobs, whether the round loop then runs in the task
+    (a table past ``local_threshold``) or on the driver."""
+    cfg = CMConfig(10, 3, 7, True)
+    jobs = _jobs_in_group(
+        spark, f"offline-fitting-jobs-{local_threshold}",
+        lambda: build_offline(tokens, "token_u64", cfg, ROUNDS,
+                              pre_aggregate=True,
+                              local_threshold=local_threshold))
+    assert jobs == 2
+
+
+@pytest.mark.parametrize("conservative", [False, True])
+def test_build_past_the_task_cap_equals_per_pass_build(spark, tokens,
+                                                       tmp_path,
+                                                       monkeypatch,
+                                                       conservative):
+    """A table with more rows than one task may take falls back from the
+    bounded attempt to one Spark job per pass, over the same capped
+    task count that a checkpointed build picks."""
+    dp = spark.sparkContext.defaultParallelism
+    if dp == 1:
+        pytest.skip("a one-core session has no task row cap")
+    monkeypatch.setattr(offline, "_TASK_ROWS_FLOOR", 0)
+    cfg = CMConfig(10, 3, 7, conservative)
+    n_distinct = tokens.select("token_u64").distinct().count()
+    k = min(dp, -(-n_distinct // offline._rows_per_task(cfg)),
+            int(spark.conf.get("spark.sql.shuffle.partitions")))
+    assert k > 1
+    passes = []
+    run_pass = offline._run_pass
+
+    def counted(df, *args, **kwargs):
+        passes.append(df.rdd.getNumPartitions())
+        return run_pass(df, *args, **kwargs)
+
+    monkeypatch.setattr(offline, "_run_pass", counted)
+    over = build_offline(tokens, "token_u64", cfg, ROUNDS,
+                         pre_aggregate=True, local_threshold=0)
+    n_passes = ROUNDS if conservative else 2 * ROUNDS - 1
+    assert passes == [k] * n_passes, passes
+    per_pass = build_offline(tokens, "token_u64", cfg, ROUNDS,
+                             pre_aggregate=True, local_threshold=0,
+                             checkpoint_dir=str(tmp_path))
+    assert passes == [k] * 2 * n_passes, passes
+    assert np.array_equal(over.core, per_pass.core)
+    assert np.array_equal(over.collision, per_pass.collision)
+
+
+def _dense_round_loop(vals, weights, cfg, rounds):
+    """The round loop over the full (nh, width) tables."""
+    state = OfflineCountMin(cfg)
+    plan = state.plan(vals, weights)
+    for r in range(rounds):
+        if not cfg.conservative and r > 0:
+            flags = state.apply_collisions(plan, r, state.core,
+                                           state.collision)
+            state.collision = np.maximum(
+                state.collision,
+                np.where(flags, np.int32(r - 1), np.int32(0)))
+        state.clear_core()
+        if cfg.conservative:
+            state.apply_count_collision(plan, r, rounds)
+        else:
+            state.apply_count(plan)
+    return state
+
+
+@pytest.mark.parametrize("conservative", [False, True])
+def test_round_loop_equals_dense_loop_on_both_table_layouts(conservative):
+    """The round loop gives the full-table loop's bytes whichever
+    tables it runs on: the full ones for a saturated sketch (w=2^8,
+    every cell shared, collision marks of several rounds) and compact
+    ones of the touched cells for a sparse sketch (w=2^13, about an
+    eighth of the cells touched). Repeated keys exercise the weight
+    sum."""
+    rng = np.random.default_rng(5)
+    keys = rng.choice(rng.integers(0, 1 << 62, 1_500), 2_000)
+    vals = keys.astype(np.uint64)
+    weights = rng.integers(1, 9, keys.size)
+    for np_bits, rounds in itertools.product((8, 13), (1, 2, 4)):
+        cfg = CMConfig(np_bits, 5, 3, conservative)
+        got = _build_local_weighted(vals, weights, cfg, rounds)
+        want = _dense_round_loop(vals, weights, cfg, rounds)
+        assert got.to_bytes() == want.to_bytes(), (np_bits, rounds)
+        assert np.array_equal(got.collision, want.collision), (np_bits,
+                                                               rounds)
