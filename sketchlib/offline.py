@@ -28,7 +28,7 @@ most one row more than it may take, and the table's size picks the
 rung:
 
   driver: a table of at most ``local_threshold`` rows comes back as
-    keys and counts, and the round loop (:func:`_build_local_weighted`)
+    keys and counts, and the round loop (:func:`_round_loop`)
     runs on the driver;
   one task: a table of at most one task's row cap runs that same
     round loop inside the task, which returns the final state as one
@@ -178,8 +178,8 @@ def _run_pass(df: DataFrame, col: str, cfg: CMConfig, kind: str,
     return state, lineage
 
 
-def _build_local_weighted(vals: np.ndarray, weights: np.ndarray,
-                          cfg: CMConfig, rounds: int) -> OfflineCountMin:
+def _round_loop(vals: np.ndarray, weights: np.ndarray, cfg: CMConfig,
+                rounds: int) -> tuple[OfflineCountMin, np.ndarray | None]:
     """The round loop over a pre-aggregated table's uint64 keys and
     int64 counts. The keys are hashed and wave-scheduled once and that
     plan is applied every round. The batch kernels are order-independent
@@ -191,16 +191,18 @@ def _build_local_weighted(vals: np.ndarray, weights: np.ndarray,
     compact tables of the touched cells: every kernel indexes the
     tables only through ``plan.flat`` and the waves depend only on
     which cells are equal, so renumbering the touched cells gives the
-    same values, scattered into the full state once at the end. With
-    more keys the renumbering costs more than the smaller tables save
-    (BENCH/BASELINE.md)."""
-    full = state = OfflineCountMin(cfg)
-    plan = full.plan(vals, weights)
+    same values. With more keys the renumbering costs more than the
+    smaller tables save (BENCH/BASELINE.md). Returns the final state
+    and, when it is compact, the ascending flat cells of the full
+    tables that its columns stand for (else ``None``)."""
+    state = OfflineCountMin(cfg)
+    plan = state.plan(vals, weights)
+    cells = None
     if plan.counts.size <= cfg.width // 3:
-        touched = np.zeros(full.core.size, bool)
+        touched = np.zeros(state.core.size, bool)
         touched[plan.flat] = True
         cells = np.flatnonzero(touched)
-        ids = np.empty(full.core.size, np.int32)
+        ids = np.empty(state.core.size, np.int32)
         ids[cells] = np.arange(cells.size, dtype=np.int32)
         state = OfflineCountMin(cfg, np.zeros((1, cells.size), np.uint64),
                                 np.zeros((1, cells.size), np.int32))
@@ -217,10 +219,30 @@ def _build_local_weighted(vals: np.ndarray, weights: np.ndarray,
             state.apply_count_collision(plan, r, rounds)
         else:
             state.apply_count(plan)
-    if state is not full:
-        full.core.reshape(-1)[cells] = state.core.reshape(-1)
-        full.collision.reshape(-1)[cells] = state.collision.reshape(-1)
+    return state, cells
+
+
+def _build_local_weighted(vals: np.ndarray, weights: np.ndarray,
+                          cfg: CMConfig, rounds: int) -> OfflineCountMin:
+    """:func:`_round_loop` as a full-table sketch."""
+    state, cells = _round_loop(vals, weights, cfg, rounds)
+    if cells is None:
+        return state
+    full = OfflineCountMin(cfg)
+    full.core.reshape(-1)[cells] = state.core.reshape(-1)
+    full.collision.reshape(-1)[cells] = state.collision.reshape(-1)
     return full
+
+
+def _local_blob(vals: np.ndarray, weights: np.ndarray, cfg: CMConfig,
+                rounds: int) -> bytes:
+    """``_build_local_weighted(...).to_bytes()``, packed straight from
+    the compact tables when the round loop ran on them."""
+    state, cells = _round_loop(vals, weights, cfg, rounds)
+    if cells is None:
+        return state.to_bytes()
+    return OfflineCountMin.cells_to_bytes(cfg, cells, state.core,
+                                          state.collision)
 
 
 # a task's row cap never falls below this, however small the sketch
@@ -259,7 +281,7 @@ def _build_bounded(grouped: DataFrame, col: str, cfg: CMConfig,
         if vals.size <= local_threshold:
             payload = vals.tobytes() + w.tobytes()
         elif cap is None or vals.size <= cap:
-            payload = _build_local_weighted(vals, w, cfg, rounds).to_bytes()
+            payload = _local_blob(vals, w, cfg, rounds)
         else:
             payload = None  # did not fit
         yield pd.DataFrame({"rows": [vals.size], "payload": [payload]})

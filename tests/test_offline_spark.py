@@ -268,3 +268,29 @@ def test_round_loop_equals_dense_loop_on_both_table_layouts(conservative):
         assert got.to_bytes() == want.to_bytes(), (np_bits, rounds)
         assert np.array_equal(got.collision, want.collision), (np_bits,
                                                                rounds)
+
+
+@pytest.mark.parametrize("conservative", [False, True])
+@pytest.mark.parametrize("case", ["empty", "sparse wins", "dense wins"])
+def test_compact_blob_equals_full_table_blob(conservative, case):
+    """A one-task build packs its blob straight from the compact tables
+    of the touched cells. Those bytes equal the full tables'
+    ``to_bytes()`` for an empty table, for a sparse sketch (500 keys at
+    w=2^13, sparse encoding) and for 80 unit-count keys at w=2^8: with uint8
+    counters in about 27% of the cells the dense core encoding is the
+    smaller one while the round loop still runs on compact tables
+    (at most ``width // 3`` keys)."""
+    rng = np.random.default_rng(9)
+    np_bits, n, max_weight = {"empty": (8, 0, 1),
+                              "sparse wins": (13, 500, 9),
+                              "dense wins": (8, 80, 1)}[case]
+    cfg = CMConfig(np_bits, 5, 3, conservative)
+    vals = rng.integers(0, 1 << 62, n).astype(np.uint64)
+    weights = rng.integers(1, max_weight + 1, n)
+    for rounds in (1, 3):
+        assert offline._round_loop(vals, weights, cfg, rounds)[1] is not None
+        want = _build_local_weighted(vals, weights, cfg, rounds).to_bytes()
+        got = offline._local_blob(vals, weights, cfg, rounds)
+        assert got == want, rounds
+        core_code = want[22]  # MAGIC, then "<BIIQBB" before the code
+        assert bool(core_code & 0x80) == (case != "dense wins"), core_code
