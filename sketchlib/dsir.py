@@ -40,12 +40,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from sketchlib.tokenize import split_words
+
 __all__ = ["ngram_buckets", "importance_scores", "dsir_select",
            "lm_scores"]
 
 _SEP = "\x1f"  # unit separator; DuckDB spells it chr(31)
 _TWO52 = float(1 << 52)
-TOKEN_SPLIT = r"\s+"
 
 
 def _md5_u52(col) -> F.Column:
@@ -64,8 +65,7 @@ def ngram_buckets(df: DataFrame, id_col: str = "doc_id",
     featurization is engine-portable."""
     toks = df.select(
         id_col,
-        F.filter(F.split(F.lower(F.col(text_col)), TOKEN_SPLIT),
-                 lambda t: t != "").alias("toks"))
+        split_words(text_col).alias("toks"))
     big_idx = F.when(
         F.size("toks") >= 2,
         F.sequence(F.lit(0), F.size("toks") - 2)

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, functions as F
 from sketchlib.decontam import contamination
 from sketchlib.export import temperature_sample
 from sketchlib.packing import pack_manifest
-from sketchlib.textstats import TOKEN_SPLIT
+from sketchlib.tokenize import split_words
 
 __all__ = ["exact_dedup_keep", "quality_keep", "curate"]
 
@@ -58,8 +58,7 @@ def quality_keep(docs: DataFrame, text_col: str = "text",
     against a threshold is not engine-portable at the boundary;
     integer comparisons are exact everywhere (both Spark's Java regex
     and DuckDB's RE2 support \\p{L} / \\p{N})."""
-    toks = F.filter(F.split(F.lower(F.col(text_col)), TOKEN_SPLIT),
-                    lambda t: t != "")
+    toks = split_words(text_col)
     n_alnum = F.length(F.regexp_replace(F.lower(F.col(text_col)),
                                         r"[^\p{L}\p{N}]", ""))
     return docs.filter((F.size(toks) >= min_tokens)
@@ -91,8 +90,7 @@ def curate(docs: DataFrame, bench: DataFrame, k: int, max_len: int,
                             method="bloom", id_col=id_col,
                             text_col=text_col).select(id_col)
     clean = kept.join(F.broadcast(flagged), id_col, "left_anti")
-    ntok = F.size(F.filter(F.split(F.lower(F.col(text_col)),
-                                   TOKEN_SPLIT), lambda t: t != ""))
+    ntok = F.size(split_words(text_col))
     good = (quality_keep(clean, text_col)
             .select(id_col, group_col, ntok.alias("n_tokens"))
             .persist())

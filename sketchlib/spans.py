@@ -37,17 +37,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from sketchlib.tokenize import split_words
+
 TOKEN_SPLIT = r"\s+"
-
-
-def _tok_array(text_col: str):
-    """Lowercased whitespace tokens as an array, empties dropped —
-    element-for-element what DuckDB's
-    list_filter(string_split_regex(lower(text),'\\s+'), x -> x <> '')
-    and the Python kernel's re.split produce (ASCII corpus; all three
-    engines agree on ASCII whitespace)."""
-    return F.filter(F.split(F.lower(F.col(text_col)), TOKEN_SPLIT),
-                    lambda x: x != "")
 
 
 def span_hashes(docs: DataFrame, width: int = 10,
@@ -160,7 +152,7 @@ def span_dup_coverage(docs: DataFrame, width: int = 10,
                .agg(F.sum(F.col("e") - F.col("s")).alias("covered")))
 
     n_tok = docs.select(id_col,
-                        F.size(_tok_array(text_col)).alias("n_tokens"))
+                        F.size(split_words(text_col)).alias("n_tokens"))
     return (covered.join(n_tok, id_col)
             .select(id_col,
                     F.col("n_tokens").cast("long").alias("n_tokens"),

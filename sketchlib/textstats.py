@@ -10,6 +10,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from sketchlib.tokenize import split_words
+
 # tiny deterministic stopword lists (heuristic language ID)
 STOPWORDS = {
     "en": ["the", "a", "of", "and", "to", "in", "is"],
@@ -48,10 +50,9 @@ def language_id(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
 def token_stats(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Whitespace-token and BPE-ish-piece counts per document."""
-    toks = F.split(F.lower(F.col("text")), TOKEN_SPLIT)
     return df.select(
         id_col,
-        F.size(F.filter(toks, lambda t: t != "")).alias("n_tokens"),
+        F.size(split_words("text")).alias("n_tokens"),
         F.size(F.regexp_extract_all(F.lower(F.col("text")),
                                     F.lit(BPE_ISH), 0)).alias("n_bpe_pieces"),
         F.length("text").alias("n_chars"),
@@ -62,8 +63,7 @@ def quality_score(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Deterministic quality heuristics: token count, mean token
     length, stopword ratio, non-alnum ratio, composite score in [0,1].
     Ratios floored to 6 decimals for cross-engine comparability."""
-    toks = F.split(F.lower(F.col("text")), TOKEN_SPLIT)
-    n_tok = F.size(F.filter(toks, lambda t: t != ""))
+    n_tok = F.size(split_words("text"))
     n_chars = F.length("text")
     n_alnum = F.length(F.regexp_replace(F.lower(F.col("text")),
                                         "[^a-z0-9]", ""))
@@ -120,8 +120,7 @@ def repetition_stats(df: DataFrame, id_col: str = "doc_id",
     """
     r6 = lambda c: F.floor(c * 1e6) / 1e6  # noqa: E731
 
-    toks = F.filter(F.split(F.lower(F.col(text_col)), TOKEN_SPLIT),
-                    lambda t: t != "")
+    toks = split_words(text_col)
     stage1 = df.select(
         id_col,
         F.length(text_col).cast("long").alias("_nc"),

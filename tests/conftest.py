@@ -18,6 +18,15 @@ def plan_of(df) -> str:
         df._jdf.queryExecution(), "formatted")
 
 
+def executed_plan(df) -> str:
+    """The plan ``df``'s own last action ran: AQE's final plan when the
+    query has an exchange, else the physical plan. Read from the query
+    itself, not the status store, which evicts stages past
+    ``spark.ui.retainedStages``."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.split("== Initial Plan ==")[0]
+
+
 def n_shuffles(plan: str) -> int:
     """Count shuffle exchanges in a formatted plan. Shuffle nodes
     print as ``(n) Exchange`` (hashpartitioning etc. is on the

@@ -15,6 +15,8 @@ from pyspark.sql import functions as F
 
 import __spark_entry__ as E
 
+from .conftest import executed_plan
+
 SF = "/root/testdata/sf0.001"
 
 
@@ -202,34 +204,38 @@ def test_pre_aggregated_build_skips_fold_stage_within_tree_width(
         return real_fold(blobs, acc)
 
     monkeypatch.setattr(agg, "fold_blobs", spy)
-    sc = spark.sparkContext
+    collected: list = []
+    real_to_pandas = type(df).toPandas
 
-    def build(group: str) -> tuple[bytes, int]:
+    def to_pandas(frame):
+        collected.append(frame)
+        return real_to_pandas(frame)
+
+    monkeypatch.setattr(type(df), "toPandas", to_pandas)
+
+    def build() -> tuple[bytes, int, int]:
         fanin.clear()
-        sc.setJobGroup(group, group)
-        try:
-            blob = agg.build_sketch(df, "kh", factory,
-                                    pre_aggregate=True).to_bytes()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
-        # each AQE job re-lists its parent stages as skipped ones under
-        # new ids, so count only the stages that ran tasks
-        tracker = sc.statusTracker()
-        ran = sum(1 for j in tracker.getJobIdsForGroup(group)
-                  for s in tracker.getJobInfo(j).stageIds
-                  if tracker.getStageInfo(s).numCompletedTasks)
-        assert fanin and max(fanin) <= 8, (group, fanin)
-        return blob, ran
+        collected.clear()
+        blob = agg.build_sketch(df, "kh", factory,
+                                pre_aggregate=True).to_bytes()
+        assert fanin and max(fanin) <= 8, fanin
+        # the Python stages of the frame build_sketches collected: the
+        # kernel, plus the fold when it runs behind a round-robin
+        # exchange
+        plan = executed_plan(collected[-1])
+        assert "isFinalPlan=true" in plan, plan
+        return (blob, plan.count("MapInPandas"),
+                plan.count("RoundRobinPartitioning"))
 
     assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
-    narrow, narrow_stages = build("fold-hop-8")
+    narrow, narrow_py, narrow_rr = build()
     spark.conf.set("spark.sql.shuffle.partitions", "32")
     try:
-        wide, wide_stages = build("fold-hop-32")
+        wide, wide_py, wide_rr = build()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", "8")
     one_task = agg.build_sketch(df, "kh", factory, pre_aggregate=True,
                                 kernel_partitions=1).to_bytes()
     assert narrow == wide == one_task
-    assert narrow_stages == wide_stages - 1, (narrow_stages, wide_stages)
+    assert (narrow_py, narrow_rr) == (wide_py - 1, wide_rr - 1), \
+        (narrow_py, narrow_rr, wide_py, wide_rr)
