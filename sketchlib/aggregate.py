@@ -13,14 +13,18 @@ one sketch per name over the same key column in one scan:
 
 :func:`build_sketch` is its one-name case. ``pre_aggregate=True``
 first collapses the keys JVM-side to (key, count) rows and the kernel
-runs one ``update_weighted`` per partition; otherwise ``update`` runs
-once per Arrow batch. Grouped builds (one sketch per key group) go
-through :func:`build_grouped_sketches_multi`, with
-:func:`build_grouped_sketches` as its one-name case. ROLLUP and CUBE
-over a grouped table (:func:`rollup_grouped_sketches`,
-:func:`cube_grouped_sketches`) are one grouping-sets builder: every
-coarser set is merged from the finest level's blobs. Blobs are folded
-everywhere with :func:`sketchlib.sketches.base.fold_blobs`.
+makes each partition's blob in one :func:`_weighted_blob` step per
+fresh sketch: ``update_weighted`` then ``to_bytes``, or the sketch's
+own ``weighted_blob`` (the conservative CM's runs on a compact table
+of the cells its keys touch and never allocates the full one).
+Otherwise ``update`` runs once per Arrow batch. Grouped builds (one
+sketch per key group, the same weighted step) go through
+:func:`build_grouped_sketches_multi`, with :func:`build_grouped_sketches`
+as its one-name case. ROLLUP and CUBE over a grouped table
+(:func:`rollup_grouped_sketches`, :func:`cube_grouped_sketches`) are
+one grouping-sets builder: every coarser set is merged from the finest
+level's blobs. Blobs are folded everywhere with
+:func:`sketchlib.sketches.base.fold_blobs`.
 
 Everything stays on the DataFrame/Arrow path, and the driver folds at
 most ``tree_width`` blobs per name wherever the kernel's partition
@@ -60,6 +64,18 @@ def _counted(df: DataFrame, group_cols: list[str],
             .agg(F.sum(weight_col).cast("long").alias("__cnt")))
 
 
+def _weighted_blob(sketch, vals: np.ndarray, counts: np.ndarray) -> bytes:
+    """The blob of a fresh ``sketch`` after ``update_weighted(vals,
+    counts)``: the sketch's own ``weighted_blob`` step where it has one
+    (the conservative CM packs it from the touched cells only), else
+    ``update_weighted`` then ``to_bytes``."""
+    step = getattr(sketch, "weighted_blob", None)
+    if step is not None:
+        return step(vals, counts)
+    sketch.update_weighted(vals, counts)
+    return sketch.to_bytes()
+
+
 def _fold_named(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """mapInPandas kernel: fold each name's blobs into one."""
     accs: dict[str, object] = {}
@@ -89,7 +105,7 @@ def build_sketches(df: DataFrame, col: str,
     ``pre_aggregate=True`` is the scale path for frequency sketches: a
     JVM-side ``groupBy(col).count()`` collapses the stream to
     |distinct| weighted rows before any Python runs, and each partition
-    makes ONE ``update_weighted(values, counts)`` call, so an
+    makes ONE weighted update (:func:`_weighted_blob`), so an
     order-sensitive kernel (conservative CM) is a pure function of the
     partition's multiset whatever the Arrow batch size. Every factory
     must implement ``update_weighted``.
@@ -130,17 +146,16 @@ def build_sketches(df: DataFrame, col: str,
                 return
             vals = np.concatenate([keys(pdf) for pdf in frames])
             wts = np.concatenate([pdf["__cnt"].to_numpy() for pdf in frames])
-            sks = [factories[name]() for name in names]
-            for sk in sks:
-                sk.update_weighted(vals, wts)
+            blobs = [_weighted_blob(factories[name](), vals, wts)
+                     for name in names]
         else:
             sks = [factories[name]() for name in names]
             for pdf in batches:
                 vals = keys(pdf)
                 for sk in sks:
                     sk.update(vals)
-        yield pd.DataFrame({"name": names,
-                            "sketch": [sk.to_bytes() for sk in sks]})
+            blobs = [sk.to_bytes() for sk in sks]
+        yield pd.DataFrame({"name": names, "sketch": blobs})
 
     blobs = src.mapInPandas(kernel, schema=_NAMED)
     bound = kernel_partitions
@@ -442,10 +457,10 @@ def build_grouped_sketches_multi(df: DataFrame, key_cols: list[str],
             for name in names:
                 sk = factories[name]()
                 if pre_aggregate:
-                    sk.update_weighted(vals, wts)
+                    blobs.append(_weighted_blob(sk, vals, wts))
                 else:
                     sk.update(vals)
-                blobs.append(sk.to_bytes())
+                    blobs.append(sk.to_bytes())
             out["name"] = names
             out["sketch"] = blobs
             return out

@@ -60,7 +60,7 @@ from pyspark.sql import DataFrame
 from sketchlib.checkpoint_io import CheckpointStore, Snapshot, sketch_fill_metrics
 from sketchlib.hashing import to_u64
 from sketchlib.sketches.base import fold_blobs
-from sketchlib.sketches.cm import CMConfig, KeyPlan, OfflineCountMin
+from sketchlib.sketches.cm import CMConfig, OfflineCountMin
 
 
 def _config_key(cfg: CMConfig, rounds: int) -> str:
@@ -186,27 +186,19 @@ def _round_loop(vals: np.ndarray, weights: np.ndarray, cfg: CMConfig,
     over a batch, so the result is bit-identical to a one-partition
     per-pass build.
 
-    While there are at most a third as many keys as a row has cells
-    (so they touch about 28% of the cells or fewer), the rounds run on
-    compact tables of the touched cells: every kernel indexes the
-    tables only through ``plan.flat`` and the waves depend only on
-    which cells are equal, so renumbering the touched cells gives the
-    same values. With more keys the renumbering costs more than the
-    smaller tables save (BENCH/BASELINE.md). Returns the final state
-    and, when it is compact, the ascending flat cells of the full
-    tables that its columns stand for (else ``None``)."""
-    state = OfflineCountMin(cfg)
-    plan = state.plan(vals, weights)
-    cells = None
-    if plan.counts.size <= cfg.width // 3:
-        touched = np.zeros(state.core.size, bool)
-        touched[plan.flat] = True
-        cells = np.flatnonzero(touched)
-        ids = np.empty(state.core.size, np.int32)
-        ids[cells] = np.arange(cells.size, dtype=np.int32)
+    While the keys are sparse in the tables, the rounds run on compact
+    tables of the touched cells (:meth:`KeyPlan.compact`, which gives
+    the same values). Returns the final state and, when it is compact,
+    the ascending flat cells of the full tables that its columns stand
+    for (else ``None``)."""
+    plan = OfflineCountMin(cfg).plan(vals, weights)
+    compact = plan.compact(cfg.width)
+    if compact is None:
+        state, cells = OfflineCountMin(cfg), None
+    else:
+        cells, plan = compact
         state = OfflineCountMin(cfg, np.zeros((1, cells.size), np.uint64),
                                 np.zeros((1, cells.size), np.int32))
-        plan = KeyPlan(plan.counts, ids[plan.flat].astype(np.int64))
     for r in range(rounds):
         if not cfg.conservative and r > 0:
             flags = state.apply_collisions(plan, r, state.core,

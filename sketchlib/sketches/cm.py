@@ -20,6 +20,11 @@ for Spark's partial/final aggregation model:
   the same multiset, so the one-sided guarantee (est >= true) and the
   CM epsilon-delta bound hold; ``strict_order=True`` reproduces the
   reference's stream order bit-for-bit (used by the golden tests);
+- sparse weighted builds: a fresh conservative sketch fed one table
+  of at most ``width // 3`` keys (:meth:`CountMin.weighted_blob`)
+  runs on a compact table of the touched cells (:meth:`KeyPlan.compact`,
+  shared with the OCCM round loop) and packs its blob from it, never
+  allocating the full table; the bytes are the full table's;
 - merge: elementwise sum, matching the vendored library's CM merge
   (reference: include/ccm.h:401-407, include/update.h:29-33) —
   associative and commutative.
@@ -31,7 +36,6 @@ orchestration is in sketchlib.offline.
 
 from __future__ import annotations
 
-import io
 import struct
 from dataclasses import dataclass
 from functools import cached_property
@@ -126,8 +130,18 @@ def _waves(flat: np.ndarray) -> list[np.ndarray]:
     return out
 
 
+def _flat_cells(u: np.ndarray, seeds: np.ndarray,
+                np_bits: int) -> np.ndarray:
+    """The ``(nh, U)`` int64 cell ids of keys ``u`` in the flattened
+    tables: row ``r``'s cell offset by ``r << np_bits``."""
+    flat = row_positions(u, seeds, np_bits).astype(np.int64)
+    flat += np.arange(flat.shape[0])[:, None] << np_bits
+    return flat
+
+
 class KeyPlan:
-    """A batch hashed once for the offline batch kernels.
+    """A batch hashed once for the batch kernels (the OCCM rounds and
+    the conservative CM's weighted step).
 
     ``counts[t]`` is the summed weight (uint64) of the batch's ``t``-th
     sorted unique key and ``flat[:, t]`` its ``nh`` cells as ids into
@@ -143,6 +157,20 @@ class KeyPlan:
     @cached_property
     def waves(self) -> list[np.ndarray]:
         return _waves(self.flat)
+
+    def compact(self, width: int) -> tuple[np.ndarray, "KeyPlan"] | None:
+        """The plan renumbered onto the cells it touches: their
+        ascending flat ids and a plan whose ``flat`` numbers them ``0 ..
+        cells.size - 1``; ``None`` past ``width // 3`` keys (~28% of
+        the cells touched), where the full tables are cheaper
+        (BENCH/BASELINE.md). The kernels index the tables only through
+        ``flat`` and the waves depend only on which cells are equal, so
+        a kernel run on ``cells.size``-cell tables leaves in them the
+        full tables' values at ``cells``; the other cells stay zero."""
+        if self.counts.size > width // 3:
+            return None
+        cells, ids = np.unique(self.flat, return_inverse=True)
+        return cells, KeyPlan(self.counts, ids.reshape(self.flat.shape))
 
 
 _NARROW = [(np.uint8, 0), (np.uint16, 1), (np.uint32, 2), (np.uint64, 3)]
@@ -169,7 +197,8 @@ def _pack_cells(size: int, idx: np.ndarray | None,
     """
     whole = None
     if idx is None:
-        whole, idx = vals, np.flatnonzero(vals)
+        # a boolean mask first: flatnonzero of a uint64 array is slower
+        whole, idx = vals, np.flatnonzero(vals != 0)
     else:
         keep = vals != 0
         if not keep.all():
@@ -217,11 +246,15 @@ class CountMin:
     def __init__(self, config: CMConfig, core: np.ndarray | None = None):
         self.config = config
         self.seeds = derive_seeds(config.seed, config.nh)
-        nh = config.nh_odd
-        if core is None:
-            core = np.zeros((nh, config.width), dtype=_U64)
-        assert core.shape == (nh, config.width)
-        self.core = core
+        if core is not None:
+            assert core.shape == (config.nh_odd, config.width)
+            self.core = core
+
+    @cached_property
+    def core(self) -> np.ndarray:
+        """The ``(nh_odd, width)`` counter table, allocated on first use:
+        :meth:`weighted_blob` on a fresh sketch never needs it."""
+        return np.zeros((self.config.nh_odd, self.config.width), dtype=_U64)
 
     # ------------------------------------------------------------- update
     def update(self, vals: np.ndarray, strict_order: bool = False) -> None:
@@ -287,20 +320,46 @@ class CountMin:
             i = j
 
     def _apply_conservative(self, u: np.ndarray, counts: np.ndarray) -> None:
-        """Conservative update of (unique value, count) pairs, applied
-        in column order as conflict-free waves (:func:`_waves`). c
-        consecutive updates of one value raise its row-set minimum by
-        exactly c: new_v = max(v, min(v) + c).
-        """
-        flat = row_positions(u, self.seeds,
-                             self.config.np_bits).astype(np.int64)
-        flat += np.arange(flat.shape[0])[:, None] << self.config.np_bits
-        core_flat = self.core.reshape(-1)
-        inc = counts.astype(_U64)
-        for wave in _waves(flat):
-            P = flat[:, wave]
+        """Conservative update of (unique value, count) pairs."""
+        self._apply_waves(self.core.reshape(-1), self._plan(u, counts))
+
+    def _plan(self, u: np.ndarray, counts: np.ndarray) -> KeyPlan:
+        return KeyPlan(counts.astype(_U64),
+                       _flat_cells(u, self.seeds, self.config.np_bits))
+
+    @staticmethod
+    def _apply_waves(core_flat: np.ndarray, plan: KeyPlan) -> None:
+        """Conservative update of the plan's keys in column order, as
+        conflict-free waves (:func:`_waves`) over the flat table
+        ``core_flat``. c consecutive updates of one value raise its
+        row-set minimum by exactly c: new_v = max(v, min(v) + c)."""
+        for wave in plan.waves:
+            P = plan.flat[:, wave]
             V = core_flat[P]
-            core_flat[P] = np.maximum(V, V.min(axis=0) + inc[wave])
+            core_flat[P] = np.maximum(V, V.min(axis=0) + plan.counts[wave])
+
+    def weighted_blob(self, vals: np.ndarray, counts: np.ndarray) -> bytes:
+        """The blob of :meth:`update_weighted` then :meth:`to_bytes`:
+        the pre-aggregated kernel's step, which drops the sketch after.
+
+        A fresh conservative sketch given at most ``width // 3`` keys
+        runs the waves on a compact table of the touched cells
+        (:meth:`KeyPlan.compact`) and packs the blob from it, so its
+        full table is never allocated: ~48k keys touch ~5% of a 7x2^20
+        table (BENCH/BASELINE.md)."""
+        # a fresh sketch has not allocated its table (``core`` is lazy)
+        if not self.config.conservative or "core" in vars(self):
+            self.update_weighted(vals, counts)
+            return self.to_bytes()
+        plan = self._plan(*_combine_weighted(vals, counts))
+        compact = plan.compact(self.config.width)
+        if compact is None:
+            self._apply_waves(self.core.reshape(-1), plan)
+            return self.to_bytes()
+        cells, plan = compact
+        core = np.zeros(cells.size, dtype=_U64)
+        self._apply_waves(core, plan)
+        return self.cells_to_bytes(self.config, cells, core)
 
     # ------------------------------------------------------------ queries
     def estimate(self, vals: np.ndarray) -> np.ndarray:
@@ -383,15 +442,22 @@ class CountMin:
     def to_bytes(self) -> bytes:
         """Internal versioned blob (shipped between executors/driver);
         counters stored at the narrowest lossless width."""
-        buf = io.BytesIO()
-        c = self.config
-        code, payload = _pack_cells(self.core.size, None,
-                                    self.core.reshape(-1))
-        buf.write(self.MAGIC)
-        buf.write(struct.pack("<BIIQBB", 2, c.np_bits, c.nh, c.seed,
-                              1 if c.conservative else 0, code))
-        buf.write(payload)
-        return buf.getvalue()
+        return self.cells_to_bytes(self.config, None, self.core)
+
+    @classmethod
+    def cells_to_bytes(cls, cfg: CMConfig, cells: np.ndarray | None,
+                       core: np.ndarray) -> bytes:
+        """:meth:`to_bytes` of the sketch whose table holds ``core`` at
+        the ascending flat cells ``cells`` and zeros elsewhere, without
+        building the full table (``cells`` ``None``: ``core`` is the
+        full table)."""
+        code, payload = _pack_cells(cfg.nh_odd * cfg.width, cells,
+                                    core.reshape(-1))
+        return b"".join([
+            cls.MAGIC,
+            struct.pack("<BIIQBB", 2, cfg.np_bits, cfg.nh, cfg.seed,
+                        1 if cfg.conservative else 0, code),
+            payload])
 
     @classmethod
     def from_bytes(cls, data: bytes) -> "CountMin":
@@ -519,9 +585,8 @@ class OfflineCountMin:
             u, counts = _sorted_unique(vals)
         else:
             u, counts = _combine_weighted(vals, weights)
-        flat = self._positions(u)                        # (nh, U) int64
-        flat += np.arange(flat.shape[0])[:, None] << self.config.np_bits
-        return KeyPlan(counts.astype(_U64), flat)
+        return KeyPlan(counts.astype(_U64),
+                       _flat_cells(u, self.seeds, self.config.np_bits))
 
     def apply_count(self, plan: KeyPlan) -> None:
         """OCM plain offline count with the collision table frozen for

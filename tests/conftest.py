@@ -12,6 +12,21 @@ def spark():
     s.stop()
 
 
+@pytest.fixture
+def py4j_calls(spark, monkeypatch):
+    """Counts the commands the driver sends to the JVM through the py4j
+    gateway client while the test runs; call it for the count so far."""
+    client = spark.sparkContext._gateway._gateway_client
+    send, n = client.send_command, [0]
+
+    def counting(*args, **kwargs):
+        n[0] += 1
+        return send(*args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    return lambda: n[0]
+
+
 def plan_of(df) -> str:
     """Formatted physical plan (shared by the plan-shape tests)."""
     return df._sc._jvm.PythonSQLUtils.explainString(

@@ -65,6 +65,16 @@ def test_transcript_tokens_frame_equals_struct_formulation(spark):
     assert by_conv("n2") == ["t:grep", "r:tool", "w:one", "r:user"]
 
 
+def test_transcript_tokens_plans_in_few_py4j_calls(spark, py4j_calls):
+    """Building the token frame is a handful of ``selectExpr`` calls:
+    a Column-API formulation sent ~500 py4j commands, ~100 ms of
+    driver time per build."""
+    df = _with_null_rows(spark)
+    before = py4j_calls()
+    transcript_tokens(df)
+    assert py4j_calls() - before <= 60
+
+
 def _docs(spark):
     return spark.createDataFrame(
         [(1, "The cat  sat on the mat"), (2, None), (3, "  a b c d e f "),
