@@ -118,21 +118,3 @@ def sketch_fill_metrics(core) -> dict[str, Any]:
         "max_counter": int(core.max()) if total else 0,
         "sum_counter": int(core.sum(dtype=np.uint64)) if total else 0,
     }
-
-
-def load_reference_sketch(path: str, conservative: bool = True):
-    """Load a reference-format sketch file, auto-detecting CM vs
-    OCM/OCCM by file size (the OCM file appends an int32 collision
-    table: 16 + nh*2^np*8 [+ nh*2^np*4] bytes, include/ocm.h:443-466).
-    """
-    import struct
-
-    from sketchlib.sketches.cm import CountMin, OfflineCountMin
-
-    with open(path, "rb") as fh:
-        np_bits, nh, _seed = struct.unpack("<IIQ", fh.read(16))
-    n = nh << np_bits
-    size = os.path.getsize(path)
-    if size >= 16 + n * 8 + n * 4:
-        return OfflineCountMin.load_reference(path, conservative)
-    return CountMin.load_reference(path, conservative)

@@ -312,9 +312,9 @@ def cmd_query(args) -> int:
     import numpy as np
 
     from sketchlib.fasta import encode_kmer
-    from sketchlib.checkpoint_io import load_reference_sketch
+    from sketchlib.sketches.cm import read_reference
 
-    sk = load_reference_sketch(args.sketch)
+    sk = read_reference(args.sketch)
     trues, raw = [], []
     with open(args.queries) as fh:
         for line in fh:

@@ -18,18 +18,19 @@ per-comparison choice, while the mergeable state stays exact.
 
 from __future__ import annotations
 
-import struct
-
 import numpy as np
 
 from sketchlib.hashing import wang_hash_u64
+from sketchlib.sketches.base import Sketch
 
 _U64 = np.uint64
 _EMPTY = np.uint64(0xFFFFFFFFFFFFFFFF)
 
 
-class OnePermMinHash:
+class OnePermMinHash(Sketch):
     MAGIC = b"SKBB"
+    HEADER, FIELDS = "IQ", ("p", "seed")
+    ARRAYS = (("mins", "<u8", lambda h: 1 << h.p),)
 
     def __init__(self, p: int = 10, seed: int = 137,
                  mins: np.ndarray | None = None):
@@ -90,16 +91,3 @@ class OnePermMinHash:
             c = 0.0
         e = float(eq.mean())
         return max(0.0, (e - c) / (1.0 - c))
-
-    def to_bytes(self) -> bytes:
-        return (self.MAGIC + struct.pack("<BIQ", 1, self.p, self.seed)
-                + self.mins.astype("<u8").tobytes())
-
-    @classmethod
-    def from_bytes(cls, data: bytes) -> "OnePermMinHash":
-        assert data[:4] == cls.MAGIC
-        _, p, seed = struct.unpack_from("<BIQ", data, 4)
-        off = 4 + struct.calcsize("<BIQ")
-        mins = np.frombuffer(data, dtype="<u8", offset=off,
-                             count=1 << p).copy()
-        return cls(p, seed, mins)

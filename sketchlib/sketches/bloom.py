@@ -13,17 +13,22 @@ rows so configs stay uniform.
 from __future__ import annotations
 
 import math
-import struct
 
 import numpy as np
 
 from sketchlib.hashing import derive_seeds, wang_hash_u64
+from sketchlib.sketches.base import Sketch, Sparse
 
 _U64 = np.uint64
 
 
-class BloomFilter:
+class BloomFilter(Sketch):
     MAGIC = b"SKBF"
+    HEADER, FIELDS = "IIQ", ("p", "nh", "seed")
+    # (word index, word) pairs below 1/6 of the words nonzero: partials
+    # of sets far smaller than the table ship ~12 bytes per set bit, so
+    # wide filters (p=28: 32 MB dense) stay cheap to shuffle and fold
+    ARRAYS = (("words", Sparse("<u8", 6), lambda h: (1 << h.p) >> 6),)
 
     def __init__(self, p: int = 20, nh: int = 4, seed: int = 137,
                  words: np.ndarray | None = None):
@@ -91,39 +96,3 @@ class BloomFilter:
     def fp_rate(self, n_inserted: int) -> float:
         """Theoretical false-positive probability after n inserts."""
         return (1.0 - math.exp(-self.nh * n_inserted / self.m)) ** self.nh
-
-    def to_bytes(self) -> bytes:
-        """Blob v2: sparse (word_index, word) pairs when <1/6 of the
-        64-bit words are nonzero, else dense. Partial blobs from
-        under-filled partitions (the common case for membership sets
-        far smaller than the bit table) shrink from 2^p/8 bytes to
-        ~12 bytes per set bit, which keeps wide filters (p=28 => 32 MB
-        dense) cheap to shuffle and fold."""
-        nz = np.flatnonzero(self.words)
-        if nz.size * 6 < self.words.size:
-            return (self.MAGIC
-                    + struct.pack("<BIIQQ", 2, self.p, self.nh, self.seed,
-                                  nz.size)
-                    + nz.astype("<u4").tobytes()
-                    + self.words[nz].astype("<u8").tobytes())
-        return (self.MAGIC + struct.pack("<BIIQ", 1, self.p, self.nh, self.seed)
-                + self.words.tobytes())
-
-    @classmethod
-    def from_bytes(cls, data: bytes) -> "BloomFilter":
-        assert data[:4] == cls.MAGIC
-        ver = data[4]
-        if ver == 2:
-            _, p, nh, seed, n = struct.unpack_from("<BIIQQ", data, 4)
-            off = 4 + struct.calcsize("<BIIQQ")
-            idx = np.frombuffer(data, dtype="<u4", offset=off, count=n)
-            vals = np.frombuffer(data, dtype="<u8", offset=off + 4 * n,
-                                 count=n)
-            words = np.zeros((1 << p) >> 6, dtype=_U64)
-            words[idx] = vals
-            return cls(p, nh, seed, words)
-        _, p, nh, seed = struct.unpack_from("<BIIQ", data, 4)
-        off = 4 + struct.calcsize("<BIIQ")
-        words = np.frombuffer(data, dtype=_U64, offset=off,
-                              count=(1 << p) >> 6).copy()
-        return cls(p, nh, seed, words)

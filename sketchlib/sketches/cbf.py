@@ -30,17 +30,21 @@ occurrences in O(promotions). The driver query stays deterministic.
 
 from __future__ import annotations
 
-import struct
-
 import numpy as np
 
 from sketchlib.hashing import derive_seeds, wang_hash_u64
+from sketchlib.sketches.base import Sketch, Sparse
 
 _U64 = np.uint64
 
 
-class CountingBloom:
+class CountingBloom(Sketch):
     MAGIC = b"SKCB"
+    HEADER, FIELDS = "IIIQ", ("p", "nh", "n_layers", "seed")
+    # sparse when few words are set, like the Bloom blob: partial
+    # layers are nearly empty
+    ARRAYS = (("words", Sparse("<u8", 6),
+               lambda h: (h.n_layers, (1 << h.p) >> 6)),)
 
     def __init__(self, p: int = 18, nh: int = 4, n_layers: int = 24,
                  seed: int = 137, words: np.ndarray | None = None,
@@ -76,12 +80,6 @@ class CountingBloom:
         bits = (self.words[layer][(pos >> _U64(6)).astype(np.int64)]
                 >> (pos & _U64(63))) & _U64(1)
         return bits.all(axis=0)
-
-    def update(self, vals: np.ndarray) -> None:
-        if len(vals) == 0:
-            return
-        u, c = np.unique(np.asarray(vals, dtype=_U64), return_counts=True)
-        self.update_weighted(u, c)
 
     def update_weighted(self, vals: np.ndarray, counts: np.ndarray) -> None:
         """w occurrences set layers 0..floor(log2(w)) (expected-value
@@ -153,40 +151,3 @@ class CountingBloom:
             (other.p, other.nh, other.n_layers, other.seed)
         np.bitwise_or(self.words, other.words, out=self.words)
         return self
-
-    def to_bytes(self) -> bytes:
-        """Sparse when few words are set (same rationale as the Bloom
-        blob v2 — partial layers are nearly empty)."""
-        flat = self.words.reshape(-1)
-        nz = np.flatnonzero(flat)
-        hdr = struct.pack("<BIIIQ", 2, self.p, self.nh, self.n_layers,
-                          self.seed)
-        if nz.size * 6 < flat.size:
-            return (self.MAGIC + hdr + struct.pack("<Q", nz.size)
-                    + nz.astype("<u4").tobytes()
-                    + flat[nz].astype("<u8").tobytes())
-        return (self.MAGIC
-                + struct.pack("<BIIIQ", 1, self.p, self.nh, self.n_layers,
-                              self.seed)
-                + flat.tobytes())
-
-    @classmethod
-    def from_bytes(cls, data: bytes) -> "CountingBloom":
-        assert data[:4] == cls.MAGIC
-        ver = data[4]
-        _, p, nh, n_layers, seed = struct.unpack_from("<BIIIQ", data, 4)
-        off = 4 + struct.calcsize("<BIIIQ")
-        nwords = n_layers * ((1 << p) >> 6)
-        if ver == 2:
-            (n,) = struct.unpack_from("<Q", data, off)
-            off += 8
-            idx = np.frombuffer(data, dtype="<u4", offset=off, count=n)
-            vals = np.frombuffer(data, dtype="<u8", offset=off + 4 * n,
-                                 count=n)
-            flat = np.zeros(nwords, dtype=_U64)
-            flat[idx] = vals
-        else:
-            flat = np.frombuffer(data, dtype=_U64, offset=off,
-                                 count=nwords).copy()
-        return cls(p, nh, n_layers, seed,
-                   flat.reshape(n_layers, -1))

@@ -37,12 +37,13 @@ orchestration is in sketchlib.offline.
 from __future__ import annotations
 
 import struct
-from dataclasses import dataclass
+from dataclasses import astuple, dataclass
 from functools import cached_property
 
 import numpy as np
 
 from sketchlib.hashing import derive_seeds, row_positions
+from sketchlib.sketches.base import Narrow, Sketch
 
 _U64 = np.uint64
 
@@ -173,75 +174,30 @@ class KeyPlan:
         return cells, KeyPlan(self.counts, ids.reshape(self.flat.shape))
 
 
-_NARROW = [(np.uint8, 0), (np.uint16, 1), (np.uint32, 2), (np.uint64, 3)]
-_CODE_DTYPE = {c: d for d, c in _NARROW}
-_SPARSE_BIT = 0x80
+# the count-min blobs' header: the config, then one code byte per table
+_CFG_CODES = "IIQ?"
+_CFG_FIELDS = ("config.np_bits", "config.nh", "config.seed",
+               "config.conservative")
 
 
-def _pack_cells(size: int, idx: np.ndarray | None,
-                vals: np.ndarray) -> tuple[int, bytes]:
-    """Serialize a nonnegative integer array (uint64 or int32) of
-    ``size`` cells compactly. With ``idx`` ``None``, ``vals`` is the
-    whole flat array; else the array is zero outside the ascending flat
-    cells ``idx``, which hold ``vals`` (zeros among them are dropped).
-
-    Two layers, both measured to matter for merge traffic:
-    - narrowest lossless integer width (partial counters are tiny);
-    - sparse (int64 indices + values) when mostly zero — a partition's
-      partial CM at w=2^20 is typically ~5% nonzero, so this is the
-      difference between ~15 MB and ~2 MB per partial blob.
-    Code byte: low 2 bits = value dtype, high bit = sparse flag.
-
-    A whole array is never gathered or scattered on the dense side:
-    on a full 7x2^20 table that doubled the packing time.
-    """
-    whole = None
-    if idx is None:
-        # a boolean mask first: flatnonzero of a uint64 array is slower
-        whole, idx = vals, np.flatnonzero(vals != 0)
-    else:
-        keep = vals != 0
-        if not keep.all():
-            idx, vals = idx[keep], vals[keep]
-    mx = int(vals.max()) if vals.size else 0
-    code = next(c for dt, c in _NARROW if mx <= np.iinfo(dt).max)
-    dt = _CODE_DTYPE[code]
-    itemsize = np.dtype(dt).itemsize
-    if idx.size * (8 + itemsize) + 8 < size * itemsize:
-        if whole is not None:
-            vals = whole[idx]
-        return code | _SPARSE_BIT, (struct.pack("<Q", idx.size)
-                                    + idx.astype(np.int64, copy=False)
-                                    .tobytes()
-                                    + vals.astype(dt, copy=False).tobytes())
-    if whole is None:
-        whole = np.zeros(size, dt)
-        whole[idx] = vals
-    return code, whole.astype(dt, copy=False).tobytes()
+def _table(h) -> tuple[int, int]:
+    """The ``(nh_odd, width)`` table shape of a blob's header."""
+    return h.nh | 1, 1 << h.np_bits
 
 
-def _unpack_u64(code: int, data: bytes, offset: int, count: int,
-                shape, dtype=_U64) -> tuple[np.ndarray, int]:
-    """Returns (array of ``dtype``, bytes consumed)."""
-    dt = _CODE_DTYPE[code & 0x03]
-    if code & _SPARSE_BIT:
-        (nnz,) = struct.unpack_from("<Q", data, offset)
-        idx = np.frombuffer(data, dtype=np.int64, offset=offset + 8,
-                            count=nnz)
-        vals = np.frombuffer(data, dtype=dt,
-                             offset=offset + 8 + nnz * 8, count=nnz)
-        out = np.zeros(count, dtype=dtype)
-        out[idx] = vals
-        used = 8 + nnz * (8 + np.dtype(dt).itemsize)
-        return out.reshape(shape), used
-    arr = np.frombuffer(data, dtype=dt, offset=offset, count=count)
-    return arr.astype(dtype).reshape(shape), count * np.dtype(dt).itemsize
+def _with_config(cls, np_bits, nh, seed, conservative, **rest):
+    """A count-min blob's sketch (``_new``): its config from the header."""
+    return cls(CMConfig(np_bits, nh, seed, conservative), **rest)
 
 
-class CountMin:
+class CountMin(Sketch):
     """Single-pass CM sketch (plain or conservative update)."""
 
     MAGIC = b"SKCM"
+    VERSION = 2
+    HEADER, FIELDS = _CFG_CODES, _CFG_FIELDS
+    ARRAYS = (("core", Narrow(_U64), _table),)
+    _new = classmethod(_with_config)
 
     def __init__(self, config: CMConfig, core: np.ndarray | None = None):
         self.config = config
@@ -439,11 +395,6 @@ class CountMin:
         return CountMin(self.config, np.minimum(self.core, other.core))
 
     # ---------------------------------------------------------- serialize
-    def to_bytes(self) -> bytes:
-        """Internal versioned blob (shipped between executors/driver);
-        counters stored at the narrowest lossless width."""
-        return self.cells_to_bytes(self.config, None, self.core)
-
     @classmethod
     def cells_to_bytes(cls, cfg: CMConfig, cells: np.ndarray | None,
                        core: np.ndarray) -> bytes:
@@ -451,24 +402,8 @@ class CountMin:
         the ascending flat cells ``cells`` and zeros elsewhere, without
         building the full table (``cells`` ``None``: ``core`` is the
         full table)."""
-        code, payload = _pack_cells(cfg.nh_odd * cfg.width, cells,
-                                    core.reshape(-1))
-        return b"".join([
-            cls.MAGIC,
-            struct.pack("<BIIQBB", 2, cfg.np_bits, cfg.nh, cfg.seed,
-                        1 if cfg.conservative else 0, code),
-            payload])
-
-    @classmethod
-    def from_bytes(cls, data: bytes) -> "CountMin":
-        assert data[:4] == cls.MAGIC
-        _, np_bits, nh, seed, cons, code = struct.unpack_from("<BIIQBB",
-                                                              data, 4)
-        cfg = CMConfig(np_bits, nh, seed, bool(cons))
-        off = 4 + struct.calcsize("<BIIQBB")
-        core, _ = _unpack_u64(code, data, off, cfg.nh_odd * cfg.width,
-                              (cfg.nh_odd, cfg.width))
-        return cls(cfg, core)
+        return cls._pack(astuple(cfg), [(cfg.nh_odd * cfg.width, cells,
+                                         core.reshape(-1))])
 
     # -------------------------------------------- reference interchange IO
     def save_reference(self, path: str) -> None:
@@ -481,14 +416,12 @@ class CountMin:
 
     @classmethod
     def load_reference(cls, path: str, conservative: bool = True) -> "CountMin":
-        with open(path, "rb") as fh:
-            np_bits, nh, seed = struct.unpack("<IIQ", fh.read(16))
-            core = np.fromfile(fh, dtype="<u8", count=nh << np_bits)
-        cfg = CMConfig(np_bits, nh, seed, conservative)
-        return cls(cfg, core.astype(_U64).reshape(nh, 1 << np_bits))
+        """The counters of a reference-format CM or OCM/OCCM file."""
+        sk = read_reference(path, conservative)
+        return cls(sk.config, sk.core)
 
 
-class OfflineCountMin:
+class OfflineCountMin(Sketch):
     """Offline CM (OCM plain / OCCM conservative) with a per-cell
     collision table, matching ``ocmbase`` (include/ocm.h:242-586).
 
@@ -500,6 +433,11 @@ class OfflineCountMin:
     """
 
     MAGIC = b"SKOC"
+    VERSION = 3
+    HEADER, FIELDS = _CFG_CODES, _CFG_FIELDS
+    ARRAYS = (("core", Narrow(_U64), _table),
+              ("collision", Narrow(np.int32), _table))
+    _new = classmethod(_with_config)
 
     def __init__(self, config: CMConfig,
                  core: np.ndarray | None = None,
@@ -683,10 +621,6 @@ class OfflineCountMin:
         return self
 
     # -------------------------------------------------------- serialize
-    def to_bytes(self) -> bytes:
-        return self.cells_to_bytes(self.config, None, self.core,
-                                   self.collision)
-
     @classmethod
     def cells_to_bytes(cls, cfg: CMConfig, cells: np.ndarray | None,
                        core: np.ndarray, collision: np.ndarray) -> bytes:
@@ -694,30 +628,9 @@ class OfflineCountMin:
         ``collision`` at the ascending flat cells ``cells`` and zeros
         elsewhere, without building the full tables (``cells`` ``None``:
         ``core`` and ``collision`` are the full tables)."""
-        # collision values are round numbers (tiny, mostly zero early)
-        assert collision.min(initial=0) >= 0
         size = cfg.nh_odd * cfg.width
-        code, payload = _pack_cells(size, cells, core.reshape(-1))
-        ccode, cpayload = _pack_cells(size, cells, collision.reshape(-1))
-        return b"".join([
-            cls.MAGIC,
-            struct.pack("<BIIQBBB", 3, cfg.np_bits, cfg.nh, cfg.seed,
-                        1 if cfg.conservative else 0, code, ccode),
-            payload, cpayload])
-
-    @classmethod
-    def from_bytes(cls, data: bytes) -> "OfflineCountMin":
-        assert data[:4] == cls.MAGIC
-        _, np_bits, nh, seed, cons, code, ccode = struct.unpack_from(
-            "<BIIQBBB", data, 4)
-        cfg = CMConfig(np_bits, nh, seed, bool(cons))
-        off = 4 + struct.calcsize("<BIIQBBB")
-        nh_o, w = cfg.nh_odd, cfg.width
-        core, used = _unpack_u64(code, data, off, nh_o * w, (nh_o, w))
-        off += used
-        collision, _ = _unpack_u64(ccode, data, off, nh_o * w, (nh_o, w),
-                                   np.int32)
-        return cls(cfg, core, collision)
+        return cls._pack(astuple(cfg), [(size, cells, t.reshape(-1))
+                                        for t in (core, collision)])
 
     # ------------------------------------------- reference interchange IO
     def save_reference(self, path: str) -> None:
@@ -731,12 +644,24 @@ class OfflineCountMin:
 
     @classmethod
     def load_reference(cls, path: str, conservative: bool = True) -> "OfflineCountMin":
-        with open(path, "rb") as fh:
-            np_bits, nh, seed = struct.unpack("<IIQ", fh.read(16))
-            n = nh << np_bits
-            core = np.fromfile(fh, dtype="<u8", count=n)
-            collision = np.fromfile(fh, dtype="<i4", count=n)
-        cfg = CMConfig(np_bits, nh, seed, conservative)
-        w = 1 << np_bits
-        return cls(cfg, core.astype(_U64).reshape(nh, w),
-                   collision.reshape(nh, w))
+        sk = read_reference(path, conservative)
+        if not isinstance(sk, cls):
+            raise ValueError(f"{path}: a CM file, no collision table")
+        return sk
+
+
+def read_reference(path: str, conservative: bool = True):
+    """Load a reference-format file (include/ocm.h:216-233, 443-466):
+    the ``<IIQ`` header ``np, nh, seed`` and the u64 counters, then for
+    OCM/OCCM an int32 collision table, whose presence the file's size
+    shows. Returns an :class:`OfflineCountMin` or a :class:`CountMin`."""
+    with open(path, "rb") as fh:
+        np_bits, nh, seed = struct.unpack("<IIQ", fh.read(16))
+        n = nh << np_bits
+        core = np.fromfile(fh, dtype="<u8", count=n)
+        collision = np.fromfile(fh, dtype="<i4", count=n)
+    cfg = CMConfig(np_bits, nh, seed, conservative)
+    core = core.astype(_U64).reshape(nh, 1 << np_bits)
+    if collision.size < n:
+        return CountMin(cfg, core)
+    return OfflineCountMin(cfg, core, collision.reshape(nh, 1 << np_bits))

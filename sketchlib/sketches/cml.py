@@ -33,17 +33,18 @@ distribution's support, seeded replay is bit-stable).
 
 from __future__ import annotations
 
-import struct
-
 import numpy as np
 
 from sketchlib.hashing import derive_seeds, row_positions
+from sketchlib.sketches.base import Sketch
 
 _U64 = np.uint64
 
 
-class CountMinLog:
+class CountMinLog(Sketch):
     MAGIC = b"SKML"
+    HEADER, FIELDS = "IIQ", ("np_bits", "nh", "seed")
+    ARRAYS = (("cells", "u1", lambda h: (h.nh, 1 << h.np_bits)),)
 
     def __init__(self, np_bits: int = 16, nh: int = 5, seed: int = 137,
                  cells: np.ndarray | None = None,
@@ -61,12 +62,6 @@ class CountMinLog:
         self.seeds = derive_seeds(seed, nh)[:nh]
         self.cells = cells if cells is not None \
             else np.zeros((nh, self.w), dtype=np.uint8)
-
-    def update(self, vals: np.ndarray) -> None:
-        if len(vals) == 0:
-            return
-        u, c = np.unique(np.asarray(vals, dtype=_U64), return_counts=True)
-        self.update_weighted(u, c)
 
     def update_weighted(self, vals: np.ndarray, counts: np.ndarray) -> None:
         vals = np.asarray(vals, dtype=_U64)
@@ -127,17 +122,3 @@ class CountMinLog:
             (other.np_bits, other.nh, other.seed)
         np.maximum(self.cells, other.cells, out=self.cells)
         return self
-
-    def to_bytes(self) -> bytes:
-        return (self.MAGIC
-                + struct.pack("<BIIQ", 1, self.np_bits, self.nh, self.seed)
-                + self.cells.tobytes())
-
-    @classmethod
-    def from_bytes(cls, data: bytes) -> "CountMinLog":
-        assert data[:4] == cls.MAGIC
-        _, np_bits, nh, seed = struct.unpack_from("<BIIQ", data, 4)
-        off = 4 + struct.calcsize("<BIIQ")
-        cells = np.frombuffer(data, dtype=np.uint8, offset=off,
-                              count=nh << np_bits).reshape(nh, -1).copy()
-        return cls(np_bits, nh, seed, cells)

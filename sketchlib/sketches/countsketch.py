@@ -22,18 +22,19 @@ don't attempt one without reworking the hashing.
 
 from __future__ import annotations
 
-import struct
-
 import numpy as np
 
 from sketchlib.hashing import derive_seeds, wang_hash_u64
+from sketchlib.sketches.base import Sketch
 
 _U64 = np.uint64
 _I64 = np.int64
 
 
-class CountSketch:
+class CountSketch(Sketch):
     MAGIC = b"SKCS"
+    HEADER, FIELDS = "IIQ", ("np_bits", "nh", "seed")  # nh is odd
+    ARRAYS = (("core", "<i8", lambda h: (h.nh, 1 << h.np_bits)),)
 
     def __init__(self, np_bits: int, nh: int = 5, seed: int = 137,
                  core: np.ndarray | None = None):
@@ -121,25 +122,3 @@ class CountSketch:
                (other.np_bits, other.nh, other.seed)
         self.core += other.core
         return self
-
-    # -------------------------------------------------------- serialize
-    def to_bytes(self) -> bytes:
-        # copy=False: on little-endian hosts the core already IS <i8,
-        # so the only copy is the unavoidable tobytes() — at w=2^22 the
-        # core is 235 MB and a redundant astype copy is measurable
-        return b"".join((
-            self.MAGIC,
-            struct.pack("<BIIQ", 1, self.np_bits, self.nh, self.seed),
-            self.core.astype("<i8", copy=False).tobytes()))
-
-    @classmethod
-    def from_bytes(cls, data: bytes) -> "CountSketch":
-        assert data[:4] == cls.MAGIC
-        ver, np_bits, nh, seed = struct.unpack_from("<BIIQ", data, 4)
-        assert ver == 1
-        off = 4 + struct.calcsize("<BIIQ")
-        core = np.frombuffer(data, dtype="<i8", offset=off,
-                             count=nh << np_bits).astype(_I64)
-        sk = cls(np_bits, nh, seed, core.reshape(nh, 1 << np_bits))
-        sk.nh = nh  # already odd in the blob
-        return sk

@@ -17,9 +17,9 @@ numpy like every other sketch.
 
 from __future__ import annotations
 
-import struct
-
 import numpy as np
+
+from sketchlib.sketches.base import Sketch
 
 _U64 = np.uint64
 _I64 = np.int64
@@ -60,8 +60,10 @@ def _poly4(x: np.ndarray, coeffs: np.ndarray) -> np.ndarray:
     return acc
 
 
-class CountSketch4W:
+class CountSketch4W(Sketch):
     MAGIC = b"SKC4"
+    HEADER, FIELDS = "IIQ", ("np_bits", "nh", "seed")  # nh is odd
+    ARRAYS = (("core", "<i8", lambda h: (h.nh, 1 << h.np_bits)),)
 
     def __init__(self, np_bits: int, nh: int = 5, seed: int = 137,
                  core: np.ndarray | None = None):
@@ -120,21 +122,3 @@ class CountSketch4W:
             (other.np_bits, other.nh, other.seed)
         self.core += other.core
         return self
-
-    def to_bytes(self) -> bytes:
-        # copy=False — see CountSketch.to_bytes
-        return b"".join((
-            self.MAGIC,
-            struct.pack("<BIIQ", 1, self.np_bits, self.nh, self.seed),
-            self.core.astype("<i8", copy=False).tobytes()))
-
-    @classmethod
-    def from_bytes(cls, data: bytes) -> "CountSketch4W":
-        assert data[:4] == cls.MAGIC
-        _, np_bits, nh, seed = struct.unpack_from("<BIIQ", data, 4)
-        off = 4 + struct.calcsize("<BIIQ")
-        core = np.frombuffer(data, dtype="<i8", offset=off,
-                             count=nh << np_bits).astype(_I64)
-        sk = cls(np_bits, nh, seed, core.reshape(nh, 1 << np_bits))
-        sk.nh = nh
-        return sk

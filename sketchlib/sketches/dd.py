@@ -34,13 +34,18 @@ partitioning (tests/test_ddsketch.py).
 
 from __future__ import annotations
 
-import struct
-
 import numpy as np
 
+from sketchlib.sketches.base import Sketch
 
-class DDSketch:
+
+class DDSketch(Sketch):
     MAGIC = b"SKDD"
+    VERSION = None
+    HEADER = "ddIqd ddqI"
+    FIELDS = ("alpha", "min_value", "max_bins", "count", "sum", "min",
+              "max", "mink", "#bins")
+    ARRAYS = (("bins", "<i8", "#bins"),)
 
     def __init__(self, alpha: float = 0.01, max_bins: int = 4096,
                  min_value: float = 1e-9):
@@ -169,25 +174,3 @@ class DDSketch:
 
     def avg(self) -> float:
         return self.sum / self.count if self.count else float("nan")
-
-    # -- blob ---------------------------------------------------------
-
-    _HDR = struct.Struct("<ddIqd ddqI")
-
-    def to_bytes(self) -> bytes:
-        hdr = self._HDR.pack(self.alpha, self.min_value, self.max_bins,
-                             self.count, self.sum, self.min, self.max,
-                             self.mink, self.bins.size)
-        return self.MAGIC + hdr + self.bins.tobytes()
-
-    @classmethod
-    def from_bytes(cls, data: bytes) -> "DDSketch":
-        assert data[:4] == cls.MAGIC
-        (alpha, mv, maxb, count, s, mn, mx, mink,
-         nbins) = cls._HDR.unpack_from(data, 4)
-        sk = cls(alpha=alpha, max_bins=maxb, min_value=mv)
-        sk.count, sk.sum, sk.min, sk.max, sk.mink = count, s, mn, mx, mink
-        sk.bins = np.frombuffer(data, dtype=np.int64,
-                                offset=4 + cls._HDR.size,
-                                count=nbins).copy()
-        return sk

@@ -36,9 +36,9 @@ matrices ever shuffle.
 
 from __future__ import annotations
 
-import struct
-
 import numpy as np
+
+from sketchlib.sketches.base import Sketch
 
 __all__ = ["FrequentDirections", "fd_trace_g01"]
 
@@ -51,8 +51,10 @@ def fd_trace_g01(sk: "FrequentDirections") -> list:
     return [float(np.trace(G)), float(G[0, 1])]
 
 
-class FrequentDirections:
+class FrequentDirections(Sketch):
     MAGIC = b"SKFD"
+    HEADER, FIELDS = "III", ("ell", "d", "#rows")
+    ARRAYS = (("rows", "<f8", ("#rows", "d")),)
 
     def __init__(self, ell: int = 64, d: int = 64,
                  rows: np.ndarray | None = None):
@@ -118,19 +120,3 @@ class FrequentDirections:
         """x^T B^T B x — the squared norm of A x, up to the FD bound."""
         v = self.rows @ np.asarray(x, dtype=np.float64)
         return float(v @ v)
-
-    # -- blob ----------------------------------------------------------
-    def to_bytes(self) -> bytes:
-        r = np.ascontiguousarray(self.rows, dtype="<f8")
-        return (self.MAGIC
-                + struct.pack("<BIII", 1, self.ell, self.d, r.shape[0])
-                + r.tobytes())
-
-    @classmethod
-    def from_bytes(cls, data: bytes) -> "FrequentDirections":
-        assert data[:4] == cls.MAGIC
-        _, ell, d, n = struct.unpack_from("<BIII", data, 4)
-        off = 4 + struct.calcsize("<BIII")
-        rows = np.frombuffer(data, dtype="<f8", offset=off,
-                             count=n * d).reshape(n, d).copy()
-        return cls(ell, d, rows)

@@ -27,19 +27,17 @@ Sketch-protocol class:
 
 from __future__ import annotations
 
-import math
-import struct
-
 import numpy as np
 
 from sketchlib.hashing import wang_hash_u64
+from sketchlib.sketches.base import Reader, Sketch, Writer
 from sketchlib.sketches.bloom import BloomFilter
 from sketchlib.sketches.hll import HyperLogLog
 
 _U64 = np.uint64
 
 
-class FilterHLL:
+class FilterHLL(Sketch):
     MAGIC = b"SKFH"
 
     def __init__(self, p: int = 14, bf_p: int = 20, bf_nh: int = 4,
@@ -53,12 +51,6 @@ class FilterHLL:
         self.seed = seed
         self.hll = hll or HyperLogLog(p)
         self.bf = bf or BloomFilter(bf_p, bf_nh, seed)
-
-    def update(self, vals: np.ndarray) -> None:
-        if len(vals) == 0:
-            return
-        u, c = np.unique(np.asarray(vals, dtype=_U64), return_counts=True)
-        self.update_weighted(u, c)
 
     def update_weighted(self, vals: np.ndarray, counts: np.ndarray) -> None:
         vals = np.asarray(vals, dtype=_U64)
@@ -87,25 +79,25 @@ class FilterHLL:
         self.bf.merge(other.bf)
         return self
 
+    # the Bloom filter's blob ends the blob: no flat declaration says it
     def to_bytes(self) -> bytes:
-        h = self.hll.to_bytes()
-        b = self.bf.to_bytes()
-        return (self.MAGIC
-                + struct.pack("<BIQ", 1, self.threshold, len(h))
-                + h + b)
+        w = Writer(FilterHLL)
+        w.blob(self.hll.to_bytes())
+        w.parts.append(self.bf.to_bytes())
+        return w.finish("I", self.threshold)
 
     @classmethod
     def from_bytes(cls, data: bytes) -> "FilterHLL":
-        assert data[:4] == cls.MAGIC
-        _, threshold, hlen = struct.unpack_from("<BIQ", data, 4)
-        off = 4 + struct.calcsize("<BIQ")
-        hll = HyperLogLog.from_bytes(data[off:off + hlen])
-        bf = BloomFilter.from_bytes(data[off + hlen:])
+        r = Reader(cls, data)
+        (threshold,) = r.unpack("I")
+        hll = r.blob(HyperLogLog)
+        bf = r.rest(BloomFilter)
         return cls(hll.p, bf.p, bf.nh, threshold, bf.seed, hll, bf)
 
 
-class HyperBitBit:
+class HyperBitBit(Sketch):
     MAGIC = b"SKHB"
+    HEADER, FIELDS = "QIQQ", ("seed", "lg_n", "b1", "b2")
 
     def __init__(self, seed: int = 137, lg_n: int = 5,
                  b1: int = 0, b2: int = 0):
@@ -162,19 +154,11 @@ class HyperBitBit:
         self.b2 |= o.b2
         return self
 
-    def to_bytes(self) -> bytes:
-        return self.MAGIC + struct.pack("<BQIQQ", 1, self.seed, self.lg_n,
-                                        self.b1, self.b2)
 
-    @classmethod
-    def from_bytes(cls, data: bytes) -> "HyperBitBit":
-        assert data[:4] == cls.MAGIC
-        _, seed, lg_n, b1, b2 = struct.unpack_from("<BQIQQ", data, 4)
-        return cls(seed, lg_n, b1, b2)
-
-
-class ModSketch:
+class ModSketch(Sketch):
     MAGIC = b"SKMO"
+    HEADER, FIELDS = "IQQ", ("mod", "seed", "#kept")
+    ARRAYS = (("kept", "<u8", "#kept"),)
 
     def __init__(self, mod: int = 64, seed: int = 137,
                  kept: np.ndarray | None = None):
@@ -198,17 +182,3 @@ class ModSketch:
         assert (self.mod, self.seed) == (other.mod, other.seed)
         self.kept = np.union1d(self.kept, other.kept)
         return self
-
-    def to_bytes(self) -> bytes:
-        return (self.MAGIC
-                + struct.pack("<BIQQ", 1, self.mod, self.seed,
-                              self.kept.size)
-                + self.kept.astype("<u8").tobytes())
-
-    @classmethod
-    def from_bytes(cls, data: bytes) -> "ModSketch":
-        assert data[:4] == cls.MAGIC
-        _, mod, seed, n = struct.unpack_from("<BIQQ", data, 4)
-        off = 4 + struct.calcsize("<BIQQ")
-        kept = np.frombuffer(data, dtype="<u8", offset=off, count=n).copy()
-        return cls(mod, seed, kept)

@@ -41,17 +41,19 @@ infeasible.
 
 from __future__ import annotations
 
-import struct
-
 import numpy as np
 
 from sketchlib.hashing import derive_seeds, wang_hash_u64
+from sketchlib.sketches.base import Sketch
 
 _U64 = np.uint64
 
 
-class HeavyKeeper:
+class HeavyKeeper(Sketch):
     MAGIC = b"SKHK"
+    HEADER, FIELDS = "IIQd", ("np_bits", "nh", "seed", "decay_b")
+    ARRAYS = (("fps", "<u8", lambda h: (h.nh, 1 << h.np_bits)),
+              ("cnts", "<u8", lambda h: (h.nh, 1 << h.np_bits)))
 
     def __init__(self, np_bits: int = 12, nh: int = 4, seed: int = 137,
                  decay_b: float = 1.08,
@@ -78,12 +80,6 @@ class HeavyKeeper:
         pos = (h & _U64(self.w - 1)).astype(np.int64)
         fp = ((h >> _U64(self.np_bits)) & _U64(0xFFFFFFFF)) | _U64(1)
         return pos, fp
-
-    def update(self, vals: np.ndarray) -> None:
-        if len(vals) == 0:
-            return
-        u, c = np.unique(np.asarray(vals, dtype=_U64), return_counts=True)
-        self.update_weighted(u, c)
 
     def update_weighted(self, vals: np.ndarray, counts: np.ndarray) -> None:
         """Weighted insert (the pre-aggregate path): w occurrences of a
@@ -182,22 +178,3 @@ class HeavyKeeper:
         self.fps = np.where(same, self.fps,
                             np.where(diff > 0, keep_fp, 0))
         return self
-
-    def to_bytes(self) -> bytes:
-        hdr = struct.pack("<BIIQd", 1, self.np_bits, self.nh,
-                          self.seed, self.decay_b)
-        return (self.MAGIC + hdr
-                + self.fps.astype("<u8").tobytes()
-                + self.cnts.astype("<u8").tobytes())
-
-    @classmethod
-    def from_bytes(cls, data: bytes) -> "HeavyKeeper":
-        assert data[:4] == cls.MAGIC
-        _, np_bits, nh, seed, decay_b = struct.unpack_from("<BIIQd", data, 4)
-        off = 4 + struct.calcsize("<BIIQd")
-        n = nh << np_bits
-        fps = np.frombuffer(data, dtype="<u8", offset=off,
-                            count=n).reshape(nh, -1).copy()
-        cnts = np.frombuffer(data, dtype="<u8", offset=off + 8 * n,
-                             count=n).reshape(nh, -1).copy()
-        return cls(np_bits, nh, seed, decay_b, fps, cnts)

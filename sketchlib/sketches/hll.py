@@ -17,11 +17,11 @@ hashes or small integers alike.
 from __future__ import annotations
 
 import math
-import struct
 
 import numpy as np
 
 from sketchlib.hashing import clz64, wang_hash_u64
+from sketchlib.sketches.base import Sketch, Sparse
 
 _U64 = np.uint64
 
@@ -124,8 +124,14 @@ def _ml_estimate(counts: np.ndarray, p: int, q: int,
     return x * m
 
 
-class HyperLogLog:
+class HyperLogLog(Sketch):
     MAGIC = b"SKHL"
+    HEADER, FIELDS = "I", ("p",)
+    # (index, rank) pairs, a u32 count, below 1/5 of the registers set:
+    # the reference's sparse-then-dense promotion (include/sparse.h),
+    # for the low-cardinality partials of grouped merges
+    ARRAYS = (("registers", Sparse("u1", 5, count="I"),
+               lambda h: 1 << h.p),)
 
     def __init__(self, p: int = 14, registers: np.ndarray | None = None):
         assert 4 <= p <= 18
@@ -218,36 +224,3 @@ class HyperLogLog:
 
     def intersection_size(self, other: "HyperLogLog") -> float:
         return self.joint_estimates(other)[2]
-
-    def to_bytes(self) -> bytes:
-        """Blob format v2: sparse (index,rank) pairs when <1/5 of the
-        registers are set, else dense — the reference library's
-        sparse-then-dense promotion (reference include/sparse.h) applied
-        where it matters for us: partial blobs shuffled/collected during
-        grouped merges, where low-cardinality groups dominate."""
-        nz = np.flatnonzero(self.registers)
-        if nz.size * 5 < self.registers.size:
-            idx = nz.astype("<u4")
-            vals = self.registers[nz]
-            return (self.MAGIC + struct.pack("<BII", 2, self.p, nz.size)
-                    + idx.tobytes() + vals.tobytes())
-        return (self.MAGIC + struct.pack("<BI", 1, self.p)
-                + self.registers.tobytes())
-
-    @classmethod
-    def from_bytes(cls, data: bytes) -> "HyperLogLog":
-        assert data[:4] == cls.MAGIC
-        ver, p = struct.unpack_from("<BI", data, 4)
-        if ver == 2:
-            _, _, n = struct.unpack_from("<BII", data, 4)
-            off = 4 + struct.calcsize("<BII")
-            idx = np.frombuffer(data, dtype="<u4", offset=off, count=n)
-            vals = np.frombuffer(data, dtype=np.uint8,
-                                 offset=off + 4 * n, count=n)
-            regs = np.zeros(1 << p, dtype=np.uint8)
-            regs[idx] = vals
-            return cls(p, regs)
-        off = 4 + struct.calcsize("<BI")
-        regs = np.frombuffer(data, dtype=np.uint8, offset=off,
-                             count=1 << p).copy()
-        return cls(p, regs)

@@ -23,18 +23,20 @@ Merge: elementwise "keep the encoding of the smaller hash"
 
 from __future__ import annotations
 
-import struct
-
 import numpy as np
 
 from sketchlib.hashing import clz64, wang_hash_u64
+from sketchlib.sketches.base import Sketch
 from sketchlib.sketches.hll import _improved_estimate
 
 _U64 = np.uint64
 
 
-class HyperMinHash:
+class HyperMinHash(Sketch):
     MAGIC = b"SKHM"
+    HEADER, FIELDS = "IIQ", ("p", "r", "seed")
+    ARRAYS = (("ranks", "u1", lambda h: 1 << h.p),
+              ("mants", "<u4", lambda h: 1 << h.p))
 
     def __init__(self, p: int = 12, r: int = 10, seed: int = 137,
                  ranks: np.ndarray | None = None,
@@ -104,21 +106,3 @@ class HyperMinHash:
                          self.ranks.copy(), self.mants.copy())
         u.merge(other)
         return self.jaccard(other) * u.cardinality()
-
-    def to_bytes(self) -> bytes:
-        return (self.MAGIC
-                + struct.pack("<BIIQ", 1, self.p, self.r, self.seed)
-                + self.ranks.tobytes()
-                + self.mants.astype("<u4").tobytes())
-
-    @classmethod
-    def from_bytes(cls, data: bytes) -> "HyperMinHash":
-        assert data[:4] == cls.MAGIC
-        _, p, r, seed = struct.unpack_from("<BIIQ", data, 4)
-        off = 4 + struct.calcsize("<BIIQ")
-        m = 1 << p
-        ranks = np.frombuffer(data, dtype=np.uint8, offset=off,
-                              count=m).copy()
-        mants = np.frombuffer(data, dtype="<u4", offset=off + m,
-                              count=m).copy()
-        return cls(p, r, seed, ranks, mants)

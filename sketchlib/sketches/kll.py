@@ -15,15 +15,15 @@ MIN_CAP) with c = 2/3.
 
 from __future__ import annotations
 
-import struct
-
 import numpy as np
+
+from sketchlib.sketches.base import Reader, Sketch, Writer
 
 _C = 2.0 / 3.0
 _MIN_CAP = 8
 
 
-class KLL:
+class KLL(Sketch):
     MAGIC = b"SKKL"
 
     def __init__(self, k: int = 200):
@@ -154,28 +154,23 @@ class KLL:
         pn = np.maximum(pn / pn.sum(), 1e-6)
         return float(((pn - po) * np.log(pn / po)).sum())
 
+    # ragged levels: a flat declaration cannot say them
     def to_bytes(self) -> bytes:
-        parts = [self.MAGIC,
-                 struct.pack("<BIQI", 1, self.k, self.count, len(self.levels))]
+        w = Writer(KLL)
         for lv, fl in zip(self.levels, self.flips):
-            parts.append(struct.pack("<QI", lv.size, fl))
-            parts.append(lv.tobytes())
-        return b"".join(parts)
+            w.pack("QI", lv.size, fl)
+            w.array(lv, "<f8")
+        return w.finish("IQI", self.k, self.count, len(self.levels))
 
     @classmethod
     def from_bytes(cls, data: bytes) -> "KLL":
-        assert data[:4] == cls.MAGIC
-        _, k, count, nlev = struct.unpack_from("<BIQI", data, 4)
-        off = 4 + struct.calcsize("<BIQI")
+        r = Reader(cls, data)
+        k, count, nlev = r.unpack("IQI")
         sk = cls(k)
-        sk.count = count
-        sk.levels = []
-        sk.flips = []
+        sk.count, sk.levels, sk.flips = count, [], []
         for _ in range(nlev):
-            n, fl = struct.unpack_from("<QI", data, off)
-            off += struct.calcsize("<QI")
-            sk.levels.append(
-                np.frombuffer(data, dtype=np.float64, offset=off, count=n).copy())
+            n, fl = r.unpack("QI")
+            sk.levels.append(r.array("<f8", n).copy())
             sk.flips.append(fl)
-            off += 8 * n
+        r.done()
         return sk

@@ -25,15 +25,17 @@ blob so callers can report the error interval est..est+n/(k+1).
 
 from __future__ import annotations
 
-import struct
-
 import numpy as np
+
+from sketchlib.sketches.base import Sketch
 
 _U64 = np.uint64
 
 
-class MisraGries:
+class MisraGries(Sketch):
     MAGIC = b"SKMG"
+    HEADER, FIELDS = "IQQ", ("k", "n", "#values")
+    ARRAYS = (("values", "<u8", "#values"), ("counts", "<i8", "#values"))
 
     def __init__(self, k: int = 1024,
                  values: np.ndarray | None = None,
@@ -63,12 +65,6 @@ class MisraGries:
             uniq, sums = uniq[keep], sums[keep]
         self.values = uniq
         self.counts = sums.astype(np.int64)
-
-    def update(self, vals: np.ndarray) -> None:
-        if len(vals) == 0:
-            return
-        u, c = np.unique(np.asarray(vals, dtype=_U64), return_counts=True)
-        self.update_weighted(u, c)
 
     def update_weighted(self, vals: np.ndarray, counts: np.ndarray) -> None:
         vals = np.asarray(vals, dtype=_U64)
@@ -110,20 +106,3 @@ class MisraGries:
         deterministic top-k ordering for finalizers."""
         order = np.lexsort((self.values, -self.counts))
         return self.values[order], self.counts[order]
-
-    def to_bytes(self) -> bytes:
-        return (self.MAGIC
-                + struct.pack("<BIQQ", 1, self.k, self.n,
-                              self.values.size)
-                + self.values.astype("<u8").tobytes()
-                + self.counts.astype("<i8").tobytes())
-
-    @classmethod
-    def from_bytes(cls, data: bytes) -> "MisraGries":
-        assert data[:4] == cls.MAGIC
-        _, k, n, m = struct.unpack_from("<BIQQ", data, 4)
-        off = 4 + struct.calcsize("<BIQQ")
-        vals = np.frombuffer(data, dtype="<u8", offset=off, count=m).copy()
-        cnts = np.frombuffer(data, dtype="<i8", offset=off + 8 * m,
-                             count=m).copy()
-        return cls(k, vals, cnts.astype(np.int64), n)

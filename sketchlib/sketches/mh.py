@@ -20,18 +20,19 @@ siblings) so callers can feed raw token hashes or small integers alike.
 
 from __future__ import annotations
 
-import struct
-
 import numpy as np
 
 from sketchlib.hashing import wang_hash_u64
+from sketchlib.sketches.base import Sketch
 
 _U64 = np.uint64
 _MAX = float(2 ** 64)
 
 
-class MinHashBottomK:
+class MinHashBottomK(Sketch):
     MAGIC = b"SKMH"
+    HEADER, FIELDS = "IQ", ("k", "#values")
+    ARRAYS = (("values", "<u8", "#values"),)
 
     def __init__(self, k: int = 1024, values: np.ndarray | None = None):
         assert k >= 1
@@ -103,16 +104,3 @@ class MinHashBottomK:
         the union cardinality. Exact when k >= |A ∪ B|."""
         card, n, _, n_only_a, _ = self._union_stats(other)
         return 0.0 if n == 0 else n_only_a * card / n
-
-    def to_bytes(self) -> bytes:
-        return (self.MAGIC + struct.pack("<BIQ", 1, self.k,
-                                         self.values.size)
-                + self.values.astype("<u8").tobytes())
-
-    @classmethod
-    def from_bytes(cls, data: bytes) -> "MinHashBottomK":
-        assert data[:4] == cls.MAGIC
-        _, k, n = struct.unpack_from("<BIQ", data, 4)
-        off = 4 + struct.calcsize("<BIQ")
-        vals = np.frombuffer(data, dtype="<u8", offset=off, count=n).copy()
-        return cls(k, vals)

@@ -24,13 +24,13 @@ knob the reference exposes for exactly that reason).
 
 from __future__ import annotations
 
-import struct
-
 import numpy as np
 
 from sketchlib.hashing import derive_seeds, row_positions
-from sketchlib.sketches.cm import (CMConfig, CountMin, _combine_weighted,
-                                  _waves)
+from sketchlib.sketches.base import Sketch
+from sketchlib.sketches.cm import (_CFG_CODES, _CFG_FIELDS, CMConfig,
+                                  CountMin, _combine_weighted, _waves,
+                                  _with_config)
 
 _U64 = np.uint64
 
@@ -43,13 +43,17 @@ class PackedVector:
             raise ValueError("nbits must be in [1, 64]")
         self.nbits = int(nbits)
         self.n = int(n)
-        # +1 guard word so the high-part access never bounds-checks
-        nwords = (self.n * self.nbits + 63) // 64 + 1
+        nwords = self.nwords(self.nbits, self.n)
         self.words = (np.zeros(nwords, dtype=_U64)
                       if words is None else words)
         assert self.words.shape == (nwords,)
         self.mask = _U64((1 << self.nbits) - 1) if self.nbits < 64 \
             else _U64(0xFFFFFFFFFFFFFFFF)
+
+    @staticmethod
+    def nwords(nbits: int, n: int) -> int:
+        # +1 guard word so the high-part access never bounds-checks
+        return (n * nbits + 63) // 64 + 1
 
     # -------------------------------------------------------- vector ops
     def _split(self, idx: np.ndarray):
@@ -98,18 +102,22 @@ class PackedVector:
         self.set(np.arange(self.n, dtype=np.int64), vals)
 
 
-class CountMinPacked:
+class CountMinPacked(Sketch):
     """CM sketch over bit-packed counters (see module docstring)."""
 
     MAGIC = b"SKPM"
+    HEADER, FIELDS = _CFG_CODES + "B", _CFG_FIELDS + ("nbits",)
+    ARRAYS = (("pv.words", "<u8", lambda h: PackedVector.nwords(
+        h.nbits, (h.nh | 1) << h.np_bits)),)
+    _new = classmethod(_with_config)
 
     def __init__(self, config: CMConfig, nbits: int = 16,
-                 pv: PackedVector | None = None):
+                 words: np.ndarray | None = None):
         self.config = config
         self.nbits = int(nbits)
         self.seeds = derive_seeds(config.seed, config.nh)
         self.ncells = config.nh_odd * config.width
-        self.pv = pv if pv is not None else PackedVector(nbits, self.ncells)
+        self.pv = PackedVector(nbits, self.ncells, words)
 
     # ---------------------------------------------------------- helpers
     def _flat(self, vals: np.ndarray) -> np.ndarray:
@@ -172,26 +180,3 @@ class CountMinPacked:
         core = self.pv.decode_all().reshape(self.config.nh_odd,
                                             self.config.width)
         return CountMin(self.config, core)
-
-    # -------------------------------------------------------- serialize
-    def to_bytes(self) -> bytes:
-        c = self.config
-        return b"".join((
-            self.MAGIC,
-            struct.pack("<BIIQBB", 1, c.np_bits, c.nh, c.seed,
-                        int(c.conservative), self.nbits),
-            self.pv.words.astype("<u8", copy=False).tobytes()))
-
-    @classmethod
-    def from_bytes(cls, data: bytes) -> "CountMinPacked":
-        assert data[:4] == cls.MAGIC
-        ver, np_bits, nh, seed, cons, nbits = struct.unpack_from(
-            "<BIIQBB", data, 4)
-        assert ver == 1
-        off = 4 + struct.calcsize("<BIIQBB")
-        cfg = CMConfig(np_bits, nh, seed, bool(cons))
-        sk = cls(cfg, nbits)
-        words = np.frombuffer(data, dtype="<u8", offset=off,
-                              count=len(sk.pv.words)).astype(_U64)
-        sk.pv = PackedVector(nbits, sk.ncells, words)
-        return sk

@@ -17,18 +17,21 @@ Merge: per-stage Bloom OR + HLL register max (cbf.h per-layer OR).
 
 from __future__ import annotations
 
-import struct
-
 import numpy as np
 
+from sketchlib.sketches.base import Sketch
 from sketchlib.sketches.bloom import BloomFilter
 from sketchlib.sketches.hll import HyperLogLog
 
 _U64 = np.uint64
 
 
-class PCBF:
+class PCBF(Sketch):
     MAGIC = b"SKPB"  # (PCSA owns b"SKPC")
+    HEADER = "IIIIQ"
+    FIELDS = ("n_stages", "bf_p", "bf_nh", "hll_p", "seed")
+    ARRAYS = (("bfs", BloomFilter, "n_stages"),
+              ("hlls", HyperLogLog, "n_stages"))
 
     def __init__(self, n_stages: int = 8, bf_p: int = 18, bf_nh: int = 4,
                  hll_p: int = 12, seed: int = 137,
@@ -41,12 +44,6 @@ class PCBF:
         self.bfs = bfs or [BloomFilter(bf_p, bf_nh, seed + i)
                            for i in range(n_stages)]
         self.hlls = hlls or [HyperLogLog(hll_p) for _ in range(n_stages)]
-
-    def update(self, vals: np.ndarray) -> None:
-        if len(vals) == 0:
-            return
-        u, c = np.unique(np.asarray(vals, dtype=_U64), return_counts=True)
-        self.update_weighted(u, c)
 
     def update_weighted(self, vals: np.ndarray, counts: np.ndarray) -> None:
         vals = np.asarray(vals, dtype=_U64)
@@ -98,33 +95,3 @@ class PCBF:
         for a, b in zip(self.hlls, other.hlls):
             a.merge(b)
         return self
-
-    def to_bytes(self) -> bytes:
-        parts = []
-        for bf in self.bfs:
-            blob = bf.to_bytes()
-            parts.append(struct.pack("<Q", len(blob)) + blob)
-        for h in self.hlls:
-            blob = h.to_bytes()
-            parts.append(struct.pack("<Q", len(blob)) + blob)
-        body = b"".join(parts)
-        return (self.MAGIC
-                + struct.pack("<BIIIIQ", 1, self.n_stages, self.bf_p,
-                              self.bf_nh, self.hll_p, self.seed)
-                + body)
-
-    @classmethod
-    def from_bytes(cls, data: bytes) -> "PCBF":
-        assert data[:4] == cls.MAGIC
-        _, n_stages, bf_p, bf_nh, hll_p, seed = struct.unpack_from(
-            "<BIIIIQ", data, 4)
-        off = 4 + struct.calcsize("<BIIIIQ")
-        blobs = []
-        for _ in range(2 * n_stages):
-            (ln,) = struct.unpack_from("<Q", data, off)
-            off += 8
-            blobs.append(data[off:off + ln])
-            off += ln
-        bfs = [BloomFilter.from_bytes(b) for b in blobs[:n_stages]]
-        hlls = [HyperLogLog.from_bytes(b) for b in blobs[n_stages:]]
-        return cls(n_stages, bf_p, bf_nh, hll_p, seed, bfs, hlls)

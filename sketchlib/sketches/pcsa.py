@@ -10,18 +10,19 @@ Flajolet & Martin 1985). Merge = bitwise OR (pc.h:60-63).
 
 from __future__ import annotations
 
-import struct
-
 import numpy as np
 
 from sketchlib.hashing import wang_hash_u64
+from sketchlib.sketches.base import Sketch
 
 _U64 = np.uint64
 _PHI = 0.77351
 
 
-class PCSA:
+class PCSA(Sketch):
     MAGIC = b"SKPC"
+    HEADER, FIELDS = "IQ", ("n_maps", "seed")
+    ARRAYS = (("maps", "<u8", "n_maps"),)
 
     def __init__(self, n_maps: int = 64, seed: int = 137,
                  maps: np.ndarray | None = None):
@@ -51,16 +52,3 @@ class PCSA:
         assert (self.n_maps, self.seed) == (other.n_maps, other.seed)
         np.bitwise_or(self.maps, other.maps, out=self.maps)
         return self
-
-    def to_bytes(self) -> bytes:
-        return (self.MAGIC + struct.pack("<BIQ", 1, self.n_maps, self.seed)
-                + self.maps.astype("<u8").tobytes())
-
-    @classmethod
-    def from_bytes(cls, data: bytes) -> "PCSA":
-        assert data[:4] == cls.MAGIC
-        _, n_maps, seed = struct.unpack_from("<BIQ", data, 4)
-        off = 4 + struct.calcsize("<BIQ")
-        maps = np.frombuffer(data, dtype="<u8", offset=off,
-                             count=n_maps).astype(_U64)
-        return cls(n_maps, seed, maps)

@@ -22,17 +22,19 @@ property tests against known cardinalities).
 from __future__ import annotations
 
 import math
-import struct
 
 import numpy as np
 
 from sketchlib.hashing import wang_hash_u64
+from sketchlib.sketches.base import Sketch
 
 _U64 = np.uint64
 
 
-class SetSketch:
+class SetSketch(Sketch):
     MAGIC = b"SKSS"
+    HEADER, FIELDS = "IdIQ", ("p", "base", "q", "seed")
+    ARRAYS = (("registers", "<u2", lambda h: 1 << h.p),)
 
     def __init__(self, p: int = 12, base: float = 1.2, q: int = 255,
                  seed: int = 137, registers: np.ndarray | None = None):
@@ -78,18 +80,3 @@ class SetSketch:
         style bound scaled by the base."""
         return math.sqrt(math.log(self.base)) / math.sqrt(self.m) \
             / math.sqrt(math.log(2)) * 1.03896
-
-    def to_bytes(self) -> bytes:
-        return (self.MAGIC
-                + struct.pack("<BIdIQ", 1, self.p, self.base, self.q,
-                              self.seed)
-                + self.registers.astype("<u2").tobytes())
-
-    @classmethod
-    def from_bytes(cls, data: bytes) -> "SetSketch":
-        assert data[:4] == cls.MAGIC
-        _, p, base, q, seed = struct.unpack_from("<BIdIQ", data, 4)
-        off = 4 + struct.calcsize("<BIdIQ")
-        regs = np.frombuffer(data, dtype="<u2", offset=off,
-                             count=1 << p).copy()
-        return cls(p, base, q, seed, regs)

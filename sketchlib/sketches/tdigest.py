@@ -14,9 +14,10 @@ error, not bit-equality across partitionings (SURVEY.md §7.5).
 from __future__ import annotations
 
 import math
-import struct
 
 import numpy as np
+
+from sketchlib.sketches.base import Sketch
 
 
 def _k1(q: float, delta: float) -> float:
@@ -64,8 +65,11 @@ def _compress(means: np.ndarray, weights: np.ndarray, delta: float):
     return np.array(out_m, dtype=np.float64), np.array(out_w, dtype=np.float64)
 
 
-class TDigest:
+class TDigest(Sketch):
     MAGIC = b"SKTD"
+    HEADER = "dQddd"
+    FIELDS = ("delta", "#means", "count", "vmin", "vmax")
+    ARRAYS = (("means", "<f8", "#means"), ("weights", "<f8", "#means"))
     BUFFER = 4096
 
     def __init__(self, delta: float = 200.0,
@@ -177,17 +181,4 @@ class TDigest:
 
     def to_bytes(self) -> bytes:
         self._flush()
-        hdr = struct.pack("<BdQddd", 1, self.delta, self.means.size,
-                          self.count, self.vmin, self.vmax)
-        return (self.MAGIC + hdr + self.means.tobytes()
-                + self.weights.tobytes())
-
-    @classmethod
-    def from_bytes(cls, data: bytes) -> "TDigest":
-        assert data[:4] == cls.MAGIC
-        _, delta, n, count, vmin, vmax = struct.unpack_from("<BdQddd", data, 4)
-        off = 4 + struct.calcsize("<BdQddd")
-        means = np.frombuffer(data, dtype=np.float64, offset=off, count=n).copy()
-        weights = np.frombuffer(data, dtype=np.float64,
-                                offset=off + 8 * n, count=n).copy()
-        return cls(delta, means, weights, count, vmin, vmax)
+        return super().to_bytes()

@@ -17,17 +17,18 @@ at collision-free width, layer i's estimate is exactly ``count >> i``
 
 from __future__ import annotations
 
-import struct
-
 import numpy as np
 
+from sketchlib.sketches.base import Sketch
 from sketchlib.sketches.cm import CMConfig, CountMin
 
 _U64 = np.uint64
 
 
-class VACSketch:
+class VACSketch(Sketch):
     MAGIC = b"SKVA"
+    HEADER, FIELDS = "IIIQ", ("n_layers", "np_bits", "nh", "seed")
+    ARRAYS = (("layers", CountMin, "n_layers"),)
 
     def __init__(self, n_layers: int = 8, np_bits: int = 16, nh: int = 5,
                  seed: int = 137, layers: list | None = None):
@@ -39,12 +40,6 @@ class VACSketch:
                             conservative=False)
         self.layers = layers or [CountMin(self.cfg)
                                  for _ in range(n_layers)]
-
-    def update(self, vals: np.ndarray) -> None:
-        if len(vals) == 0:
-            return
-        u, c = np.unique(np.asarray(vals, dtype=_U64), return_counts=True)
-        self.update_weighted(u, c)
 
     def update_weighted(self, vals: np.ndarray, counts: np.ndarray) -> None:
         vals = np.asarray(vals, dtype=_U64)
@@ -67,27 +62,3 @@ class VACSketch:
         for a, b in zip(self.layers, other.layers):
             a.merge(b)
         return self
-
-    def to_bytes(self) -> bytes:
-        parts = []
-        for layer in self.layers:
-            blob = layer.to_bytes()
-            parts.append(struct.pack("<Q", len(blob)) + blob)
-        return (self.MAGIC
-                + struct.pack("<BIIIQ", 1, self.n_layers, self.np_bits,
-                              self.nh, self.seed)
-                + b"".join(parts))
-
-    @classmethod
-    def from_bytes(cls, data: bytes) -> "VACSketch":
-        assert data[:4] == cls.MAGIC
-        _, n_layers, np_bits, nh, seed = struct.unpack_from("<BIIIQ",
-                                                            data, 4)
-        off = 4 + struct.calcsize("<BIIIQ")
-        layers = []
-        for _ in range(n_layers):
-            (ln,) = struct.unpack_from("<Q", data, off)
-            off += 8
-            layers.append(CountMin.from_bytes(data[off:off + ln]))
-            off += ln
-        return cls(n_layers, np_bits, nh, seed, layers)

@@ -19,17 +19,18 @@ a strict SQL oracle over token multisets.
 
 from __future__ import annotations
 
-import struct
-
 import numpy as np
 
 from sketchlib.hashing import wang_hash_u64
+from sketchlib.sketches.base import Sketch
 
 _U64 = np.uint64
 
 
-class CountingMinHash:
+class CountingMinHash(Sketch):
     MAGIC = b"SKWM"
+    HEADER, FIELDS = "IQ", ("k", "#values")
+    ARRAYS = (("values", "<u8", "#values"), ("weights", "<i8", "#values"))
 
     def __init__(self, k: int = 1024,
                  values: np.ndarray | None = None,
@@ -50,12 +51,6 @@ class CountingMinHash:
         sums = np.add.reduceat(allw, start)
         self.values = uniq[:self.k]
         self.weights = sums[:self.k].astype(np.int64)
-
-    def update(self, vals: np.ndarray) -> None:
-        if len(vals) == 0:
-            return
-        u, c = np.unique(np.asarray(vals, dtype=_U64), return_counts=True)
-        self.update_weighted(u, c)
 
     def update_weighted(self, vals: np.ndarray, counts: np.ndarray) -> None:
         vals = np.asarray(vals, dtype=_U64)
@@ -95,19 +90,3 @@ class CountingMinHash:
 
     def total_weight(self) -> int:
         return int(self.weights.sum())
-
-    def to_bytes(self) -> bytes:
-        return (self.MAGIC
-                + struct.pack("<BIQ", 1, self.k, self.values.size)
-                + self.values.astype("<u8").tobytes()
-                + self.weights.astype("<i8").tobytes())
-
-    @classmethod
-    def from_bytes(cls, data: bytes) -> "CountingMinHash":
-        assert data[:4] == cls.MAGIC
-        _, k, n = struct.unpack_from("<BIQ", data, 4)
-        off = 4 + struct.calcsize("<BIQ")
-        vals = np.frombuffer(data, dtype="<u8", offset=off, count=n).copy()
-        wts = np.frombuffer(data, dtype="<i8", offset=off + 8 * n,
-                            count=n).copy()
-        return cls(k, vals, wts.astype(np.int64))

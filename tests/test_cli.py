@@ -100,10 +100,9 @@ def test_cli_count_catalog_table_snapshot_pinned(spark, tmp_path):
     """``count --catalog/--table`` builds from a pinned snapshot: the
     sketch equals one built from the same snapshot's data directly,
     and the printed snapshot id is the one the build actually read."""
-    from sketchlib.checkpoint_io import load_reference_sketch
     from sketchlib.iceberg import IcebergishCatalog
     from sketchlib.offline import build_offline
-    from sketchlib.sketches.cm import CMConfig
+    from sketchlib.sketches.cm import CMConfig, read_reference
     from sketchlib.synth import transcripts
     from sketchlib.tokenize import transcript_tokens
 
@@ -120,7 +119,7 @@ def test_cli_count_catalog_table_snapshot_pinned(spark, tmp_path):
     want = build_offline(
         transcript_tokens(cat.load_table(spark, "tr", s1)),
         "token_u64", cfg, 2, pre_aggregate=True)
-    got = load_reference_sketch(out)
+    got = read_reference(out)
     assert (got.core == want.core).all()
     assert (got.collision == want.collision).all()
 

@@ -233,3 +233,60 @@ def test_registry_holds_every_sketch_module_class():
                 magics.append(cls.MAGIC)
     assert len(magics) == 26
     assert len(set(magics)) == len(magics)
+
+
+# ------------------------------------------------------------ bad blobs
+def _one_blob_per_class() -> dict:
+    from tests.test_blob_codec import CASES
+
+    blobs = {}
+    for build, _ in CASES.values():
+        sk = build()
+        blob = sk if isinstance(sk, bytes) else sk.to_bytes()
+        blobs.setdefault(deserialize(blob).__class__, blob)
+    return blobs
+
+
+_BLOBS = _one_blob_per_class()
+_CLASSES = sorted(_BLOBS, key=lambda c: c.__name__)
+
+
+@pytest.mark.parametrize("cls", _CLASSES, ids=lambda c: c.__name__)
+def test_blob_under_a_foreign_magic_is_rejected(cls):
+    """A blob read as the wrong class raises ValueError naming the
+    class, not an assert (gone under ``python -O``) or an IndexError."""
+    from sketchlib.sketches.cm import CountMin
+
+    other = next(c for c in _CLASSES if c is not cls)
+    with pytest.raises(ValueError, match=cls.__name__):
+        cls.from_bytes(_BLOBS[other])
+    if cls is not CountMin:
+        with pytest.raises(ValueError, match=cls.__name__):
+            deserialize(cls.MAGIC + _BLOBS[CountMin][4:])
+
+
+@pytest.mark.parametrize(
+    "cls", [c for c in _CLASSES if c.__name__ != "DDSketch"],  # no version
+    ids=lambda c: c.__name__)
+def test_blob_of_an_unknown_version_is_rejected(cls):
+    blob = bytearray(_BLOBS[cls])
+    blob[4] = 9
+    with pytest.raises(ValueError, match=cls.__name__):
+        deserialize(bytes(blob))
+
+
+@pytest.mark.parametrize("cls", _CLASSES, ids=lambda c: c.__name__)
+def test_blob_of_the_wrong_length_is_rejected(cls):
+    blob = _BLOBS[cls]
+    for bad in (blob[:-1], blob + b"\0"):
+        with pytest.raises(ValueError, match=cls.__name__):
+            deserialize(bad)
+
+
+def test_a_taken_magic_cannot_register():
+    from sketchlib.sketches.base import _REGISTRY, Sketch
+
+    with pytest.raises(ValueError, match="HyperLogLog"):
+        class Copy(Sketch):
+            MAGIC = HyperLogLog.MAGIC
+    assert _REGISTRY[HyperLogLog.MAGIC] is HyperLogLog
